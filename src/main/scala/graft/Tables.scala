@@ -50,26 +50,10 @@ object Tables {
   // Plan cache: spark.read.parquet lists the directory and reads footers
   // on every call; with ~100 queries × several tables each that fixed cost
   // adds seconds per harness run. DataFrames are immutable logical plans,
-  // so reusing one per (session, dir, table) is safe. Keyed on the session
-  // instance with a small LRU bound: a WeakHashMap would never collect
-  // here (the cached DataFrames strongly reference their session — the
-  // documented WeakHashMap value→key caveat), so a hard cap is what
-  // actually keeps dead sessions' plans from accumulating.
-  private val cache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[SparkSession,
-            java.util.concurrent.ConcurrentHashMap[(String, String),
-              DataFrame]]): Boolean = size() > 8
-    })
-
+  // so reusing one per (session, dir, table) is safe while the dir's files
+  // are unchanged — ops.Pins keys and bounds it with the session pins.
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    cache.computeIfAbsent(spark,
-        _ => new java.util.concurrent.ConcurrentHashMap[(String, String),
-          DataFrame]())
-      .computeIfAbsent((sfDir, name), _ => load(spark, sfDir, name))
+    ops.Pins.memo(spark, sfDir, "table", name)(load(spark, sfDir, name))
 
   private def load(spark: SparkSession, sfDir: String,
       name: String): DataFrame = {

@@ -3,7 +3,7 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.{Curation, DistRank, Pipeline, Sketches, Text, Vectors}
+import graft.ops.{Curation, DistRank, Pins, Pipeline, Sketches, Text, Vectors}
 
 /** The engine's reusable operator cores as a DataFrame→DataFrame
   * library (round-11 item 5) — the entry points a user of the graded
@@ -26,7 +26,7 @@ object Graft {
 
   /** Per-invocation checkpoint-slot qualifier (round-12 advice,
     * medium): the graded queries pin their state under slots qualified
-    * by the dataset DIR (DistRank.dirSlot) because a (session, dir)
+    * by the dataset DIR (Pins.slot) because a (session, dir)
     * pair identifies the input. The API has no dir — the input is an
     * arbitrary user DataFrame — so a FIXED slot name would let two
     * different inputs passed through the same entry point in one
@@ -35,10 +35,10 @@ object Graft {
     * from the first call would silently re-read the second input's
     * data on re-collection. Each call therefore mints a fresh
     * numbered slot. Footprint is one slot-set per API call rather
-    * than a fixed set — the correct trade: the caller owns the
-    * returned handle's lifetime, and the per-session checkpoint
-    * namespace (Text.ckptSessionId) is already torn down with the
-    * session's temp dir. */
+    * than a fixed set: the caller owns the returned handle's lifetime,
+    * so no slot is deleted while its session may still read it. The
+    * per-session checkpoint namespace (Pins.slotDir) is deleted when
+    * the SparkContext stops; until then the slots accumulate. */
   private val slotSeq = new java.util.concurrent.atomic.AtomicLong(0L)
   private def freshSlot(base: String): String =
     s"${base}_${slotSeq.incrementAndGet()}"
@@ -258,7 +258,7 @@ object Graft {
         // minima + the star join) and the MinHash signature aggregate
         // is the routed tier's dominant cost (round-14 review)
         return Sketches.bucketClusters(s,
-          Text.pin(mhBandRows(df, idCol, textCol, b, r),
+          Pins.pin(mhBandRows(df, idCol, textCol, b, r),
             freshSlot("api_cc_gate_bands")),
           Seq("band", "bkey"), freshSlot("api_cc_gate"))
           .withColumnRenamed("doc_id", idCol)
@@ -536,7 +536,7 @@ object Graft {
       case t => sys.error(s"standingBands.bkey must be a struct, got $t")
     }
     val s = standingLabels.sparkSession
-    val batchBands = Text.pin(
+    val batchBands = Pins.pin(
       mhBandRows(batch, idCol, textCol, nBands, nRows),
       freshSlot("api_dinc_bands"))
     val nBatchBands = batchBands.count()
@@ -1065,7 +1065,7 @@ object Graft {
       col(probeVecCol).as("pe"))
     val w = Window.partitionBy(col("pid"))
       .orderBy(col("rel").desc, col("cid").asc)
-    val cand = Text.pin(
+    val cand = Pins.pin(
       c.join(broadcast(p), col("cid") =!= col("pid"))
         .withColumn("rel", Vectors.cosine(col("pe"), col("ce")))
         .withColumn("rn", row_number().over(w))
@@ -1088,7 +1088,7 @@ object Graft {
         lit(r.toLong).as("rank"), col("s_cid").as("neighbor_id"),
         round(col("s_score"), 4).as("score"))
       if (r < k)
-        rem = Text.pin(rem.join(sel, "pid")
+        rem = Pins.pin(rem.join(sel, "pid")
           .filter(col("cid") =!= col("s_cid"))
           .withColumn("ms", when(col("ms").isNull,
             Vectors.cosine(col("ce"), col("s_ce")))
@@ -1293,7 +1293,7 @@ object Graft {
     // broadcast below is bounded by this count (round-14 advice: an
     // unbounded broadcast turns the O(batch) contract into a
     // driver-memory bound)
-    val endpoints = Text.pin(
+    val endpoints = Pins.pin(
       e.select(col("src").as("node_id"))
         .unionAll(e.select(col("dst").as("node_id"))).distinct(),
       freshSlot("api_cc_inc_eps"))
@@ -1301,7 +1301,7 @@ object Graft {
       .map(_.toLong).getOrElse(5000000L)
     val bc: DataFrame => DataFrame =
       if (bcMax > 0 && endpoints.count() <= bcMax) broadcast else identity
-    val endpointLabs = Text.pin(
+    val endpointLabs = Pins.pin(
       lab.join(bc(endpoints), Seq("node_id")),
       freshSlot("api_cc_inc_elabs"))
     val both = e

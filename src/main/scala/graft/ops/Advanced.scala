@@ -298,13 +298,13 @@ object Advanced {
     // reliable-checkpoint alternative) as qDedupClusters. On a real
     // cluster the pinned parquet reads back hash-partitioned by the
     // bucketing of the write; the rank shuffle then co-locates with it.
-    val mirrored = Text.pin(
+    val mirrored = Pins.pin(
       base.select(col("c").as("src"), col("sp").as("dst"))
         .union(base.select(col("sp").as("src"), col("c").as("dst"))),
       "pagerank_edges_raw")
-    val deg = Text.pin(
+    val deg = Pins.pin(
       mirrored.groupBy("src").agg(count(lit(1)).as("deg")), "pagerank_deg")
-    val edges = Text.pin(mirrored.join(shj(deg), "src"), "pagerank_edges")
+    val edges = Pins.pin(mirrored.join(shj(deg), "src"), "pagerank_edges")
     val r0 = deg.select(col("src").as("node"), lit(1000000L).as("r"))
     def step(r: DataFrame): DataFrame =
       edges

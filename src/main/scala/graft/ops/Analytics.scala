@@ -126,10 +126,10 @@ object Analytics {
           pScaled(99, "p99_x100"), max("gap_us").as("max_us")))
     } else {
       // Three consumers (stats, histogram, rank-pick) would each re-run
-      // the scan+lag lineage; pin the gap table once — Text.pin is the
+      // the scan+lag lineage; pin the gap table once — Pins.pin is the
       // shared persist-before-multi-pass policy (localCheckpoint on one
       // JVM, reliable DFS slots on a cluster).
-      val pinned = Text.pin(gaps, "interarrival_gaps")
+      val pinned = Pins.pin(gaps, "interarrival_gaps")
       val gstats = pinned.groupBy("event_type")
         .agg(count(lit(1)).as("n"), min("gap_us").as("gmin"),
           max("gap_us").as("gmax"))
@@ -481,7 +481,7 @@ object Analytics {
     val base0 = per.crossJoin(broadcast(maxDay))
       .withColumn("recency", col("max_day") - col("last_day"))
     // customer-dim rank replaces the serial sort outright → low crossover
-    val (b, base) = DistRank.gate(s, base0, 1000000L, DistRank.dirSlot("rfm_auto", dir))
+    val (b, base) = DistRank.gate(s, base0, 1000000L, Pins.slot("rfm_auto", dir))
     val scored =
       if (b <= 0) base
         .withColumn("r_score", ntile(5).over(Window.orderBy(

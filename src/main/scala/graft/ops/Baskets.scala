@@ -50,7 +50,7 @@ object Baskets {
     * semantics: orders wider than W distinct parts leave the basket
     * UNIVERSE entirely (pairs, marginals and N), now as a size() filter
     * on the set instead of a count anti-join. When `pin` is set the
-    * table materializes once (Text.pin) for multi-consumer queries
+    * table materializes once (Pins.pin) for multi-consumer queries
     * (pairs + marginals + N), exactly like q_brand_affinity's basket
     * pin. */
   private def basketArrays(s: SparkSession, dir: String,
@@ -65,7 +65,7 @@ object Baskets {
       case Some(w) if w > 0 => g.filter(size(col("parts")) <= w)
       case _ => g
     }
-    if (pin) Text.pin(filtered, "baskets_ob") else filtered
+    if (pin) Pins.pin(filtered, "baskets_ob") else filtered
   }
 
   /** Part-pair co-occurrence with lift (§2.84): pairs of parts bought in

@@ -33,7 +33,7 @@ object Concentration {
       .groupBy("o_custkey").agg(sum(col("cents")).as("sp"))
     // customer-dim rank replaces the serial sort outright → low
     // crossover (gated won 5.7 vs 9.9 s at the 100× smoke)
-    val (b, spend) = DistRank.gate(s, spend0, 1000000L, DistRank.dirSlot("lorenz_auto", dir))
+    val (b, spend) = DistRank.gate(s, spend0, 1000000L, Pins.slot("lorenz_auto", dir))
     val n = spend.agg(count(lit(1)).as("n"))
     val w = Window.orderBy(col("sp").asc, col("o_custkey").asc)
     val ranked =

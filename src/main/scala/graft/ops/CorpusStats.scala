@@ -328,7 +328,7 @@ object CorpusStats {
     // aggregate) — lazy, each re-ran the tokenize explode + doc window
     // (501 plan lines). Pin it once per call (multi-consumer pin
     // idiom); it is doc-dim-bounded at any scale.
-    val ranked = Text.pin(
+    val ranked = Pins.pin(
       docSize.withColumn("r", row_number().over(w)), "heaps_ranked")
     val dn = ranked.agg(count(lit(1)).as("nd"))
     val cps = dn.select(explode(expr("sequence(1, 10)")).as("cp"),

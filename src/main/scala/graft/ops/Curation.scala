@@ -264,7 +264,7 @@ object Curation {
     // vocabulary-sized oriented edge set once (the q_brand_affinity
     // multi-consumer pin idiom) so the 3-way join reads ONE
     // materialization (121 lines, 1.2 s).
-    val e = Text.pin(degreeOrientedEdges(und), "tri_edges")
+    val e = Pins.pin(degreeOrientedEdges(und), "tri_edges")
     val tri = wedgeClosure(e)
     orderedAll(tri.select(col("a").as("token"))
       .unionAll(tri.select(col("b").as("token")))
@@ -416,28 +416,23 @@ object Curation {
     *     dominate and representative grain is the entity answer.
     *
     * Cached per (session, dir, confs) so the probe runs once. */
-  private val autoCollapseCache = new java.util.concurrent
-    .ConcurrentHashMap[(SparkSession, String), java.lang.Boolean]()
-
   private def collapseAuto(s: SparkSession, dir: String,
                            names: DataFrame): Boolean = {
     val probeFloor = s.conf.getOption("spark.graft.entityAutoProbeBytes")
       .map(BigInt(_)).getOrElse(BigInt(2L << 20))
     val dupFactor = s.conf.getOption("spark.graft.entityAutoDupFactor")
       .map(_.toLong).getOrElse(2L)
-    val (sess, k) = Text.pinKey(s, dir)
-    autoCollapseCache.computeIfAbsent(
-      (sess, k + s"|collapse|$probeFloor|$dupFactor"), _ => {
-        val est = t(s, dir, "customer")
-          .queryExecution.optimizedPlan.stats.sizeInBytes
-        if (est < probeFloor) false
-        else {
-          val r = names
-            .agg(count(lit(1)).as("n"), countDistinct(col("name")).as("d"))
-            .head()
-          r.getLong(0) >= dupFactor * r.getLong(1)
-        }
-      }).booleanValue()
+    Pins.memo(s, dir, "collapse", probeFloor, dupFactor) {
+      val est = t(s, dir, "customer")
+        .queryExecution.optimizedPlan.stats.sizeInBytes
+      if (est < probeFloor) false
+      else {
+        val r = names
+          .agg(count(lit(1)).as("n"), countDistinct(col("name")).as("d"))
+          .head()
+        r.getLong(0) >= dupFactor * r.getLong(1)
+      }
+    }
   }
 
   /** Deletion-neighborhood (FastSS) blocking for d ≤ 1 over

@@ -14,27 +14,6 @@ import org.apache.spark.sql.functions._
   * existing CC engine. */
 object DedupAudit {
 
-  /** Candidate pairs with exact overlap stats at the loosest sweep
-    * cut (cMul=3, sMul=1 — common ≥ (na+nb)/3 ⟺ J = c/(na+nb−c) ≥
-    * 0.5, exactly the lowest band below). Strategy dispatch mirrors
-    * Text.nearPairs: tiny-vocab corpora take the distinct-mask
-    * popcount path (O(M²) over distinct token sets), everything else
-    * the inverted-index co-occurrence join — a loose cut makes the
-    * posting join strictly heavier, so inheriting the stats-driven
-    * switch matters MORE here than at (9,4). The salted scale-smoke
-    * corpus (vocab > 64, corpus-wide postings) is the documented
-    * §2.11 adversarial case for ANY exact pair listing and is
-    * excluded from the 10×/100× table like q_dedup_near itself.
-    * Exact J in bp is re-derived per pair.
-    *
-    * Round 10: the token postings come from the session-pinned
-    * [[Sketches.enPostings]] (identical universe: en docs, whitespace
-    * tokens, empties dropped, distinct) instead of a private re-scan,
-    * and the loose pair set itself is pinned once per (session, dir) —
-    * q_dedup_sweep and q_minhash_accuracy fold the SAME candidates. */
-  private val candCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
   /** Round-11 item 3: sampling gate for the exact-truth audit sides.
     * `spark.graft.dedupAuditSampleBp` = keep-rate in basis points
     * (default 10000 = off — graded output untouched). When engaged,
@@ -74,9 +53,6 @@ object DedupAudit {
     * The decision is cached per (session, dir, confs) — every audit
     * consumer in a session folds the SAME induced doc subset, which
     * the cross-audit consistency specs require. */
-  private val autoBpCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Integer]()
-
   private[graft] def auditSampleBp(s: SparkSession, dir: String): Int =
     s.conf.getOption("spark.graft.dedupAuditSampleBp")
       .map(_.toInt).getOrElse {
@@ -85,18 +61,16 @@ object DedupAudit {
           .map(BigInt(_)).getOrElse(BigInt(2L << 20))
         val target = s.conf.getOption("spark.graft.dedupAutoSampleDocs")
           .map(_.toLong).getOrElse(4000L)
-        val (sess, k) = Text.pinKey(s, dir)
-        autoBpCache.computeIfAbsent(
-          (sess, k + s"|auto|$probeFloor|$target"), _ => {
-            val docs = t(s, dir, "documents")
-            val est = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-            if (est < probeFloor) 10000
-            else {
-              val n = docs.filter(col("lang") === "en").count()
-              if (n <= target) 10000
-              else math.max(1L, target * 10000L / n).toInt
-            }
-          }).intValue()
+        Pins.memo(s, dir, "audit_bp", probeFloor, target) {
+          val docs = t(s, dir, "documents")
+          val est = docs.queryExecution.optimizedPlan.stats.sizeInBytes
+          if (est < probeFloor) 10000
+          else {
+            val n = docs.filter(col("lang") === "en").count()
+            if (n <= target) 10000
+            else math.max(1L, target * 10000L / n).toInt
+          }
+        }
       }
 
   /** Apply the [[auditSampleBp]] doc-id sample to a frame bearing
@@ -111,29 +85,36 @@ object DedupAudit {
         s"16, 10) AS BIGINT) * 10000 < ${bp.toLong} * 65536"))
   }
 
+  /** Candidate pairs with exact overlap stats at the loosest sweep
+    * cut (cMul=3, sMul=1 — common ≥ (na+nb)/3 ⟺ J = c/(na+nb−c) ≥
+    * 0.5, exactly the lowest band below). Strategy dispatch mirrors
+    * Text.nearPairs: tiny-vocab corpora take the distinct-mask
+    * popcount path (O(M²) over distinct token sets), everything else
+    * the inverted-index co-occurrence join — a loose cut makes the
+    * posting join strictly heavier, so inheriting the stats-driven
+    * switch matters MORE here than at (9,4). The salted scale-smoke
+    * corpus (vocab > 64, corpus-wide postings) is the documented
+    * §2.11 adversarial case for ANY exact pair listing and is
+    * excluded from the 10×/100× table like q_dedup_near itself.
+    * Exact J in bp is re-derived per pair.
+    *
+    * Round 10: the token postings come from the session-pinned
+    * [[Sketches.enPostings]] (identical universe: en docs, whitespace
+    * tokens, empties dropped, distinct) instead of a private re-scan,
+    * and the loose pair set itself is pinned once per (session, dir) —
+    * q_dedup_sweep and q_minhash_accuracy fold the SAME candidates —
+    * per sample rate: flipping `dedupAuditSampleBp` mid-session
+    * re-derives, never serves the other rate's materialization. */
   private[ops] def candPairs(s: SparkSession, dir: String): DataFrame =
-    candCache.computeIfAbsent(candKey(s, dir), _ => {
+    Pins.pinned(s, s"cand_pairs_${auditSampleBp(s, dir)}", dir) {
       val dt = auditSample(s, dir, Sketches.enPostings(s, dir))
       val dictN = dt.select("token").distinct().count()
       val base =
         if (dictN <= math.min(64L, Text.maskGroupMaxDict(s)))
           Text.maskGroupPairs(dt, 3, 1)
         else Text.invertedPairs(dt, 3, 1)
-      Text.pin(base.withColumn("j_bp", expr(
-        "common * 10000 div (na + nb - common)")),
-        s"cand_pairs_${auditSampleBp(s, dir)}_" +
-          new java.io.File(dir).getName)
-    })
-
-  /** Cache/pin key for the candidate set: Text.pinKey (dir +
-    * checkpoint mode) EXTENDED with the sample rate — flipping
-    * `dedupAuditSampleBp` mid-session must re-derive, never serve the
-    * other rate's materialization. */
-  private def candKey(s: SparkSession,
-                      dir: String): (SparkSession, String) = {
-    val (sess, k) = Text.pinKey(s, dir)
-    (sess, k + "|" + auditSampleBp(s, dir))
-  }
+      base.withColumn("j_bp", expr("common * 10000 div (na + nb - common)"))
+    }
 
   /** Test hook (Round10Batch2Spec): the pinned loose candidate set —
     * exposes the SAME frame the audits fold, so cross-query

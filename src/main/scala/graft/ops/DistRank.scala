@@ -72,18 +72,9 @@ object DistRank {
                        crossoverRows: Long = 1000000L): Int =
     gate(s, input, crossoverRows, "rank_auto")._1
 
-  /** Qualify a pin-slot name with the dataset directory's basename —
-    * the `near_pairs_${dirName}` idiom (Text.scala:262) applied to the
-    * gate family. Without it, two dirs queried in one session under
-    * `spark.graft.reliableCheckpoint=true` would overwrite the same
-    * checkpoint parquet path, and a retained handle from the first dir
-    * would silently re-read the second's data on re-collection. */
-  def dirSlot(slot: String, dir: String): String =
-    slot + "_" + new java.io.File(dir).getName
-
   /** [[effectiveBuckets]] plus the probe-cost fix the first 100× auto
     * capture demanded: when the probe tier fires, the window input is
-    * PINNED (Text.pin — localCheckpoint, or the reliable-checkpoint
+    * PINNED (Pins.pin — localCheckpoint, or the reliable-checkpoint
     * slot under `slot` on clusters) BEFORE counting, and the pinned
     * frame is returned for the caller to build on. The count is then
     * a metadata read of the materialized blocks, and the main query
@@ -101,14 +92,14 @@ object DistRank {
       // at least twice (range stats + bucket join, often an n-count
       // too) — materializing once is strictly cheaper than re-running
       // the aggregate per consumer. Manual-off (0) stays untouched.
-      case Some(b) => if (b > 0) (b, Text.pin(input, slot)) else (0, input)
+      case Some(b) => if (b > 0) (b, Pins.pin(input, slot)) else (0, input)
       case None =>
         val probeFloor = s.conf.getOption("spark.graft.rankAutoProbeBytes")
           .map(BigInt(_)).getOrElse(BigInt(256L << 20))
         val est = input.queryExecution.optimizedPlan.stats.sizeInBytes
         if (est < probeFloor) (0, input)
         else {
-          val pinned = Text.pin(input, slot)
+          val pinned = Pins.pin(input, slot)
           val cross = s.conf.getOption("spark.graft.rankAutoCrossoverRows")
             .map(_.toLong).getOrElse(crossoverRows)
           val b =

@@ -77,7 +77,7 @@ object Features {
       .withColumn("cents", expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
       .groupBy("o_custkey").agg(sum("cents").as("spend"))
     // customer-dim rank replaces the serial sort outright → low crossover
-    val (b, spend) = DistRank.gate(s, spend0, 1000000L, DistRank.dirSlot("decile_auto", dir))
+    val (b, spend) = DistRank.gate(s, spend0, 1000000L, Pins.slot("decile_auto", dir))
     val bucketed =
       if (b <= 0) spend.withColumn("decile", ntile(10).over(
         Window.orderBy(col("spend").desc, col("o_custkey").asc))

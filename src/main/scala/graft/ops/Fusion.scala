@@ -102,7 +102,7 @@ object Fusion {
     // High crossover: the serial plan is a cheap top-20 over a user
     // aggregate (BASELINE.md 100×: serial 2.1 s vs gated 3.1 s) — the
     // bucket pass only wins once the user dim outgrows one task.
-    val (b, scoredG) = DistRank.gate(s, scored, 10000000L, DistRank.dirSlot("decay_auto", dir))
+    val (b, scoredG) = DistRank.gate(s, scored, 10000000L, Pins.slot("decay_auto", dir))
     val w = Window.orderBy(col("score_u").desc, col("user_id").asc)
     val top =
       if (b <= 0) scoredG.withColumn("rk", row_number().over(w).cast("long"))

@@ -49,13 +49,13 @@ object Inference {
     // r17: keyed spread — the single-file scan otherwise runs the
     // (flag, x, y) partial aggregate in ONE task (guide §2.5); hashing
     // on the group key doubles as the aggregate's exchange.
-    val cells = Text.pin(spread(t(s, dir, "lineitem")
+    val cells = Pins.pin(spread(t(s, dir, "lineitem")
         .select(col("l_returnflag").as("flag"),
           expr("CAST(round(l_quantity) AS BIGINT)").as("x"),
           expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("y")),
         dir, "lineitem", col("flag"), col("x"), col("y"))
       .groupBy("flag", "x", "y").agg(count(lit(1)).as("c")),
-      DistRank.dirSlot("spearman_cells", dir))
+      Pins.slot("spearman_cells", dir))
     def withCum(h: DataFrame, key: String, cnt: String): DataFrame = {
       val w = Window.partitionBy("flag").orderBy(key)
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -69,7 +69,7 @@ object Inference {
     // cents histogram: near-distinct → the q_weighted_quantile gate.
     val hy0 = cells.groupBy("flag", "y").agg(sum("c").as("cy"))
     val (b, hy) = DistRank.gate(s, hy0, 1000000L,
-      DistRank.dirSlot("spearman_auto", dir))
+      Pins.slot("spearman_auto", dir))
     val hy2 =
       (if (b <= 0) withCum(hy, "y", "cy")
        else DistRank.withPrefixSumBy(hy, Seq("flag"), col("y"), col("y"),
@@ -132,7 +132,7 @@ object Inference {
     val h0 = d.groupBy("ad").agg(count(lit(1)).as("cnt"),
       sum(when(col("d") > 0, 1L).otherwise(0L)).as("cpos"))
     val (b, h) = DistRank.gate(s, h0, 1000000L,
-      DistRank.dirSlot("wilcoxon_auto", dir))
+      Pins.slot("wilcoxon_auto", dir))
     val w = Window.orderBy("ad")
       .rowsBetween(Window.unboundedPreceding, -1)
     val r =

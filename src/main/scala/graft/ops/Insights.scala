@@ -531,7 +531,7 @@ object Insights {
       .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT) * " +
         "CAST(round((1 - l_discount) * 100) AS BIGINT)")).as("rev10k"))
     // part-dim prefix sum replaces the serial sort → low crossover
-    val (b, rev) = DistRank.gate(s, rev0, 1000000L, DistRank.dirSlot("abc_auto", dir))
+    val (b, rev) = DistRank.gate(s, rev0, 1000000L, Pins.slot("abc_auto", dir))
     val w = Window.orderBy(col("rev10k").desc, col("l_partkey").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
     val tot = rev.agg(sum("rev10k").as("tot"))

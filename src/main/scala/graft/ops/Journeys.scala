@@ -76,7 +76,7 @@ object Journeys {
     // high crossover: the gated day-carry join pays per point row and
     // only beats one task past ~10⁷ points (BASELINE.md 100× table:
     // serial 4.1 s vs gated 7.1 s at ~10⁶ — auto stays serial there)
-    val (ib, pointsG) = DistRank.gate(s, points, 10000000L, DistRank.dirSlot("iov_auto", dir))
+    val (ib, pointsG) = DistRank.gate(s, points, 10000000L, Pins.slot("iov_auto", dir))
     val swept =
       if (ib <= 0) {
         val wSweep = Window.orderBy("us", "delta")

@@ -174,9 +174,9 @@ object Learning {
     // joined once per hop, and unpinned each hop re-runs the doc-sized
     // posting self-join — the corpus-scale cost; the edge list itself
     // is vocabulary², tiny. Measured 15.5 → 4.2 s at 100×.
-    val edges = graft.ops.Text.pin(und.unionAll(
+    val edges = graft.ops.Pins.pin(und.unionAll(
       und.select(col("dst").as("src"), col("src").as("dst"))),
-      DistRank.dirSlot("bfs_edges", dir))
+      Pins.slot("bfs_edges", dir))
     // r16 optimization: pin the SEED and each hop's frontier too (the
     // full loop-pin discipline, not just the edge list). Left lazy,
     // hop k's anti-join and the final union re-evaluated every earlier
@@ -186,17 +186,17 @@ object Learning {
     // Pinned, every hop runs exactly once (212 lines, 1.2 -> 0.8 s
     // steady at sf0.1); frontiers are vocabulary-sized, so the pins
     // are trivial.
-    val seed = graft.ops.Text.pin(
+    val seed = graft.ops.Pins.pin(
       dt.agg(min(col("token")).as("token")).withColumn("hops", lit(0L)),
-      DistRank.dirSlot("bfs_seed", dir))
+      Pins.slot("bfs_seed", dir))
     var visited = seed
     var frontier = seed.select("token")
     for (k <- 1 to 3) {
-      frontier = graft.ops.Text.pin(edges
+      frontier = graft.ops.Pins.pin(edges
         .join(frontier.withColumnRenamed("token", "src"), "src")
         .select(col("dst").as("token")).distinct()
         .join(visited.select("token"), Seq("token"), "left_anti"),
-        DistRank.dirSlot(s"bfs_f$k", dir))
+        Pins.slot(s"bfs_f$k", dir))
       visited = visited.unionAll(
         frontier.withColumn("hops", lit(k.toLong)))
     }

@@ -136,7 +136,7 @@ object Nonparam {
       .withColumn("cents", expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
     val h0 = o.groupBy("cents").agg(count(lit(1)).as("cnt"))
     val (b, h) = DistRank.gate(s, h0, 1000000L,
-      DistRank.dirSlot("mediantest_auto", dir))
+      Pins.slot("mediantest_auto", dir))
     val w = Window.orderBy("cents")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum =
@@ -263,7 +263,7 @@ object Nonparam {
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("v"))
     val h0 = o.groupBy("v").agg(count(lit(1)).as("cnt"))
     val (b, h) = DistRank.gate(s, h0, 1000000L,
-      DistRank.dirSlot("kw_auto", dir))
+      Pins.slot("kw_auto", dir))
     val w = Window.orderBy("v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val ranked =

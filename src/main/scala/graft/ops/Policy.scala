@@ -102,7 +102,7 @@ object Policy {
           .as(s"b_${names(i)}_${names(j)}")): _*)
     // the 1-row aggregate is pinned once: six union branches hang off
     // it, and without the pin each would re-run the corpus scan
-    val counts1 = Text.pin(counts, "filter_overlap_counts")
+    val counts1 = Pins.pin(counts, "filter_overlap_counts")
     val pairRows = (for {
       i <- names.indices; j <- i + 1 until names.length
     } yield (names(i), names(j))).map { case (a, b) =>

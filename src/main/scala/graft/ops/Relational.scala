@@ -574,7 +574,7 @@ object Relational {
       .groupBy("o_orderpriority", "cents")
       .agg(count(lit(1)).as("cnt"))
     val (b, h) = DistRank.gate(s, h0, 1000000L,
-      DistRank.dirSlot("pdisc_auto", dir))
+      Pins.slot("pdisc_auto", dir))
     val w = Window.partitionBy("o_orderpriority").orderBy("cents")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cumd =

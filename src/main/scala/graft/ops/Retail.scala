@@ -80,7 +80,7 @@ object Retail {
           .as("sp"))
       // per-year customer-dim rank: replaces the serial sort → low
       // crossover (the q_lorenz class of the BASELINE.md 100× table)
-      val (nb, spG) = DistRank.gate(s, sp, 1000000L, DistRank.dirSlot(s"cm_auto_$year", dir))
+      val (nb, spG) = DistRank.gate(s, sp, 1000000L, Pins.slot(s"cm_auto_$year", dir))
       val n = spG.agg(count(lit(1)).as("n"))
       val w = Window.orderBy(col("sp").asc, col("o_custkey").asc)
       val ranked =

@@ -113,7 +113,7 @@ object Sampling {
       .withColumn("h", expr(
         "CAST(conv(substring(md5(concat(CAST(c_custkey AS STRING), " +
           "':sys')), 1, 15), 16, 10) AS BIGINT)"))
-    val (b, c) = DistRank.gate(s, c0, 1000000L, DistRank.dirSlot("sys_auto", dir))
+    val (b, c) = DistRank.gate(s, c0, 1000000L, Pins.slot("sys_auto", dir))
     val ranked =
       if (b <= 0) c.withColumn("rn", row_number().over(
         Window.orderBy(col("h").asc, col("c_custkey").asc)).cast("long"))

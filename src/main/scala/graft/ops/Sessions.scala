@@ -66,7 +66,7 @@ object Sessions {
     * it, and without the pin each re-runs the two-window sessionizer
     * (the 100× smoke measured 2.5× the single-branch cost). */
   def qEntryExit(s: SparkSession, dir: String): DataFrame = {
-    val ss = Text.pin(sessions(s, dir), "entry_exit_sessions")
+    val ss = Pins.pin(sessions(s, dir), "entry_exit_sessions")
     val tot = ss.agg(count(lit(1)).as("tot"))
     val en = ss.groupBy(col("entry_type").as("event_type"))
       .agg(count(lit(1)).as("n_entry"))

@@ -40,16 +40,12 @@ object Sketches {
     * SAME postings — through round 8 each re-derived them (a corpus scan
     * + explode + distinct shuffle apiece, three times per session). Same
     * pinning pattern (and cluster-durability caveat) as
-    * [[Graphs]]' strictEdges / [[Text.pin]]. */
-  private val postingsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  private[ops] def enPostings(s: SparkSession, dir: String): DataFrame =
-    postingsCache.computeIfAbsent(Text.pinKey(s, dir), _ =>
-      Text.pin(t(s, dir, "documents").filter(col("lang") === "en")
+    * [[Graphs]]' strictEdges / [[Pins.pin]]. */
+  private[graft] def enPostings(s: SparkSession, dir: String): DataFrame =
+    Pins.pinned(s, "mh_postings", dir)(
+      t(s, dir, "documents").filter(col("lang") === "en")
         .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-        .filter(col("token") =!= "").distinct(),
-        s"mh_postings_${new java.io.File(dir).getName}"))
+        .filter(col("token") =!= "").distinct())
 
   /** The 16 md5-lane minima per doc (the ENGINE-PORTABLE 15-hex-char
     * sketch documented on [[qDedupMinhash]]), pinned once per
@@ -57,18 +53,14 @@ object Sketches {
     * IDENTICAL signature table — recomputing it was round 8's measured
     * waste (q_lsh_recall spent most of its 9 s re-minimizing the same
     * lanes the dedup query had already folded). */
-  private val sigCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
   private[graft] def mdLaneSigs(s: SparkSession, dir: String): DataFrame =
-    sigCache.computeIfAbsent(Text.pinKey(s, dir), _ => {
+    Pins.pinned(s, "mh_sigs", dir) {
       val laneMins = (0 until 16).map(j =>
         min(expr(s"CAST(conv(substring(md5(concat('$j:', token)), 1, 15)," +
           s" 16, 10) AS BIGINT)")).as(s"mh$j"))
-      Text.pin(enPostings(s, dir).groupBy("doc_id")
-        .agg(laneMins.head, laneMins.tail: _*),
-        s"mh_sigs_${new java.io.File(dir).getName}")
-    })
+      enPostings(s, dir).groupBy("doc_id")
+        .agg(laneMins.head, laneMins.tail: _*)
+    }
 
   /** 64-bit SimHash signature per en doc (the [[qDedupSimhash]] vote
     * recipe — bit k set iff the ±1 md5-nibble vote at bit k is
@@ -78,13 +70,8 @@ object Sketches {
     * tokens, empties dropped, distinct) — the same dedup-family pin
     * that closed the md5-lane and exact-pair re-derivation regressions
     * in rounds 9-10. */
-  private val shCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
   private[ops] def shSigs(s: SparkSession, dir: String): DataFrame =
-    shCache.computeIfAbsent(Text.pinKey(s, dir), _ =>
-      Text.pin(simhashOf(enPostings(s, dir)),
-        s"sh_sigs_${new java.io.File(dir).getName}"))
+    Pins.pinned(s, "sh_sigs", dir)(simhashOf(enPostings(s, dir)))
 
   /** The 64-bit SimHash vote recipe over any (doc_id, token) posting
     * table — the CORE behind [[shSigs]] (which adds the per-(session,
@@ -437,7 +424,7 @@ object Sketches {
       // the probe and the output path share one materialization.
       val gateOn =
         s.conf.getOption("spark.graft.dedupMaxPairsPerDoc").isDefined
-      val bands = if (gateOn) Text.pin(bands0, "mha_bands") else bands0
+      val bands = if (gateOn) Pins.pin(bands0, "mha_bands") else bands0
       if (pairDensityExceeded(s, bands, Seq("band", "bkey"), nDocs))
         return bucketClusters(s, bands, Seq("band", "bkey"), "mha")
       val cand = bands.as("x").join(bands.as("y"),
@@ -491,7 +478,7 @@ object Sketches {
     // per-pair hamming verify is dropped, the same precision trade the
     // minhash gate documents. Default OFF → graded output unchanged.
     val gateOn = s.conf.getOption("spark.graft.dedupMaxPairsPerDoc").isDefined
-    val segs = if (gateOn) Text.pin(segs0, "sh_segs") else segs0
+    val segs = if (gateOn) Pins.pin(segs0, "sh_segs") else segs0
     if (gateOn) {
       val nDocs = docs.select("doc_id").distinct().count()
       if (pairDensityExceeded(s, segs, Seq("seg", "sval"), nDocs))

@@ -261,33 +261,11 @@ object Text {
     * the 10× salted smoke for ONE derivation's worth of answer). Same
     * pinning pattern (and cluster-durability caveat) as
     * Sketches.enPostings / Graphs.strictEdges. */
-  private val nearPairsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  /** Session-cache key for pinned frames: folds the checkpoint MODE
-    * into the key, so flipping `spark.graft.reliableCheckpoint`
-    * mid-session re-derives through the requested durability class
-    * instead of serving the other mode's materialization (AdvancedSpec
-    * flips the conf to prove the reliable path writes its parquet
-    * slots — a mode-blind cache would short-circuit that run). UNSET
-    * keys as "auto", distinct from an explicit "false": since round 13
-    * the unset tier resolves per-plan through the ckptAutoBytes leaf
-    * gate, so it is not the same materialization class as forced-local. */
-  private[ops] def pinKey(s: SparkSession,
-                          dir: String): (SparkSession, String) =
-    (s, dir + "|" + s.conf.getOption("spark.graft.reliableCheckpoint")
-      .getOrElse("auto"))
-
   private[ops] def nearPairs(s: SparkSession, dir: String): DataFrame =
-    nearPairsCache.computeIfAbsent(pinKey(s, dir), _ =>
-      pin(nearPairsDerive(s, dir),
-        s"near_pairs_${new java.io.File(dir).getName}"))
+    Pins.pinned(s, "near_pairs", dir)(nearPairsDeriveOn(s,
+      t(s, dir, "documents").filter(col("lang") === "en")))
 
-  private def nearPairsDerive(s: SparkSession, dir: String): DataFrame =
-    nearPairsDeriveOn(s, t(s, dir, "documents")
-      .filter(col("lang") === "en"))
-
-  /** [[nearPairsDerive]] over an explicit doc frame — the round-11
+  /** [[nearPairs]]' derivation over an explicit doc frame — the round-11
     * seam that lets the audit sampling gate (DedupAudit.auditSample)
     * shrink the doc universe BEFORE pair generation, where the
     * quadratic cost lives, without touching the graded pipeline. */
@@ -413,96 +391,6 @@ object Text {
     * Deterministic output. No SQL oracle (iterative fixpoint); exact
     * union-find cross-check in `AdvancedSpec`.
     */
-  /** Materialize iterative loop state, truncating lineage. Small inputs:
-    * eager `localCheckpoint` — blocks live in executor storage, fast, but
-    * they DIE WITH THE EXECUTOR; correct on local[n], lossy on a real
-    * cluster under executor churn. `spark.graft.reliableCheckpoint=true`
-    * (forced, or auto-engaged above the ckptAutoBytes leaf floor — see
-    * [[ckptReliable]]) writes state through fault-tolerant storage
-    * instead (`spark.graft.checkpointDir`, default
-    * tmp; on a cluster point it at DFS): an explicit parquet write to a
-    * NAMED SLOT under the dir, read back as the new lineage root. Named
-    * slots (not RDD `checkpoint()`) because slot names can be REUSED —
-    * round r+2 overwrites round r's slot, which is safe (round r's data
-    * is only read while materializing round r+1, already on disk) and
-    * bounds the footprint at the FIXED set of named slots (clusterLabels'
-    * <prefix>_pairs/edges/labels_0/cedges/labels_1..3 — the loop
-    * alternates the last two, one prefix per calling operator — plus
-    * qPagerank's pagerank_edges_raw/pagerank_deg/
-    * pagerank_edges) regardless of round count. RDD
-    * `checkpoint()` files, by contrast, are only ever deleted when
-    * `spark.cleaner.referenceTracking.cleanCheckpoints` was set at
-    * context startup — the default leaks one full state copy per round.
-    */
-  /** Per-session checkpoint namespace: a UUID minted on first use and
-    * parked in the session conf (identityHashCode can collide across the
-    * JVM lifetime of a long-running service; a UUID cannot). */
-  private def ckptSessionId(s: SparkSession): String = pinLock.synchronized {
-    val key = "spark.graft.ckptSessionId"
-    s.conf.getOption(key).getOrElse {
-      val u = java.util.UUID.randomUUID().toString
-      s.conf.set(key, u)
-      u
-    }
-  }
-  private val pinLock = new Object
-
-  /** Pick the materialization class for [[pin]] (round-13): conf
-    * verbatim when set ("true" → parquet slots, anything else → local
-    * checkpoint); when UNSET, an auto gate on the pinned plan's LEAF
-    * file-relation bytes (`spark.graft.ckptAutoBytes`, default 256 MiB
-    * — leaf sizes are real file statistics, unlike join-node
-    * sizeInBytes estimates which multiply and overshoot by orders of
-    * magnitude). Below the floor graded SFs keep the fast in-memory
-    * localCheckpoint, byte-identical plans; above it loop state is
-    * written through compressed parquet slots instead of executor
-    * block storage. That is not only the durability class a real
-    * cluster needs (blocks die with the executor) — it MEASURES FASTER
-    * at scale: the 100× smoke clocked q_pagerank at 41/66 s with
-    * parquet slots vs 171/257 s with localCheckpoint (BASELINE.md
-    * round 13), because columnar-compressed state avoids the
-    * serialized-block storage-memory pressure that dominates the
-    * local[32] run at that size. */
-  private[graft] def ckptReliable(df: DataFrame): Boolean = {
-    val s = df.sparkSession
-    s.conf.getOption("spark.graft.reliableCheckpoint") match {
-      case Some(v) => v == "true"
-      case None =>
-        val floor = s.conf.getOption("spark.graft.ckptAutoBytes")
-          .map(_.toLong).getOrElse(256L << 20)
-        // Count ONLY relation leaves whose sizeInBytes is a real
-        // measurement: file-backed scans (LogicalRelation over file
-        // stats) and in-memory LocalRelations. Everything else —
-        // notably the LogicalRDD a previous localCheckpoint leaves
-        // behind, which (Spark 3.4+) carries the ORIGIN plan's
-        // estimate, i.e. the multiplicative join overestimate for
-        // loop state — is ignored: counting it would flip loop pins
-        // chaining from a local pin onto the parquet path at ANY
-        // scale. The resulting class is stable along a chain: a chain
-        // that started local contributes no counted leaves and stays
-        // local (its state was floor-small at the first decision); a
-        // chain that started reliable reads its parquet slots back as
-        // file relations with real stats and stays reliable.
-        import org.apache.spark.sql.execution.datasources.LogicalRelation
-        import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-        df.queryExecution.optimizedPlan.collectLeaves().collect {
-          case l: LogicalRelation => l.stats.sizeInBytes
-          case l: LocalRelation => l.stats.sizeInBytes
-        }.sum >= floor
-    }
-  }
-
-  private[graft] def pin(df: DataFrame, slot: String): DataFrame = {
-    val s = df.sparkSession
-    if (ckptReliable(df)) {
-      val base = s.conf.getOption("spark.graft.checkpointDir").getOrElse(
-        new java.io.File(sys.props("java.io.tmpdir"), "graft_ckpt").toString)
-      val path = s"$base/${ckptSessionId(s)}/$slot"
-      df.write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
-    } else df.localCheckpoint(true)
-  }
-
   def qDedupClusters(s: SparkSession, dir: String): DataFrame =
     orderedAll(dedupClusterLabels(s, dir))
 
@@ -512,14 +400,10 @@ object Text {
     * through round 9 it re-ran the whole pair derivation + fixpoint
     * (the verdict's top regression after the minhash pin). The fixpoint
     * already pins its loop state; this pins the composed final table. */
-  private val clusterCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  private[ops] def dedupClusterLabels(s: SparkSession,
-                                      dir: String): DataFrame =
-    clusterCache.computeIfAbsent(pinKey(s, dir), _ =>
-      pin(clusterLabels(s, nearPairs(s, dir).select("a_id", "b_id"), "cc"),
-        s"cc_final_${new java.io.File(dir).getName}"))
+  private[graft] def dedupClusterLabels(s: SparkSession,
+                                        dir: String): DataFrame =
+    Pins.pinned(s, "cc_final", dir)(
+      clusterLabels(s, nearPairs(s, dir).select("a_id", "b_id"), "cc"))
 
   /** Connected components over a near-dup pair graph → cluster
     * representatives: (doc_id, cluster_id = component min doc_id,
@@ -544,12 +428,12 @@ object Text {
     def mirror(df: DataFrame): DataFrame = df
       .select(col("a").as("src"), col("b").as("dst"))
       .union(df.select(col("b").as("src"), col("a").as("dst")))
-    def initLabels(g: DataFrame, sl: String): DataFrame = pin(g
+    def initLabels(g: DataFrame, sl: String): DataFrame = Pins.pin(g
       .groupBy(col("dst").as("doc_id")).agg(min(col("src")).as("nbr"))
       .select(col("doc_id"), least(col("doc_id"), col("nbr")).as("label")),
       sl)
-    val pairs = pin(pairRows, slot("pairs"))
-    val edges = pin(mirror(pairs.select(col("a_id").as("a"),
+    val pairs = Pins.pin(pairRows, slot("pairs"))
+    val edges = Pins.pin(mirror(pairs.select(col("a_id").as("a"),
       col("b_id").as("b"))), slot("edges"))
     // Round 0 fused into initialization: with labels starting at the node
     // id, the first propagation is just min(id, min neighbor id) — one
@@ -578,7 +462,7 @@ object Text {
       .select(least(col("la"), col("lb")).as("a"),
         greatest(col("la"), col("lb")).as("b"))
       .distinct()
-    val cedges = pin(mirror(cedges0), slot("cedges"))
+    val cedges = Pins.pin(mirror(cedges0), slot("cedges"))
     // Min-label fixpoint over the contracted graph (same loop shape as
     // the direct version, on tiny data). Labels start at the contracted
     // node id; nodes absent from cedges are whole components already.
@@ -604,7 +488,7 @@ object Text {
         .join(labels, cedges("src") === labels("doc_id"))
         .groupBy(col("dst").as("doc_id"))
         .agg(min(col("label")).as("nbr_label"))
-      val stepped = pin(labels.withColumnRenamed("label", "old")
+      val stepped = Pins.pin(labels.withColumnRenamed("label", "old")
         .join(nbrMin, Seq("doc_id"), "left")
         .select(col("doc_id"), col("old"),
           least(col("old"), coalesce(col("nbr_label"), col("old")))
@@ -656,7 +540,7 @@ object Text {
     // the whole tokenization ran ~6x (976 plan lines, the fattest
     // remaining plan in PlanAudit). Pin it once per call
     // (multi-consumer pin idiom, same as q_containment's bitmaps).
-    val w = pin(tf.join(dfr, "token").crossJoin(broadcast(nd))
+    val w = Pins.pin(tf.join(dfr, "token").crossJoin(broadcast(nd))
       .withColumn("wt",
         col("tf") * log(col("n_docs").cast("double") / col("df")))
       .select("doc_id", "token", "wt"), "tfidf_w")
@@ -988,7 +872,7 @@ object Text {
     // bitmap fold re-derived five times (809 plan lines, 16 scans).
     // Pin it once per call (multi-consumer pin idiom); 1.5 s -> 1.0 s
     // steady at sf0.1.
-    val bitmaps = Text.pin(dt.join(broadcast(dict), "token")
+    val bitmaps = Pins.pin(dt.join(broadcast(dict), "token")
       .groupBy("doc_id")
       .agg(collect_list(col("tok_id")).as("tids"), count(lit(1)).as("nt"))
       .withColumn("bm", expr(

@@ -576,14 +576,14 @@ object Vectors {
     // re-evaluates the whole top-8 window per branch (the Round12PlanSpec
     // pin caught exactly that). Materializing once makes every later
     // step a broadcast-scale job.
-    val cand = Text.pin(
+    val cand = Pins.pin(
       emb.join(broadcast(probes), col("vec_id") =!= col("pid"))
         .withColumn("cos", cosine(col("pe"), col("embedding")))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 8)
         .select(col("pid"), col("vec_id").as("cid"),
           col("cos").as("rel"), col("embedding").as("ce")),
-      DistRank.dirSlot("mmr_cand", dir))
+      Pins.slot("mmr_cand", dir))
     // struct-max argmax: max score, then max -cid = min cid; the picked
     // embedding rides in the struct for the next step's sim terms.
     def pick(df: DataFrame, score: Column): DataFrame =

@@ -254,7 +254,7 @@ object Warehouse {
     * brand dimension (25 values) broadcast for the item→brand mapping
     * and the marginals. At 100 TB: identical plan; a skewed mega-basket
     * is capped by the same df-cap guard the PMI operator carries. The
-    * basket table is pinned once (Text.pin) — it has three consumers
+    * basket table is pinned once (Pins.pin) — it has three consumers
     * (N, marginals, pairs) and would otherwise re-derive the scan+join
     * per consumer. */
   def qBrandAffinity(s: SparkSession, dir: String): DataFrame = {
@@ -266,7 +266,7 @@ object Warehouse {
     // otherwise run inside the ONE scan task of the single-file fixture
     // (guide §2.5); hashing on the basket key doubles as the groupBy
     // exchange.
-    val baskets = Text.pin(spread(t(s, dir, "lineitem")
+    val baskets = Pins.pin(spread(t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey")), dir, "lineitem",
         col("l_orderkey"))
       .join(broadcast(t(s, dir, "part")),
@@ -399,7 +399,7 @@ object Warehouse {
       .groupBy("event_type", "cents").agg(sum("w").as("gw"),
         count(lit(1)).as("gn"))
     val (b, g) = DistRank.gate(s, g0, 1000000L,
-      DistRank.dirSlot("wmed_auto", dir))
+      Pins.slot("wmed_auto", dir))
     val w = Window.partitionBy("event_type").orderBy("cents")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // r16: totals from full-partition window sums in the serial branch
@@ -527,7 +527,7 @@ object Warehouse {
         expr("CAST(l_quantity AS BIGINT)").as("w"))
       .groupBy("l_returnflag", "cents").agg(sum("w").as("gw"))
     val (b, g) = DistRank.gate(s, g0, 1000000L,
-      DistRank.dirSlot("wq_auto", dir))
+      Pins.slot("wq_auto", dir))
     val wc = Window.partitionBy("l_returnflag").orderBy("cents")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // r16 optimization (serial branch only): the per-flag total used to

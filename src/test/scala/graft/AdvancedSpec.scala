@@ -136,9 +136,8 @@ class AdvancedSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
       assert(reliable.sameElements(default))
       // loop state went through named parquet slots under the ckpt dir
-      // (namespaced by the per-session UUID pin() parks in the conf)
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_ckpt/${spark.conf.get("spark.graft.ckptSessionId")}")
+      // (namespaced by the session's id in the pin registry)
+      val base = new java.io.File(ops.Pins.slotDir(spark))
       val slots = Option(base.list()).map(_.toSet).getOrElse(Set.empty)
       assert(Set("cc_pairs", "cc_edges", "cc_labels_0").subsetOf(slots),
         s"$slots")

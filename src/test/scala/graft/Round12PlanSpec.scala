@@ -69,7 +69,7 @@ class Round12PlanSpec extends SparkSpec {
   }
 
   test("q_mmr_diversify: candidates pinned once, steps never re-derive") {
-    // the ≤80-row candidate set is MATERIALIZED (Text.pin) before the
+    // the ≤80-row candidate set is MATERIALIZED (Pins.pin) before the
     // three unrolled selection steps — without the pin each of the 7
     // downstream join branches re-evaluated the corpus-scale top-8
     // window (this spec caught it). The final plan therefore contains

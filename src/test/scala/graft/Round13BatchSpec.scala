@@ -151,24 +151,24 @@ class Round13BatchSpec extends SparkSpec {
   test("ckptReliable: conf verbatim, leaf-floor auto, unknown-leaf exclusion") {
     val base = ops.t(spark, sf, "orders").filter(col("o_totalprice") > 0)
     // fixture leaves are KB-scale: unset conf stays local below 256 MiB
-    assert(!ops.Text.ckptReliable(base))
+    assert(!ops.Pins.ckptReliable(base))
     // floor 1 byte: the same plan auto-engages parquet slots
     val tiny = spark.newSession()
     tiny.conf.set("spark.graft.ckptAutoBytes", "1")
-    assert(ops.Text.ckptReliable(
+    assert(ops.Pins.ckptReliable(
       ops.t(tiny, sf, "orders").filter(col("o_totalprice") > 0)))
     // conf wins over any floor, both ways
     tiny.conf.set("spark.graft.reliableCheckpoint", "false")
-    assert(!ops.Text.ckptReliable(ops.t(tiny, sf, "orders")))
+    assert(!ops.Pins.ckptReliable(ops.t(tiny, sf, "orders")))
     tiny.conf.set("spark.graft.reliableCheckpoint", "true")
-    assert(ops.Text.ckptReliable(ops.t(tiny, sf, "orders")))
+    assert(ops.Pins.ckptReliable(ops.t(tiny, sf, "orders")))
     // a chain from a LOCAL checkpoint reports only the unknown default
     // leaf size — it must NOT flip to parquet even under floor 1
     // (unknown-stat leaves are excluded from the floor sum)
     tiny.conf.unset("spark.graft.reliableCheckpoint")
     val chained = ops.t(tiny, sf, "orders").filter(col("o_totalprice") > 0)
       .localCheckpoint(true).filter(col("o_orderkey") > 0)
-    assert(!ops.Text.ckptReliable(chained))
+    assert(!ops.Pins.ckptReliable(chained))
   }
 
   test("pin modes agree: q_pagerank identical under local and parquet slots") {
