@@ -10,7 +10,7 @@ import graft.ops.{Curation, DistRank, Pins, Pipeline, Sketches, Text, Vectors}
   * query surface calls on their OWN tables. Every function here
   * DELEGATES to the same machinery the 480 graded queries run
   * (Text.maskGroupPairs / invertedPairs / clusterLabels,
-  * DistRank.gate / withRank / withPrefixSum[By]), so the library and
+  * DistRank.gate / rank / prefixSum), so the library and
   * the graded surface cannot drift: ApiSpec proves each operator on a
   * non-fixture schema AND cross-checks it against the corresponding
   * graded query's rows on the fixture.
@@ -515,9 +515,8 @@ object Graft {
     * is the exact O(batch) merge of
     * [[connectedComponentsIncremental]]. Cost per day: band the batch
     * once (pinned), one corpus scan restricted to the touched buckets
-    * (batch-side broadcast under
-    * `spark.graft.dedupIncBroadcastMaxBandRows`, default 5 000 000;
-    * above it a shuffle join — the honest cost of a batch that big),
+    * (batch-side broadcast up to 5 000 000 batch band rows; above it a
+    * shuffle join — the honest cost of a batch that big),
     * one batch-scale star fold, one O(batch) CC — the corpus is never
     * re-banded or re-clustered (ScaleSmoke `dedupinc`). */
   def dedupIncremental(standingLabels: DataFrame, standingBands: DataFrame,
@@ -585,11 +584,8 @@ object Graft {
         "and band-domain guards are SKIPPED for this call (raise " +
         "spark.graft.dedupIncValidateMaxBatchRows to validate big " +
         "batches; the probe costs one standing-bands scan)")
-    val bcMax = s.conf
-      .getOption("spark.graft.dedupIncBroadcastMaxBandRows")
-      .map(_.toLong).getOrElse(5000000L)
     val bc: DataFrame => DataFrame =
-      if (bcMax > 0 && nBatchBands <= bcMax) broadcast else identity
+      if (nBatchBands <= 5000000L) broadcast else identity
     // min standing member per touched bucket: ONE corpus scan, output
     // bounded by the batch's bucket count
     val touched = batchBands.select("band", "bkey").distinct()
@@ -862,10 +858,7 @@ object Graft {
     val s = df.sparkSession
     val (b, pinned) = DistRank.gate(s, df, crossoverRows,
       freshSlot("api_rank"))
-    if (b <= 0)
-      pinned.withColumn(out,
-        row_number().over(Window.orderBy(key.asc, tie.asc)).cast("long"))
-    else DistRank.withRank(pinned, key, tie, b, out)
+    DistRank.rank(pinned, key, tie, b, out)
   }
 
   /** EXCLUSIVE running sum of `value` over the (key asc, tie asc)
@@ -879,16 +872,7 @@ object Graft {
     val s = df.sparkSession
     val (b, pinned) = DistRank.gate(s, df, crossoverRows,
       freshSlot("api_psum"))
-    if (b <= 0) {
-      val w =
-        if (parts.isEmpty) Window.orderBy(key.asc, tie.asc)
-        else Window.partitionBy(parts.map(col): _*)
-          .orderBy(key.asc, tie.asc)
-      pinned.withColumn(out, coalesce(sum(value).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    } else if (parts.isEmpty)
-      DistRank.withPrefixSum(pinned, key, tie, value, b, out)
-    else DistRank.withPrefixSumBy(pinned, parts, key, tie, value, b, out)
+    DistRank.prefixSum(pinned, parts, key, tie, value, b, out)
   }
 
   // ---- entity resolution -------------------------------------------------

@@ -51,27 +51,22 @@ object Analytics {
     * plan — two `partitionBy(event_type)` windows — serializes onto
     * #event_types tasks (5 here), because BOTH the sequencing lag and
     * the rank sort are per-type global sorts. 56 s at 100× vs 1.5 s at
-    * 10× on this box was the 5-task ceiling, not data volume. The
-    * conf-gated parallel path (`spark.graft.interarrivalBuckets` = B >
-    * 0, default off to pin fixture plans) removes both sorts:
+    * 10× on this box was the 5-task ceiling, not data volume.
+    * `spark.graft.rankBuckets` = B > 0 ([[DistRank.buckets]], default
+    * off to pin fixture plans) removes both sorts:
     *  - LAG: rows bucket by time range into B per-type slices; lag runs
     *    within (type, bucket), and each bucket's first gap is seeded
     *    from the previous non-empty bucket's last timestamp via a
     *    bucket-granular window over the ≤ types×B tails table — the
     *    classic seam-stitched parallel sessionization.
-    *  - PERCENTILE: exact distributed k-select. A per-(type,
-    *    value-bucket) histogram (≤ types×B rows) locates, for each of
-    *    the ≤6 needed ranks, the one bucket holding it; only those
-    *    buckets are then sorted (row_number within (type, vbucket) —
-    *    parallel across buckets) and the rank row is picked by offset.
-    *    No global sort exists in the plan; the degenerate all-one-value
-    *    distribution collapses to one bucket (recursive refinement is
-    *    the general fix, single-level is the implemented sweet spot).
+    *  - PERCENTILE: the ≤ 6 needed ranks per type are read by
+    *    [[DistRank.atRanks]], whose bucketed path is an exact
+    *    distributed k-select (only the buckets holding a needed rank
+    *    are sorted).
     * Both paths are bit-equal to the serial plan (spec-asserted with B
     * forced on the fixture). */
   def qInterarrival(s: SparkSession, dir: String): DataFrame = {
-    val buckets = s.conf.getOption("spark.graft.interarrivalBuckets")
-      .map(_.toInt).getOrElse(0)
+    val buckets = DistRank.buckets(s)
     val evs = t(s, dir, "events")
       .withColumn("us", expr("unix_micros(ts)"))
       .select(col("event_type"), col("us"), col("event_id"))
@@ -103,82 +98,32 @@ object Analytics {
           .filter(col("prev_last").isNotNull)
           .select(col("event_type"),
             (col("bmin") - col("prev_last")).as("gap_us"))
-        within.unionByName(seams)
+        // The gap table feeds the stats, the bucket histogram and the
+        // rank pick, which would each re-run the scan+lag lineage: pin
+        // it once.
+        Pins.pin(within.unionByName(seams), "interarrival_gaps")
       }
 
-    if (buckets <= 0) {
-      val ranked = gaps
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("event_type").orderBy("gap_us")))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("event_type")))
-      def pScaled(qNum: Int, name: String) = {
-        val pos = s"($qNum * (n - 1))"
-        sum(expr(
-          s"CASE WHEN rn - 1 = $pos div 100 " +
-            s"THEN gap_us * (100 - $pos % 100) " +
-            s"WHEN rn - 1 = $pos div 100 + 1 THEN gap_us * ($pos % 100) " +
-            "ELSE 0 END")).cast("long").as(name)
-      }
-      orderedAll(ranked.groupBy("event_type")
-        .agg(max("n").cast("long").as("n_gaps"),
-          pScaled(50, "p50_x100"), pScaled(95, "p95_x100"),
-          pScaled(99, "p99_x100"), max("gap_us").as("max_us")))
-    } else {
-      // Three consumers (stats, histogram, rank-pick) would each re-run
-      // the scan+lag lineage; pin the gap table once — Pins.pin is the
-      // shared persist-before-multi-pass policy (localCheckpoint on one
-      // JVM, reliable DFS slots on a cluster).
-      val pinned = Pins.pin(gaps, "interarrival_gaps")
-      val gstats = pinned.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), min("gap_us").as("gmin"),
-          max("gap_us").as("gmax"))
-      // (type, q, k, w): the 0-indexed ranks each quantile interpolates
-      // over, with their ×100 weights; rem=0 drops the zero-weight row
-      // (which could otherwise index past the end).
-      val spec = gstats
-        .selectExpr("event_type", "n", "explode(array(50, 95, 99)) AS q")
-        .selectExpr("event_type", "q",
-          "(q * (n - 1)) div 100 AS lo", "(q * (n - 1)) % 100 AS rem")
-        .selectExpr("event_type", "q",
-          "explode(filter(array(struct(lo AS k, 100 - rem AS w), " +
-            "struct(lo + 1 AS k, rem AS w)), x -> x.w > 0)) AS kw")
-        .select(col("event_type"), col("q"),
-          col("kw.k").as("k"), col("kw.w").as("w"))
-      val vb = pinned
-        .join(broadcast(gstats.select("event_type", "gmin", "gmax")),
-          "event_type")
-        .withColumn("vbkt",
-          expr(s"((gap_us - gmin) * $buckets) div (gmax - gmin + 1)"))
-      val counts = vb.groupBy("event_type", "vbkt")
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("cum_before", coalesce(sum("cnt").over(
-          Window.partitionBy("event_type").orderBy("vbkt")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      val targets = spec.join(counts, Seq("event_type"))
-        .filter(col("k") >= col("cum_before") &&
-          col("k") < col("cum_before") + col("cnt"))
-        .select(col("event_type"), col("q"), col("k"), col("w"),
-          col("vbkt"), col("cum_before"))
-      val picked = vb
-        .join(broadcast(targets.select("event_type", "vbkt").distinct()),
-          Seq("event_type", "vbkt"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("event_type", "vbkt").orderBy("gap_us")))
-        .join(broadcast(targets), Seq("event_type", "vbkt"))
-        .filter(col("cum_before") + col("rn") - 1 === col("k"))
-      val pcts = picked.groupBy("event_type").agg(
-        sum(when(col("q") === 50, col("gap_us") * col("w")))
-          .cast("long").as("p50_x100"),
-        sum(when(col("q") === 95, col("gap_us") * col("w")))
-          .cast("long").as("p95_x100"),
-        sum(when(col("q") === 99, col("gap_us") * col("w")))
-          .cast("long").as("p99_x100"))
-      orderedAll(gstats.join(pcts, "event_type")
-        .select(col("event_type"), col("n").cast("long").as("n_gaps"),
-          col("p50_x100"), col("p95_x100"), col("p99_x100"),
-          col("gmax").as("max_us")))
-    }
+    // (type, n, q, r, w): the 1-based ranks each quantile interpolates
+    // over, with their ×100 weights; rem = 0 drops the zero-weight row
+    // (which could otherwise index past the end). q = 100 is rank n, the
+    // max gap.
+    val targets = gaps.groupBy("event_type").agg(count(lit(1)).as("n"))
+      .selectExpr("event_type", "n", "explode(array(50, 95, 99, 100)) AS q")
+      .selectExpr("event_type", "n", "q",
+        "(q * (n - 1)) div 100 AS lo", "(q * (n - 1)) % 100 AS rem")
+      .selectExpr("event_type", "n", "q",
+        "explode(filter(array(struct(lo + 1 AS r, 100 - rem AS w), " +
+          "struct(lo + 2 AS r, rem AS w)), x -> x.w > 0)) AS kw")
+      .select(col("event_type"), col("n"), col("q"), col("kw.r").as("r"),
+        col("kw.w").as("w"))
+    def pScaled(q: Int) = sum(when(col("q") === q, col("v") * col("w")))
+      .cast("long").as(s"p${q}_x100")
+    orderedAll(DistRank.atRanks(gaps, Seq("event_type"), col("gap_us"),
+        col("gap_us"), targets, buckets)
+      .groupBy("event_type")
+      .agg(max("n").as("n_gaps"), pScaled(50), pScaled(95), pScaled(99),
+        max(when(col("q") === 100, col("v"))).as("max_us")))
   }
 
   /** 2-d profiling histogram: lineitem count + exact decimal revenue on a
@@ -284,9 +229,8 @@ object Analytics {
     * engines (the q_trend_slope policy: Spark `div` truncates toward
     * zero while DuckDB `//` may floor, so negative inexact quotients
     * are computed as -((-num) div den) on both sides to pin
-    * truncation); the median is the discrete lower median off a
-    * slope histogram + cum window (aggregated input — the exemption
-    * class). */
+    * truncation); the median is the [[DistRank.discrete]] p50 of the
+    * slope histogram (aggregated input — the exemption class). */
   def qTheilSen(s: SparkSession, dir: String): DataFrame = {
     val daily = t(s, dir, "events")
       .withColumn("day", expr("unix_micros(ts) div 86400000000"))
@@ -302,16 +246,10 @@ object Analytics {
           "ELSE -((y - y_b) * 1000 div (day_b - day)) END").as("slope"))
     val h = slopes.groupBy("event_type", "slope")
       .agg(count(lit(1)).as("cnt"))
-    val tot = h.groupBy(col("event_type").as("t3"))
-      .agg(sum("cnt").as("n_pairs"))
-    val w = Window.partitionBy("event_type").orderBy("slope")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val med = h.withColumn("cum", sum("cnt").over(w))
-      .join(broadcast(tot), col("event_type") === col("t3"))
-      .filter(col("cum") * 2 >= col("n_pairs"))
-      .groupBy("event_type")
-      .agg(max("n_pairs").as("n_pairs"),
-        min("slope").as("sen_slope_milli"))
+    val by = Seq("event_type")
+    val med = DistRank.discrete(DistRank.cumulative(h, by, "slope", "cnt", 0),
+        by, "slope", Seq(50 -> "sen_slope_milli"))
+      .withColumnRenamed("tot", "n_pairs")
     val days = daily.groupBy(col("event_type").as("t4"))
       .agg(count(lit(1)).as("n_days"))
     orderedAll(med.join(broadcast(days), col("event_type") === col("t4"))
@@ -462,13 +400,12 @@ object Analytics {
     * cent-exact monetary total, each scored into quintiles (ntile(5)
     * under explicit tie-broken total orders), rolled up to cell counts
     * and revenue per (r, f, m) cell. The ntiles sort the CUSTOMER
-    * aggregate (≪ order rows); beyond ~10 M customers
-    * `spark.graft.rankBuckets` = B engages the shared [[DistRank]]
-    * two-pass rank per dimension (base pinned once, three parallel
-    * bucket-ranked columns joined back on the customer key, ntile by
-    * the closed-form fill rule) — bit-equal, spec-forced
-    * (Round9RankSpec). Day arithmetic stays in integer epoch-days — no
-    * date-diff dialect drift. */
+    * aggregate (≪ order rows) through [[DistRank.ntile]]: bucketed at
+    * scale (base pinned once by the gate, ntile by the closed-form fill
+    * rule) — bit-equal, spec-forced (Round9RankSpec). freq is a count
+    * and cents a sum over non-null prices, so their negated keys sort
+    * ascending exactly as the (desc) orders would. Day arithmetic stays
+    * in integer epoch-days — no date-diff dialect drift. */
   def qRfm(s: SparkSession, dir: String): DataFrame = {
     val per = t(s, dir, "orders")
       .withColumn("day", // NTZ under Verify's reader; UTC session pins it
@@ -482,33 +419,9 @@ object Analytics {
       .withColumn("recency", col("max_day") - col("last_day"))
     // customer-dim rank replaces the serial sort outright → low crossover
     val (b, base) = DistRank.gate(s, base0, 1000000L, Pins.slot("rfm_auto", dir))
-    val scored =
-      if (b <= 0) base
-        .withColumn("r_score", ntile(5).over(Window.orderBy(
-          col("recency").asc, col("o_custkey").asc)).cast("long"))
-        .withColumn("f_score", ntile(5).over(Window.orderBy(
-          col("freq").desc, col("o_custkey").asc)).cast("long"))
-        .withColumn("m_score", ntile(5).over(Window.orderBy(
-          col("cents").desc, col("o_custkey").asc)).cast("long"))
-      else {
-        // four consumers (count + three rank passes) — already pinned
-        // by DistRank.gate on every engaged path (auto or manual)
-        val p = base
-        val n = p.agg(count(lit(1)).as("n"))
-        def ranked(key: org.apache.spark.sql.Column, out: String) =
-          DistRank.withRank(p, key, col("o_custkey"), b, out)
-            .select("o_custkey", out)
-        p.join(ranked(col("recency"), "__rr"), "o_custkey")
-          .join(ranked(-col("freq"), "__rf"), "o_custkey")
-          .join(ranked(-col("cents"), "__rm"), "o_custkey")
-          .crossJoin(broadcast(n))
-          .withColumn("r_score",
-            expr(DistRank.ntileExpr("__rr", "n", 5)).cast("long"))
-          .withColumn("f_score",
-            expr(DistRank.ntileExpr("__rf", "n", 5)).cast("long"))
-          .withColumn("m_score",
-            expr(DistRank.ntileExpr("__rm", "n", 5)).cast("long"))
-      }
+    val scored = Seq(col("recency") -> "r_score", -col("freq") -> "f_score",
+      -col("cents") -> "m_score").foldLeft(base) { case (df, (key, out)) =>
+        DistRank.ntile(df, key, col("o_custkey"), 5, b, out) }
     orderedAll(scored.groupBy("r_score", "f_score", "m_score")
       .agg(count(lit(1)).as("n_cust"), sum("cents").cast("long")
         .as("total_cents")))

@@ -40,7 +40,7 @@ object Commerce {
     * — the re-order clock behind q_rfm's recency score. Per-customer
     * lag runs on the customer axis (high-cardinality partition key);
     * gaps then collapse to a (segment, gap) histogram before the
-    * percentile picks — the q_percentile_disc recipe. */
+    * percentile picks ([[DistRank.discrete]]). */
   def qInterpurchase(s: SparkSession, dir: String): DataFrame = {
     val seg = t(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
@@ -55,19 +55,9 @@ object Commerce {
       .join(broadcast(seg), col("o_custkey") === col("c_custkey"))
     val h = gaps.groupBy(col("c_mktsegment").as("grp"),
       col("gap").as("v")).agg(count(lit(1)).as("cnt"))
-    val tot = h.groupBy(col("grp").as("g2")).agg(sum("cnt").as("n"))
-    val wc = Window.partitionBy("grp").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = h.withColumn("cum", sum("cnt").over(wc))
-      .join(broadcast(tot), col("grp") === col("g2"))
-    // r17 (guide §2.4): one conditional-min aggregate replaces the two
-    // pick(p) filters over the same windowed subtree (see
-    // q_percentile_disc — identical output by construction).
-    orderedAll(cum.groupBy("grp")
-      .agg(max("n").as("n"),
-        min(when(col("cum") * 100 >= col("n") * 50, col("v"))).as("p50"),
-        min(when(col("cum") * 100 >= col("n") * 90, col("v"))).as("p90"))
-      .select(col("grp").as("c_mktsegment"), col("n").as("n_gaps"),
+    orderedAll(DistRank.discrete(DistRank.cumulative(h, Seq("grp"), "v", "cnt",
+        0), Seq("grp"), "v", Seq(50 -> "p50", 90 -> "p90"))
+      .select(col("grp").as("c_mktsegment"), col("tot").as("n_gaps"),
         col("p50"), col("p90")))
   }
 

@@ -21,9 +21,8 @@ object Concentration {
     * buckets via (rank−1)·10 div n, each decile's customer count, spend,
     * share and cumulative share in basis points — the curve whose area
     * deficit q_gini integrates. The global rank is ONE window over the
-    * customer dimension (accounts, not facts — ~0.1 × SF rows); at
-    * 100 TB `spark.graft.rankBuckets` = B engages the shared
-    * [[DistRank.withRank]] two-pass rank (per-bucket counts → offset
+    * customer dimension (accounts, not facts — ~0.1 × SF rows), via
+    * [[DistRank.rank]]: bucketed at scale (per-bucket counts → offset
     * broadcast → local rank), bit-equal by construction and spec-forced
     * (Round9RankSpec) — no single-partition sort remains in that plan. */
   def qLorenz(s: SparkSession, dir: String): DataFrame = {
@@ -35,11 +34,8 @@ object Concentration {
     // crossover (gated won 5.7 vs 9.9 s at the 100× smoke)
     val (b, spend) = DistRank.gate(s, spend0, 1000000L, Pins.slot("lorenz_auto", dir))
     val n = spend.agg(count(lit(1)).as("n"))
-    val w = Window.orderBy(col("sp").asc, col("o_custkey").asc)
-    val ranked =
-      if (b <= 0) spend.withColumn("rn", row_number().over(w).cast("long"))
-      else DistRank.withRank(spend, col("sp"), col("o_custkey"), b, "rn")
-    val dec = ranked.crossJoin(broadcast(n))
+    val dec = DistRank.rank(spend, col("sp"), col("o_custkey"), b, "rn")
+      .crossJoin(broadcast(n))
       .withColumn("decile", expr("(rn - 1) * 10 div n"))
       .groupBy("decile")
       .agg(count(lit(1)).as("n_cust"), sum("sp").as("cents"))

@@ -499,28 +499,16 @@ object CorpusStats {
       .agg(count(lit(1)).as("n_users")))
 
   /** Per-source document-length percentiles (§2.55): discrete
-    * p50/p90/p99 of n_chars — the corpus-card length profile (the
-    * q_percentile_disc histogram recipe on the curation axis; mean
-    * alone, q_text_stats, hides the tail a chunker must plan for). */
+    * p50/p90/p99 of n_chars — the corpus-card length profile
+    * ([[DistRank.discrete]] on the curation axis; mean alone,
+    * q_text_stats, hides the tail a chunker must plan for). */
   def qDoclenDisc(s: SparkSession, dir: String): DataFrame = {
     val h = t(s, dir, "documents")
       .groupBy("source", "n_chars").agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy("source").orderBy("n_chars")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = h.groupBy(col("source").as("s2")).agg(sum("cnt").as("n"))
-    val cum = h.withColumn("cum", sum("cnt").over(w))
-      .join(broadcast(tot), col("source") === col("s2"))
-    // r17 (guide §2.4): one conditional-min aggregate replaces the
-    // three pick(p) filters over the same windowed subtree (see
-    // q_percentile_disc — identical output by construction).
-    orderedAll(cum.groupBy("source")
-      .agg(max("n").as("n"),
-        min(when(col("cum") * 100 >= col("n") * 50, col("n_chars")))
-          .as("p50"),
-        min(when(col("cum") * 100 >= col("n") * 90, col("n_chars")))
-          .as("p90"),
-        min(when(col("cum") * 100 >= col("n") * 99, col("n_chars")))
-          .as("p99")))
+    val by = Seq("source")
+    orderedAll(DistRank.discrete(DistRank.cumulative(h, by, "n_chars", "cnt",
+        0), by, "n_chars", Seq(50 -> "p50", 90 -> "p90", 99 -> "p99"))
+      .withColumnRenamed("tot", "n"))
   }
 
   /** Conditional bigram entropy (§2.48): per source,

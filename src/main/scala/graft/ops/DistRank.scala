@@ -1,41 +1,45 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Distributed global-order primitives (round-9 item 1): the shared
-  * two-pass rank / prefix-sum machinery behind the dimension-sort query
-  * family (q_rfm, q_lorenz, q_decile_lift, q_abc_class, q_decay_score).
+/** Distributed global order: the one module that knows how a
+  * total-order rank, running sum, percentile or k-select is computed.
+  * Callers state the order they need ([[rank]], [[ntile]],
+  * [[prefixSum]], [[cumulative]] + [[discrete]], [[atRanks]]) and pass
+  * a bucket count `b`; they never branch on it themselves.
   *
   * The problem class: a query needs `row_number()` / `ntile(k)` / a
   * running sum under a TOTAL order over a dimension-scale aggregate
-  * (customers, parts, users). The declarative spelling — one
-  * `Window.orderBy(...)` with no partition — plans a single-partition
-  * WindowExec: every row funnels through ONE task, the classic 100 TB
-  * ceiling (the q_interarrival 100× smoke measured it directly: 56 s of
-  * one task sorting what 32 could). The fix, proven on q_interarrival and
-  * q_hist_equiheight in round 7, is value-bucketed two-pass rank:
+  * (customers, parts, users) or a near-distinct value histogram. The
+  * declarative spelling — one `Window.orderBy(...)` with no partition,
+  * or one partitioned by a 3-to-5-value axis — runs every row through
+  * one task (the q_interarrival 100× smoke measured it: 56 s of one
+  * task sorting what 32 could). With `b` > 0 the same result comes
+  * from the MapReduce prefix-sum pattern (aggregate per bucket, prefix
+  * over the bucket aggregates, finish locally):
   *
   *  1. one aggregate finds the key range; rows bucket by key range into
-  *     B slices (a broadcast, no shuffle beyond the agg);
-  *  2. per-bucket counts (≤ B rows) take an exclusive prefix sum in a
-  *     single tiny window — the only unpartitioned window in the plan,
-  *     and its input is an aggregate, never the data;
-  *  3. `row_number()` runs WITHIN each bucket (parallel across buckets),
-  *     and the global rank is `bucket offset + local row number`.
+  *     `b` slices (a broadcast, no shuffle beyond the agg);
+  *  2. per-bucket aggregates (≤ b rows per group) take an exclusive
+  *     prefix sum in a tiny window — its input is an aggregate, never
+  *     the data;
+  *  3. the row number or running sum runs WITHIN each bucket (parallel
+  *     across buckets) and adds the bucket's offset.
   *
   * Equal keys always land in the same bucket, so tie-breaking stays
-  * entirely bucket-local and the result is BIT-EQUAL to the serial
-  * window (spec-forced in Round9RankSpec). Degenerate distributions
-  * (all keys equal) collapse to one bucket — the serial plan again,
-  * which is also the correct cost there. Descending orders are expressed
-  * by negating the key column (callers pass `-x` — BIGINT keys only, and
-  * every caller's key magnitude × B stays far inside signed 64).
+  * bucket-local and the result is BIT-EQUAL to the serial window
+  * (spec-forced in Round9RankSpec / Round11RankSpec). Degenerate
+  * distributions (all keys equal) collapse to one bucket — the serial
+  * plan again, which is also the correct cost there. Keys are BIGINT;
+  * descending orders negate the key (`-x`).
   *
-  * The family shares ONE conf gate: `spark.graft.rankBuckets` = B > 0
-  * engages the distributed path (default off, pinning fixture plans and
-  * hashes; a 100 TB deployment sets B ≈ a few × the executor count).
+  * `b` comes from [[gate]] (the family's conf + stats ladder), from
+  * [[buckets]] (conf only), or is 0 for domain-bounded inputs.
+  * `spark.graft.rankBuckets` = B > 0 engages the bucketed path (default
+  * off, pinning fixture plans and hashes; a 100 TB deployment sets B ≈
+  * a few × the executor count).
   */
 object DistRank {
 
@@ -125,100 +129,188 @@ object DistRank {
       s"ELSE $rem + (($rank) - 1 - $rem * ($q + 1)) div $q + 1 END"
   }
 
-  /** Internal: bucket rows by the range of `key` into `b` slices and
-    * attach, per bucket, the exclusive prefix `agg` over all earlier
-    * buckets (count or sum — the two consumers below). Adds `__key`
-    * (the materialized sort key — BIGINT integer div needs a name),
-    * `__vbkt` and `__before`; callers drop all three. */
-  private def bucketed(df: DataFrame, key: Column, b: Int,
-                       perBucket: Column): DataFrame = {
+  // ---- dispatchers: the one place that picks serial vs bucketed ----
+  // Callers state the order they need and pass `b` (from [[gate]],
+  // [[buckets]], or 0 for domain-bounded inputs); b <= 0 plans the
+  // serial window, b > 0 the value-bucketed two-pass path below.
+
+  /** `row_number()` over (key asc, tie asc) as LONG column `out`.
+    * Descending orders negate the key (`-x`): `asc` puts nulls first
+    * where `desc` puts them last, so that is only the same order for a
+    * non-null `x`. `maxRank` > 0 lets the bucketed path skip whole
+    * buckets past it (the distributed top-k); the caller still filters
+    * `out <= maxRank`. */
+  def rank(df: DataFrame, key: Column, tie: Column, b: Int, out: String,
+           maxRank: Long = 0L): DataFrame =
+    if (b <= 0) df.withColumn(out,
+      row_number().over(Window.orderBy(key.asc, tie.asc)).cast("long"))
+    else withRank(df, key, tie, b, out, maxRank)
+
+  /** `ntile(k)` over (key asc, tie asc) as LONG column `out`; the
+    * bucketed path is [[withRank]] plus the closed-form [[ntileExpr]]
+    * fill rule on the global count. */
+  def ntile(df: DataFrame, key: Column, tie: Column, k: Int, b: Int,
+            out: String): DataFrame =
+    if (b <= 0) df.withColumn(out, functions.ntile(k)
+      .over(Window.orderBy(key.asc, tie.asc)).cast("long"))
+    else withRank(df, key, tie, b, "__rk")
+      .crossJoin(broadcast(df.agg(count(lit(1)).as("__n"))))
+      .withColumn(out, expr(ntileExpr("__rk", "__n", k)).cast("long"))
+      .drop("__rk", "__n")
+
+  /** EXCLUSIVE running sum of `value` over (key asc, tie asc) within
+    * each `parts` group (globally when `parts` is empty) as column
+    * `out`. Integer addition is associative, so the bucketed stitch is
+    * bit-equal to the serial window. */
+  def prefixSum(df: DataFrame, parts: Seq[String], key: Column, tie: Column,
+                value: Column, b: Int, out: String): DataFrame =
+    if (b <= 0) df.withColumn(out, coalesce(sum(value).over(
+      Window.partitionBy(parts.map(col): _*).orderBy(key.asc, tie.asc)
+        .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+    else withPrefixSumBy(df, parts, key, tie, value, b, out)
+
+  /** The discrete-percentile input: histogram `h` (one row per
+    * (parts, key) with `weight`) plus the INCLUSIVE cumulative weight
+    * `cum` under key order and the group total `tot`. Serial: both are
+    * windows over one exchange and sort — `tot` is the unordered
+    * full-partition sum, so the histogram is evaluated once (a
+    * separate total aggregate joined back would evaluate it again).
+    * Bucketed: the full-partition window over a fact-scale histogram is
+    * what the bucketed path exists to avoid, so `tot` is an aggregate
+    * broadcast back. */
+  def cumulative(h: DataFrame, parts: Seq[String], key: String,
+                 weight: String, b: Int): DataFrame = {
+    val pc = parts.map(col)
+    if (b <= 0) h
+      .withColumn("cum", sum(weight).over(Window.partitionBy(pc: _*)
+        .orderBy(key).rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("tot", sum(weight).over(Window.partitionBy(pc: _*)))
+    else joinOn(
+      withPrefixSumBy(h, parts, col(key), col(key), col(weight), b, "cum")
+        .withColumn("cum", col("cum") + col(weight)),
+      h.groupBy(pc: _*).agg(sum(weight).as("tot")), parts)
+  }
+
+  /** Discrete (type-1) percentiles from a [[cumulative]] frame: per
+    * `parts` group, `tot` and for each (p, name) the smallest `key`
+    * whose `cum`·100 ≥ `tot`·p — an actual data value, all-integer.
+    * One conditional-min aggregate reads the frame once. Every
+    * threshold is reached at the group's last row (cum = tot) when the
+    * weights are non-negative, so no group is left without a value.
+    * `more` adds further aggregates over the same rows. */
+  def discrete(cum: DataFrame, parts: Seq[String], key: String,
+               ps: Seq[(Int, String)], more: Column*): DataFrame = {
+    val picks = ps.map { case (p, name) =>
+      min(when(col("cum") * 100 >= col("tot") * p, col(key))).as(name)
+    }
+    cum.groupBy(parts.map(col): _*)
+      .agg(max("tot").as("tot"), picks ++ more: _*)
+  }
+
+  /** The exact `key` value at given 1-based ranks under (key asc,
+    * tie asc) within each `parts` group: `targets` carries `parts`, a
+    * LONG rank column `r` and any payload; the result is one row per
+    * target whose rank exists — `parts`, `r`, the value as `v`, then
+    * the payload. Bucketed, it is a distributed k-select: per-bucket
+    * counts locate the bucket holding each rank, and only those
+    * buckets are sorted. */
+  def atRanks(df: DataFrame, parts: Seq[String], key: Column, tie: Column,
+              targets: DataFrame, b: Int): DataFrame = {
+    val pc = parts.map(col)
+    val ranked =
+      if (b <= 0) df.withColumn("r", row_number().over(
+        Window.partitionBy(pc: _*).orderBy(key.asc, tie.asc)).cast("long"))
+      else {
+        val (vb, offsets) = bucketed(df, parts, key, b, count(lit(1)))
+        val hit = joinOn(offsets, targets, parts)
+          .filter(col("r") > col("__before") &&
+            col("r") <= col("__before") + col("__bagg"))
+          .select((pc :+ col("__vbkt") :+ col("__before")): _*).distinct()
+        joinOn(vb, hit, parts :+ "__vbkt")
+          .withColumn("r", col("__before") + row_number().over(
+            Window.partitionBy((pc :+ col("__vbkt")): _*)
+              .orderBy(col("__key").asc, tie.asc)))
+      }
+    joinOn(ranked.select((pc :+ col("r") :+ key.as("v")): _*), targets,
+      parts :+ "r")
+  }
+
+  // ---- the bucketed two-pass machinery ----
+
+  /** Broadcast `small` onto `big` on `keys` with null-safe equality: a
+    * null key or group is one more value, as it is to the serial
+    * window's partitioning and its NULLS FIRST order (a plain
+    * equi-join would drop those rows). No keys: a cross join. */
+  private def joinOn(big: DataFrame, small: DataFrame,
+                     keys: Seq[String]): DataFrame =
+    if (keys.isEmpty) big.crossJoin(broadcast(small))
+    else big.join(
+      broadcast(small.select(small.columns.map(c =>
+        if (keys.contains(c)) col(c).as(s"__r_$c") else col(c)): _*)),
+      keys.map(k => col(k) <=> col(s"__r_$k")).reduce(_ && _))
+      .drop(keys.map("__r_" + _): _*)
+
+  /** Bucket rows by the range of `key` within each `parts` group into
+    * `b` slices. Returns the rows with `__key` (the BIGINT sort key)
+    * and `__vbkt` added, and the per-bucket table (parts, `__vbkt`,
+    * `__bagg` = `perBucket`, `__before` = the exclusive prefix of
+    * `__bagg` over earlier buckets of the group). A null key lands in
+    * the null bucket, which sorts first. */
+  private def bucketed(df: DataFrame, parts: Seq[String], key: Column,
+                       b: Int, perBucket: Column): (DataFrame, DataFrame) = {
+    val pc = parts.map(col)
     val wk = df.withColumn("__key", key.cast("long"))
-    val stats = wk.agg(min("__key").as("__kmin"), max("__key").as("__kmax"))
+    val stats = wk.groupBy(pc: _*)
+      .agg(min("__key").as("__kmin"), max("__key").as("__kmax"))
     // Bucket index in DECIMAL(38,0): (key − kmin) ≤ the key RANGE, but
     // range × B can wrap signed 64 for wide keys (unix-micros spans at
     // large B) — and under non-ANSI Spark that wrap is silent bucket
     // scrambling, not an error. The decimal product is exact for any
     // (range, B) a caller can express, and the final index is < B, so
     // the cast back to BIGINT never truncates.
-    val vb = wk.crossJoin(broadcast(stats))
+    val vb = joinOn(wk, stats, parts)
       .withColumn("__vbkt",
         expr(s"CAST(((CAST(__key AS DECIMAL(38,0)) - __kmin) * $b)" +
           s" div (CAST(__kmax AS DECIMAL(38,0)) - __kmin + 1) AS BIGINT)"))
       .drop("__kmin", "__kmax")
-    val offsets = vb.groupBy("__vbkt").agg(perBucket.as("__bagg"))
+    val offsets = vb.groupBy((pc :+ col("__vbkt")): _*)
+      .agg(perBucket.cast("long").as("__bagg"))
       .withColumn("__before", coalesce(sum("__bagg").over(
-        Window.orderBy("__vbkt")
+        Window.partitionBy(pc: _*).orderBy("__vbkt")
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("__vbkt", "__before")
-    vb.join(broadcast(offsets), "__vbkt")
+    (vb, offsets)
   }
 
-  /** `row_number()` over (key asc, tie asc) with no single-partition
-    * sort; emits it 1-based as LONG column `out`. `maxRank` > 0 prunes
-    * rows that cannot rank ≤ maxRank (whole buckets whose offset is
-    * already past it) BEFORE the per-bucket sort — the distributed
-    * top-k: only boundary buckets are ever sorted. */
-  def withRank(df: DataFrame, key: Column, tie: Column, b: Int,
-               out: String, maxRank: Long = 0L): DataFrame = {
-    val base = bucketed(df, key, b, count(lit(1)).cast("long"))
-    val pruned =
-      if (maxRank > 0L) base.filter(col("__before") < maxRank) else base
-    pruned
+  /** Bucketed `row_number()` over (key asc, tie asc): the global rank
+    * is the bucket's offset plus the row number within the bucket, so
+    * no single-partition sort remains. `maxRank` > 0 drops buckets whose
+    * offset is already past it BEFORE the per-bucket sort. */
+  private[graft] def withRank(df: DataFrame, key: Column, tie: Column,
+                              b: Int, out: String,
+                              maxRank: Long = 0L): DataFrame = {
+    val (vb, offsets) = bucketed(df, Nil, key, b, count(lit(1)))
+    val kept =
+      if (maxRank > 0L) offsets.filter(col("__before") < maxRank) else offsets
+    joinOn(vb, kept.select("__vbkt", "__before"), Seq("__vbkt"))
       .withColumn(out, (col("__before") + row_number().over(
         Window.partitionBy("__vbkt").orderBy(col("__key").asc, tie.asc)))
         .cast("long"))
       .drop("__key", "__vbkt", "__before")
   }
 
-  /** EXCLUSIVE running sum of `value` over the (key asc, tie asc) total
-    * order with no single-partition window: bucket offsets carry the sum
-    * of all earlier buckets; the within-bucket exclusive sum runs
-    * partitioned. Emits LONG column `out`. Integer addition is
-    * associative, so the stitched sum is bit-equal to the serial one. */
-  def withPrefixSum(df: DataFrame, key: Column, tie: Column, value: Column,
-                    b: Int, out: String): DataFrame =
-    bucketed(df, key, b, sum(value).cast("long"))
-      .withColumn(out, col("__before") + coalesce(sum(value).over(
-        Window.partitionBy("__vbkt").orderBy(col("__key").asc, tie.asc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .drop("__key", "__vbkt", "__before")
-
-  /** Partition-aware [[withPrefixSum]] (round-11 item 1): the EXCLUSIVE
-    * running sum of `value` over (key asc) WITHIN each group of `parts`
-    * — for the value-histogram window class whose partition axis has
-    * tiny cardinality (3 return flags, 5 event types / priorities) but
-    * whose per-group histogram approaches fact scale when values are
-    * near-distinct (totalprice / extendedprice cents are). The
-    * declarative spelling serializes each group onto ONE task — the
-    * q_interarrival few-task ceiling — so the same two-pass value-bucket
-    * trick runs per group: range stats and bucket offsets are per-group
-    * aggregates (≤ groups × B rows, broadcast back), within-bucket sums
-    * run partitioned by (group, bucket). `tie` breaks equal keys within
-    * a bucket (histogram callers pass the key itself — their keys are
-    * unique per group; the graft.api surface passes a real tie column);
-    * stitching is integer-associative → bit-equal to the serial
-    * window (spec-forced, Round11RankSpec / ApiSpec). */
-  def withPrefixSumBy(df: DataFrame, parts: Seq[String], key: Column,
-                      tie: Column, value: Column, b: Int,
-                      out: String): DataFrame = {
+  /** Bucketed EXCLUSIVE running sum of `value` over (key asc, tie asc)
+    * within each `parts` group (globally when empty): bucket offsets
+    * carry the sum of the group's earlier buckets, and the within-bucket
+    * sum runs partitioned by (group, bucket) — for the value-histogram
+    * class whose partition axis has tiny cardinality (3 return flags, 5
+    * priorities) but whose per-group histogram approaches fact scale.
+    * Emits LONG column `out`. */
+  private[graft] def withPrefixSumBy(df: DataFrame, parts: Seq[String],
+                                     key: Column, tie: Column, value: Column,
+                                     b: Int, out: String): DataFrame = {
     val pc = parts.map(col)
-    val wk = df.withColumn("__key", key.cast("long"))
-    val stats = wk.groupBy(pc: _*)
-      .agg(min("__key").as("__kmin"), max("__key").as("__kmax"))
-    // same DECIMAL(38,0) bucket arithmetic as [[bucketed]]: exact for
-    // any (range, B), index < B so the BIGINT cast never truncates.
-    val vb = wk.join(broadcast(stats), parts)
-      .withColumn("__vbkt",
-        expr(s"CAST(((CAST(__key AS DECIMAL(38,0)) - __kmin) * $b)" +
-          s" div (CAST(__kmax AS DECIMAL(38,0)) - __kmin + 1) AS BIGINT)"))
-      .drop("__kmin", "__kmax")
-    val offsets = vb.groupBy((pc :+ col("__vbkt")): _*)
-      .agg(sum(value).cast("long").as("__bagg"))
-      .withColumn("__before", coalesce(sum("__bagg").over(
-        Window.partitionBy(pc: _*).orderBy("__vbkt")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select((pc :+ col("__vbkt") :+ col("__before")): _*)
-    vb.join(broadcast(offsets), parts :+ "__vbkt")
+    val (vb, offsets) = bucketed(df, parts, key, b, sum(value))
+    joinOn(vb, offsets.drop("__bagg"), parts :+ "__vbkt")
       .withColumn(out, col("__before") + coalesce(sum(value).over(
         Window.partitionBy((pc :+ col("__vbkt")): _*)
           .orderBy(col("__key").asc, tie.asc)

@@ -83,18 +83,9 @@ object EmbedAudit {
     * moments are exact BIGINT sums over an IN-ROW pair expansion (the
     * q_brand_affinity idiom — no self-join); the 2016-row moment table
     * then ranks in one tiny window. r's numerator is exact; the only
-    * double is the final sqrt division. At 100 TB the expansion rides
-    * a deterministic md5 row sample (the audit needs moments, not the
-    * full corpus) — conf `spark.graft.dimCorrSampleMod`, default off. */
+    * double is the final sqrt division. */
   def qDimCorr(s: SparkSession, dir: String): DataFrame = {
-    val base0 = t(s, dir, "embeddings")
-    val base = s.conf.getOption("spark.graft.dimCorrSampleMod") match {
-      case Some(m) => base0.filter(
-        expr(s"pmod(CAST(conv(substring(md5(CAST(vec_id AS STRING)), " +
-          s"1, 8), 16, 10) AS BIGINT), $m) = 0"))
-      case None => base0
-    }
-    val lanes = base.withColumn("xu",
+    val lanes = t(s, dir, "embeddings").withColumn("xu",
       expr("transform(embedding, v -> " +
         "CAST(round(CAST(v AS DOUBLE) * 10000) AS BIGINT))"))
     // r16 optimization: the 2016-pair moment table used to come from an

@@ -68,25 +68,18 @@ object Features {
     * (ntile(10) under the (spend desc, custkey) total order), each
     * decile's revenue share and cumulative share in exact basis points —
     * the marketing/risk gains chart. The per-customer aggregate
-    * map-combines; the ntile sort runs over the CUSTOMER aggregate (≪
-    * fact rows); `spark.graft.rankBuckets` = B swaps it for the shared
-    * [[DistRank]] two-pass rank + the closed-form ntile fill rule —
-    * bit-equal (Round9RankSpec), no single-partition sort in the plan. */
+    * map-combines; the ntile runs over the CUSTOMER aggregate (≪ fact
+    * rows) through [[DistRank.ntile]] — bit-equal (Round9RankSpec), no
+    * single-partition sort in the bucketed plan. spend is a sum over
+    * non-null prices, so (-spend) asc is the (spend desc) order. */
   def qDecileLift(s: SparkSession, dir: String): DataFrame = {
     val spend0 = t(s, dir, "orders")
       .withColumn("cents", expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
       .groupBy("o_custkey").agg(sum("cents").as("spend"))
     // customer-dim rank replaces the serial sort outright → low crossover
     val (b, spend) = DistRank.gate(s, spend0, 1000000L, Pins.slot("decile_auto", dir))
-    val bucketed =
-      if (b <= 0) spend.withColumn("decile", ntile(10).over(
-        Window.orderBy(col("spend").desc, col("o_custkey").asc))
-        .cast("long"))
-      else DistRank.withRank(spend, -col("spend"), col("o_custkey"), b, "rk")
-        .crossJoin(broadcast(spend.agg(count(lit(1)).as("n"))))
-        .withColumn("decile", expr(DistRank.ntileExpr("rk", "n", 10))
-          .cast("long"))
-    val dec = bucketed
+    val dec = DistRank.ntile(spend, -col("spend"), col("o_custkey"), 10, b,
+        "decile")
       .groupBy("decile")
       .agg(count(lit(1)).as("n_cust"), sum("spend").as("cents"))
     val tot = dec.agg(sum("cents").cast("long").as("total"))
@@ -108,71 +101,38 @@ object Features {
     * one task sorting 15 M rows for the global ntile): the OUTPUT only
     * needs each bucket's size — pure arithmetic from n (ntile gives the
     * first n mod 20 buckets one extra row) — and the cents values at the
-    * 40 bucket-boundary RANKS. Those ranks are found exactly by the
-    * q_interarrival distributed k-select: a value-bucket histogram
-    * locates each rank's bucket, only targeted buckets are sorted
-    * (parallel across buckets), and the boundary row is picked by
-    * offset. `spark.graft.equiheightBuckets` = B > 0 engages it
-    * (default off to pin the fixture plan); spec-forced bit-equal to the
-    * ntile plan. No global sort exists in the parallel plan. */
+    * 40 bucket-boundary RANKS, read by [[DistRank.atRanks]].
+    * `spark.graft.rankBuckets` = B > 0 ([[DistRank.buckets]], default
+    * off to pin the fixture plan) makes that an exact distributed
+    * k-select: only the buckets holding a boundary rank are sorted,
+    * spec-forced bit-equal to the ntile. */
   def qHistEquiheight(s: SparkSession, dir: String): DataFrame = {
-    val buckets = s.conf.getOption("spark.graft.equiheightBuckets")
-      .map(_.toInt).getOrElse(0)
     val o = t(s, dir, "orders")
       .withColumn("cents", expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
       .select("cents", "o_orderkey")
-    if (buckets <= 0) {
-      orderedAll(o
-        .withColumn("bucket", ntile(20).over(
-          Window.orderBy(col("cents").asc, col("o_orderkey").asc))
-          .cast("long"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n"), min("cents").as("lo_cents"),
-          max("cents").as("hi_cents")))
-    } else {
-      val stats = o.agg(count(lit(1)).as("n"), min("cents").as("cmin"),
-        max("cents").as("cmax"))
-      // per-bucket (size, start/end rank) — arithmetic on n alone, with
-      // ntile's first-(n mod 20)-buckets-get-one-extra fill policy.
-      val spec = stats
-        .selectExpr("n", "explode(sequence(1, 20)) AS bucket")
-        .selectExpr("bucket",
-          "n div 20 + CASE WHEN bucket <= n % 20 THEN 1 ELSE 0 END AS sz",
-          "(bucket - 1) * (n div 20) + least(bucket - 1, n % 20) + 1 " +
-            "AS start_rank")
-        .selectExpr("bucket", "sz", "start_rank",
-          "start_rank + sz - 1 AS end_rank")
-        .filter(col("sz") > 0) // n < 20: ntile emits no empty buckets
-      val need = spec.selectExpr("bucket",
-        "explode(array(struct('lo' AS role, start_rank AS r), " +
-          "struct('hi' AS role, end_rank AS r))) AS x")
-        .select(col("bucket"), col("x.role").as("role"), col("x.r").as("r"))
-      val vb = o.crossJoin(broadcast(stats.select("cmin", "cmax")))
-        .withColumn("vbkt",
-          expr(s"((cents - cmin) * $buckets) div (cmax - cmin + 1)"))
-        .select("cents", "o_orderkey", "vbkt")
-      val counts = vb.groupBy("vbkt").agg(count(lit(1)).as("cnt"))
-        .withColumn("cum_before", coalesce(sum("cnt").over(
-          Window.orderBy("vbkt")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      val targets = need.crossJoin(broadcast(counts))
-        .filter(col("r") > col("cum_before") &&
-          col("r") <= col("cum_before") + col("cnt"))
-        .select("bucket", "role", "r", "vbkt", "cum_before")
-      val picked = vb
-        .join(broadcast(targets.select("vbkt").distinct()), "vbkt")
-        .withColumn("rn", row_number().over(Window.partitionBy("vbkt")
-          .orderBy(col("cents").asc, col("o_orderkey").asc)))
-        .join(broadcast(targets), Seq("vbkt"))
-        .filter(col("cum_before") + col("rn") === col("r"))
-        .select("bucket", "role", "cents")
-      orderedAll(picked.groupBy("bucket")
-        .agg(max(when(col("role") === "lo", col("cents"))).as("lo_cents"),
-          max(when(col("role") === "hi", col("cents"))).as("hi_cents"))
-        .join(broadcast(spec.select("bucket", "sz")), "bucket")
-        .selectExpr("CAST(bucket AS BIGINT) AS bucket",
-          "CAST(sz AS BIGINT) AS n", "lo_cents", "hi_cents"))
-    }
+    // per-bucket (size, start/end rank) — arithmetic on n alone, with
+    // ntile's first-(n mod 20)-buckets-get-one-extra fill policy.
+    val spec = o.agg(count(lit(1)).as("n"))
+      .selectExpr("n", "explode(sequence(1, 20)) AS bucket")
+      .selectExpr("bucket",
+        "n div 20 + CASE WHEN bucket <= n % 20 THEN 1 ELSE 0 END AS sz",
+        "(bucket - 1) * (n div 20) + least(bucket - 1, n % 20) + 1 " +
+          "AS start_rank")
+      .selectExpr("bucket", "sz", "start_rank",
+        "start_rank + sz - 1 AS end_rank")
+      .filter(col("sz") > 0) // n < 20: ntile emits no empty buckets
+    val need = spec.selectExpr("bucket",
+      "explode(array(struct('lo' AS role, start_rank AS r), " +
+        "struct('hi' AS role, end_rank AS r))) AS x")
+      .select(col("bucket"), col("x.role").as("role"), col("x.r").as("r"))
+    orderedAll(DistRank.atRanks(o, Nil, col("cents"), col("o_orderkey"), need,
+        DistRank.buckets(s))
+      .groupBy("bucket")
+      .agg(max(when(col("role") === "lo", col("v"))).as("lo_cents"),
+        max(when(col("role") === "hi", col("v"))).as("hi_cents"))
+      .join(broadcast(spec.select("bucket", "sz")), "bucket")
+      .selectExpr("CAST(bucket AS BIGINT) AS bucket",
+        "CAST(sz AS BIGINT) AS n", "lo_cents", "hi_cents"))
   }
 
   /** Rolling 7-day distinct actives (the WAU series): for each report
@@ -226,8 +186,8 @@ object Features {
     * applies before training. One shuffle; both window functions share the
     * same (event_type) partitioning. Low-cardinality window keys (5 types)
     * serialize per-type sorts at extreme scale — the documented swap is
-    * the q_interarrival bucketed rank path (`spark.graft
-    * .interarrivalBuckets`), which computes the same ranks without a
+    * the bucketed rank path of [[DistRank]] (as q_interarrival's
+    * [[DistRank.atRanks]]), which computes the same ranks without a
     * per-type global sort. */
   def qQuantileNorm(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("event_type")

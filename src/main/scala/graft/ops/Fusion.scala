@@ -94,20 +94,16 @@ object Fusion {
       .agg(count(lit(1)).as("n_events"),
         sum(expr("cents * w_u")).cast("long").as("raw"))
       .withColumn("score_u", expr("raw div 1000000"))
-    // top-20 under a global order: the serial spelling is one
-    // unpartitioned window over the USER aggregate; at scale
-    // `spark.graft.rankBuckets` = B engages the shared [[DistRank]]
-    // two-pass rank with maxRank pruning — only the buckets that can
-    // contain ranks ≤ 20 are ever sorted (bit-equal, Round9RankSpec).
+    // top-20 under a global order: [[DistRank.rank]] with maxRank
+    // pruning — bucketed, only the buckets that can contain ranks ≤ 20
+    // are ever sorted (bit-equal, Round9RankSpec). score_u is a sum over
+    // non-null cents, so (-score_u) asc is the (score_u desc) order.
     // High crossover: the serial plan is a cheap top-20 over a user
     // aggregate (BASELINE.md 100×: serial 2.1 s vs gated 3.1 s) — the
     // bucket pass only wins once the user dim outgrows one task.
     val (b, scoredG) = DistRank.gate(s, scored, 10000000L, Pins.slot("decay_auto", dir))
-    val w = Window.orderBy(col("score_u").desc, col("user_id").asc)
-    val top =
-      if (b <= 0) scoredG.withColumn("rk", row_number().over(w).cast("long"))
-      else DistRank.withRank(scoredG, -col("score_u"), col("user_id"), b,
-        "rk", maxRank = 20L)
+    val top = DistRank.rank(scoredG, -col("score_u"), col("user_id"), b,
+      "rk", maxRank = 20L)
     orderedAll(top
       .filter(col("rk") <= 20)
       .select("rk", "user_id", "n_events", "score_u"))

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-9 warehouse staples (SURVEY §2.90): the year→quarter→month
@@ -58,8 +57,8 @@ object Grains {
   }
 
   /** Tail-mass concentration (§2.90): per event type, the discrete
-    * p50/p90/p99 of value cents (the q_percentile_disc histogram+cum
-    * recipe — no global sort) and the share of TOTAL value strictly
+    * p50/p90/p99 of value cents ([[DistRank.discrete]] over a value
+    * histogram — no global sort) and the share of TOTAL value strictly
     * above each threshold, in bp — the "how much of the money is in
     * the tail" readout behind q_whale_share. */
   def qTailMass(s: SparkSession, dir: String): DataFrame = {
@@ -68,23 +67,9 @@ object Grains {
       .groupBy("event_type", "cents")
       .agg(count(lit(1)).as("cnt"))
       .withColumn("vsum", expr("cents * cnt"))
-    val w = Window.partitionBy("event_type").orderBy("cents")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = h.groupBy(col("event_type").as("t2"))
-      .agg(sum("cnt").as("n"), sum("vsum").cast("long").as("total"))
-    val cum = h.withColumn("cum", sum("cnt").over(w))
-      .join(broadcast(tot), col("event_type") === col("t2"))
-    // r17 (guide §2.4 — share one evaluation): the former pick(50/90/99)
-    // filtered the SAME windowed cumulative subtree three times and
-    // joined the results back; min-over-filter is a conditional min, so
-    // one aggregate reads the frame once. Every threshold is reachable
-    // (the top cents row has cum = n), so the old inner joins never
-    // dropped a row — identical marks by construction.
-    val marks = cum.groupBy("event_type")
-      .agg(
-        min(when(col("cum") * 100 >= col("n") * 50, col("cents"))).as("p50"),
-        min(when(col("cum") * 100 >= col("n") * 90, col("cents"))).as("p90"),
-        min(when(col("cum") * 100 >= col("n") * 99, col("cents"))).as("p99"))
+    val by = Seq("event_type")
+    val marks = DistRank.discrete(DistRank.cumulative(h, by, "cents", "cnt", 0),
+      by, "cents", Seq(50 -> "p50", 90 -> "p90", 99 -> "p99")).drop("tot")
     // r17: n/total and the three tail masses fold in ONE aggregate over
     // h ⋈ marks (the per-type marks are constant within a group, so
     // max() just reads them back) — the former spelling evaluated the

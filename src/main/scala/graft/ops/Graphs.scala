@@ -25,9 +25,10 @@ object Graphs {
 
   /** Strict near-dup pairs (a_id < b_id, distinct by construction: each
     * doc pair expands from exactly one mask pair or one within-mask
-    * group). Pinned once per (session, dir) — all three graph queries
-    * (and every self-join inside each) reuse the materialized edge list
-    * instead of re-running the mask-pair pipeline per consumer; the
+    * group), from the session-pinned [[Sketches.enPostings]]. Pinned
+    * once per (session, dir) — all the graph queries (and every
+    * self-join inside each) reuse the materialized edge list instead of
+    * re-running the mask-pair pipeline per consumer; the
     * edge list is community-sparse (~30k rows at sf0.1), far below any
     * executor-memory concern. Same pinning pattern (and cluster
     * durability caveat) as qPagerank's loop invariant. */
@@ -55,12 +56,9 @@ object Graphs {
             s"${chk.getLong(0) - chk.getLong(2)} duplicate rows")
         raw
       }
-      case None => Pins.pinned(s, "graph8_edges", dir) {
-        val dt = t(s, dir, "documents").filter(col("lang") === "en")
-          .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-          .filter(col("token") =!= "").distinct()
-        Text.maskGroupPairs(dt, 100, 49).select("a_id", "b_id")
-      }
+      case None => Pins.pinned(s, "graph8_edges", dir)(
+        Text.maskGroupPairs(Sketches.enPostings(s, dir), 100, 49)
+          .select("a_id", "b_id"))
     }
   }
 
@@ -276,15 +274,12 @@ object Graphs {
     val ed = strictEdges(s, dir)
     val dg = degrees(und(ed))
     val nn = dg.agg(count(lit(1)).as("n_nodes"))
-    // decile cut gates on the shared [[DistRank]] two-pass rank
-    // (round 9) — replaces the r8-declared approx-quantile swap with
-    // the bit-equal exact machinery the rest of the family uses;
-    // node-dim rank replaces the serial sort outright → low crossover
+    // decile cut via [[DistRank.rank]] — the bit-equal exact
+    // machinery the rest of the family uses; node-dim rank replaces the
+    // serial sort outright → low crossover. deg is a count (never
+    // null), so (-deg) asc is the (deg desc) order.
     val (b, dgG) = DistRank.gate(s, dg, 1000000L, Pins.slot("richclub_auto", dir))
-    val w = Window.orderBy(col("deg").desc, col("u").asc)
-    val ranked =
-      if (b <= 0) dgG.withColumn("rn", row_number().over(w).cast("long"))
-      else DistRank.withRank(dgG, -col("deg"), col("u"), b, "rn")
+    val ranked = DistRank.rank(dgG, -col("deg"), col("u"), b, "rn")
     // r17 optimization: the rich set has THREE consumers (n_rich + both
     // membership semi joins) — lazy, each re-ran degrees + the decile
     // rank (544 plan lines). Pin it once per call (multi-consumer pin

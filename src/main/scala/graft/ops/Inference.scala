@@ -56,24 +56,19 @@ object Inference {
         dir, "lineitem", col("flag"), col("x"), col("y"))
       .groupBy("flag", "x", "y").agg(count(lit(1)).as("c")),
       Pins.slot("spearman_cells", dir))
-    def withCum(h: DataFrame, key: String, cnt: String): DataFrame = {
-      val w = Window.partitionBy("flag").orderBy(key)
-        .rowsBetween(Window.unboundedPreceding, -1)
-      h.withColumn("cum_before", coalesce(sum(cnt).over(w), lit(0L)))
-    }
     // quantity histogram: ≤ 50 rows per flag — genuinely domain-bounded,
-    // the serial window is correct at any scale.
-    val hx2 = withCum(cells.groupBy("flag", "x").agg(sum("c").as("cx")),
-      "x", "cx").withColumn("u2", expr("2 * cum_before + cx + 1"))
+    // the serial window (b = 0) is correct at any scale.
+    val hx2 = DistRank.prefixSum(cells.groupBy("flag", "x")
+        .agg(sum("c").as("cx")), Seq("flag"), col("x"), col("x"), col("cx"),
+        0, "cum_before")
+      .withColumn("u2", expr("2 * cum_before + cx + 1"))
       .select("flag", "x", "u2")
     // cents histogram: near-distinct → the q_weighted_quantile gate.
     val hy0 = cells.groupBy("flag", "y").agg(sum("c").as("cy"))
     val (b, hy) = DistRank.gate(s, hy0, 1000000L,
       Pins.slot("spearman_auto", dir))
-    val hy2 =
-      (if (b <= 0) withCum(hy, "y", "cy")
-       else DistRank.withPrefixSumBy(hy, Seq("flag"), col("y"), col("y"),
-         col("cy"), b, "cum_before"))
+    val hy2 = DistRank.prefixSum(hy, Seq("flag"), col("y"), col("y"),
+        col("cy"), b, "cum_before")
       .withColumn("v2", expr("2 * cum_before + cy + 1"))
       .select("flag", "y", "v2")
     val m = cells.join(hx2, Seq("flag", "x")).join(hy2, Seq("flag", "y"))
@@ -119,7 +114,7 @@ object Inference {
     * sibling for paired samples). Zero diffs drop (the standard
     * convention); |d| midranks ride the |d| histogram as doubled exact
     * integers, and that histogram is near-distinct → DistRank-gated
-    * (global — the withPrefixSum side of the gate). W2⁺ + W2⁻ =
+    * (a global [[DistRank.prefixSum]]). W2⁺ + W2⁻ =
     * n(n+1) exactly (spec-asserted); the emitted statistic is z² in
     * milli as ONE exact integer division — (2W⁺−n(n+1))²·3000 div
     * (2n(n+1)(2n+1)) through DECIMAL(38,0) (a z with its sqrt
@@ -133,14 +128,8 @@ object Inference {
       sum(when(col("d") > 0, 1L).otherwise(0L)).as("cpos"))
     val (b, h) = DistRank.gate(s, h0, 1000000L,
       Pins.slot("wilcoxon_auto", dir))
-    val w = Window.orderBy("ad")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val r =
-      if (b <= 0) h.withColumn("cum_before",
-        coalesce(sum("cnt").over(w), lit(0L)))
-      else DistRank.withPrefixSum(h, col("ad"), col("ad"), col("cnt"),
+    orderedAll(DistRank.prefixSum(h, Nil, col("ad"), col("ad"), col("cnt"),
         b, "cum_before")
-    orderedAll(r
       .withColumn("r2", expr("2 * cum_before + cnt + 1"))
       .agg(sum("cnt").cast("long").as("n"),
         sum(expr("cpos * r2")).cast("long").as("w2_plus"))

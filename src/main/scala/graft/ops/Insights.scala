@@ -486,7 +486,7 @@ object Insights {
     * (d = 10..90) side by side with the per-decile gap — the
     * distribution-comparison table behind q_ks_test's single number
     * (WHERE the distributions diverge, not just whether). Histogram-
-    * first: the cumulative window runs over (type, cents) rows; the
+    * first: [[DistRank.cumulative]] runs over (type, cents) rows; the
     * decile picks are min-cents over a broadcast 9-row grid, all
     * integer decision rules. */
   def qQqDeciles(s: SparkSession, dir: String): DataFrame = {
@@ -494,15 +494,10 @@ object Insights {
     val h = t(s, dir, "events")
       .withColumn("cents", expr("CAST(round(value * 100) AS BIGINT)"))
       .groupBy("event_type", "cents").agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy("event_type").orderBy("cents")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = h.groupBy(col("event_type").as("e2"))
-      .agg(sum("cnt").as("n"))
     val grid = (1 to 9).map(_ * 10L).toDF("d")
-    val q = h.withColumn("cum", sum("cnt").over(w))
-      .join(broadcast(tot), col("event_type") === col("e2"))
+    val q = DistRank.cumulative(h, Seq("event_type"), "cents", "cnt", 0)
       .crossJoin(broadcast(grid))
-      .filter(col("cum") * 100 >= col("n") * col("d"))
+      .filter(col("cum") * 100 >= col("tot") * col("d"))
       .groupBy("event_type", "d")
       .agg(min("cents").as("q"))
     orderedAll(q.filter(col("event_type") =!= "view")
@@ -520,11 +515,11 @@ object Insights {
     * 5·cum < 4·tot and 20·cum < 19·tot). Emits per class: parts,
     * revenue units, and share bp — the stocking-policy report. The
     * rank/cumulative windows run over the PART-level aggregate
-    * (≪ lineitem); the fact table is scanned once. At scale
-    * `spark.graft.rankBuckets` = B replaces the global-order running sum
-    * with the shared [[DistRank.withPrefixSum]] stitched prefix
-    * (bucket offsets + partitioned within-bucket sums) — bit-equal by
-    * integer associativity, spec-forced (Round9RankSpec). */
+    * (≪ lineitem); the fact table is scanned once. The global-order
+    * running sum is [[DistRank.prefixSum]] (bucketed at scale: bucket
+    * offsets + partitioned within-bucket sums) — bit-equal by integer
+    * associativity, spec-forced (Round9RankSpec). rev10k is a sum over
+    * non-null prices, so (-rev10k) asc is the (rev10k desc) order. */
   def qAbcClass(s: SparkSession, dir: String): DataFrame = {
     val rev0 = t(s, dir, "lineitem")
       .groupBy("l_partkey")
@@ -532,14 +527,9 @@ object Insights {
         "CAST(round((1 - l_discount) * 100) AS BIGINT)")).as("rev10k"))
     // part-dim prefix sum replaces the serial sort → low crossover
     val (b, rev) = DistRank.gate(s, rev0, 1000000L, Pins.slot("abc_auto", dir))
-    val w = Window.orderBy(col("rev10k").desc, col("l_partkey").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
     val tot = rev.agg(sum("rev10k").as("tot"))
-    val cum =
-      if (b <= 0) rev
-        .withColumn("cum_before", coalesce(sum("rev10k").over(w), lit(0L)))
-      else DistRank.withPrefixSum(rev, -col("rev10k"), col("l_partkey"),
-        col("rev10k"), b, "cum_before")
+    val cum = DistRank.prefixSum(rev, Nil, -col("rev10k"), col("l_partkey"),
+      col("rev10k"), b, "cum_before")
     orderedAll(cum
       .crossJoin(broadcast(tot))
       .withColumn("cls", expr(

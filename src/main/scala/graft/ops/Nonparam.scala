@@ -122,32 +122,22 @@ object Nonparam {
     * o_totalprice cents — the k-sample location test that needs no
     * distributional assumption at all (the χ² on these counts is the
     * textbook finish; the emitted table IS its contingency). The pivot
-    * comes from the shared q_percentile_disc recipe on a global value
-    * histogram. Round 11: the histogram is NOT the exemption class the
-    * round-10 comment claimed — totalprice cents are near-distinct, so
-    * the (cents, cnt) table approaches fact scale and its serial
-    * cumulative window is a one-task ceiling. It now rides the shared
-    * [[DistRank.gate]] auto-engage: above the stats floor the histogram
-    * pins and the prefix sum stitches via [[DistRank.withPrefixSum]]
-    * (bit-equal by integer associativity, Round11RankSpec-forced). The
-    * pivot then rides a 1-row broadcast onto one mergeable fold. */
+    * is [[DistRank.discrete]] p50 over a global value histogram.
+    * Totalprice cents are near-distinct, so the (cents, cnt) table
+    * approaches fact scale and its serial cumulative window is a
+    * one-task ceiling: it rides the [[DistRank.gate]] auto-engage, and
+    * above the stats floor the histogram pins and the cumulative sum
+    * stitches from bucket offsets (bit-equal by integer associativity,
+    * Round11RankSpec-forced). The pivot then rides a 1-row broadcast
+    * onto one mergeable fold. */
   def qMedianTest(s: SparkSession, dir: String): DataFrame = {
     val o = t(s, dir, "orders")
       .withColumn("cents", expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
     val h0 = o.groupBy("cents").agg(count(lit(1)).as("cnt"))
     val (b, h) = DistRank.gate(s, h0, 1000000L,
       Pins.slot("mediantest_auto", dir))
-    val w = Window.orderBy("cents")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum =
-      if (b <= 0) h.withColumn("cum", sum("cnt").over(w))
-      else DistRank.withPrefixSum(h, col("cents"), col("cents"),
-        col("cnt"), b, "cum_before")
-        .withColumn("cum", col("cum_before") + col("cnt"))
-    val piv = cum
-      .crossJoin(broadcast(h.agg(sum("cnt").as("n_all"))))
-      .filter(col("cum") * 2 >= col("n_all"))
-      .agg(min("cents").as("pivot_cents"))
+    val piv = DistRank.discrete(DistRank.cumulative(h, Nil, "cents", "cnt", b),
+      Nil, "cents", Seq(50 -> "pivot_cents")).select("pivot_cents")
     orderedAll(o.crossJoin(broadcast(piv))
       .groupBy("o_orderpriority", "pivot_cents")
       .agg(count(lit(1)).as("n"),
@@ -254,9 +244,9 @@ object Nonparam {
     * single terminal double — 12·Σ(R_g²/n_g)/(N(N+1)) − 3(N+1), over
     * the tie correction 1 − Σ(t³−t)/(N³−N) — in milli. Round 11: the
     * pooled histogram is near-distinct-valued (≈ one row per order), so
-    * its cumulative window is DistRank-gated exactly like q_median_test
-    * — the exclusive prefix (cum_before) stitches from bucket offsets,
-    * and avg2 = 2·cum_before + cnt + 1 needs no inclusive sum at all. */
+    * its exclusive prefix (cum_before) is a gated [[DistRank.prefixSum]]
+    * like q_median_test's, and avg2 = 2·cum_before + cnt + 1 needs no
+    * inclusive sum at all. */
   def qKruskalWallis(s: SparkSession, dir: String): DataFrame = {
     val o = t(s, dir, "orders")
       .select(col("o_orderpriority").as("grp"),
@@ -264,13 +254,8 @@ object Nonparam {
     val h0 = o.groupBy("v").agg(count(lit(1)).as("cnt"))
     val (b, h) = DistRank.gate(s, h0, 1000000L,
       Pins.slot("kw_auto", dir))
-    val w = Window.orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked =
-      (if (b <= 0) h.withColumn("cum", sum("cnt").over(w))
-        .withColumn("cum_before", col("cum") - col("cnt"))
-       else DistRank.withPrefixSum(h, col("v"), col("v"),
-         col("cnt"), b, "cum_before"))
+    val ranked = DistRank.prefixSum(h, Nil, col("v"), col("v"), col("cnt"),
+        b, "cum_before")
       .withColumn("avg2", expr("2 * cum_before + cnt + 1"))
     val gv = o.groupBy("grp", "v").agg(count(lit(1)).as("cnt_gv"))
     val g = gv.join(ranked.select("v", "avg2"), "v")

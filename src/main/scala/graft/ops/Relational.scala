@@ -562,12 +562,11 @@ object Relational {
     * SMALLEST price-cents value whose cumulative count reaches p for
     * p ∈ {50, 90, 99} — the percentile_disc semantics (an actual data
     * value, no interpolation), complementing q_percentile's continuous
-    * form. Spelled histogram-first (the q_weighted_median discipline):
-    * raw rows collapse to (priority, cents, cnt) before the cumulative
-    * window; the decision rule cum·100 ≥ p·n is all-integer. Round 11:
-    * near-distinct cents make the per-priority histogram fact-scale on
-    * 5 tasks, so the cumulative sum DistRank-gates through the
-    * partition-aware [[DistRank.withPrefixSumBy]]. */
+    * form. Spelled histogram-first: raw rows collapse to (priority,
+    * cents, cnt), then [[DistRank.cumulative]] + [[DistRank.discrete]]
+    * (the all-integer rule cum·100 ≥ p·n). Near-distinct cents make the
+    * per-priority histogram fact-scale on 5 tasks, so the cumulative
+    * sum is DistRank-gated (per-priority bucket offsets). */
   def qPercentileDisc(s: SparkSession, dir: String): DataFrame = {
     val h0 = t(s, dir, "orders")
       .withColumn("cents", expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
@@ -575,28 +574,10 @@ object Relational {
       .agg(count(lit(1)).as("cnt"))
     val (b, h) = DistRank.gate(s, h0, 1000000L,
       Pins.slot("pdisc_auto", dir))
-    val w = Window.partitionBy("o_orderpriority").orderBy("cents")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cumd =
-      if (b <= 0) h.withColumn("cum", sum("cnt").over(w))
-      else DistRank.withPrefixSumBy(h, Seq("o_orderpriority"),
-        col("cents"), col("cents"), col("cnt"), b, "cum_before")
-        .withColumn("cum", col("cum_before") + col("cnt"))
-    val tot = h.groupBy(col("o_orderpriority").as("p2"))
-      .agg(sum("cnt").as("n"))
-    val cum = cumd
-      .join(broadcast(tot), col("o_orderpriority") === col("p2"))
-    // r17 (guide §2.4): one conditional-min aggregate reads the
-    // cumulative frame once instead of the former pick(50/90/99) —
-    // three filters over the same subtree joined back together.
-    // min-over-filter == conditional min, and every threshold is
-    // reachable (the top cents row has cum = n), so the inner joins
-    // never dropped rows — identical output by construction.
-    orderedAll(cum.groupBy("o_orderpriority")
-      .agg(max("n").as("n"),
-        min(when(col("cum") * 100 >= col("n") * 50, col("cents"))).as("p50"),
-        min(when(col("cum") * 100 >= col("n") * 90, col("cents"))).as("p90"),
-        min(when(col("cum") * 100 >= col("n") * 99, col("cents"))).as("p99")))
+    val by = Seq("o_orderpriority")
+    orderedAll(DistRank.discrete(DistRank.cumulative(h, by, "cents", "cnt", b),
+        by, "cents", Seq(50 -> "p50", 90 -> "p90", 99 -> "p99"))
+      .withColumnRenamed("tot", "n"))
   }
 
   /** Boolean / conditional aggregate functions (§2.45): bool_and /

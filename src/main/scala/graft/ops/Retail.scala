@@ -68,9 +68,9 @@ object Retail {
     * on the per-year customer-aggregate (account dim); the matrix is
     * a ≤25-row fold of a full-outer join on custkey. */
   def qCustomerMigration(s: SparkSession, dir: String): DataFrame = {
-    // Quartile ranks gate on the shared [[DistRank]] two-pass rank
-    // (round 9) — bit-equal by construction, spec-forced in
-    // Round9RankSpec; auto-engage (round 10) never probes at graded SF.
+    // Quartile ranks come from [[DistRank.rank]] — bit-equal by
+    // construction, spec-forced in Round9RankSpec; auto-engage never
+    // probes at graded SF.
     def yearSeg(year: Int, out: String): DataFrame = {
       val sp = t(s, dir, "orders")
         .filter(expr(s"o_orderdate >= TIMESTAMP '$year-01-01 00:00:00'" +
@@ -82,11 +82,8 @@ object Retail {
       // crossover (the q_lorenz class of the BASELINE.md 100× table)
       val (nb, spG) = DistRank.gate(s, sp, 1000000L, Pins.slot(s"cm_auto_$year", dir))
       val n = spG.agg(count(lit(1)).as("n"))
-      val w = Window.orderBy(col("sp").asc, col("o_custkey").asc)
-      val ranked =
-        if (nb <= 0) spG.withColumn("rn", row_number().over(w).cast("long"))
-        else DistRank.withRank(spG, col("sp"), col("o_custkey"), nb, "rn")
-      ranked.crossJoin(broadcast(n))
+      DistRank.rank(spG, col("sp"), col("o_custkey"), nb, "rn")
+        .crossJoin(broadcast(n))
         .withColumn(out, expr("(rn - 1) * 4 div n + 1"))
         .select(col("o_custkey").as(s"ck_$out"), col(out))
     }

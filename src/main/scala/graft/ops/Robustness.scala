@@ -51,17 +51,12 @@ object Robustness {
       .select(col("event_type").as("grp"),
         expr("CAST(round(value * 100) AS BIGINT)").as("v"))
       .groupBy("grp", "v").agg(count(lit(1)).as("cnt"))
-    val tot = h.groupBy(col("grp").as("g2"))
-      .agg(sum("cnt").as("n"))
-    val wc = Window.partitionBy("grp").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = h.withColumn("cum", sum("cnt").over(wc))
-      .join(broadcast(tot), col("grp") === col("g2"))
-    val p99 = cum.filter(col("cum") * 100 >= col("n") * 99)
-      .groupBy("grp").agg(min("v").as("p99"))
+    val cum = DistRank.cumulative(h, Seq("grp"), "v", "cnt", 0)
+    val p99 = DistRank.discrete(cum, Seq("grp"), "v", Seq(99 -> "p99"))
+      .drop("tot")
     orderedAll(cum.join(broadcast(p99), "grp")
       .groupBy("grp", "p99")
-      .agg(max("n").as("n"),
+      .agg(max("tot").as("n"),
         sum(expr("v * cnt")).cast("long").as("sum_raw"),
         sum(expr("least(v, p99) * cnt")).cast("long").as("sum_win"))
       .withColumn("mean_raw_milli", expr("sum_raw * 1000 div n"))
@@ -82,17 +77,12 @@ object Robustness {
       .select(col("event_type").as("grp"),
         expr("CAST(round(value * 100) AS BIGINT)").as("v"))
       .groupBy("grp", "v").agg(count(lit(1)).as("cnt"))
-    val tot = h.groupBy(col("grp").as("g2"))
-      .agg(sum("cnt").as("n"))
-    val wc = Window.partitionBy("grp").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = h.withColumn("cum", sum("cnt").over(wc))
-      .join(broadcast(tot), col("grp") === col("g2"))
-    val p99 = cum.filter(col("cum") * 100 >= col("n") * 99)
-      .groupBy("grp").agg(min("v").as("p99"))
+    val cum = DistRank.cumulative(h, Seq("grp"), "v", "cnt", 0)
+    val p99 = DistRank.discrete(cum, Seq("grp"), "v", Seq(99 -> "p99"))
+      .drop("tot")
     orderedAll(cum.join(broadcast(p99), "grp")
       .groupBy("grp", "p99")
-      .agg(max("n").as("n"),
+      .agg(max("tot").as("n"),
         sum(expr("v * cnt")).cast("long").as("total_cents"),
         sum(when(col("v") >= col("p99"), expr("v * cnt"))
           .otherwise(0L)).cast("long").as("whale_cents"),

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-8 sampling-quality audits (SURVEY §2.71): representativeness
@@ -114,10 +113,7 @@ object Sampling {
         "CAST(conv(substring(md5(concat(CAST(c_custkey AS STRING), " +
           "':sys')), 1, 15), 16, 10) AS BIGINT)"))
     val (b, c) = DistRank.gate(s, c0, 1000000L, Pins.slot("sys_auto", dir))
-    val ranked =
-      if (b <= 0) c.withColumn("rn", row_number().over(
-        Window.orderBy(col("h").asc, col("c_custkey").asc)).cast("long"))
-      else DistRank.withRank(c, col("h"), col("c_custkey"), b, "rn")
+    val ranked = DistRank.rank(c, col("h"), col("c_custkey"), b, "rn")
     orderedAll(ranked.groupBy(col("c_mktsegment").as("mktsegment"))
       .agg(count(lit(1)).as("n_pop"),
         sum(when(expr("(rn - 1) % 20 = 0"), 1L).otherwise(0L))

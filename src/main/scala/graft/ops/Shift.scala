@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-8 distribution-shift audits (SURVEY §2.61): the population
@@ -94,28 +93,19 @@ object Shift {
 
   /** Tail ratios (§2.61): per event type, discrete p50/p99 of value
     * cents and the p99/p50 ratio in milli — the SLO-shape number
-    * (means hide tails; quantile RATIOS survive unit changes). The
-    * q_percentile_disc histogram recipe plus one integer division. */
+    * (means hide tails; quantile RATIOS survive unit changes).
+    * [[DistRank.discrete]] over a value histogram plus one integer
+    * division. */
   def qTailRatio(s: SparkSession, dir: String): DataFrame = {
     val h = t(s, dir, "events")
       .select(col("event_type").as("grp"),
         expr("CAST(round(value * 100) AS BIGINT)").as("v"))
       .groupBy("grp", "v").agg(count(lit(1)).as("cnt"))
-    val tot = h.groupBy(col("grp").as("g2")).agg(sum("cnt").as("n"))
-    val w = Window.partitionBy("grp").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = h.withColumn("cum", sum("cnt").over(w))
-      .join(broadcast(tot), col("grp") === col("g2"))
-    // r17 (guide §2.4): one conditional-min aggregate replaces the two
-    // pick(p) filters over the same windowed subtree (see
-    // q_percentile_disc — identical output by construction).
-    orderedAll(cum.groupBy("grp")
-      .agg(max("n").as("n"),
-        min(when(col("cum") * 100 >= col("n") * 50, col("v"))).as("p50"),
-        min(when(col("cum") * 100 >= col("n") * 99, col("v"))).as("p99"))
+    orderedAll(DistRank.discrete(DistRank.cumulative(h, Seq("grp"), "v",
+        "cnt", 0), Seq("grp"), "v", Seq(50 -> "p50", 99 -> "p99"))
       .withColumn("ratio_milli", expr(
         "CASE WHEN p50 = 0 THEN NULL ELSE p99 * 1000 div p50 END"))
-      .select(col("grp").as("event_type"), col("n"), col("p50"),
+      .select(col("grp").as("event_type"), col("tot").as("n"), col("p50"),
         col("p99"), col("ratio_milli")))
   }
 }

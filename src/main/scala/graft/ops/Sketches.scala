@@ -35,12 +35,12 @@ object Sketches {
   // ---- shared md5-lane signature pin (round 9 item 4) ------------------
 
   /** DISTINCT (doc_id, token) postings of the en corpus, pinned once per
-    * (session, dir): the shared leaf of the md5-lane sketch family.
-    * q_dedup_minhash, q_dedup_minhash_agg and q_lsh_recall all fold the
-    * SAME postings — through round 8 each re-derived them (a corpus scan
-    * + explode + distinct shuffle apiece, three times per session). Same
-    * pinning pattern (and cluster-durability caveat) as
-    * [[Graphs]]' strictEdges / [[Pins.pin]]. */
+    * (session, dir): the shared leaf of the md5-lane sketch family and
+    * of the graph family's edge list ([[Graphs]]' strictEdges).
+    * q_dedup_minhash, q_dedup_minhash_agg, q_lsh_recall and the q_graph
+    * queries all fold the SAME postings — through round 8 each
+    * re-derived them (a corpus scan + explode + distinct shuffle apiece).
+    * Cluster-durability caveat as [[Pins.pin]]. */
   private[graft] def enPostings(s: SparkSession, dir: String): DataFrame =
     Pins.pinned(s, "mh_postings", dir)(
       t(s, dir, "documents").filter(col("lang") === "en")

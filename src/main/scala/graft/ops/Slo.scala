@@ -108,26 +108,18 @@ object Slo {
   /** Daily value percentiles (§2.97): per day, exact discrete p50 and
     * p95 of event value cents — the "latency percentiles over time"
     * chart every SRE dashboard leads with, as a time series rather
-    * than q_percentile's global cut. The q_percentile_disc recipe
-    * sharded by DAY: (day, cents)-grain collapse first, one
-    * cumulative window per day, both probe points read off the same
-    * cumulative column (smallest v with 100·cum ≥ p·n). Day-grain
-    * output; day is the natural 100 TB shard axis. */
+    * than q_percentile's global cut. [[DistRank.discrete]] sharded by
+    * DAY: (day, cents)-grain collapse first, one cumulative window per
+    * day, both probe points read off the same cumulative column
+    * (smallest v with 100·cum ≥ p·n). Day-grain output; day is the
+    * natural 100 TB shard axis. */
   def qDailyPercentiles(s: SparkSession, dir: String): DataFrame = {
     val h = t(s, dir, "events")
       .groupBy(expr("unix_micros(ts) div 86400000000").as("day"),
         expr("CAST(round(value * 100) AS BIGINT)").as("v"))
       .agg(count(lit(1)).as("cnt"))
-    val wc = Window.partitionBy("day").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = h.groupBy(col("day").as("d2")).agg(sum("cnt").as("n"))
-    val c = h.withColumn("cum", sum("cnt").over(wc))
-      .join(broadcast(tot), col("day") === col("d2"))
-    orderedAll(c.filter(col("cum") * 100 >= col("n") * 50)
-      .groupBy("day", "n").agg(min("v").as("p50_cents"))
-      .join(c.filter(col("cum") * 100 >= col("n") * 95)
-        .groupBy(col("day").as("d3")).agg(min("v").as("p95_cents")),
-        col("day") === col("d3"))
-      .select("day", "n", "p50_cents", "p95_cents"))
+    orderedAll(DistRank.discrete(DistRank.cumulative(h, Seq("day"), "v",
+        "cnt", 0), Seq("day"), "v", Seq(50 -> "p50_cents", 95 -> "p95_cents"))
+      .withColumnRenamed("tot", "n"))
   }
 }

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-8 distribution-shape diagnostics (SURVEY §2.59): one-way
@@ -9,7 +8,7 @@ import org.apache.spark.sql.functions._
   * Tukey-fence outlier accounting per event type (the box-plot rule,
   * robust where q_events_anomaly's z-score is not), and Bowley quartile
   * skewness (the robust asymmetry number a mean/stddev pair hides).
-  * The quartiles come from the q_percentile_disc histogram recipe;
+  * The quartiles come from [[DistRank.discrete]] over value histograms;
   * ANOVA's sums of squares are floor-quantized ×10⁶ integers so the
   * only double op is the final F ratio. */
 object Spread {
@@ -46,38 +45,6 @@ object Spread {
       .select("k", "n", "ssb_u", "ssw_u", "f_milli"))
   }
 
-  /** Discrete percentile per group from a value histogram: smallest v
-    * with cum·100 ≥ n·p (the shared q_percentile_disc recipe). */
-  private def pick(cum: DataFrame, p: Int, name: String): DataFrame =
-    cum.filter(col("cum") * 100 >= col("n") * p)
-      .groupBy("grp").agg(min("v").as(name))
-
-  /** All requested discrete percentiles in ONE aggregate over the
-    * cumulative histogram (r17, guide §2.4 — the per-p [[pick]]
-    * spelling filtered the SAME windowed subtree once per percentile
-    * and joined the results back). min-over-filter is a conditional
-    * min, and every threshold is reachable (the top v row has
-    * cum = n), so the former inner joins never dropped a row —
-    * identical output by construction. */
-  private def picks(cum: DataFrame, ps: Seq[(Int, String)]): DataFrame =
-    cum.groupBy("grp").agg(
-      min(when(col("cum") * 100 >= col("n") * ps.head._1, col("v")))
-        .as(ps.head._2),
-      ps.tail.map { case (p, name) =>
-        min(when(col("cum") * 100 >= col("n") * p, col("v"))).as(name)
-      }: _*)
-
-  private def cumHist(df: DataFrame, grp: Column, v: Column)
-  : DataFrame = {
-    val h = df.select(grp.as("grp"), v.as("v"))
-      .groupBy("grp", "v").agg(count(lit(1)).as("cnt"))
-    val tot = h.groupBy(col("grp").as("g2")).agg(sum("cnt").as("n"))
-    val w = Window.partitionBy("grp").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    h.withColumn("cum", sum("cnt").over(w))
-      .join(broadcast(tot), col("grp") === col("g2")).drop("g2")
-  }
-
   /** Tukey-fence outlier accounting (§2.59): per event type, discrete
     * Q1/Q3 of value cents, the 1.5·IQR fences in exact integer halves,
     * and the row counts outside each fence — the box-plot outlier rule
@@ -85,14 +52,18 @@ object Spread {
     * + cum window per type; the fence row set is ≤|types| and joins
     * back broadcast onto the histogram, never the facts. */
   def qTukeyFences(s: SparkSession, dir: String): DataFrame = {
-    val cum = cumHist(t(s, dir, "events"), col("event_type"),
-      expr("CAST(round(value * 100) AS BIGINT)"))
-    val fences = picks(cum, Seq(25 -> "q1", 75 -> "q3"))
+    val h = t(s, dir, "events")
+      .groupBy(col("event_type").as("grp"),
+        expr("CAST(round(value * 100) AS BIGINT)").as("v"))
+      .agg(count(lit(1)).as("cnt"))
+    val cum = DistRank.cumulative(h, Seq("grp"), "v", "cnt", 0)
+    val fences = DistRank.discrete(cum, Seq("grp"), "v",
+        Seq(25 -> "q1", 75 -> "q3")).drop("tot")
       .withColumn("lo", expr("q1 - (3 * (q3 - q1)) div 2"))
       .withColumn("hi", expr("q3 + (3 * (q3 - q1)) div 2"))
     orderedAll(cum.join(broadcast(fences), "grp")
       .groupBy("grp", "q1", "q3", "lo", "hi")
-      .agg(max("n").as("n"),
+      .agg(max("tot").as("n"),
         sum(when(col("v") < col("lo"), col("cnt")).otherwise(0L))
           .cast("long").as("n_out_lo"),
         sum(when(col("v") > col("hi"), col("cnt")).otherwise(0L))
@@ -108,9 +79,11 @@ object Spread {
     * [−1, 1]); a degenerate IQR yields NULL in both engines. Same
     * histogram machinery as q_tukey_fences on the curation axis. */
   def qBowleySkew(s: SparkSession, dir: String): DataFrame = {
-    val cum = cumHist(t(s, dir, "documents"), col("source"),
-      col("n_chars"))
-    orderedAll(picks(cum, Seq(25 -> "q1", 50 -> "q2", 75 -> "q3"))
+    val h = t(s, dir, "documents")
+      .groupBy(col("source").as("grp"), col("n_chars").as("v"))
+      .agg(count(lit(1)).as("cnt"))
+    orderedAll(DistRank.discrete(DistRank.cumulative(h, Seq("grp"), "v",
+        "cnt", 0), Seq("grp"), "v", Seq(25 -> "q1", 50 -> "q2", 75 -> "q3"))
       .withColumn("bowley_milli", expr(
         "CASE WHEN q3 = q1 THEN NULL " +
           "ELSE ((q1 + q3 - 2 * q2) * 1000 + 1001 * (q3 - q1)) " +
@@ -157,8 +130,8 @@ object Spread {
     * across order priorities — the variance-homogeneity check that must
     * precede q_anova (ANOVA's F assumes it), made robust by centering on
     * the group MEDIAN, not the mean. Mechanically it IS q_anova run on
-    * z = |dollars − median_g|: group medians come from the shared
-    * cumHist/pick recipe and join back broadcast (≤|priorities| rows),
+    * z = |dollars − median_g|: group medians come from
+    * [[DistRank.discrete]] and join back broadcast (≤|priorities| rows),
     * then one mergeable (n, Σz, Σz²) fold per group assembles the
     * between/within sums of squares in exact whole-z² units (the ×10⁶
     * quantization is dropped here — Σz² already reaches ~10¹⁵ at sf0.1,
@@ -170,7 +143,9 @@ object Spread {
     val o = t(s, dir, "orders")
       .select(col("o_orderpriority").as("grp"),
         expr("CAST(round(o_totalprice) AS BIGINT)").as("v"))
-    val med = pick(cumHist(o, col("grp"), col("v")), 50, "med")
+    val med = DistRank.discrete(DistRank.cumulative(
+        o.groupBy("grp", "v").agg(count(lit(1)).as("cnt")), Seq("grp"), "v",
+        "cnt", 0), Seq("grp"), "v", Seq(50 -> "med")).drop("tot")
     val g = o.join(broadcast(med), "grp")
       .withColumn("z", abs(col("v") - col("med")))
       .groupBy("grp")

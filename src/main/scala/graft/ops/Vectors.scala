@@ -63,8 +63,8 @@ object Vectors {
     *  - small corpus: within-label all-pairs join; the label partition
     *    divides the pair space and the per-pair math is the codegen'd
     *    FloatVecDot. O(N²/L) pairs — the right trade below the cutoff.
-    *  - at scale: OR-amplified hyperplane LSH — `embLshTables` (default
-    *    24) independent tables of 2 sign-planes each; a pair is a
+    *  - at scale: OR-amplified hyperplane LSH — 24 independent
+    *    tables of 2 sign-planes each; a pair is a
     *    candidate iff it collides in SOME table's (label, 2-bit sign
     *    pattern) bucket, then candidates are verified with the exact
     *    cosine. Candidate generation is a bucket-local equi-join (the
@@ -88,8 +88,7 @@ object Vectors {
         .select(col("label"), col("a_id"), col("b_id"),
           round(col("cos"), 4).as("sim")))
     } else {
-      val nTables = s.conf.getOption("spark.graft.embLshTables")
-        .map(_.toInt).getOrElse(24)
+      val nTables = 24
       // 2-bit table key: sign pattern of two data-independent
       // pseudo-hyperplanes (xxhash64 parity folded to ±1 literals at plan
       // time — the qAnnLsh pattern, disjoint seed space).

@@ -49,24 +49,17 @@ object Volatility {
 
   /** Historical 95% VaR (§2.79): per event type, the discrete 5th
     * percentile of day-over-day cents changes (the loss a 1-in-20 bad
-    * day brings) plus the worst observed day — the
-    * q_percentile_disc recipe on the delta axis. */
+    * day brings) plus the worst observed day — [[DistRank.discrete]]
+    * on the delta axis. */
   def qVar95(s: SparkSession, dir: String): DataFrame = {
     val h = daily(s, dir)
       .select(col("event_type").as("grp"),
         (col("cents") - col("prev_cents")).as("v"))
       .groupBy("grp", "v").agg(count(lit(1)).as("cnt"))
-    val tot = h.groupBy(col("grp").as("g2")).agg(sum("cnt").as("n"))
-    val wc = Window.partitionBy("grp").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    orderedAll(h.withColumn("cum", sum("cnt").over(wc))
-      .join(broadcast(tot), col("grp") === col("g2"))
-      .filter(col("cum") * 100 >= col("n") * 5)
-      .groupBy("grp")
-      .agg(max("n").as("n_days"), min("v").as("var95_cents"))
-      .join(h.groupBy(col("grp").as("g3")).agg(min("v").as("worst")),
-        col("grp") === col("g3"))
-      .select(col("grp").as("event_type"), col("n_days"),
+    orderedAll(DistRank.discrete(DistRank.cumulative(h, Seq("grp"), "v",
+        "cnt", 0), Seq("grp"), "v", Seq(5 -> "var95_cents"),
+        min("v").as("worst"))
+      .select(col("grp").as("event_type"), col("tot").as("n_days"),
         col("var95_cents"), col("worst")))
   }
 

@@ -386,11 +386,11 @@ object Warehouse {
     * — the robust center a revenue-weighted readout needs where the
     * unweighted median over-counts cheap events. Same histogram-first
     * shape as q_ks_test: raw events compress to (type, cents, Σw) before
-    * the cumulative window. Round 11: "value-domain-bounded" under-sold
-    * the risk — with near-distinct values the per-type histogram is
-    * fact-scale on 5 tasks, so the cumulative sum DistRank-gates through
-    * [[DistRank.withPrefixSumBy]] like q_weighted_quantile. All-integer
-    * decision rule (2·cum ≥ tot). */
+    * [[DistRank.cumulative]] + [[DistRank.discrete]] p50 (the
+    * all-integer rule 2·cum ≥ tot; the props.k weights are
+    * non-negative). With near-distinct values the per-type histogram is
+    * fact-scale on 5 tasks, so the cumulative sum is DistRank-gated
+    * like q_weighted_quantile. */
   def qWeightedMedian(s: SparkSession, dir: String): DataFrame = {
     val g0 = t(s, dir, "events")
       .select(col("event_type"),
@@ -400,29 +400,11 @@ object Warehouse {
         count(lit(1)).as("gn"))
     val (b, g) = DistRank.gate(s, g0, 1000000L,
       Pins.slot("wmed_auto", dir))
-    val w = Window.partitionBy("event_type").orderBy("cents")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // r16: totals from full-partition window sums in the serial branch
-    // (same exchange/sort as the cumulative window — no second
-    // histogram evaluation + broadcast join); the DistRank branch keeps
-    // the join, exactly as in qWeightedQuantile (see there).
-    val cum =
-      if (b <= 0) g.withColumn("cum", sum("gw").over(w))
-        .withColumn("tot_w",
-          sum("gw").over(Window.partitionBy("event_type")))
-        .withColumn("n", sum("gn").over(Window.partitionBy("event_type")))
-      else DistRank.withPrefixSumBy(g, Seq("event_type"),
-        col("cents"), col("cents"), col("gw"), b, "cum_before")
-        .withColumn("cum", col("cum_before") + col("gw"))
-        .join(broadcast(g.groupBy(col("event_type").as("et2"))
-          .agg(sum("gw").as("tot_w"), sum("gn").as("n"))),
-          col("event_type") === col("et2"))
-        .drop("et2")
-    orderedAll(cum
-      .filter(col("cum") * 2 >= col("tot_w"))
-      .groupBy("event_type", "n", "tot_w")
-      .agg(min("cents").as("wmedian_cents"))
-      .select("event_type", "n", "tot_w", "wmedian_cents"))
+    val by = Seq("event_type")
+    orderedAll(DistRank.discrete(DistRank.cumulative(g, by, "cents", "gw", b),
+        by, "cents", Seq(50 -> "wmedian_cents"), sum("gn").as("n"))
+      .select(col("event_type"), col("n"), col("tot").as("tot_w"),
+        col("wmedian_cents")))
   }
 
   // ---- §2.46 storage-encoding audits -----------------------------------
@@ -513,12 +495,11 @@ object Warehouse {
     * weight reaches ⌈p·W⌉, cleared to 100·cumw ≥ p·W so everything
     * stays integer). Generalizes [[qWeightedMedian]] to a quantile
     * vector from ONE cents-grain collapse + one cumulative window per
-    * flag; the 4 probe points are a literal cross join. Round 11: the
-    * per-flag histograms are near-distinct-valued and there are only 3
-    * flags — the declarative window is a 3-task ceiling — so the
-    * cumulative sum is DistRank-gated through the partition-aware
-    * [[DistRank.withPrefixSumBy]] (per-flag bucket offsets, bit-equal
-    * stitching, Round11RankSpec-forced). */
+    * flag; the 4 probe points are a literal cross join. The per-flag
+    * histograms are near-distinct-valued and there are only 3 flags —
+    * the declarative window is a 3-task ceiling — so cum/tot come from
+    * the gated [[DistRank.cumulative]] (per-flag bucket offsets,
+    * bit-equal stitching, Round11RankSpec-forced). */
   def qWeightedQuantile(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val g0 = t(s, dir, "lineitem")
@@ -528,35 +509,12 @@ object Warehouse {
       .groupBy("l_returnflag", "cents").agg(sum("w").as("gw"))
     val (b, g) = DistRank.gate(s, g0, 1000000L,
       Pins.slot("wq_auto", dir))
-    val wc = Window.partitionBy("l_returnflag").orderBy("cents")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // r16 optimization (serial branch only): the per-flag total used to
-    // be a SEPARATE aggregate of g broadcast-joined back — re-evaluating
-    // the whole histogram subtree. The cumulative window already
-    // partitions by flag, so the total is one more window function over
-    // the SAME sort/exchange (an unordered full-partition sum — exact
-    // for any sign). The DistRank branch keeps the join: at scale a
-    // full-partition window over a fact-scale histogram is precisely
-    // what the bucketed prefix-sum path exists to avoid, and there the
-    // g re-evaluation is amortized.
-    val cum =
-      if (b <= 0) g.withColumn("cum", sum("gw").over(wc))
-        .withColumn("tot_w",
-          sum("gw").over(Window.partitionBy("l_returnflag")))
-      else DistRank.withPrefixSumBy(g, Seq("l_returnflag"),
-        col("cents"), col("cents"), col("gw"), b, "cum_before")
-        .withColumn("cum", col("cum_before") + col("gw"))
-        .join(broadcast(g.groupBy(col("l_returnflag").as("f2"))
-          .agg(sum("gw").as("tot_w"))),
-          col("l_returnflag") === col("f2"))
-        .drop("f2")
     val ps = Seq(25L, 50L, 75L, 90L).toDF("p")
-    orderedAll(cum
+    orderedAll(DistRank.cumulative(g, Seq("l_returnflag"), "cents", "gw", b)
       .crossJoin(broadcast(ps))
-      .filter(col("cum") * 100 >= col("tot_w") * col("p"))
-      .groupBy("l_returnflag", "p", "tot_w")
-      .agg(min("cents").as("wq_cents"))
-      .select("l_returnflag", "p", "tot_w", "wq_cents"))
+      .filter(col("cum") * 100 >= col("tot") * col("p"))
+      .groupBy(col("l_returnflag"), col("p"), col("tot").as("tot_w"))
+      .agg(min("cents").as("wq_cents")))
   }
 
   /** Point-in-time lookup (§2.98): every order joined to the SCD2

@@ -509,11 +509,9 @@ object FileFormats {
     * the SAME induced doc subset q_band_sweep folds or the two diverge
     * the moment the gate engages at scale (the replica-dense smoke
     * corpus is candidate-enumeration-bound ungated — the documented
-    * §2.11 adversarial class). Bucket COUNT is the one knob a bucketed
-    * ingest fixes at write time: `spark.graft.bandBuckets` (default 8
-    * — the graded output is bucket-count-independent; a cluster sizes
-    * it to its executor count since the self-join's parallelism is
-    * capped by it). */
+    * §2.11 adversarial class). The bucket count (8) is fixed at ingest
+    * time; the graded output is bucket-count-independent, and the
+    * self-join's parallelism is capped by it. */
   /** The (doc_id, band, k1, k2) band rows of a lane-signature frame —
     * the (8,2) banding shared by [[qDedupBandBucketed]]'s ingest and
     * [[qDedupIncremental]]'s fresh-batch side (ONE banding definition,
@@ -533,8 +531,7 @@ object FileFormats {
     * exchange-free on the corpus side. */
   private def ensureBandTable(s: SparkSession, dir: String): String = {
     sweepStaleWarehouse(s)
-    val nb = s.conf.getOption("spark.graft.bandBuckets")
-      .map(_.toInt).getOrElse(8)
+    val nb = 8
     val bp = graft.ops.DedupAudit.auditSampleBp(s, dir)
     val tag = dirTag(dir) + s"_${bp}_$nb"
     val bt = s"graft_bands_b$tag"

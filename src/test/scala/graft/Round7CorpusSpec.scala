@@ -173,11 +173,11 @@ class Round7CorpusSpec extends SparkSpec {
     // Both an even and a deliberately awkward bucket count: seams and
     // rank-bucket boundaries land differently, the result must not.
     for (b <- Seq(7, 64)) {
-      spark.conf.set("spark.graft.interarrivalBuckets", b.toString)
+      spark.conf.set("spark.graft.rankBuckets", b.toString)
       try {
         val par = run("q_interarrival").collect().map(_.toSeq).toSeq
         assert(par == serial, s"buckets=$b diverged")
-      } finally spark.conf.unset("spark.graft.interarrivalBuckets")
+      } finally spark.conf.unset("spark.graft.rankBuckets")
     }
   }
 

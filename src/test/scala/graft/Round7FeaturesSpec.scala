@@ -114,7 +114,7 @@ class Round7FeaturesSpec extends SparkSpec {
     val serial = run("q_hist_equiheight").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSet
-    spark.conf.set("spark.graft.equiheightBuckets", "64")
+    spark.conf.set("spark.graft.rankBuckets", "64")
     try {
       val parallel = run("q_hist_equiheight").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -135,7 +135,7 @@ class Round7FeaturesSpec extends SparkSpec {
       assert(globalWindows.forall(_.collectFirst {
         case a: HashAggregateExec => a }.nonEmpty),
         "an unpartitioned window runs over non-aggregated input")
-    } finally spark.conf.unset("spark.graft.equiheightBuckets")
+    } finally spark.conf.unset("spark.graft.rankBuckets")
   }
 
   // --- q_rolling_distinct ----------------------------------------------

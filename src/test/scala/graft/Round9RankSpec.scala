@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.functions.col
 
 /** Round-9 item 1/2: the dimension-sort family's distributed-rank gate.
   * For each gated query, the conf-forced parallel path
@@ -10,16 +12,33 @@ import org.apache.spark.sql.execution.aggregate.HashAggregateExec
   * physical plan must contain no single-partition window over
   * non-aggregated input (the 100 TB ceiling the gate exists to remove).
   * B = 7 on a 4-thread session: odd bucket count, multiple buckets per
-  * task, seams exercised. */
+  * task, seams exercised. Synthetic frames ride the same loops beside
+  * the queries. */
 class Round9RankSpec extends SparkSpec {
+
+  /** A rank over a key with nulls: a null key is one more value that
+    * sorts first (NULLS FIRST), so the bucketed rank must keep those
+    * rows exactly as the serial window does. */
+  private val frames: Map[String, SparkSession => DataFrame] = Map(
+    "null-key rank" -> { s =>
+      import s.implicits._
+      val df = Seq[(Long, Option[Long])]((1L, Some(5L)), (2L, None),
+        (3L, Some(-2L)), (4L, Some(5L)), (5L, None), (6L, Some(9L)))
+        .toDF("id", "k")
+      val (b, g) = ops.DistRank.gate(s, df)
+      ops.DistRank.rank(g, col("k"), col("id"), b, "rn")
+    })
 
   private val gated = Seq("q_rfm", "q_lorenz", "q_decile_lift",
     "q_abc_class", "q_decay_score", "q_interval_overlap",
-    "q_customer_migration", "q_rich_club")
+    "q_customer_migration", "q_rich_club") ++ frames.keys
+
+  private def frame(name: String): DataFrame =
+    frames.get(name).map(_(spark))
+      .getOrElse(SparkEntry.queries(name)(spark, sf))
 
   private def rows(name: String): Set[String] =
-    SparkEntry.queries(name)(spark, sf).collect()
-      .map(_.toSeq.mkString("|")).toSet
+    frame(name).collect().map(_.toSeq.mkString("|")).toSet
 
   for (name <- gated) {
     test(s"$name: rankBuckets path is bit-equal to the serial plan") {
@@ -36,8 +55,7 @@ class Round9RankSpec extends SparkSpec {
     test(s"$name: gated plan has no global window over data-sized input") {
       spark.conf.set("spark.graft.rankBuckets", "7")
       try {
-        val p = SparkEntry.queries(name)(spark, sf)
-          .queryExecution.sparkPlan
+        val p = frame(name).queryExecution.sparkPlan
         // orderedAll's final 1-partition presentation sort is not a
         // WindowExec; the only unpartitioned windows allowed are the
         // bucket-offset / day-carry prefix sums, whose child is an

@@ -112,7 +112,7 @@ class StreamingSpec extends SparkSpec {
       val batch = vals.zipWithIndex
         .map { case (v, i) => (i.toLong, math.round(v * 100)) }
         .toDF("k", "cents")
-      val ps = ops.DistRank.withPrefixSum(batch,
+      val ps = ops.DistRank.prefixSum(batch, Nil,
         org.apache.spark.sql.functions.col("k"),
         org.apache.spark.sql.functions.col("k"),
         org.apache.spark.sql.functions.col("cents"), 3, "ps")
