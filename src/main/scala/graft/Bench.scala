@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE compact JSON line
@@ -48,9 +48,18 @@ object Bench {
     // tables) — at a one-time wall cost of roughly one extra timed
     // pass, which buys per-key numbers that match RunOne steady state.
     // Data is NOT cached: the timed passes still pay full scan+compute.
-    for ((_, fn) <- SparkEntry.queries.toSeq.sortBy(_._1))
+    // A query that throws is timed as fast as its failure, so every
+    // failure is reported on stderr and fails the run (after the JSON
+    // line, which stays the same).
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def run(name: String,
+            fn: (SparkSession, String) => DataFrame): Unit =
       try { fn(spark, sfDir).count() }
-      catch { case _: Throwable => () }
+      catch { case e: Throwable =>
+        if (failed.add(name))
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      }
+    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) run(name, fn)
 
     // Quiet start: the warmup leaves compilation debris (Janino classloaders,
     // shuffle temp buffers) that GC tends to collect INSIDE the timed region,
@@ -72,7 +81,7 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       def once(): Double = {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
+        run(name, fn)
         (System.nanoTime() - t0) / 1e9
       }
       val m = math.min(once(), once())
@@ -105,5 +114,6 @@ object Bench {
       s""""timing":"min-of-2","queries":$qs,"sf":"$sfLabel"}"""
     spark.stop()
     println(line)
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

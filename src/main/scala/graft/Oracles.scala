@@ -3608,7 +3608,7 @@ object Oracles {
   )
 
   /** ±1 md5-parity hyperplane lanes for plane range [lo, hi) — twin of
-    * graft.ops.Evaluation.mdSigns (and of the q_ann_lsh sgn CTE). */
+    * graft.ops.Sketches.lshSigns(j, 64), the q_ann_lsh planes. */
   private def sgnCte(lo: Int, hi: Int): String =
     s"""sgn AS (SELECT j,
        |    list(CASE WHEN (strpos('0123456789abcdef',

@@ -20,12 +20,16 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    // A failed query is reported and skipped so the rest still dump; the
+    // run exits 1 once oracle_sql.json is written.
+    var failed = 0
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
+        failed += 1
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       }
@@ -45,5 +49,6 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed > 0) sys.exit(1)
   }
 }

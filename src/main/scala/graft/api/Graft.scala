@@ -3,7 +3,8 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.{Curation, DistRank, Pins, Pipeline, Sketches, Text, Vectors}
+import graft.ops.{Corpus, Curation, DistRank, Pins, Pipeline, Sketches, Text,
+  Vectors}
 
 /** The engine's reusable operator cores as a DataFrame→DataFrame
   * library (round-11 item 5) — the entry points a user of the graded
@@ -656,60 +657,40 @@ object Graft {
     * split, empties dropped), same as every graded text operator.
     * Emits (token, n), unsorted. */
   def wordcount(df: DataFrame, textCol: String): DataFrame =
-    df.select(explode(graft.ops.tokens(col(textCol))).as("token"))
-      .filter(col("token") =!= "")
-      .groupBy("token").agg(count(lit(1)).as("n"))
+    Text.wordcount(df, col(textCol))
 
   /** Per-document top-k TF-IDF terms over any (id, text) table — the
-    * graded q_tfidf recipe (tf and df as two aggregates over ONE token
-    * stream, n_docs a broadcast scalar, the rank a single keyed
-    * window; the MR formulation chained three jobs) exposed
+    * graded q_tfidf core (Text.tfidf: tf and df as two aggregates over
+    * ONE token stream, n_docs a broadcast scalar, the rank a single
+    * keyed window; the MR formulation chained three jobs) exposed
     * parametrically. Emits (<idCol>, token, tf, df, tfidf ×10⁻⁴
     * rounded), ties broken by token. */
   def tfidf(df: DataFrame, idCol: String, textCol: String,
             topK: Int = 5): DataFrame = {
     require(topK > 0, s"topK must be positive, got $topK")
-    val docs = df.select(col(idCol).cast("long").as("doc_id"),
-      col(textCol).as("text"))
-    val tok = Text.tokDf(docs)
-    val tf = tok.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-    val dfr = tf.groupBy("token").agg(count(lit(1)).as("df"))
-    val nd = docs.agg(countDistinct(col("doc_id")).as("n_docs"))
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("tfidf_raw").desc, col("token").asc)
-    tf.join(dfr, "token").crossJoin(broadcast(nd))
-      .withColumn("tfidf_raw",
-        col("tf") * log(col("n_docs").cast("double") / col("df")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= topK)
-      .select(col("doc_id").as(idCol), col("token"), col("tf"),
-        col("df"), round(col("tfidf_raw"), 4).as("tfidf"))
+    Text.tfidf(docSide(df, idCol, textCol), topK)
+      .withColumnRenamed("doc_id", idCol)
   }
 
   /** Bounded inverted index over any (id, text) table — the graded
-    * q_inverted_index shape: per token, document frequency, id range,
-    * and a size-capped posting sample via the BoundedMinK typed
-    * aggregate (O(maxPostings) state, map-side mergeable — no per-token
-    * window sort, no unbounded collect_list: a stopword's posting list
-    * is corpus-sized at 100 TB and must never materialize). Emits
-    * (token, df, first_doc, last_doc, postings). */
+    * q_inverted_index core (Corpus.invertedIndex): per token, document
+    * frequency, id range, and a size-capped posting sample via the
+    * BoundedMinK typed aggregate (O(maxPostings) state, map-side
+    * mergeable — no per-token window sort, no unbounded collect_list:
+    * a stopword's posting list is corpus-sized at 100 TB and must
+    * never materialize). Emits (token, df, first_doc, last_doc,
+    * postings). */
   def invertedIndex(df: DataFrame, idCol: String, textCol: String,
                     maxPostings: Int = 10): DataFrame = {
     require(maxPostings > 0,
       s"maxPostings must be positive, got $maxPostings")
-    df.select(col(idCol).cast("long").as("doc_id"),
-        explode(array_distinct(graft.ops.tokens(col(textCol))))
-          .as("token"))
-      .filter(col("token") =!= "")
-      .groupBy("token")
-      .agg(count(lit(1)).as("df"), min("doc_id").as("first_doc"),
-        max("doc_id").as("last_doc"),
-        graft.functions.BoundedMinK.minK(col("doc_id"), maxPostings)
-          .as("cap"))
-      .withColumn("postings",
-        array_join(expr("transform(cap, x -> CAST(x AS STRING))"), ","))
-      .drop("cap")
+    Corpus.invertedIndex(docSide(df, idCol, textCol), maxPostings)
   }
+
+  /** The (doc_id, text) frame the graded text cores read. */
+  private def docSide(df: DataFrame, idCol: String,
+                      textCol: String): DataFrame =
+    df.select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
 
   // ---- text scoring ---------------------------------------------------------
 
@@ -730,8 +711,7 @@ object Graft {
            b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "need at least one query term")
     import df.sparkSession.implicits._
-    val tok = Text.tokDf(df.select(col(idCol).cast("long").as("doc_id"),
-      col(textCol).as("text")))
+    val tok = Text.tokDf(docSide(df, idCol, textCol))
     val tf = tok.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
     val dl = tok.groupBy("doc_id").agg(count(lit(1)).as("dl"))
     val dfr = tf.groupBy("token").agg(count(lit(1)).as("df"))
@@ -765,18 +745,26 @@ object Graft {
 
   // ---- similarity search ---------------------------------------------------
 
-  /** Exact-cosine re-rank + top-k of a joined (probe_id, __pe,
-    * neighbor_id, __ve) candidate frame — shared by [[knnCosine]]
-    * (all candidates) and [[annLsh]] (bucket-pruned candidates). */
-  private def topkJoin(cands: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    cands.withColumn("cos",
-        Vectors.cosine(col("__pe"), col("__ve")))
-      .withColumn("rn", row_number().over(w).cast("long"))
+  /** A user table as the (vec_id, embedding) corpus side of
+    * [[Vectors.probePairs]]. */
+  private def corpusSide(df: DataFrame, idCol: String,
+                         vecCol: String): DataFrame =
+    df.select(col(idCol).cast("long").as("vec_id"),
+      col(vecCol).as("embedding"))
+
+  /** A user table as the (pid, pe) probe side of [[Vectors.probePairs]]. */
+  private def probeSide(df: DataFrame, idCol: String,
+                        vecCol: String): DataFrame =
+    df.select(col(idCol).cast("long").as("pid"), col(vecCol).as("pe"))
+
+  /** Top-k of a [[Vectors.probePairs]] frame under the retrieval order,
+    * as the (probe_id, neighbor_id, rn, cos) contract of [[knnCosine]],
+    * [[annLsh]] and [[annIvf]]. */
+  private def topK(pairs: DataFrame, k: Int): DataFrame =
+    pairs.withColumn("rn", Vectors.rankBy().cast("long"))
       .filter(col("rn") <= k)
-      .select("probe_id", "neighbor_id", "rn", "cos")
-  }
+      .select(col("pid").as("probe_id"), col("vec_id").as("neighbor_id"),
+        col("rn"), col("cos"))
 
   /** Exact k-NN by cosine over any corpus with an ArrayType(Float)
     * embedding column: every probe × the full corpus through the
@@ -790,12 +778,9 @@ object Graft {
                 probes: DataFrame, probeIdCol: String,
                 probeVecCol: String, k: Int = 5): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val c = corpus.select(col(idCol).cast("long").as("neighbor_id"),
-      col(vecCol).as("__ve"))
-    val p = probes.select(col(probeIdCol).cast("long").as("probe_id"),
-      col(probeVecCol).as("__pe"))
-    topkJoin(c.join(broadcast(p),
-      col("neighbor_id") =!= col("probe_id")), k)
+    topK(Vectors.probePairs(
+      corpusSide(corpus, idCol, vecCol),
+      probeSide(probes, probeIdCol, probeVecCol)), k)
   }
 
   /** Hyperplane-LSH approximate k-NN: corpus and probes bucket by the
@@ -831,15 +816,11 @@ object Graft {
     require(dim > 0 || dMin > 0,
       s"probe embedding dimension must be positive, got $dMin")
     val d = if (dim > 0) dim else dMin
-    val c = corpus.select(col(idCol).cast("long").as("neighbor_id"),
-        col(vecCol).as("__ve"))
-      .withColumn("__b", Sketches.lshBucketExpr(col("__ve"), bits, d))
-    val p = probes.select(col(probeIdCol).cast("long").as("probe_id"),
-        col(probeVecCol).as("__pe"))
-      .withColumn("__pb", Sketches.lshBucketExpr(col("__pe"), bits, d))
-    topkJoin(c.join(broadcast(p),
-        col("__b") === col("__pb") &&
-          col("neighbor_id") =!= col("probe_id")), k)
+    val c = corpusSide(corpus, idCol, vecCol)
+      .withColumn("__b", Sketches.lshBucketExpr(col("embedding"), bits, d))
+    val p = probeSide(probes, probeIdCol, probeVecCol)
+      .withColumn("__pb", Sketches.lshBucketExpr(col("pe"), bits, d))
+    topK(Vectors.probePairs(c, p, Some(col("__b") === col("__pb"))), k)
   }
 
   // ---- distributed global order ----------------------------------------
@@ -990,32 +971,11 @@ object Graft {
       s"need 2 <= nlist <= 4096, got $nlist")
     require(nprobe >= 1 && nprobe <= nlist,
       s"need 1 <= nprobe <= nlist, got nprobe=$nprobe nlist=$nlist")
-    val c = corpus.select(col(idCol).cast("long").as("vec_id"),
-      col(vecCol).as("embedding"))
-    val seeds = c
-      .withColumn("hr", md5(col("vec_id").cast("string")))
-      .orderBy(col("hr"), col("vec_id")).limit(nlist)
-      .select(col("vec_id"), col("embedding"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-    require(seeds.length >= 2,
-      s"corpus has ${seeds.length} rows; IVF needs at least 2")
-    val (cents, _) = Vectors.lloydSteps(c, seeds, lloydIters)
-    val assigned = Vectors.assignTo(c, cents)
-      .withColumnRenamed("vec_id", "neighbor_id")
-      .withColumnRenamed("embedding", "__ve")
-    val probeLists = probes
-      .select(col(probeIdCol).cast("long").as("probe_id"),
-        col(probeVecCol).as("__pe"))
-      .withColumn("__c", explode(slice(reverse(array_sort(
-        array(cents.map { case (cid, ce) =>
-          struct(Vectors.cosine(typedLit(ce), col("__pe")).as("csim"),
-            lit(-cid).as("ncid"))
-        }.toIndexedSeq: _*))), 1, nprobe)))
-      .select(col("probe_id"), col("__pe"),
-        (col("__c.ncid") * -1).as("__cid"))
-    topkJoin(assigned.join(broadcast(probeLists),
-      assigned("cid") === probeLists("__cid") &&
-        col("neighbor_id") =!= col("probe_id")).drop("cid", "__cid"), k)
+    val (pairs, _) = Vectors.ivfPairs(
+      corpusSide(corpus, idCol, vecCol),
+      probeSide(probes, probeIdCol, probeVecCol),
+      nlist, nprobe, lloydIters)
+    topK(pairs, k)
   }
 
   // ---- MMR diversified re-ranking -----------------------------------------
@@ -1043,45 +1003,12 @@ object Graft {
       s"need 1 <= k <= poolSize <= 1024, got k=$k poolSize=$poolSize")
     require(lambda >= 0.0 && lambda <= 1.0,
       s"lambda must be in [0, 1], got $lambda")
-    val c = corpus.select(col(idCol).cast("long").as("cid"),
-      col(vecCol).as("ce"))
-    val p = probes.select(col(probeIdCol).cast("long").as("pid"),
-      col(probeVecCol).as("pe"))
-    val w = Window.partitionBy(col("pid"))
-      .orderBy(col("rel").desc, col("cid").asc)
-    val cand = Pins.pin(
-      c.join(broadcast(p), col("cid") =!= col("pid"))
-        .withColumn("rel", Vectors.cosine(col("pe"), col("ce")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= poolSize)
-        .select("pid", "cid", "rel", "ce"),
-      freshSlot("api_mmr_cand"))
-    var rem = cand.withColumn("ms", lit(null).cast("double"))
-    val outs = Seq.newBuilder[DataFrame]
-    for (r <- 1 to k) {
-      val score =
-        if (r == 1) col("rel")
-        else col("rel") * lambda - col("ms") * (1.0 - lambda)
-      val sel = rem.withColumn("__sc", score)
-        .groupBy("pid")
-        .agg(max(struct(col("__sc"), (-col("cid")).as("nc"),
-          col("ce").as("se"))).as("pk"))
-        .select(col("pid"), (-col("pk.nc")).as("s_cid"),
-          col("pk.__sc").as("s_score"), col("pk.se").as("s_ce"))
-      outs += sel.select(col("pid").as("probe_id"),
-        lit(r.toLong).as("rank"), col("s_cid").as("neighbor_id"),
-        round(col("s_score"), 4).as("score"))
-      if (r < k)
-        rem = Pins.pin(rem.join(sel, "pid")
-          .filter(col("cid") =!= col("s_cid"))
-          .withColumn("ms", when(col("ms").isNull,
-            Vectors.cosine(col("ce"), col("s_ce")))
-            .otherwise(greatest(col("ms"),
-              Vectors.cosine(col("ce"), col("s_ce")))))
-          .select("pid", "cid", "rel", "ce", "ms"),
-          freshSlot("api_mmr_rem"))
-    }
-    outs.result().reduce(_ unionAll _)
+    Vectors.mmr(corpusSide(corpus, idCol, vecCol),
+        probeSide(probes, probeIdCol, probeVecCol),
+        k, poolSize, lambda, freshSlot("api_mmr_cand"),
+        Pins.pin(_, freshSlot("api_mmr_rem")))
+      .select(col("pid").as("probe_id"), col("rank"),
+        col("cid").as("neighbor_id"), col("score"))
   }
 
   // ---- dedup-banding audit -------------------------------------------------

@@ -77,20 +77,26 @@ object Corpus {
     * over one exchange: no per-token window sort (a single-task skew
     * hazard on stopword-grade hub tokens, whose posting list is
     * corpus-sized at 100 TB), no stats⋈caps join, and no collect_list
-    * holding an unbounded posting buffer. */
-  def qInvertedIndex(s: SparkSession, dir: String): DataFrame = {
-    val pairs = t(s, dir, "documents")
-      .select(col("doc_id"),
+    * holding an unbounded posting buffer. This is the core of a
+    * (doc_id, text) frame with `maxPostings` ids kept per token, shared
+    * with graft.api.Graft.invertedIndex; emits (token, df, first_doc,
+    * last_doc, postings). */
+  private[graft] def invertedIndex(docs: DataFrame,
+                                   maxPostings: Int): DataFrame =
+    docs.select(col("doc_id"),
         explode(array_distinct(tokens(col("text")))).as("token"))
       .filter(col("token") =!= "")
-    orderedAll(pairs.groupBy("token")
+      .groupBy("token")
       .agg(count(lit(1)).as("df"), min("doc_id").as("first_doc"),
         max("doc_id").as("last_doc"),
-        graft.functions.BoundedMinK.minK(col("doc_id"), 10).as("cap"))
+        graft.functions.BoundedMinK.minK(col("doc_id"), maxPostings)
+          .as("cap"))
       .withColumn("postings",
         array_join(expr("transform(cap, x -> CAST(x AS STRING))"), ","))
-      .drop("cap"))
-  }
+      .drop("cap")
+
+  def qInvertedIndex(s: SparkSession, dir: String): DataFrame =
+    orderedAll(invertedIndex(t(s, dir, "documents"), 10))
 
   /** Token-budget mixing planner: per-source token inventory plus the two
     * numbers a mix schedule is built from — the source's share of the

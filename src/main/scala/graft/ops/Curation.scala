@@ -155,8 +155,7 @@ object Curation {
       .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
       .filter(col("token") =!= "").distinct()
     val dict = dt.select("token").distinct()
-    val nljMax = s.conf.getOption("spark.graft.pairNljMaxDocs")
-      .map(_.toLong).getOrElse(20000L)
+    val nljMax = Text.pairNljMaxDocs(s)
     val dictN = dict.count()
     // Third branch (tiny vocab, large corpus): distinct-mask grouping —
     // prefix filtering is no help on a ≤64-token vocabulary (every

@@ -26,20 +26,13 @@ import org.apache.spark.sql.functions._
   * committing the full corpus to them. */
 object Evaluation {
 
-  /** ±1 hyperplane lane from md5 parity of the constant lane index —
-    * byte-identical to the q_ann_lsh recipe (Sketches.scala). The recall
-    * audit reuses the LSH's own planes 0..7 (it measures THAT index);
-    * scoring queries use plane indices ≥ 100 so they never alias it. */
-  private def mdSigns(j: Int): Array[Float] = Array.tabulate(64) { i =>
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(String.valueOf(j * 64 + i).getBytes("UTF-8"))
-    if (((d(0) >> 4) & 1) == 0) 1.0f else -1.0f
-  }
-
-  /** Codegen'd dot against a literal md5-sign plane (bit-identical to the
-    * oracle's list_sum fold over the same ±1 doubles). */
+  /** Codegen'd dot against the j-th q_ann_lsh md5-sign plane
+    * ([[Sketches.lshSigns]]; bit-identical to the oracle's list_sum fold
+    * over the same ±1 doubles). The recall audit reuses the LSH's own
+    * planes 0..7 (it measures THAT index); scoring queries use plane
+    * indices ≥ 100 so they never alias it. */
   private def planeScore(j: Int): Column =
-    Vectors.dot(col("embedding"), typedLit(mdSigns(j)))
+    Vectors.dot(col("embedding"), typedLit(Sketches.lshSigns(j, 64)))
 
   /** nDCG rank discounts ×10⁶, rank 1..10: round(10⁶ / log₂(r+1)).
     * Shared with the oracle (Oracles interpolates the same values), so
@@ -57,19 +50,13 @@ object Evaluation {
     * side is the broadcast-probe brute-force scan; the candidate side is
     * a bucket-equality semi join — both corpus-linear. */
   def qAnnRecall(s: SparkSession, dir: String): DataFrame = {
-    val bucketExpr = (0 until 8).map { j =>
-      when(Vectors.dot(col("embedding"), typedLit(mdSigns(j))) > 0,
-        lit(1 << j)).otherwise(lit(0))
-    }.reduce(_ + _)
-    val emb = t(s, dir, "embeddings").withColumn("bucket", bucketExpr)
+    val emb = t(s, dir, "embeddings")
+      .withColumn("bucket", Sketches.lshBucketExpr(col("embedding"), 8, 64))
     val probes = emb.filter(col("vec_id") < 50)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"),
         col("bucket").as("pb"))
-    val w = Window.partitionBy(col("pid"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    val top10 = emb.join(broadcast(probes), col("vec_id") =!= col("pid"))
-      .withColumn("cos", Vectors.cosine(col("pe"), col("embedding")))
-      .withColumn("rn", row_number().over(w))
+    val top10 = Vectors.probePairs(emb, probes)
+      .withColumn("rn", Vectors.rankBy())
       .filter(col("rn") <= 10)
       .select(col("pid"), col("vec_id").as("nid"))
     val cand = emb.join(
@@ -98,12 +85,9 @@ object Evaluation {
     val probes = emb.filter(col("vec_id") < 20)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"),
         col("label").as("plabel"))
-    val w = Window.partitionBy(col("pid"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
     val wLit = typedLit(ndcgWeights)
-    val top = emb.join(broadcast(probes), col("vec_id") =!= col("pid"))
-      .withColumn("cos", Vectors.cosine(col("pe"), col("embedding")))
-      .withColumn("rn", row_number().over(w))
+    val top = Vectors.probePairs(emb, probes)
+      .withColumn("rn", Vectors.rankBy())
       .filter(col("rn") <= 10)
       .withColumn("rel",
         when(col("label") === col("plabel"), 1L).otherwise(0L))
@@ -242,12 +226,11 @@ object Evaluation {
     val normC = aggregate(sequence(lit(1), lit(64)), lit(0.0), (acc, i) =>
       acc + element_at(col("cv"), i.cast("int")) *
         element_at(col("cv"), i.cast("int")))
-    val wPred = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("cand").asc)
     val pred = emb.crossJoin(broadcast(cent))
       .withColumn("cos",
         dotC / sqrt(Vectors.norm2(col("embedding")) * normC))
-      .withColumn("rn", row_number().over(wPred))
+      .withColumn("rn",
+        Vectors.rankBy(id = col("cand"), part = col("vec_id")))
       .filter(col("rn") === 1)
       .select(col("label").cast("long").as("true_label"),
         col("cand").cast("long").as("pred"))
@@ -326,11 +309,8 @@ object Evaluation {
     val probes = emb.filter(col("vec_id") < 50)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"),
         col("label").as("plabel"))
-    val w = Window.partitionBy(col("pid"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    val ranked = emb.join(broadcast(probes), col("vec_id") =!= col("pid"))
-      .withColumn("cos", Vectors.cosine(col("pe"), col("embedding")))
-      .withColumn("rn", row_number().over(w))
+    val ranked = Vectors.probePairs(emb, probes)
+      .withColumn("rn", Vectors.rankBy())
       .filter(col("rn") <= 20)
     val best = ranked.filter(col("label") === col("plabel"))
       .groupBy("pid").agg(min(col("rn")).cast("long").as("best_rank"))
@@ -352,11 +332,8 @@ object Evaluation {
     val probes = emb.filter(col("vec_id") < 20)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"),
         col("label").as("plabel"))
-    val w = Window.partitionBy(col("pid"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    emb.join(broadcast(probes), col("vec_id") =!= col("pid"))
-      .withColumn("cos", Vectors.cosine(col("pe"), col("embedding")))
-      .withColumn("rn", row_number().over(w))
+    Vectors.probePairs(emb, probes)
+      .withColumn("rn", Vectors.rankBy())
       .filter(col("rn") <= 10)
       .withColumn("rel",
         when(col("label") === col("plabel"), 1L).otherwise(0L))
@@ -550,14 +527,9 @@ object Evaluation {
     val emb = t(s, dir, "embeddings")
     val probes = emb.filter(col("vec_id") < 50)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"))
-    val scored = emb.join(broadcast(probes), col("vec_id") =!= col("pid"))
-      .withColumn("cos", Vectors.cosine(col("pe"), col("embedding")))
+    val scored = Vectors.probePairs(emb, probes)
       .withColumn("cos32", Vectors.cosine(
         slice(col("pe"), 1, 32), slice(col("embedding"), 1, 32)))
-    val wc = Window.partitionBy("pid")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    val wd = Window.partitionBy("pid")
-      .orderBy(col("cos32").desc, col("vec_id").asc)
     // List size per probe is least(10, n−1): on a corpus under 11 vectors
     // the top-10 lists are shorter than 10, and a hardcoded union of
     // 20 − overlap would mislabel jaccard_bp. The candidate count rides
@@ -565,8 +537,8 @@ object Evaluation {
     // rc/rd ≤ 10 is already ≤ ls when ls < 10 since rank never exceeds
     // the candidate count.
     orderedAll(scored
-      .withColumn("rc", row_number().over(wc))
-      .withColumn("rd", row_number().over(wd))
+      .withColumn("rc", Vectors.rankBy())
+      .withColumn("rd", Vectors.rankBy(col("cos32")))
       .withColumn("ncand",
         count(lit(1)).over(Window.partitionBy("pid")))
       .filter(col("rc") <= 10 || col("rd") <= 10)
@@ -592,13 +564,8 @@ object Evaluation {
     val probes = emb.filter(col("vec_id") < 30)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"),
         col("label").as("true_label"))
-    val scored = emb.filter(col("vec_id") >= 30)
-      .join(broadcast(probes), col("vec_id") =!= col("pid"))
-      .withColumn("cos", Vectors.cosine(col("pe"), col("embedding")))
-    val wNn = Window.partitionBy("pid")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    val votes = scored
-      .withColumn("rn", row_number().over(wNn))
+    val votes = Vectors.probePairs(emb.filter(col("vec_id") >= 30), probes)
+      .withColumn("rn", Vectors.rankBy())
       .filter(col("rn") <= 5)
       .groupBy("pid", "true_label", "label")
       .agg(count(lit(1)).as("v"))
@@ -653,20 +620,15 @@ object Evaluation {
     val emb = t(s, dir, "embeddings")
     val probes = emb.filter(col("vec_id") < 50)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"))
-    val scored = emb.join(broadcast(probes), col("vec_id") =!= col("pid"))
-      .withColumn("cos", Vectors.cosine(col("pe"), col("embedding")))
+    val scored = Vectors.probePairs(emb, probes)
       .withColumn("cos32", Vectors.cosine(
         slice(col("pe"), 1, 32), slice(col("embedding"), 1, 32)))
-    val wc = Window.partitionBy("pid")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    val wd = Window.partitionBy("pid")
-      .orderBy(col("cos32").desc, col("vec_id").asc)
     val wCase = rboWeightsE9.zipWithIndex
       .map { case (w, i) => s"WHEN ${i + 1} THEN ${w}L" }
       .mkString("CASE greatest(rc, rd) ", " ", " ELSE 0L END")
     orderedAll(scored
-      .withColumn("rc", row_number().over(wc))
-      .withColumn("rd", row_number().over(wd))
+      .withColumn("rc", Vectors.rankBy())
+      .withColumn("rd", Vectors.rankBy(col("cos32")))
       .filter(col("rc") <= 10 || col("rd") <= 10)
       .withColumn("w_e9", expr(
         s"CASE WHEN rc <= 10 AND rd <= 10 THEN $wCase ELSE 0L END"))
@@ -690,11 +652,8 @@ object Evaluation {
     val emb = t(s, dir, "embeddings")
     val probes = emb.filter(col("vec_id") < 50)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"))
-    val w = Window.partitionBy("pid")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    orderedAll(emb.join(broadcast(probes), col("vec_id") =!= col("pid"))
-      .withColumn("cos", Vectors.cosine(col("pe"), col("embedding")))
-      .withColumn("rn", row_number().over(w))
+    orderedAll(Vectors.probePairs(emb, probes)
+      .withColumn("rn", Vectors.rankBy())
       .filter(col("rn") <= 2)
       .groupBy("pid")
       .agg(min(when(col("rn") === 1, col("vec_id"))).as("n1"),

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-8 ranking-fusion / time-weighted readouts (SURVEY §2.67):
@@ -30,26 +29,19 @@ object Fusion {
     val emb = t(s, dir, "embeddings")
     val probes = emb.filter(col("vec_id") < 20)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"))
-    val scored = emb.join(broadcast(probes), col("vec_id") =!= col("pid"))
-      .withColumn("cos", Vectors.cosine(col("pe"), col("embedding")))
+    val scored = Vectors.probePairs(emb, probes)
       .withColumn("dot", Vectors.dot(col("pe"), col("embedding")))
-    val wa = Window.partitionBy(col("pid"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    val wb = Window.partitionBy(col("pid"))
-      .orderBy(col("dot").desc, col("vec_id").asc)
     val wCase = (r: String) => rrfWeights.zipWithIndex
       .map { case (w, i) => s"WHEN ${i + 1} THEN ${w}L" }
       .mkString(s"CASE $r ", " ", " ELSE 0L END")
     val fused = scored
-      .withColumn("ra", row_number().over(wa))
-      .withColumn("rb", row_number().over(wb))
+      .withColumn("ra", Vectors.rankBy())
+      .withColumn("rb", Vectors.rankBy(col("dot")))
       .filter(col("ra") <= 10 || col("rb") <= 10)
       .withColumn("rrf_u",
         expr(wCase("ra")) + expr(wCase("rb")))
-    val wf = Window.partitionBy(col("pid"))
-      .orderBy(col("rrf_u").desc, col("vec_id").asc)
     orderedAll(fused
-      .withColumn("fused_rank", row_number().over(wf).cast("long"))
+      .withColumn("fused_rank", Vectors.rankBy(col("rrf_u")).cast("long"))
       .filter(col("fused_rank") <= 5)
       .select(col("pid"), col("fused_rank"), col("vec_id"),
         col("rrf_u")))

@@ -537,12 +537,9 @@ object Sketches {
     val probes = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"),
         col("bucket").as("pbucket"))
-    val pairs = emb.join(broadcast(probes),
-        col("bucket") === col("pbucket") && col("vec_id") =!= col("pid"))
-      .withColumn("cos", Vectors.cosine(col("pe"), col("embedding")))
-    val w = Window.partitionBy(col("pid"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    orderedAll(pairs.withColumn("rn", row_number().over(w))
+    orderedAll(Vectors.probePairs(emb, probes,
+        Some(col("bucket") === col("pbucket")))
+      .withColumn("rn", Vectors.rankBy())
       .filter(col("rn") <= 5)
       .select(col("pid"), col("vec_id").as("nid"),
         col("rn").cast("long").as("rn"), round(col("cos"), 4).as("sim")))
@@ -565,12 +562,9 @@ object Sketches {
     val probes = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"),
         explode(expr(flips)).as("pb"))
-    val pairs = emb.join(broadcast(probes),
-        col("bucket") === col("pb") && col("vec_id") =!= col("pid"))
-      .withColumn("cos", Vectors.cosine(col("pe"), col("embedding")))
-    val w = Window.partitionBy(col("pid"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    orderedAll(pairs.withColumn("rn", row_number().over(w))
+    orderedAll(Vectors.probePairs(emb, probes,
+        Some(col("bucket") === col("pb")))
+      .withColumn("rn", Vectors.rankBy())
       .filter(col("rn") <= 5)
       .select(col("pid"), col("vec_id").as("nid"),
         col("rn").cast("long").as("rn"), round(col("cos"), 4).as("sim")))

@@ -23,12 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Text {
 
-  /** Corpus-size cutoff between the exact dedup family's broadcast-NLJ
-    * pair strategies (bitmask / bitmap popcount — unbeatable per-pair
-    * cost, O(N²) pair space) and the inverted-index posting join (pair
-    * space bounded by shared-key co-occurrence, nothing corpus-sized
-    * broadcast). Same stats-driven pattern as Sketches.nljMaxDocs;
-    * overridable so tests drive the at-scale branch on the fixtures. */
   /** Dictionary-size ceiling for the distinct-mask grouping strategy
     * (0 disables it — used by specs to force the inverted/prefix paths). */
   private[graft] def maskGroupMaxDict(s: SparkSession): Long =
@@ -46,6 +40,12 @@ object Text {
     s.conf.getOption("spark.graft.maskGroupMaxMasks")
       .map(_.toLong).getOrElse(1000000L)
 
+  /** Corpus-size cutoff between the exact dedup family's broadcast-NLJ
+    * pair strategies (bitmask / bitmap popcount — unbeatable per-pair
+    * cost, O(N²) pair space) and the inverted-index posting join (pair
+    * space bounded by shared-key co-occurrence, nothing corpus-sized
+    * broadcast). Same stats-driven pattern as Sketches.nljMaxDocs;
+    * overridable so tests drive the at-scale branch on the fixtures. */
   private[graft] def pairNljMaxDocs(s: SparkSession): Long =
     s.conf.getOption("spark.graft.pairNljMaxDocs")
       .map(_.toLong).getOrElse(20000L)
@@ -66,9 +66,17 @@ object Text {
       (col("tf") +
         lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))
 
+  /** (token, n) over the shared tokenizer — the core shared by the
+    * graded [[qWordcount]] and graft.api.Graft.wordcount: one explode
+    * in the scan projection and one mergeable aggregate (map-side
+    * combine is the MapReduce combiner). */
+  private[graft] def wordcount(df: DataFrame, text: Column): DataFrame =
+    df.select(explode(tokens(text)).as("token"))
+      .filter(col("token") =!= "")
+      .groupBy("token").agg(count(lit(1)).as("n"))
+
   def qWordcount(s: SparkSession, dir: String): DataFrame =
-    orderedAll(tokDf(t(s, dir, "documents"))
-      .groupBy("token").agg(count(lit(1)).as("n")))
+    orderedAll(wordcount(t(s, dir, "documents"), col("text")))
 
   /** Inverted-index cardinalities: distinct docs + total occurrences. */
   def qDocFreq(s: SparkSession, dir: String): DataFrame =
@@ -76,27 +84,32 @@ object Text {
       .groupBy("token")
       .agg(countDistinct(col("doc_id")).as("df"), count(lit(1)).as("tf")))
 
-  /** Top-5 TF-IDF terms per doc over the (lang='en', doc_id<100) corpus.
-    * MR needed 3 chained jobs (TF, DF, join+rank); here TF and DF are two
-    * aggregates over one token stream, n_docs is a broadcast scalar, and
-    * the rank is a single window. */
-  def qTfidf(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-      .filter(col("lang") === "en" && col("doc_id") < 100)
-    val tok = tokDf(docs)
-    val tf = tok.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
+  /** Per-document top-k TF-IDF terms of a (doc_id, text) frame, ties
+    * broken by token — the core shared by the graded [[qTfidf]] and
+    * graft.api.Graft.tfidf. MR needed 3 chained jobs (TF, DF,
+    * join+rank); here TF and DF are two aggregates over one token
+    * stream, n_docs is a broadcast scalar, and the rank is a single
+    * window. Emits (doc_id, token, tf, df, tfidf rounded ×10⁻⁴). */
+  private[graft] def tfidf(docs: DataFrame, topK: Int): DataFrame = {
+    val tf = tokDf(docs).groupBy("doc_id", "token")
+      .agg(count(lit(1)).as("tf"))
     val df = tf.groupBy("token").agg(count(lit(1)).as("df"))
     val nd = docs.agg(countDistinct(col("doc_id")).as("n_docs"))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("tfidf_raw").desc, col("token").asc)
-    orderedAll(tf.join(df, "token").crossJoin(broadcast(nd))
+    tf.join(df, "token").crossJoin(broadcast(nd))
       .withColumn("tfidf_raw",
         col("tf") * log(col("n_docs").cast("double") / col("df")))
       .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
+      .filter(col("rn") <= topK)
       .select(col("doc_id"), col("token"), col("tf"), col("df"),
-        round(col("tfidf_raw"), 4).as("tfidf")))
+        round(col("tfidf_raw"), 4).as("tfidf"))
   }
+
+  /** Top-5 TF-IDF terms per doc over the (lang='en', doc_id<100) corpus. */
+  def qTfidf(s: SparkSession, dir: String): DataFrame =
+    orderedAll(tfidf(t(s, dir, "documents")
+      .filter(col("lang") === "en" && col("doc_id") < 100), 5))
 
   /** Top-20 bigrams. Bigrams are built with array lambdas inside the row
     * (transform + element_at), so the only shuffle is the final count —

@@ -681,7 +681,7 @@ class ApiSpec extends SparkSpec {
     assert(api.keySet == graded.keySet,
       "parametric IVF at (16,3) must reproduce the graded lists")
     for ((k, v) <- api)
-      assert(math.abs(v - graded(k)) <= 1e-4, s"$k: $v vs ${graded(k)}")
+      assert(v == graded(k), s"$k: $v vs ${graded(k)}")
   }
 
   test("mmrRerank runs greedy MMR on a custom schema") {
@@ -726,10 +726,9 @@ class ApiSpec extends SparkSpec {
         r.getDouble(3)).toMap
     assert(api.keySet == graded.keySet,
       "parametric MMR at (3,8,0.7) must reproduce the graded picks")
-    // scores may differ in the last ulp: the graded core folds the
-    // literal 0.3 where the API computes 1.0 − 0.7; both round(·,4).
+    // one core computes both: (1 − λ) is taken in decimal, exactly 0.3
     for ((k, v) <- api)
-      assert(math.abs(v - graded(k)) <= 2e-4, s"$k: $v vs ${graded(k)}")
+      assert(v == graded(k), s"$k: $v vs ${graded(k)}")
   }
 
   test("dedupAudit matches a JVM precision/recall replay on a custom schema") {

@@ -50,17 +50,31 @@ class Round11RankSpec extends SparkSpec {
       ops.DistRank.discrete(
         ops.DistRank.cumulative(hg, Seq("g"), "v", "cnt", b),
         Seq("g"), "v", pcts.map(p => p -> s"p$p"))
+    },
+    // no group columns: the whole input is one group
+    "ungrouped percentile recipe" -> { s =>
+      import s.implicits._
+      val h = values.flatMap(_._2).toDF("v").groupBy("v").count()
+        .withColumnRenamed("count", "cnt")
+      val (b, hg) = ops.DistRank.gate(s, h)
+      ops.DistRank.discrete(
+        ops.DistRank.cumulative(hg, Nil, "v", "cnt", b),
+        Nil, "v", pcts.map(p => p -> s"p$p"))
     })
 
   /** Brute-force references: the type-1 percentile is the sorted value
-    * at index ⌈n·p/100⌉ − 1. */
+    * at index ⌈n·p/100⌉ − 1; a row is n, then one value per percentile. */
+  private def typeOne(vs: Seq[Long]): Seq[Long] = {
+    val sorted = vs.sorted
+    val n = sorted.size
+    n.toLong +: pcts.map(p => sorted((n * p + 99) / 100 - 1))
+  }
   private val references: Map[String, Set[String]] = Map(
     "percentile recipe" -> values.map { case (g, vs) =>
-      val sorted = vs.sorted
-      val n = sorted.size
-      (Seq(g, n.toLong) ++ pcts.map(p => sorted((n * p + 99) / 100 - 1)))
-        .mkString("|")
-    }.toSet)
+      (g +: typeOne(vs)).mkString("|")
+    }.toSet,
+    "ungrouped percentile recipe" ->
+      Set(typeOne(values.flatMap(_._2)).mkString("|")))
 
   private val gated = Seq("q_median_test", "q_kruskal_wallis",
     "q_weighted_quantile", "q_weighted_median", "q_percentile_disc") ++
