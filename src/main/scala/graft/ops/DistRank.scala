@@ -172,27 +172,19 @@ object DistRank {
   /** The discrete-percentile input: histogram `h` (one row per
     * (parts, key) with `weight`) plus the INCLUSIVE cumulative weight
     * `cum` under key order and the group total `tot`. Serial: both are
-    * windows over one exchange and sort, so the histogram is evaluated
-    * once (a separate total aggregate joined back would evaluate it
-    * again). With group columns `tot` is the unordered full-partition
-    * sum; with none the whole histogram is one single-task partition,
-    * so `tot` is the full frame of `cum`'s own ordered window — one
-    * window pass, not a second one over the same partition. Bucketed:
-    * the full-partition window over a fact-scale histogram is what the
-    * bucketed path exists to avoid, so `tot` is an aggregate broadcast
-    * back. */
+    * windows over one exchange and sort — `tot` is the unordered
+    * full-partition sum, so the histogram is evaluated once (a
+    * separate total aggregate joined back would evaluate it again).
+    * Bucketed: the full-partition window over a fact-scale histogram is
+    * what the bucketed path exists to avoid, so `tot` is an aggregate
+    * broadcast back. */
   def cumulative(h: DataFrame, parts: Seq[String], key: String,
                  weight: String, b: Int): DataFrame = {
     val pc = parts.map(col)
-    val w = Window.partitionBy(pc: _*).orderBy(key)
-    val whole =
-      if (parts.isEmpty)
-        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      else Window.partitionBy(pc: _*)
     if (b <= 0) h
-      .withColumn("cum", sum(weight).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("tot", sum(weight).over(whole))
+      .withColumn("cum", sum(weight).over(Window.partitionBy(pc: _*)
+        .orderBy(key).rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("tot", sum(weight).over(Window.partitionBy(pc: _*)))
     else joinOn(
       withPrefixSumBy(h, parts, col(key), col(key), col(weight), b, "cum")
         .withColumn("cum", col("cum") + col(weight)),

@@ -59,9 +59,7 @@ object Evaluation {
       .withColumn("rn", Vectors.rankBy())
       .filter(col("rn") <= 10)
       .select(col("pid"), col("vec_id").as("nid"))
-    val cand = emb.join(
-        broadcast(probes.select(col("pid"), col("pb"))),
-        col("bucket") === col("pb") && col("vec_id") =!= col("pid"))
+    val cand = Vectors.probePairs(emb, probes, Some(col("bucket") === col("pb")))
       .select(col("pid"), col("vec_id").as("nid"))
     val nCand = cand.groupBy("pid").agg(count(lit(1)).as("n_cand"))
     val hits = top10.join(cand, Seq("pid", "nid"), "left_semi")

@@ -50,9 +50,11 @@ object Text {
     s.conf.getOption("spark.graft.pairNljMaxDocs")
       .map(_.toLong).getOrElse(20000L)
 
-  /** Non-empty lowercase tokens — the shared tokenizer. */
-  private[graft] def tokDf(d: DataFrame): DataFrame =
-    d.select(col("doc_id"), explode(tokens(col("text"))).as("token"))
+  /** Non-empty lowercase tokens of `text`, one row each next to the
+    * `keep` columns — the shared tokenizer. */
+  private[graft] def tokDf(d: DataFrame, text: Column = col("text"),
+                           keep: Seq[Column] = Seq(col("doc_id"))): DataFrame =
+    d.select(keep :+ explode(tokens(text)).as("token"): _*)
       .filter(col("token") =!= "")
 
   /** The Okapi BM25 per-(doc, token) weight over the standard stats
@@ -71,9 +73,7 @@ object Text {
     * in the scan projection and one mergeable aggregate (map-side
     * combine is the MapReduce combiner). */
   private[graft] def wordcount(df: DataFrame, text: Column): DataFrame =
-    df.select(explode(tokens(text)).as("token"))
-      .filter(col("token") =!= "")
-      .groupBy("token").agg(count(lit(1)).as("n"))
+    tokDf(df, text, Nil).groupBy("token").agg(count(lit(1)).as("n"))
 
   def qWordcount(s: SparkSession, dir: String): DataFrame =
     orderedAll(wordcount(t(s, dir, "documents"), col("text")))
