@@ -59,7 +59,16 @@ object Oracles {
   private def nibSql(h: String, i: Int): String =
     s"strpos('0123456789abcdef', substring($h, $i, 1)) - 1"
 
-  val sql: Map[String, String] = Map(
+  /** Where [[sql]] names the checked SF's dir; [[at]] substitutes it. */
+  private val SfDir = "{sf_dir}"
+
+  /** [[sql]] bound to the dataset dir the query outputs were made from. */
+  def at(sfDir: String): Map[String, String] = {
+    val dir = sfDir.stripSuffix("/")
+    sql.map { case (q, text) => q -> text.replace(SfDir, dir) }
+  }
+
+  private val sql: Map[String, String] = Map(
     // ---- §2.1 scans ----
     "q_scan_project" ->
       """SELECT l_orderkey, l_partkey, l_quantity, l_extendedprice
@@ -122,14 +131,13 @@ object Oracles {
     // Round 9 (was rows-only): DuckDB 1.0 read_blob() over the SAME files
     // the binaryFile scan reads. Digest is md5 of the UPPERCASE-hex byte
     // spelling on both engines (DuckDB lacks md5(BLOB); to_hex(BLOB) and
-    // Spark hex(BINARY) are both uppercase). The graded compare always
-    // runs at sf0.01 (SURVEY §5.2.1), so the path is fixed — the one
-    // oracle that must name files rather than table views.
+    // Spark hex(BINARY) are both uppercase). The one oracle that must
+    // name files rather than table views: [[at]] binds the dir.
     "q_source_binary" ->
-      """SELECT parse_filename(filename) AS file,
+      s"""SELECT parse_filename(filename) AS file,
         |       octet_length(content) AS bytes,
         |       md5(to_hex(content)) AS digest
-        |FROM read_blob('/root/testdata/sf0.01/*.parquet')
+        |FROM read_blob('$SfDir/*.parquet')
         |ORDER BY ALL""".stripMargin,
 
     "q_sink_partitioned" ->

@@ -673,6 +673,7 @@ object SparkEntry {
   )
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Oracles.sql
+    * the same parquet tables of `sfDir`. Omit for non-SQL-expressible
+    * ops. */
+  def oracleSql(sfDir: String): Map[String, String] = Oracles.at(sfDir)
 }

@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.{Corpus, Curation, DistRank, Pins, Pipeline, Sketches, Text,
@@ -148,14 +148,30 @@ object Graft {
                    thresholdBp: Int = 8000): DataFrame = {
     require(thresholdBp > 0 && thresholdBp <= 10000,
       s"thresholdBp must be in (0, 10000], got $thresholdBp")
-    val s = df.sparkSession
-    val dt = df.select(col(idCol).cast("long").as("doc_id"),
-        explode(split(lower(col(textCol)), " ")).as("token"))
-      .filter(col("token") =!= "").distinct()
+    val dt = postings(df, idCol, textCol)
+    pairsOf(dt, dt.select("token").distinct().count(), thresholdBp)
+  }
+
+  /** The distinct (doc_id, token) postings of any (id, text) table —
+    * the shared tokenizer ([[Text.tokDf]]) under [[nearDupPairs]],
+    * [[dedupClusters]]' stats probe and the MinHash band rows. */
+  private def postings(df: DataFrame, idCol: String,
+                       textCol: String): DataFrame =
+    Text.tokDf(df, col(textCol), Seq(col(idCol).cast("long").as("doc_id")))
+      .distinct()
+
+  /** A vocabulary small enough for the mask-group popcount scan. */
+  private def maskGroupable(s: SparkSession, dictN: Long): Boolean =
+    dictN <= math.min(64L, Text.maskGroupMaxDict(s))
+
+  /** The exact pairs core of [[nearDupPairs]] over postings `dt` whose
+    * vocabulary size `dictN` the caller already holds — [[dedupClusters]]
+    * reads it from its stats probe instead of counting it again. */
+  private def pairsOf(dt: DataFrame, dictN: Long,
+                      thresholdBp: Int): DataFrame = {
     val (cMul, sMul) = (thresholdBp + 10000, thresholdBp)
-    val dictN = dt.select("token").distinct().count()
     val pairs =
-      if (dictN <= math.min(64L, Text.maskGroupMaxDict(s)))
+      if (maskGroupable(dt.sparkSession, dictN))
         Text.maskGroupPairs(dt, cMul, sMul)
       else Text.invertedPairs(dt, cMul, sMul)
     pairs.withColumn("j_bp",
@@ -200,9 +216,10 @@ object Graft {
     * tokens) stays exact at ANY density — that path is O(dict²) group
     * work, not candidate enumeration — and an empty corpus skips
     * routing trivially. NOTE the probe itself makes this call EAGER:
-    * one token-histogram aggregate (yielding candidate count AND
-    * vocabulary size in a single job) plus one doc count run at
-    * DataFrame-construction time whenever the gate is enabled. The
+    * one action — the token-histogram aggregate (candidate count AND
+    * vocabulary size) cross-joined with the doc count — runs at
+    * DataFrame-construction time whenever the gate is enabled, and its
+    * vocabulary size also picks the exact tier's pairs strategy. The
     * graded fixtures sit ~50× under the floor (sf0.1 ≈ 18.5k
     * cand/doc) and keep the exact contract; the 100×-salted smoke
     * corpus (~1.8×10⁸ cand/doc) routes and COMPLETES (ScaleSmoke
@@ -222,30 +239,29 @@ object Graft {
     val maxCandPerDoc = s.conf
       .getOption("spark.graft.dedupClusterMaxCandPerDoc")
       .map(_.toLong).getOrElse(1000000L)
-    if (maxCandPerDoc > 0) {
-      // the same tokenizer as nearDupPairs — the probe must price the
-      // join the exact tier would actually run. ONE explode scan for
-      // the token histogram yields both the candidate estimate and the
-      // vocabulary size (round-14 advice: the dict count rides the
-      // same aggregate for free); the doc count comes from the RAW
-      // table (no explode — marginally larger than the tokenized-doc
-      // count when some docs are all-empty, which only biases the gate
-      // TOWARD the exact tier).
-      val dt = df.select(col(idCol).cast("long").as("doc_id"),
-          explode(split(lower(col(textCol)), " ")).as("token"))
-        .filter(col("token") =!= "").distinct()
+    val pairs = if (maxCandPerDoc > 0) {
+      // the same postings as nearDupPairs — the probe must price the
+      // join the exact tier would actually run — and ONE action for all
+      // three stats: the token histogram yields the candidate estimate
+      // and the vocabulary size, cross-joined with the doc count from
+      // the RAW table (no explode — marginally larger than the
+      // tokenized-doc count when some docs are all-empty, which only
+      // biases the gate TOWARD the exact tier).
+      val dt = postings(df, idCol, textCol)
       val probe = dt.groupBy("token").agg(count(lit(1)).as("c"))
         .agg(sum(expr("c * (c - 1) div 2")).as("cand"),
-          count(lit(1)).as("dict")).head
+          count(lit(1)).as("dict"))
+        .crossJoin(df.agg(countDistinct(col(idCol)).as("n_docs")))
+        .head
       val cand = if (probe.isNullAt(0)) 0L else probe.getLong(0)
       val dictN = probe.getLong(1)
-      val nDocs = df.agg(countDistinct(col(idCol))).head.getLong(0)
+      val nDocs = probe.getLong(2)
       // a mask-group-sized vocabulary never enumerates candidates —
       // nearDupPairs dispatches it to the O(dict²) group path — so a
       // tiny-dict dense corpus must NOT be routed to the lossy tier
       // (round-14 advice)
-      val maskGroupable = dictN <= math.min(64L, Text.maskGroupMaxDict(s))
-      if (!maskGroupable && nDocs > 0 && cand / nDocs > maxCandPerDoc) {
+      val maskGroup = maskGroupable(s, dictN)
+      if (!maskGroup && nDocs > 0 && cand / nDocs > maxCandPerDoc) {
         // breadcrumb for smokes/ops dashboards: WHICH tier ran, at
         // what measured density, and WHICH banding — the routed output
         // is a different contract (LSH clustering at the ladder rung's
@@ -266,11 +282,15 @@ object Graft {
       }
       s.conf.set("spark.graft.lastDedupRoute",
         s"exact:candPerDoc=${if (nDocs > 0) cand / nDocs else 0L}" +
-          (if (maskGroupable) ":maskgroup" else ""))
-    } else s.conf.set("spark.graft.lastDedupRoute", "exact:forced")
-    Text.clusterLabels(s,
+          (if (maskGroup) ":maskgroup" else ""))
+      // the probe's vocabulary size picks the pairs strategy: no second
+      // tokenize-and-count
+      pairsOf(dt, dictN, thresholdBp)
+    } else {
+      s.conf.set("spark.graft.lastDedupRoute", "exact:forced")
       nearDupPairs(df, idCol, textCol, thresholdBp)
-        .select("a_id", "b_id"), freshSlot("api_cc"))
+    }
+    Text.clusterLabels(s, pairs.select("a_id", "b_id"), freshSlot("api_cc"))
       .withColumnRenamed("doc_id", idCol)
   }
 
@@ -344,13 +364,10 @@ object Graft {
                          bands: Int, rowsPerBand: Int): DataFrame = {
     require(bands > 0 && rowsPerBand > 0)
     val lanes = bands * rowsPerBand
-    val postings = df.select(col(idCol).cast("long").as("doc_id"),
-        explode(split(lower(col(textCol)), " ")).as("token"))
-      .filter(col("token") =!= "").distinct()
     val laneMins = (0 until lanes).map(j =>
       min(expr(s"CAST(conv(substring(md5(concat('$j:', token)), 1, " +
         "15), 16, 10) AS BIGINT)")).as(s"mh$j"))
-    val sig = postings.groupBy("doc_id")
+    val sig = postings(df, idCol, textCol).groupBy("doc_id")
       .agg(laneMins.head, laneMins.tail: _*)
     sig.select(col("doc_id"), explode(expr(
         (0 until bands).map(b => s"struct($b AS band, struct(" +
@@ -632,11 +649,8 @@ object Graft {
     * DISTRIBUTION" rather than a Jaccard cut. */
   def simhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         maxHamming: Int = 8): DataFrame = {
-    val postings = df.select(col(idCol).cast("long").as("doc_id"),
-        explode(split(lower(col(textCol)), " ")).as("token"))
-      .filter(col("token") =!= "").distinct()
-    Sketches.pigeonholePairs(
-      Sketches.segRows(Sketches.simhashOf(postings)), maxHamming)
+    Sketches.pigeonholePairs(Sketches.segRows(
+      Sketches.simhashOf(postings(df, idCol, textCol))), maxHamming)
   }
 
   /** Near-duplicate clusters from the [[simhashCandidates]] graph —
@@ -761,8 +775,7 @@ object Graft {
     * as the (probe_id, neighbor_id, rn, cos) contract of [[knnCosine]],
     * [[annLsh]] and [[annIvf]]. */
   private def topK(pairs: DataFrame, k: Int): DataFrame =
-    pairs.withColumn("rn", Vectors.rankBy().cast("long"))
-      .filter(col("rn") <= k)
+    Vectors.topK(pairs, k)
       .select(col("pid").as("probe_id"), col("vec_id").as("neighbor_id"),
         col("rn"), col("cos"))
 
@@ -1298,39 +1311,21 @@ object Graft {
     * spelling (`row_number().over(...) <= k`) sorts every group's full
     * row set — O(n log n) per partition and a spill-prone full
     * materialization just to discard all but k rows; this operator
-    * keeps a k-bounded heap per group after one hash exchange —
-    * O(n log k) time, O(groups·k) memory, nothing spills. At 100 TB
-    * per-entity top-k is the daily bread of feature pipelines, and the
-    * sort is the cost this operator deletes.
+    * keeps a k-bounded heap per group in each input partition, ships
+    * only those winners through one hash exchange, and merges them in
+    * a second heap — O(n log k) time, O(groups·k) memory, nothing
+    * spills. At 100 TB per-entity top-k is the daily bread of feature
+    * pipelines, and the sort is the cost this operator deletes.
     *
-    * Returns the winning rows (all input columns, unranked — rank them
-    * with a window afterwards if needed: post-filter input is ≤
-    * groups·k rows, so the sort the operator avoided is now cheap).
-    * Contract (inherited from the exec, which fails fast on drift):
-    * `orderCol` must evaluate to a non-null DOUBLE and `tieCol` to a
-    * unique non-null LONG; rank order is (orderCol DESC, tieCol ASC).
-    * The planner strategy is injected into the DataFrame's session
-    * idempotently — the same `experimental.extraStrategies` hook
-    * `SparkSessionExtensions.injectPlannerStrategy` targets. */
+    * Returns the winning rows (all input columns) plus their 1-based
+    * rank as LONG column `rankCol` — the rows and rank
+    * `row_number().over(partitionBy(groupCols).orderBy(orderCol.desc,
+    * tieCol.asc)) <= k` gives. `orderCol` must be a DOUBLE, compared as
+    * SQL ordering does (−0.0 equals 0.0, NaN ranks first, null last);
+    * `tieCol` a unique non-null LONG (a null tie fails the job). */
   def topkPerGroup(df: DataFrame, groupCols: Seq[String], orderCol: String,
-                   tieCol: String, k: Int): DataFrame = {
-    require(groupCols.nonEmpty, "need at least one group column")
-    require(k > 0, s"k must be positive, got $k")
-    val s = df.sparkSession
-    import graft.plans.{TopKPerGroup, TopKStrategy}
-    // shared with the graded q_topk_custom registration: ONE lock per
-    // read-modify-write field, or two first-callers could double-append
-    graft.ops.Advanced.strategyLock.synchronized {
-      if (!s.experimental.extraStrategies.contains(TopKStrategy))
-        s.experimental.extraStrategies =
-          s.experimental.extraStrategies :+ TopKStrategy
-    }
-    val analyzed = df.queryExecution.analyzed
-    def attr(n: String) = analyzed.output.find(_.name == n).getOrElse(
-      sys.error(s"column '$n' not found in " +
-        analyzed.output.map(_.name).mkString("[", ", ", "]")))
-    org.apache.spark.sql.GraftSql.ofRows(s,
-      TopKPerGroup(groupCols.map(attr), attr(orderCol), attr(tieCol), k,
-        analyzed))
-  }
+                   tieCol: String, k: Int,
+                   rankCol: String = "rank"): DataFrame =
+    graft.plans.TopKPerGroup.frame(df, groupCols, orderCol, tieCol, k,
+      rankCol)
 }

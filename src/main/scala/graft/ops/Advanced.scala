@@ -17,13 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Advanced {
 
-  /** Guards the read-modify-write of `experimental.extraStrategies` in
-    * [[qTopkCustom]] AND [[graft.api.Graft.topkPerGroup]] — the field
-    * has no atomic append of its own, and the two registration sites
-    * must share ONE lock or concurrent first calls on the same session
-    * could double-append the strategy. */
-  private[graft] val strategyLock = new Object
-
   private def sql(s: SparkSession, dir: String, q: String): DataFrame = {
     graft.Catalog.registerTables(s, dir)
     s.sql(q)
@@ -352,30 +345,15 @@ object Advanced {
     * operator [[graft.plans.TopKPerGroup]] (§2.13's deepest extension
     * tier: logical node + strategy + physical exec). The built-in window
     * spelling sorts every group's full row set; the custom exec keeps a
-    * 3-bounded heap per group after a hash exchange — O(n log k), no
-    * sort, nothing to spill (see the operator's scaladoc for the 100 TB
-    * argument). The strategy is injected into the live session via
-    * `experimental.extraStrategies` (idempotently, under a library-global
-    * lock — the field is a read-modify-write and two first-call threads
-    * would otherwise race to double-register), the same hook
-    * `SparkSessionExtensions.injectPlannerStrategy` uses; output
-    * contract — rank by (value DESC, event_id ASC) — mirrors the
-    * standard row_number oracle exactly. */
-  def qTopkCustom(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.{TopKPerGroup, TopKStrategy}
-    strategyLock.synchronized {
-      if (!s.experimental.extraStrategies.contains(TopKStrategy))
-        s.experimental.extraStrategies =
-          s.experimental.extraStrategies :+ TopKStrategy
-    }
-    val base = t(s, dir, "events")
-      .select("event_type", "event_id", "value")
-    val analyzed = base.queryExecution.analyzed
-    def attr(n: String) = analyzed.output.find(_.name == n).get
-    orderedAll(org.apache.spark.sql.GraftSql.ofRows(s,
-      TopKPerGroup(Seq(attr("event_type")), attr("value"),
-        attr("event_id"), 3, analyzed)))
-  }
+    * 3-bounded heap per group before and after a hash exchange —
+    * O(n log k), no sort, nothing to spill (see the operator's scaladoc
+    * for the 100 TB argument). Output contract — rank by (value DESC,
+    * event_id ASC) — mirrors the standard row_number oracle exactly; the
+    * rank column is dropped to keep the graded schema. */
+  def qTopkCustom(s: SparkSession, dir: String): DataFrame =
+    orderedAll(graft.plans.TopKPerGroup.frame(t(s, dir, "events")
+        .select("event_type", "event_id", "value"),
+      Seq("event_type"), "value", "event_id", 3, "rn").drop("rn"))
 
   /** Gini concentration of customer spend per market segment (§2.18) —
     * the inequality metric of corpus-mix and revenue-concentration

@@ -114,8 +114,9 @@ object Pins {
     * overwrites round r's slot, which is safe (round r's data is only
     * read while materializing round r+1, already on disk) and bounds the
     * footprint at the FIXED set of named slots (clusterLabels'
-    * <prefix>_pairs/edges/labels_0/cedges/labels_1..3 — the loop
-    * alternates the last two, one prefix per calling operator — plus
+    * <prefix>_pairs/labels_0/cedges/labels_1..3 — the loop alternates
+    * the last two and is skipped when contraction leaves no edge, one
+    * prefix per calling operator — plus
     * qPagerank's pagerank_edges_raw/pagerank_deg/pagerank_edges)
     * regardless of round count. RDD `checkpoint()` files, by contrast,
     * are only ever deleted when

@@ -446,8 +446,8 @@ object Text {
       .select(col("doc_id"), least(col("doc_id"), col("nbr")).as("label")),
       sl)
     val pairs = Pins.pin(pairRows, slot("pairs"))
-    val edges = Pins.pin(mirror(pairs.select(col("a_id").as("a"),
-      col("b_id").as("b"))), slot("edges"))
+    // not pinned: two projections of the pinned pairs, read twice
+    val edges = mirror(pairs.select(col("a_id").as("a"), col("b_id").as("b")))
     // Round 0 fused into initialization: with labels starting at the node
     // id, the first propagation is just min(id, min neighbor id) — one
     // groupBy over the edge list, no join (every node appears as dst
@@ -476,6 +476,12 @@ object Text {
         greatest(col("la"), col("lb")).as("b"))
       .distinct()
     val cedges = Pins.pin(mirror(cedges0), slot("cedges"))
+    // Near-dup cliques collapse at init: with no contracted edge left,
+    // the loop below would stop after one round with changed = 0 and
+    // compose labels0 with itself — skip its slots and jobs.
+    if (cedges.isEmpty)
+      return labels0.select(col("doc_id"), col("label").as("cluster_id"))
+        .withColumn("keep", col("doc_id") === col("cluster_id"))
     // Min-label fixpoint over the contracted graph (same loop shape as
     // the direct version, on tiny data). Labels start at the contracted
     // node id; nodes absent from cedges are whole components already.

@@ -45,32 +45,45 @@ object Vectors {
     * self-match excluded, narrowed by an optional candidate condition
     * (a shared LSH bucket, a probed IVF list, a label mismatch), and
     * scored as `cos`. The probe side is small by construction, so the
-    * corpus streams through one projection with no shuffle. */
+    * corpus streams through one projection with no shuffle. Each norm
+    * is folded once per side — per corpus row, and per probe before the
+    * broadcast — so a pair pays only its dot; the quotient is
+    * [[cosine]]'s own `dot / sqrt(norm2(pe) * norm2(embedding))`, bit
+    * for bit. */
   private[graft] def probePairs(corpus: DataFrame, probes: DataFrame,
                                 cand: Option[Column] = None): DataFrame =
-    corpus.join(broadcast(probes),
+    corpus.withColumn("__cn", norm2(col("embedding")))
+      .join(broadcast(probes.withColumn("__pn", norm2(col("pe")))),
         cand.foldLeft(col("vec_id") =!= col("pid"))(_ && _))
-      .withColumn("cos", cosine(col("pe"), col("embedding")))
+      .withColumn("cos", dot(col("pe"), col("embedding")) /
+        sqrt(col("__pn") * col("__cn")))
+      .drop("__cn", "__pn")
 
   /** The retrieval total order as a 1-based rank: row_number within
     * `part` (the probe) by `score` desc, ties to the smaller `id` —
-    * the order every oracle twin mirrors. A per-probe top-k is this
-    * rank filtered ≤ k; a multi-ranker query takes one per score. */
+    * the order every oracle twin mirrors. A multi-ranker query takes
+    * one per score; a plain per-probe top-k is [[topK]]. */
   private[graft] def rankBy(score: Column = col("cos"),
                             id: Column = col("vec_id"),
                             part: Column = col("pid")): Column =
     row_number().over(Window.partitionBy(part).orderBy(score.desc, id.asc))
+
+  /** The `k` best [[probePairs]] rows per probe under [[rankBy]]'s
+    * order, ranked as LONG `rn` — the same rows and ranks as
+    * `rankBy() <= k`, through the two-phase heap operator
+    * ([[graft.plans.TopKPerGroup]]): each partition keeps ≤ k rows per
+    * probe before the shuffle, and nothing is sorted. */
+  private[graft] def topK(pairs: DataFrame, k: Int): DataFrame =
+    graft.plans.TopKPerGroup.frame(pairs, Seq("pid"), "cos", "vec_id", k, "rn")
 
   /** Brute-force k-NN: probes vec_id<10, top-5 cosine neighbors each. */
   def qKnnCosine(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
     val probes = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"))
-    orderedAll(probePairs(emb, probes)
-      .withColumn("rn", rankBy())
-      .filter(col("rn") <= 5)
-      .select(col("pid"), col("vec_id").as("nid"),
-        col("rn").cast("long").as("rn"), round(col("cos"), 4).as("sim")))
+    orderedAll(topK(probePairs(emb, probes), 5)
+      .select(col("pid"), col("vec_id").as("nid"), col("rn"),
+        round(col("cos"), 4).as("sim")))
   }
 
   /** Embedding-cosine near-dup (SURVEY §2.14): within-label vector pairs

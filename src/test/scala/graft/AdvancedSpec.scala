@@ -139,8 +139,11 @@ class AdvancedSpec extends SparkSpec {
       // (namespaced by the session's id in the pin registry)
       val base = new java.io.File(ops.Pins.slotDir(spark))
       val slots = Option(base.list()).map(_.toSet).getOrElse(Set.empty)
-      assert(Set("cc_pairs", "cc_edges", "cc_labels_0").subsetOf(slots),
+      assert(Set("cc_pairs", "cc_labels_0", "cc_cedges").subsetOf(slots),
         s"$slots")
+      // the mirrored edge list is two projections of the pinned pairs:
+      // it is read twice, never written
+      assert(!slots.contains("cc_edges"), s"$slots")
     } finally spark.conf.unset("spark.graft.reliableCheckpoint")
   }
 

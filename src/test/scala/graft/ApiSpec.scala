@@ -1044,6 +1044,29 @@ class ApiSpec extends SparkSpec {
     // k larger than any group passes everything through
     assert(Graft.topkPerGroup(df, Seq("grp"), "score", "seq", 100)
       .count() == 200)
+    // the scores SQL ordering treats specially, against the window
+    // spelling itself: -0.0 equals 0.0 (the tie id decides), NaN ranks
+    // first and ties among NaNs, null ranks last (DESC NULLS LAST)
+    val edge = Seq[(String, Long, java.lang.Double)](
+      ("zero", 2L, 0.0), ("zero", 1L, -0.0), ("zero", 3L, -0.0),
+      ("nan", 5L, Double.NaN), ("nan", 4L, Double.NaN), ("nan", 6L, 1.0),
+      ("null", 7L, null), ("null", 9L, 0.5), ("null", 8L, null))
+      .toDF("grp", "seq", "score")
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("grp")
+      .orderBy(col("score").desc, col("seq").asc)
+    for (k <- 1 to 3) {
+      val heap = Graft.topkPerGroup(edge, Seq("grp"), "score", "seq", k)
+        .select("grp", "seq", "rank").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+      val window = edge.withColumn("rank", row_number().over(w).cast("long"))
+        .filter(col("rank") <= k).select("grp", "seq", "rank").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+      assert(heap == window, s"k=$k")
+      assert(heap.size == 3 * k)
+    }
+    assert(Graft.topkPerGroup(edge, Seq("grp"), "score", "seq", 1)
+      .filter(col("grp") === "zero").select("seq").head.getLong(0) == 1L,
+      "-0.0 and 0.0 tie, so the smaller seq wins")
   }
 
   test("topkPerGroup delegates to the graded operator (fixture cross-check)") {

@@ -10,7 +10,7 @@ class QueriesSpec extends SparkSpec {
 
   test("queries and oracleSql keys line up") {
     val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
+    val o = SparkEntry.oracleSql(sf).keySet
     assert(o.subsetOf(q), s"oracle without query: ${o.diff(q)}")
     val omitted = q.diff(o)
     // q_dedup_minhash/q_ann_lsh graduated to full oracle checks in round 6,
