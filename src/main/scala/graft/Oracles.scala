@@ -62,9 +62,11 @@ object Oracles {
   /** Where [[sql]] names the checked SF's dir; [[at]] substitutes it. */
   private val SfDir = "{sf_dir}"
 
-  /** [[sql]] bound to the dataset dir the query outputs were made from. */
+  /** [[sql]] bound to the dataset dir the query outputs were made from,
+    * spelled absolute: DuckDB resolves a relative path against its own
+    * working directory, not Spark's. */
   def at(sfDir: String): Map[String, String] = {
-    val dir = sfDir.stripSuffix("/")
+    val dir = java.nio.file.Paths.get(sfDir).toAbsolutePath.normalize.toString
     sql.map { case (q, text) => q -> text.replace(SfDir, dir) }
   }
 

@@ -475,11 +475,15 @@ object Text {
       .select(least(col("la"), col("lb")).as("a"),
         greatest(col("la"), col("lb")).as("b"))
       .distinct()
-    val cedges = Pins.pin(mirror(cedges0), slot("cedges"))
+    // the pin's own job counts the contracted edges, so the exit below
+    // costs no job of its own
+    val seen = org.apache.spark.sql.Observation()
+    val cedges = Pins.pin(
+      mirror(cedges0).observe(seen, count(lit(1)).as("n")), slot("cedges"))
     // Near-dup cliques collapse at init: with no contracted edge left,
     // the loop below would stop after one round with changed = 0 and
     // compose labels0 with itself — skip its slots and jobs.
-    if (cedges.isEmpty)
+    if (seen.get("n") == 0L)
       return labels0.select(col("doc_id"), col("label").as("cluster_id"))
         .withColumn("keep", col("doc_id") === col("cluster_id"))
     // Min-label fixpoint over the contracted graph (same loop shape as

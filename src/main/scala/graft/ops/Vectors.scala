@@ -45,19 +45,19 @@ object Vectors {
     * self-match excluded, narrowed by an optional candidate condition
     * (a shared LSH bucket, a probed IVF list, a label mismatch), and
     * scored as `cos`. The probe side is small by construction, so the
-    * corpus streams through one projection with no shuffle. Each norm
-    * is folded once per side — per corpus row, and per probe before the
-    * broadcast — so a pair pays only its dot; the quotient is
+    * corpus streams through one projection with no shuffle. The probe
+    * norm is folded once per probe before the broadcast; the corpus
+    * norm stays per pair, because a selective `cand` drops most corpus
+    * rows and a per-row fold would pay for them too. The quotient is
     * [[cosine]]'s own `dot / sqrt(norm2(pe) * norm2(embedding))`, bit
     * for bit. */
   private[graft] def probePairs(corpus: DataFrame, probes: DataFrame,
                                 cand: Option[Column] = None): DataFrame =
-    corpus.withColumn("__cn", norm2(col("embedding")))
-      .join(broadcast(probes.withColumn("__pn", norm2(col("pe")))),
+    corpus.join(broadcast(probes.withColumn("__pn", norm2(col("pe")))),
         cand.foldLeft(col("vec_id") =!= col("pid"))(_ && _))
       .withColumn("cos", dot(col("pe"), col("embedding")) /
-        sqrt(col("__pn") * col("__cn")))
-      .drop("__cn", "__pn")
+        sqrt(col("__pn") * norm2(col("embedding"))))
+      .drop("__pn")
 
   /** The retrieval total order as a 1-based rank: row_number within
     * `part` (the probe) by `score` desc, ties to the smaller `id` —

@@ -29,6 +29,16 @@ import org.apache.spark.sql.types.LongType
   * O(n log k) time, O(groups·k) memory, nothing sorted, nothing spills,
   * and only ≤ k·groups·partitions rows cross the shuffle.
   *
+  * The partial phase pays only when each input partition holds many
+  * more than k rows per group (few groups, such as the probes of a
+  * k-NN query). With many small groups it prunes nothing and would copy
+  * every row into heaps the final phase rebuilds: 2 M rows in groups of
+  * 2k (k = 5, 8 input partitions, local[4]) ran 1979 ms two-phase
+  * against 1278 ms with the final heap alone. So the partial phase
+  * looks at its first [[TopKPerGroupExec.PartialCheckRows]] rows and,
+  * if its heaps still hold more than half of them, passes the rest of
+  * the partition through unheaped.
+  *
   * Contract: the output is the child's rows that rank ≤ k within their
   * group, plus `rank` (LONG, 1-based) — exactly what
   * `row_number().over(partitionBy(g).orderBy(order.desc, tie.asc)) <= k`
@@ -98,8 +108,9 @@ object TopKStrategy extends SparkStrategy {
 }
 
 /** One phase of [[TopKPerGroup]]: the partial phase (`rank` = None)
-  * keeps each partition's per-group winners and passes the child's
-  * rows through unranked; the final phase (`rank` set) requires hash
+  * keeps each partition's per-group winners — or, once it sees it
+  * prunes little, every row — and passes them through unranked; the
+  * final phase (`rank` set) requires hash
   * clustering on the group keys and appends the rank. Neither moves a
   * row between partitions, so both keep the child's partitioning. */
 case class TopKPerGroupExec(
@@ -136,7 +147,12 @@ case class TopKPerGroupExec(
       val tieB = BindReferences.bindReference(tieL, childOutput)
       val heaps = mutable.HashMap.empty[
         InternalRow, mutable.PriorityQueue[TopKPerGroupExec.Kept]]
-      while (it.hasNext) {
+      // rows seen and rows held in the heaps; a partial phase that still
+      // holds more than half its rows at the check stops heaping
+      var seen = 0L
+      var held = 0L
+      var pruning = true
+      while (pruning && it.hasNext) {
         val row = it.next()
         val vAny = orderB.eval(row)
         val tAny = tieB.eval(row)
@@ -157,12 +173,17 @@ case class TopKPerGroupExec(
             fresh
         }
         // the queue's head is the worst kept row — the eviction candidate
-        if (q.size < kL) q.enqueue(kept.copied())
+        if (q.size < kL) { q.enqueue(kept.copied()); held += 1 }
         else if (TopKPerGroupExec.rankOrder.lt(kept, q.head)) {
           q.dequeue(); q.enqueue(kept.copied())
         }
+        seen += 1
+        if (!ranked && seen == TopKPerGroupExec.PartialCheckRows)
+          pruning = held * 2 <= seen
       }
-      if (!ranked) heaps.valuesIterator.flatMap(_.iterator.map(_.row))
+      // a partial phase that stopped pruning streams the rest of `it`;
+      // otherwise `it` is drained and adds nothing
+      if (!ranked) heaps.valuesIterator.flatMap(_.iterator.map(_.row)) ++ it
       else {
         val proj = UnsafeProjection.create(outAttrs, outAttrs)
         val rankRow = new GenericInternalRow(1)
@@ -183,6 +204,9 @@ case class TopKPerGroupExec(
 }
 
 object TopKPerGroupExec {
+  /** Rows the partial phase heaps before it checks that it prunes. */
+  private[graft] val PartialCheckRows = 1 << 14
+
   /** One candidate row with its decoded score and tie. */
   private final class Kept(val v: Double, val isNull: Boolean, val t: Long,
                            val row: InternalRow) {

@@ -33,22 +33,30 @@ class CurationPathSpec extends SparkSpec {
   test("two-phase top-k equals the window spelling over 1 and 7 shuffle partitions") {
     // 5 input partitions, 6 groups, hash-mixed scores with planted ties
     // (the tie id decides) and a few nulls (ranked last)
-    val rows = (0 until 600).map { i =>
+    val few = (0 until 600).map { i =>
       val v = (i * 2654435761L) % 97
       (i % 6, i.toLong,
         if (i % 37 == 0) null else java.lang.Double.valueOf(v / 7 * 1.0))
-    }
-    val df = rows.toDF("grp", "seq", "score").repartition(5)
-    assert(df.rdd.getNumPartitions == 5)
+    }.toDF("grp", "seq", "score").repartition(5)
+    // groups of 6 over 3 input partitions, 2·PartialCheckRows rows each:
+    // about 2 rows per group per partition, so at k ≥ 2 the partial
+    // phase still holds every row at its check and streams the rest
+    val n = 3 * 2 * TopKPerGroupExec.PartialCheckRows
+    val many = spark.range(0, n, 1, 1)
+      .select((col("id") / 6).cast("int").as("grp"), col("id").as("seq"),
+        ((xxhash64(col("id")) % 50).cast("double") / 7).as("score"))
+      .repartition(3)
+    assert(few.rdd.getNumPartitions == 5 && many.rdd.getNumPartitions == 3)
     val w = Window.partitionBy("grp").orderBy(col("score").desc, col("seq").asc)
-    for (n <- Seq(1, 7); k <- Seq(1, 4, 150)) withShufflePartitions(n) {
+    for ((df, ks) <- Seq(few -> Seq(1, 4, 150), many -> Seq(1, 2, 4));
+         p <- Seq(1, 7); k <- ks) withShufflePartitions(p) {
       val heap = Graft.topkPerGroup(df, Seq("grp"), "score", "seq", k)
       val got = heap.collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getLong(3))).toSet
       val want = df.withColumn("rank", row_number().over(w).cast("long"))
         .filter(col("rank") <= k).collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getLong(3))).toSet
-      assert(got == want, s"shuffle partitions $n, k=$k")
+      assert(got == want, s"${df.rdd.getNumPartitions} inputs, shuffle partitions $p, k=$k")
       val phases = flattenPlan(heap.queryExecution.executedPlan).collect {
         case e: TopKPerGroupExec => e.rank.isDefined
       }

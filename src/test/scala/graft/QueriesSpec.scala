@@ -27,6 +27,14 @@ class QueriesSpec extends SparkSpec {
       s"unexpected oracle omissions: $omitted")
   }
 
+  test("q_source_binary's oracle reads the checked dir, spelled absolute") {
+    // DuckDB resolves a relative path against its own working directory
+    val abs = java.nio.file.Paths.get("data/sf9").toAbsolutePath.toString
+    for (dir <- Seq("data/sf9", "data/sf9/", "./data/x/../sf9"))
+      assert(SparkEntry.oracleSql(dir)("q_source_binary")
+        .contains(s"read_blob('$abs/*.parquet')"), dir)
+  }
+
   test("entry() is non-empty") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
