@@ -1314,7 +1314,10 @@ object Graft {
     * keeps a k-bounded heap per group in each input partition, ships
     * only those winners through one hash exchange, and merges them in
     * a second heap — O(n log k) time, O(groups·k) memory, nothing
-    * spills. At 100 TB per-entity top-k is the daily bread of feature
+    * spills. The first heap prunes only when an input partition holds
+    * many more than k rows per group; when it sees it does not (many
+    * small groups), it passes the rows on unheaped. At 100 TB
+    * per-entity top-k is the daily bread of feature
     * pipelines, and the sort is the cost this operator deletes.
     *
     * Returns the winning rows (all input columns) plus their 1-based
