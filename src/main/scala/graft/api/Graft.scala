@@ -44,6 +44,11 @@ object Graft {
   private def freshSlot(base: String): String =
     s"${base}_${slotSeq.incrementAndGet()}"
 
+  /** Exact near-dup pair lists up to this many rows are clustered on the
+    * driver ([[Text.clusterLabels]]' union-find exit): a collected pair
+    * costs about 100 bytes, so a few MB at most. */
+  private val LocalCcMaxPairs = 1L << 16
+
   // ---- as-of join ------------------------------------------------------
 
   /** Generic as-of join: pair every `left` row with the temporally
@@ -240,22 +245,22 @@ object Graft {
       .getOption("spark.graft.dedupClusterMaxCandPerDoc")
       .map(_.toLong).getOrElse(1000000L)
     val pairs = if (maxCandPerDoc > 0) {
-      // the same postings as nearDupPairs — the probe must price the
-      // join the exact tier would actually run — and ONE action for all
-      // three stats: the token histogram yields the candidate estimate
-      // and the vocabulary size, cross-joined with the doc count from
-      // the RAW table (no explode — marginally larger than the
-      // tokenized-doc count when some docs are all-empty, which only
-      // biases the gate TOWARD the exact tier).
-      val dt = postings(df, idCol, textCol)
-      val probe = dt.groupBy("token").agg(count(lit(1)).as("c"))
-        .agg(sum(expr("c * (c - 1) div 2")).as("cand"),
-          count(lit(1)).as("dict"))
-        .crossJoin(df.agg(countDistinct(col(idCol)).as("n_docs")))
+      // ONE token exchange for all three stats (Text.termFreqs): the
+      // per-token doc counts — the postings nearDupPairs joins, so the
+      // probe prices the join the exact tier would actually run — yield
+      // the candidate estimate and the vocabulary size, and the
+      // sentinel's id count is the doc count of the whole table, all-empty
+      // docs included: marginally more than the tokenized docs, which
+      // only biases the gate TOWARD the exact tier.
+      val tok = col("token") =!= Text.Sentinel
+      val probe = Text.termFreqs(docSide(df, idCol, textCol))._2
+        .agg(sum(when(tok, expr("df * (df - 1) div 2"))).as("cand"),
+          count(when(tok, lit(1))).as("dict"),
+          max(when(!tok, col("ids"))).as("n_docs"))
         .head
       val cand = if (probe.isNullAt(0)) 0L else probe.getLong(0)
       val dictN = probe.getLong(1)
-      val nDocs = probe.getLong(2)
+      val nDocs = if (probe.isNullAt(2)) 0L else probe.getLong(2)
       // a mask-group-sized vocabulary never enumerates candidates —
       // nearDupPairs dispatches it to the O(dict²) group path — so a
       // tiny-dict dense corpus must NOT be routed to the lossy tier
@@ -285,12 +290,13 @@ object Graft {
           (if (maskGroup) ":maskgroup" else ""))
       // the probe's vocabulary size picks the pairs strategy: no second
       // tokenize-and-count
-      pairsOf(dt, dictN, thresholdBp)
+      pairsOf(postings(df, idCol, textCol), dictN, thresholdBp)
     } else {
       s.conf.set("spark.graft.lastDedupRoute", "exact:forced")
       nearDupPairs(df, idCol, textCol, thresholdBp)
     }
-    Text.clusterLabels(s, pairs.select("a_id", "b_id"), freshSlot("api_cc"))
+    Text.clusterLabels(s, pairs.select("a_id", "b_id"), freshSlot("api_cc"),
+        LocalCcMaxPairs)
       .withColumnRenamed("doc_id", idCol)
   }
 
@@ -1325,7 +1331,8 @@ object Graft {
     * `row_number().over(partitionBy(groupCols).orderBy(orderCol.desc,
     * tieCol.asc)) <= k` gives. `orderCol` must be a DOUBLE, compared as
     * SQL ordering does (−0.0 equals 0.0, NaN ranks first, null last);
-    * `tieCol` a unique non-null LONG (a null tie fails the job). */
+    * `tieCol` a unique non-null LONG or STRING (a null tie fails the
+    * job). */
   def topkPerGroup(df: DataFrame, groupCols: Seq[String], orderCol: String,
                    tieCol: String, k: Int,
                    rankCol: String = "rank"): DataFrame =

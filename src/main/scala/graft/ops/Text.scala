@@ -87,23 +87,55 @@ object Text {
   /** Per-document top-k TF-IDF terms of a (doc_id, text) frame, ties
     * broken by token — the core shared by the graded [[qTfidf]] and
     * graft.api.Graft.tfidf. MR needed 3 chained jobs (TF, DF,
-    * join+rank); here TF and DF are two aggregates over one token
-    * stream, n_docs is a broadcast scalar, and the rank is a single
-    * window. Emits (doc_id, token, tf, df, tfidf rounded ×10⁻⁴). */
+    * join+rank); here [[termFreqs]] tokenizes ONCE and shuffles ONCE,
+    * by token, and every consumer reads that one exchange: tf joins df
+    * in place by a shuffled hash join (no sort, no second exchange),
+    * and n_docs — the sentinel's id count — is a broadcast scalar on
+    * df's side. The rank is the heap top-k
+    * ([[graft.plans.TopKPerGroup]], ties by token): one exchange by
+    * doc, no sort. The sentinel rows ride along with a null score,
+    * which ranks last, so one takes a place only in a doc with fewer
+    * than k tokens, and they are dropped after the rank: a filter below
+    * it would be pushed under the token exchange and split it. Emits
+    * (doc_id, token, tf, df, tfidf rounded ×10⁻⁴). */
   private[graft] def tfidf(docs: DataFrame, topK: Int): DataFrame = {
-    val tf = tokDf(docs).groupBy("doc_id", "token")
-      .agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy("token").agg(count(lit(1)).as("df"))
-    val nd = docs.agg(countDistinct(col("doc_id")).as("n_docs"))
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("tfidf_raw").desc, col("token").asc)
-    tf.join(df, "token").crossJoin(broadcast(nd))
-      .withColumn("tfidf_raw",
-        col("tf") * log(col("n_docs").cast("double") / col("df")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= topK)
+    val (tf, df) = termFreqs(docs)
+    val nd = df.agg(max(when(col("token") === Sentinel, col("ids")))
+      .as("n_docs"))
+    val scored = tf.join(df.crossJoin(broadcast(nd)).drop("ids")
+        .hint("shuffle_hash"), "token")
+      .withColumn("tfidf_raw", when(col("token") =!= Sentinel,
+        col("tf") * log(col("n_docs").cast("double") / col("df"))))
+    graft.plans.TopKPerGroup.frame(scored, Seq("doc_id"), "tfidf_raw",
+        "token", topK, "rn")
+      .filter(col("token") =!= Sentinel)
       .select(col("doc_id"), col("token"), col("tf"), col("df"),
         round(col("tfidf_raw"), 4).as("tfidf"))
+  }
+
+  /** The token every input row of [[termFreqs]] posts besides its real
+    * tokens. Tokens are split on a space, so none is ever a space. */
+  private[graft] val Sentinel = " "
+
+  /** Term statistics of a (doc_id, text) frame over ONE token exchange,
+    * keyed by token: tf = (doc_id, token, tf) occurrences per doc, and
+    * df = (token, df, ids): df counts a token's distinct ids (a null id
+    * as one), ids the non-null ones. Every input row also posts the
+    * [[Sentinel]], so its df row counts the docs of the whole table —
+    * all-empty and null texts included — in the pass that counts the
+    * tokens. The token rows cross the exchange uncombined (a doc's
+    * repeated words are counted after it), the price of one exchange
+    * serving both aggregates. A filter on `token` over either is pushed
+    * under the exchange, so consumers that should share it must filter
+    * above an operator the optimizer cannot push through. */
+  private[graft] def termFreqs(docs: DataFrame): (DataFrame, DataFrame) = {
+    val tf = docs.select(col("doc_id"), explode(concat(array(lit(Sentinel)),
+        tokens(coalesce(col("text"), lit(""))))).as("token"))
+      .filter(col("token") =!= "")
+      .repartition(col("token"))
+      .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
+    (tf, tf.groupBy("token").agg(count(lit(1)).as("df"),
+      count(col("doc_id")).as("ids")))
   }
 
   /** Top-5 TF-IDF terms per doc over the (lang='en', doc_id<100) corpus. */
@@ -425,28 +457,44 @@ object Text {
     * the sketch dedup family (Sketches.scala) — the production dedup
     * output contract when pair listing is output-bound. `slotPrefix`
     * namespaces the bounded checkpoint slots per caller. Output is
-    * UNSORTED (N rows); callers with an ordered contract add it. */
+    * UNSORTED (N rows); callers with an ordered contract add it.
+    *
+    * `localMaxPairs` > 0 lets a pair list of at most that many non-null
+    * rows skip the distributed fixpoint: the pin's own job counts the
+    * pairs, one more job brings them to the driver, and union-find
+    * there labels each node with its component's min id — the same
+    * rows, without the label and contraction plans. */
   private[graft] def clusterLabels(s: SparkSession, pairRows: DataFrame,
-                                   slotPrefix: String): DataFrame = {
+                                   slotPrefix: String,
+                                   localMaxPairs: Long = 0L): DataFrame = {
     def slot(name: String) = s"${slotPrefix}_$name"
-    // Checkpoint the pair list BEFORE mirroring it: the union references
-    // it twice, and an unmaterialized plan would run the whole near-dup
-    // pipeline twice. Loop state below is likewise materialized eagerly,
-    // which BOTH pins the data (no re-derivation each round) AND
+    // Checkpoint the pair list first: the labels and the contracted
+    // edges both read it, and an unmaterialized plan would run the whole
+    // near-dup pipeline twice. Loop state below is likewise materialized
+    // eagerly, which BOTH pins the data (no re-derivation each round) AND
     // truncates the logical plan — with cache() alone the lineage grows
     // every round and Catalyst re-analyzes the whole accumulated plan per
     // iteration (measurably superlinear).
     // Both-directions mirror + fused init round (min over self and
     // direct neighbors), shared by the full graph and its contraction.
-    def mirror(df: DataFrame): DataFrame = df
-      .select(col("a").as("src"), col("b").as("dst"))
-      .union(df.select(col("b").as("src"), col("a").as("dst")))
+    // The mirror is one inline of the two orientations, not a union: a
+    // union plans its input twice, so an unpinned input ran twice.
+    def mirror(df: DataFrame): DataFrame = df.select(inline(array(
+      struct(col("a").as("src"), col("b").as("dst")),
+      struct(col("b").as("src"), col("a").as("dst")))))
     def initLabels(g: DataFrame, sl: String): DataFrame = Pins.pin(g
       .groupBy(col("dst").as("doc_id")).agg(min(col("src")).as("nbr"))
       .select(col("doc_id"), least(col("doc_id"), col("nbr")).as("label")),
       sl)
-    val pairs = Pins.pin(pairRows, slot("pairs"))
-    // not pinned: two projections of the pinned pairs, read twice
+    val pairCount = org.apache.spark.sql.Observation()
+    val pairs = Pins.pin(pairRows.observe(pairCount, count(lit(1)).as("n"),
+      count(when(col("a_id").isNull || col("b_id").isNull, lit(1)))
+        .as("nulls")), slot("pairs"))
+    if (localMaxPairs > 0 &&
+        pairCount.get("n").asInstanceOf[Long] <= localMaxPairs &&
+        pairCount.get("nulls") == 0L)
+      return localLabels(s, pairs)
+    // not pinned: one projection of the pinned pairs
     val edges = mirror(pairs.select(col("a_id").as("a"), col("b_id").as("b")))
     // Round 0 fused into initialization: with labels starting at the node
     // id, the first propagation is just min(id, min neighbor id) — one
@@ -466,11 +514,13 @@ object Text {
     // cost per round. At 100 TB: one |E|-sized pass builds the contracted
     // graph, and every iteration after touches only |components|-sized
     // state.
+    // least/greatest makes the edge direction irrelevant, so the
+    // un-mirrored pairs give the same contracted edges at half the input.
     val l1 = labels0.select(col("doc_id").as("n1"), col("label").as("la"))
     val l2 = labels0.select(col("doc_id").as("n2"), col("label").as("lb"))
-    val cedges0 = edges
-      .join(l1, col("src") === col("n1"))
-      .join(l2, col("dst") === col("n2"))
+    val cedges0 = pairs
+      .join(l1, col("a_id") === col("n1"))
+      .join(l2, col("b_id") === col("n2"))
       .filter(col("la") =!= col("lb"))
       .select(least(col("la"), col("lb")).as("a"),
         greatest(col("la"), col("lb")).as("b"))
@@ -537,6 +587,36 @@ object Text {
       .select(col("doc_id"),
         coalesce(col("final_label"), col("label")).as("cluster_id"))
       .withColumn("keep", col("doc_id") === col("cluster_id"))
+  }
+
+  /** [[clusterLabels]]' output for a pair list small enough for the
+    * driver: union-find with path halving, each root the min id of its
+    * component, emitted as a local relation. */
+  private def localLabels(s: SparkSession, pairs: DataFrame): DataFrame = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var v = x
+      var p = parent.getOrElseUpdate(v, v)
+      while (p != v) {
+        val g = parent(p)
+        parent(v) = g
+        v = p
+        p = g
+      }
+      v
+    }
+    pairs.select(col("a_id").cast("long"), col("b_id").cast("long"))
+      .collect().foreach { r =>
+        val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+    val rows = parent.keys.toSeq.map { d =>
+      val c = find(d)
+      org.apache.spark.sql.Row(d, c, d == c)
+    }
+    s.createDataFrame(java.util.Arrays.asList(rows: _*),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "doc_id BIGINT, cluster_id BIGINT, keep BOOLEAN"))
   }
 
   /** TF-IDF cosine near-dup (§2.16): document-pair cosine over LEARNED

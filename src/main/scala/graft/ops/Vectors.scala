@@ -36,9 +36,19 @@ object Vectors {
     org.apache.spark.sql.GraftSql.column(graft.expressions.FloatVecNorm2(
       org.apache.spark.sql.GraftSql.expression(a)))
 
-  /** Cosine similarity of two ArrayType(Float) columns, in double. */
+  /** Cosine similarity of two ArrayType(Float) columns, in double. A
+    * zero norm gives a null cosine (ranked last) with or without ANSI
+    * mode, where a bare quotient would fail the query on ANSI's
+    * division by zero. */
   private[graft] def cosine(a: Column, b: Column): Column =
-    dot(a, b) / sqrt(norm2(a) * norm2(b))
+    dot(a, b) / normProduct(norm2(a), norm2(b))
+
+  /** `sqrt(na · nb)`, null when the product is zero. Spelled as a
+    * `when`, not `nullif`: nullif plans an extra projection for its
+    * shared operand, where whole-stage codegen already evaluates the
+    * repeated product once. */
+  private def normProduct(na: Column, nb: Column): Column =
+    sqrt(when(na * nb =!= 0.0, na * nb))
 
   /** The retrieval candidate pairs: every `corpus` row (vec_id,
     * embedding, …) against every BROADCAST probe (pid, pe, …), the
@@ -49,14 +59,14 @@ object Vectors {
     * norm is folded once per probe before the broadcast; the corpus
     * norm stays per pair, because a selective `cand` drops most corpus
     * rows and a per-row fold would pay for them too. The quotient is
-    * [[cosine]]'s own `dot / sqrt(norm2(pe) * norm2(embedding))`, bit
-    * for bit. */
+    * [[cosine]]'s own quotient, bit for bit, and null on a zero norm
+    * as there. */
   private[graft] def probePairs(corpus: DataFrame, probes: DataFrame,
                                 cand: Option[Column] = None): DataFrame =
     corpus.join(broadcast(probes.withColumn("__pn", norm2(col("pe")))),
         cand.foldLeft(col("vec_id") =!= col("pid"))(_ && _))
       .withColumn("cos", dot(col("pe"), col("embedding")) /
-        sqrt(col("__pn") * norm2(col("embedding"))))
+        normProduct(col("__pn"), norm2(col("embedding"))))
       .drop("__pn")
 
   /** The retrieval total order as a 1-based rank: row_number within

@@ -11,9 +11,9 @@ import org.apache.spark.sql.catalyst.expressions.{
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{
   ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
-import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.catalyst.util.{SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StringType}
 
 /** Per-group top-k as a CUSTOM whole-operator extension (SURVEY §2.13's
   * deepest tier: logical node + planner strategy + physical operator —
@@ -45,7 +45,8 @@ import org.apache.spark.sql.types.LongType
   * keeps, so the DuckDB oracle is the standard row_number query.
   * `order` is a DOUBLE compared as SQL ordering does (−0.0 = 0.0, NaN
   * greatest, null last: DESC NULLS LAST); `tie` is a unique non-null
-  * LONG (the library's standard deterministic tie-break).
+  * LONG (the library's standard deterministic tie-break) or STRING
+  * (a token within its document), compared as SQL ordering does.
   */
 case class TopKPerGroup(
     groupExprs: Seq[Expression],
@@ -85,6 +86,8 @@ object TopKPerGroup {
     def attr(n: String) = analyzed.output.find(_.name == n).getOrElse(
       sys.error(s"column '$n' not found in " + names.mkString("[", ", ", "]")))
     require(!names.contains(rankCol), s"rank column '$rankCol' already exists")
+    require(Seq(LongType, StringType).contains(attr(tieCol).dataType),
+      s"tie column '$tieCol' must be LONG or STRING")
     org.apache.spark.sql.GraftSql.ofRows(s,
       TopKPerGroup(groupCols.map(attr), attr(orderCol), attr(tieCol), k,
         AttributeReference(rankCol, LongType, nullable = false)(), analyzed))
@@ -141,7 +144,10 @@ case class TopKPerGroupExec(
     val orderL = order
     val tieL = tie
     val kL = k
+    val tieType = tie.dataType
     child.execute().mapPartitions { it =>
+      val rankOrder = TopKPerGroupExec.rankOrder(
+        TypeUtils.getInterpretedOrdering(tieType))
       val keyProj = UnsafeProjection.create(groupL, childOutput)
       val orderB = BindReferences.bindReference(orderL, childOutput)
       val tieB = BindReferences.bindReference(tieL, childOutput)
@@ -156,25 +162,25 @@ case class TopKPerGroupExec(
         val row = it.next()
         val vAny = orderB.eval(row)
         val tAny = tieB.eval(row)
-        // a null tie would unbox to 0L and rank mid-pack where both
-        // engines rank it first — fail fast on the contract instead
+        // a null tie would rank mid-pack where both engines rank it
+        // first — fail fast on the contract instead
         require(tAny != null, "TopKPerGroup requires non-null tie values")
         val kept = new TopKPerGroupExec.Kept(
           if (vAny == null) 0.0 else vAny.asInstanceOf[Double],
-          vAny == null, tAny.asInstanceOf[Long], row)
+          vAny == null, tAny, row)
         // probe with the projection's reused buffer; copy the key only
         // when a new group is first seen
         val probe = keyProj(row)
         val q = heaps.get(probe) match {
           case Some(existing) => existing
           case None =>
-            val fresh = mutable.PriorityQueue.empty(TopKPerGroupExec.rankOrder)
+            val fresh = mutable.PriorityQueue.empty(rankOrder)
             heaps.put(probe.copy(), fresh)
             fresh
         }
         // the queue's head is the worst kept row — the eviction candidate
         if (q.size < kL) { q.enqueue(kept.copied()); held += 1 }
-        else if (TopKPerGroupExec.rankOrder.lt(kept, q.head)) {
+        else if (rankOrder.lt(kept, q.head)) {
           q.dequeue(); q.enqueue(kept.copied())
         }
         seen += 1
@@ -189,7 +195,7 @@ case class TopKPerGroupExec(
         val rankRow = new GenericInternalRow(1)
         val joined = new JoinedRow
         heaps.valuesIterator.flatMap { q =>
-          q.toArray.sorted(TopKPerGroupExec.rankOrder).iterator.zipWithIndex
+          q.toArray.sorted(rankOrder).iterator.zipWithIndex
             .map { case (kept, i) =>
               rankRow.setLong(0, i + 1L)
               proj(joined(kept.row, rankRow))
@@ -207,22 +213,26 @@ object TopKPerGroupExec {
   /** Rows the partial phase heaps before it checks that it prunes. */
   private[graft] val PartialCheckRows = 1 << 14
 
-  /** One candidate row with its decoded score and tie. */
-  private final class Kept(val v: Double, val isNull: Boolean, val t: Long,
+  /** One candidate row with its decoded score and tie. A copy also
+    * copies the tie: a string tie points into the input row's buffer. */
+  private final class Kept(val v: Double, val isNull: Boolean, val t: Any,
                            val row: InternalRow) {
-    def copied(): Kept = new Kept(v, isNull, t, row.copy())
+    def copied(): Kept =
+      new Kept(v, isNull, InternalRow.copyValue(t), row.copy())
   }
 
   /** Rank order, best first: score DESC NULLS LAST compared as SQL
     * ordering does (−0.0 = 0.0, NaN greatest — `java.lang.Double.compare`
-    * alone would split the zeros), then tie ASC. The heap and the
-    * replacement test both use it, so the two decisions stay consistent. */
-  private val rankOrder: Ordering[Kept] = new Ordering[Kept] {
-    override def compare(a: Kept, b: Kept): Int = {
-      val c =
-        if (a.isNull || b.isNull) java.lang.Boolean.compare(a.isNull, b.isNull)
-        else SQLOrderingUtil.compareDoubles(b.v, a.v)
-      if (c != 0) c else java.lang.Long.compare(a.t, b.t)
+    * alone would split the zeros), then tie ASC by `tieOrder`. The heap
+    * and the replacement test both use it, so the two decisions stay
+    * consistent. */
+  private def rankOrder(tieOrder: Ordering[Any]): Ordering[Kept] =
+    new Ordering[Kept] {
+      override def compare(a: Kept, b: Kept): Int = {
+        val c =
+          if (a.isNull || b.isNull) java.lang.Boolean.compare(a.isNull, b.isNull)
+          else SQLOrderingUtil.compareDoubles(b.v, a.v)
+        if (c != 0) c else tieOrder.compare(a.t, b.t)
+      }
     }
-  }
 }

@@ -17,6 +17,12 @@ object GraftSql {
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
+  /** Wait until the listener bus has delivered every posted event
+    * (the bus is spark-package-private), so a listener's counts cover
+    * the actions that already returned. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** DataFrame over a hand-built logical plan (Dataset.ofRows is
     * sql-package-private in Spark 4) — the entry point for custom
     * whole-operator nodes like graft.plans.TopKPerGroup. */

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.{GenerateExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -10,8 +10,11 @@ import graft.plans.TopKPerGroupExec
 
 /** The lean curation path: the two-phase heap top-k behind knnCosine
   * (partial heap per input partition, final heap after the exchange)
-  * against the window spelling it replaced, and the clusterLabels exits
-  * (no loop when contraction leaves no edge, convergence on a chain). */
+  * against the window spelling it replaced, the clusterLabels exits
+  * (no loop when contraction leaves no edge, convergence on a chain,
+  * union-find on the driver for a small pair list), dedupClusters
+  * against union-find, and tfidf's one-exchange spelling against the
+  * join-and-window one it replaced. */
 class CurationPathSpec extends SparkSpec {
 
   import spark.implicits._
@@ -111,14 +114,20 @@ class CurationPathSpec extends SparkSpec {
     val zero = vecs.union(Seq[(Long, Array[Float])](
       (8L, Array(0.0f, 0.0f, 0.0f))).toDF("vid", "emb"))
     val probes = zero.filter(col("vid").isin(1L, 8L))
-    // ANSI (the default): 0 / 0 fails the query in both spellings
-    for (run <- Seq(() => windowKnn(zero, probes, 3), () => heapKnn(zero, probes, 3)))
-      assert(intercept[Exception](run()).getMessage.contains("DIVIDE_BY_ZERO"))
-    // without ANSI the quotient is null and ranks last
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try for (k <- Seq(1, 3, 10))
-      assert(heapKnn(zero, probes, k) == windowKnn(zero, probes, k), s"k=$k")
-    finally spark.conf.unset("spark.sql.ansi.enabled")
+    // a zero norm gives a null cosine, ranked last, with ANSI on (the
+    // default) and off alike: the same rows in both modes
+    def both(k: Int) = (heapKnn(zero, probes, k), windowKnn(zero, probes, k))
+    for (k <- Seq(1, 3, 10)) {
+      val ansi = both(k)
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      val plain = try both(k) finally spark.conf.unset("spark.sql.ansi.enabled")
+      assert(ansi._1 == ansi._2 && ansi == plain, s"k=$k")
+      // the zero probe's cosines are null (NaN against the NaN lane);
+      // the zero row ranks last
+      assert(ansi._1.filter(_._1 == 8L).forall(_._4.forall(b =>
+        java.lang.Double.longBitsToDouble(b).isNaN)), s"k=$k")
+      if (k == 10) assert(ansi._1.filter(_._1 == 1L).maxBy(_._3)._2 == 8L)
+    }
   }
 
   test("knnCosine plans no sort or window below the top-k") {
@@ -169,5 +178,139 @@ class CurationPathSpec extends SparkSpec {
       assert(Set("chain_labels_1", "chain_labels_2").subsetOf(slotsOf("chain")),
         s"${slotsOf("chain")}")
     } finally spark.conf.unset("spark.graft.reliableCheckpoint")
+  }
+
+  test("clusterLabels: the driver-side exit equals the fixpoint on cliques and a chain") {
+    val cliques = for (c <- Seq(Seq(3L, 5L, 9L), Seq(10L, 11L, 12L, 13L));
+                       a <- c; b <- c if a < b) yield (a, b)
+    val chain = (1L until 20L).map(i => (i, i + 1)) ++ Seq((41L, 40L))
+    for ((pairs, name) <- Seq(cliques -> "clq", chain -> "chn")) {
+      val df = pairs.toDF("a_id", "b_id")
+      val local = ops.Text.clusterLabels(spark, df, s"${name}_l", 1000L)
+      assert(flattenPlan(local.queryExecution.executedPlan).collect {
+        case e: org.apache.spark.sql.execution.LocalTableScanExec => e
+      }.nonEmpty, name)
+      assert(local.collect().toSet ==
+        ops.Text.clusterLabels(spark, df, s"${name}_d").collect().toSet, name)
+    }
+  }
+
+  // -- dedupClusters ----------------------------------------------------------
+
+  /** Union-find over the exact token-set Jaccard pairs at `bp` ×10⁻⁴:
+    * doc → (component min id, is that min). */
+  private def unionFind(docs: Seq[(Long, String)], bp: Int)
+  : Map[Long, (Long, Boolean)] = {
+    val sets = docs.map { case (id, t) => id -> t.toLowerCase.split(" ").filter(_.nonEmpty).toSet }
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = { val p = parent.getOrElse(x, x); if (p == x) x else find(p) }
+    for ((a, sa) <- sets; (b, sb) <- sets if a < b) {
+      val common = (sa & sb).size
+      if (common.toLong * 10000 >= bp.toLong * (sa.size + sb.size - common)) {
+        val (ra, rb) = (find(a), find(b))
+        parent(math.max(ra, rb)) = math.min(ra, rb)
+        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      }
+    }
+    parent.keys.map(d => d -> (find(d), find(d) == d)).toMap
+  }
+
+  private def dedupOf(docs: Seq[(Long, String)]): Map[Long, (Long, Boolean)] =
+    Graft.dedupClusters(docs.toDF("doc_id", "text"), "doc_id", "text")
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+
+  private def words(from: Int, n: Int) = (from until from + n).map(w => s"w$w").mkString(" ")
+
+  test("dedupClusters matches union-find on a clique corpus and a chain corpus") {
+    // cliques: each base doc and two copies with one word swapped
+    // (Jaccard 0.9 and 0.82 within a group), plus unrelated singletons
+    val clique = (0 until 6).flatMap { g =>
+      val base = words(100 * g, 20)
+      Seq((10L * g + 1, base), (10L * g + 2, base.replace(s"w${100 * g}", "x")),
+        (10L * g + 3, base.replace(s"w${100 * g + 1}", "y")))
+    } ++ (0 until 5).map(i => (1000L + i, words(5000 + 50 * i, 20)))
+    // a chain: doc i holds words i .. i+9, so neighbours share 9 of 11
+    // (0.82) and docs two apart 8 of 12 (0.67)
+    val chain = (0 until 12).map(i => (200L + i, words(i, 10)))
+    for (docs <- Seq(clique, chain)) {
+      val want = unionFind(docs, 8000)
+      assert(want.nonEmpty && dedupOf(docs) == want)
+    }
+    assert(dedupOf(chain).values.map(_._1).toSet == Set(200L), "one chain component")
+  }
+
+  test("dedupClusters runs at most 8 Spark jobs on a small exact corpus") {
+    val docs = (0 until 4).flatMap { g =>
+      val base = words(100 * g, 20)
+      Seq((10L * g + 1, base), (10L * g + 2, base.replace(s"w${100 * g}", "x")))
+    }.toDF("doc_id", "text")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    Graft.dedupClusters(docs, "doc_id", "text").collect()  // warm
+    org.apache.spark.sql.GraftSql.drainListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = Graft.dedupClusters(docs, "doc_id", "text").collect()
+      org.apache.spark.sql.GraftSql.drainListeners(spark.sparkContext)
+      assert(out.length == 8)
+      // the gate probe, the pinned pairs, the driver-side union-find's
+      // collect and the collect above
+      assert(jobs.get <= 8, s"${jobs.get} jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  // -- tfidf ------------------------------------------------------------------
+
+  /** TF-IDF as the join-and-window spelling wrote it: tf and df as two
+    * aggregates, n_docs a broadcast count of distinct ids, and the rank
+    * a row_number window. */
+  private def joinTfidf(docs: DataFrame, k: Int): DataFrame = {
+    val tf = ops.Text.tokDf(docs).groupBy("doc_id", "token")
+      .agg(count(lit(1)).as("tf"))
+    val df = tf.groupBy("token").agg(count(lit(1)).as("df"))
+    val nd = docs.agg(countDistinct(col("doc_id")).as("n_docs"))
+    val w = Window.partitionBy(col("doc_id"))
+      .orderBy(col("tfidf_raw").desc, col("token").asc)
+    tf.join(df, "token").crossJoin(broadcast(nd))
+      .withColumn("tfidf_raw",
+        col("tf") * log(col("n_docs").cast("double") / col("df")))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select(col("doc_id"), col("token"), col("tf"), col("df"),
+        round(col("tfidf_raw"), 4).as("tfidf"))
+  }
+
+  private lazy val oddDocs = Seq[(java.lang.Long, String)](
+    (1L, "a b a c"), (2L, "b b d"), (2L, "E a"),  // a repeated id
+    (null, "a c c"),                               // a null id
+    (3L, ""), (4L, null),                          // no tokens: n_docs only
+    (5L, "f  g"), (6L, "a b c d e f g h i j"), (7L, "A a a"))
+    .toDF("doc_id", "text").repartition(3)
+
+  test("tfidf equals the join-and-window spelling row for row") {
+    for (k <- Seq(1, 2, 3, 20)) {
+      val got = ops.Text.tfidf(oddDocs, k)
+      val want = joinTfidf(oddDocs, k)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, s"k=$k")
+    }
+    // n_docs is 7 — ids 1 to 7: the empty and the null text count, the
+    // null id does not — while a's df of 5 counts the null id's doc
+    val idf = ops.Text.tfidf(oddDocs, 20).filter(col("doc_id") === 7L)
+      .select("tf", "df", "tfidf").collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(idf.toSeq == Seq((3L, 5L, math.round(3 * math.log(7.0 / 5) * 1e4) / 1e4)),
+      idf.mkString(", "))
+  }
+
+  test("tfidf tokenizes once: one GenerateExec in the executed plan") {
+    val plan = executed(ops.Text.tfidf(oddDocs, 3))
+    // a reused exchange lists its child again: count plan nodes once
+    val generates = plan.collect { case g: GenerateExec => g }
+      .map(System.identityHashCode).distinct
+    assert(generates.size == 1, plan.mkString("\n"))
+    assert(plan.collect { case s: SortExec => s; case w: WindowExec => w }.isEmpty,
+      plan.mkString("\n"))
   }
 }

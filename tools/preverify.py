@@ -8,7 +8,7 @@ whose output dir is missing (Verify swallows per-query failures).
 
 Usage: python3 tools/preverify.py /root/testdata/sf0.01 /tmp/v1
 """
-import sys, json, glob, os
+import sys, json, glob, os, shutil, tempfile
 import duckdb
 import pandas as pd
 
@@ -66,7 +66,23 @@ def main(sf_dir, out_dir):
     neg = duckdb.sql("SELECT (-7) // 2").fetchone()[0]
     print(f"duckdb {duckdb.__version__} "
           f"((-7)//2 = {neg}: {'truncates' if neg == -3 else 'floors'})")
-    con = duckdb.connect()
+    # Spill to a private temp dir and cap memory: by default DuckDB spills
+    # to ./.tmp and takes 80% of RAM, and a large oracle (q_kcore at
+    # sf0.1) ran out of temp disk. PREVERIFY_TMP / PREVERIFY_MEMORY
+    # override both.
+    tmp = os.environ.get("PREVERIFY_TMP") or tempfile.mkdtemp(prefix="preverify-duckdb-")
+    con = duckdb.connect(config={
+        "temp_directory": tmp,
+        "memory_limit": os.environ.get("PREVERIFY_MEMORY", "4GB")})
+    try:
+        return compare(con, sf_dir, out_dir)
+    finally:
+        con.close()
+        if "PREVERIFY_TMP" not in os.environ:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+
+def compare(con, sf_dir, out_dir):
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
