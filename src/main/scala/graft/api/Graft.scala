@@ -44,11 +44,6 @@ object Graft {
   private def freshSlot(base: String): String =
     s"${base}_${slotSeq.incrementAndGet()}"
 
-  /** Exact near-dup pair lists up to this many rows are clustered on the
-    * driver ([[Text.clusterLabels]]' union-find exit): a collected pair
-    * costs about 100 bytes, so a few MB at most. */
-  private val LocalCcMaxPairs = 1L << 16
-
   // ---- as-of join ------------------------------------------------------
 
   /** Generic as-of join: pair every `left` row with the temporally
@@ -295,8 +290,7 @@ object Graft {
       s.conf.set("spark.graft.lastDedupRoute", "exact:forced")
       nearDupPairs(df, idCol, textCol, thresholdBp)
     }
-    Text.clusterLabels(s, pairs.select("a_id", "b_id"), freshSlot("api_cc"),
-        LocalCcMaxPairs)
+    Text.clusterLabels(s, pairs.select("a_id", "b_id"), freshSlot("api_cc"))
       .withColumnRenamed("doc_id", idCol)
   }
 

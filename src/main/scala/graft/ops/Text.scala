@@ -93,20 +93,25 @@ object Text {
     * and n_docs — the sentinel's id count — is a broadcast scalar on
     * df's side. The rank is the heap top-k
     * ([[graft.plans.TopKPerGroup]], ties by token): one exchange by
-    * doc, no sort. The sentinel rows ride along with a null score,
+    * doc, no sort. The sentinel rows ride along with a null rank key,
     * which ranks last, so one takes a place only in a doc with fewer
     * than k tokens, and they are dropped after the rank: a filter below
-    * it would be pushed under the token exchange and split it. Emits
-    * (doc_id, token, tf, df, tfidf rounded ×10⁻⁴). */
+    * it would be pushed under the token exchange and split it. A real
+    * token's key is never null: with no non-null id n_docs is 0, log
+    * gives a null score, and the key ranks it as −∞, so the sentinel
+    * still loses every tie. Emits (doc_id, token, tf, df, tfidf rounded
+    * ×10⁻⁴). */
   private[graft] def tfidf(docs: DataFrame, topK: Int): DataFrame = {
     val (tf, df) = termFreqs(docs)
     val nd = df.agg(max(when(col("token") === Sentinel, col("ids")))
       .as("n_docs"))
     val scored = tf.join(df.crossJoin(broadcast(nd)).drop("ids")
         .hint("shuffle_hash"), "token")
-      .withColumn("tfidf_raw", when(col("token") =!= Sentinel,
-        col("tf") * log(col("n_docs").cast("double") / col("df"))))
-    graft.plans.TopKPerGroup.frame(scored, Seq("doc_id"), "tfidf_raw",
+      .withColumn("tfidf_raw",
+        col("tf") * log(col("n_docs").cast("double") / col("df")))
+      .withColumn("key", when(col("token") =!= Sentinel,
+        coalesce(col("tfidf_raw"), lit(Double.NegativeInfinity))))
+    graft.plans.TopKPerGroup.frame(scored, Seq("doc_id"), "key",
         "token", topK, "rn")
       .filter(col("token") =!= Sentinel)
       .select(col("doc_id"), col("token"), col("tf"), col("df"),
@@ -459,14 +464,14 @@ object Text {
     * namespaces the bounded checkpoint slots per caller. Output is
     * UNSORTED (N rows); callers with an ordered contract add it.
     *
-    * `localMaxPairs` > 0 lets a pair list of at most that many non-null
-    * rows skip the distributed fixpoint: the pin's own job counts the
+    * A pair list of at most [[LocalMaxPairs]] rows, long ids and no
+    * null skips the distributed fixpoint: the pin's own job counts the
     * pairs, one more job brings them to the driver, and union-find
     * there labels each node with its component's min id — the same
-    * rows, without the label and contraction plans. */
+    * rows, without the label and contraction plans, whose jobs and
+    * generated classes are most of a small call's cost. */
   private[graft] def clusterLabels(s: SparkSession, pairRows: DataFrame,
-                                   slotPrefix: String,
-                                   localMaxPairs: Long = 0L): DataFrame = {
+                                   slotPrefix: String): DataFrame = {
     def slot(name: String) = s"${slotPrefix}_$name"
     // Checkpoint the pair list first: the labels and the contracted
     // edges both read it, and an unmaterialized plan would run the whole
@@ -490,9 +495,10 @@ object Text {
     val pairs = Pins.pin(pairRows.observe(pairCount, count(lit(1)).as("n"),
       count(when(col("a_id").isNull || col("b_id").isNull, lit(1)))
         .as("nulls")), slot("pairs"))
-    if (localMaxPairs > 0 &&
-        pairCount.get("n").asInstanceOf[Long] <= localMaxPairs &&
-        pairCount.get("nulls") == 0L)
+    if (pairCount.get("n").asInstanceOf[Long] <= LocalMaxPairs &&
+        pairCount.get("nulls") == 0L &&
+        Seq("a_id", "b_id").forall(pairs.schema(_).dataType ==
+          org.apache.spark.sql.types.LongType))
       return localLabels(s, pairs)
     // not pinned: one projection of the pinned pairs
     val edges = mirror(pairs.select(col("a_id").as("a"), col("b_id").as("b")))
@@ -589,6 +595,12 @@ object Text {
       .withColumn("keep", col("doc_id") === col("cluster_id"))
   }
 
+  /** Pair lists up to this many rows are labelled on the driver by
+    * [[clusterLabels]]: a collected pair costs about 100 bytes, so a
+    * few MB at most, where the fixpoint's label and contraction plans
+    * cost four Spark jobs or more whatever the size. */
+  private[graft] val LocalMaxPairs = 1L << 16
+
   /** [[clusterLabels]]' output for a pair list small enough for the
     * driver: union-find with path halving, each root the min id of its
     * component, emitted as a local relation. */
@@ -605,11 +617,10 @@ object Text {
       }
       v
     }
-    pairs.select(col("a_id").cast("long"), col("b_id").cast("long"))
-      .collect().foreach { r =>
-        val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
-        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-      }
+    pairs.select("a_id", "b_id").collect().foreach { r =>
+      val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
     val rows = parent.keys.toSeq.map { d =>
       val c = find(d)
       org.apache.spark.sql.Row(d, c, d == c)

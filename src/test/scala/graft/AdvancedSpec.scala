@@ -135,14 +135,17 @@ class AdvancedSpec extends SparkSpec {
       val reliable = SparkEntry.queries("q_dedup_clusters")(spark, sf)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
       assert(reliable.sameElements(default))
-      // loop state went through named parquet slots under the ckpt dir
-      // (namespaced by the session's id in the pin registry)
+      // the pair list went through a named parquet slot under the ckpt
+      // dir (namespaced by the session's id in the pin registry); a
+      // fixture-sized list is then labelled on the driver, so no loop
+      // state is written (CurationPathSpec's chain test asserts the
+      // fixpoint's slots on a list past Text.LocalMaxPairs)
       val base = new java.io.File(ops.Pins.slotDir(spark))
       val slots = Option(base.list()).map(_.toSet).getOrElse(Set.empty)
-      assert(Set("cc_pairs", "cc_labels_0", "cc_cedges").subsetOf(slots),
-        s"$slots")
-      // the mirrored edge list is two projections of the pinned pairs:
-      // it is read twice, never written
+      assert(slots.contains("cc_pairs"), s"$slots")
+      assert(!slots.exists(_.startsWith("cc_labels")), s"$slots")
+      // the mirrored edge list is a projection of the pinned pairs:
+      // it is read, never written
       assert(!slots.contains("cc_edges"), s"$slots")
     } finally spark.conf.unset("spark.graft.reliableCheckpoint")
   }

@@ -342,19 +342,23 @@ class ApiSpec extends SparkSpec {
     // a 10-node chain: the contracted label graph is still chain-shaped,
     // so the fixpoint needs several rounds — 2 is not enough and must
     // fail LOUDLY (unconverged labels would split one true component),
-    // while the default bound converges and labels the whole chain 1
-    val chain = (1L until 10L).map(i => (i, i + 1)).toDF("u", "v")
+    // while the default bound converges and labels the whole chain 1.
+    // A clique on 1000… takes the edge list past the bound under which
+    // the driver labels it without rounds.
+    val edges = (1L until 10L).map(i => (i, i + 1)) ++ paddingClique(1000L)
+    val chain = edges.toDF("u", "v")
     val s2 = spark.newSession()
     s2.conf.set("spark.graft.ccMaxRounds", "2")
     import s2.implicits._
-    val chain2 = (1L until 10L).map(i => (i, i + 1)).toDF("u", "v")
+    val chain2 = edges.toDF("u", "v")
     val e = intercept[IllegalArgumentException] {
       Graft.connectedComponents(chain2, "u", "v").collect()
     }
     assert(e.getMessage.contains("ccMaxRounds"))
     val labels = Graft.connectedComponents(chain, "u", "v")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels == (1L to 10L).map(_ -> 1L).toMap)
+    assert(labels == (1L to 10L).map(_ -> 1L).toMap ++
+      edges.filter(_._1 >= 1000L).flatMap(p => Seq(p._1, p._2)).map(_ -> 1000L))
   }
 
   test("connectedComponents agrees with the graded cluster engine (fixture)") {

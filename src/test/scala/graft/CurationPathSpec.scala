@@ -11,8 +11,8 @@ import graft.plans.TopKPerGroupExec
 /** The lean curation path: the two-phase heap top-k behind knnCosine
   * (partial heap per input partition, final heap after the exchange)
   * against the window spelling it replaced, the clusterLabels exits
-  * (no loop when contraction leaves no edge, convergence on a chain,
-  * union-find on the driver for a small pair list), dedupClusters
+  * (union-find on the driver for a small pair list, no loop when
+  * contraction leaves no edge, convergence on a chain), dedupClusters
   * against union-find, and tfidf's one-exchange spelling against the
   * join-and-window one it replaced. */
 class CurationPathSpec extends SparkSpec {
@@ -154,12 +154,38 @@ class CurationPathSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2)))
       .toMap
 
-  test("clusterLabels: a clique-only graph returns the min-id labels with no loop slot") {
-    // three cliques and a single pair: each collapses at init
+  /** The labels of [[paddingClique]]`(from)`'s nodes. */
+  private def paddingLabels(from: Long): Map[Long, (Long, Boolean)] =
+    paddingClique(from).flatMap(p => Seq(p._1, p._2)).distinct
+      .map(d => d -> (from, d == from)).toMap
+
+  test("clusterLabels: a small pair list is labelled on the driver") {
+    // cliques, a single pair and a chain, the pairs in either direction
     val cliques = Seq(Seq(3L, 5L, 9L), Seq(10L, 11L, 12L, 13L), Seq(20L, 21L))
-    val pairs = for (c <- cliques; a <- c; b <- c if a < b) yield (a, b)
-    val want = cliques.flatMap(c => c.map(d => d -> (c.min, d == c.min))).toMap
-    assert(labelsOf(pairs, "clq_local") == want)
+    val pairs = (for (c <- cliques; a <- c; b <- c if a < b) yield (b, a)) ++
+      (30L until 40L).map(i => (i, i + 1))
+    val want = (cliques.flatMap(c => c.map(d => d -> (c.min, d == c.min))) ++
+      (30L to 40L).map(d => d -> (30L, d == 30L))).toMap
+    spark.conf.set("spark.graft.reliableCheckpoint", "true")
+    try {
+      val local = ops.Text.clusterLabels(spark, pairs.toDF("a_id", "b_id"), "loc")
+      assert(flattenPlan(local.queryExecution.executedPlan).collect {
+        case e: org.apache.spark.sql.execution.LocalTableScanExec => e
+      }.nonEmpty)
+      assert(local.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2)))
+        .toMap == want)
+      assert(slotsOf("loc") == Set("loc_pairs"), s"${slotsOf("loc")}")
+    } finally spark.conf.unset("spark.graft.reliableCheckpoint")
+  }
+
+  test("clusterLabels: a clique-only graph returns the min-id labels with no loop slot") {
+    // three cliques and a single pair, and one clique that takes the
+    // pair list past the driver-side bound: each collapses at init
+    val cliques = Seq(Seq(3L, 5L, 9L), Seq(10L, 11L, 12L, 13L), Seq(20L, 21L))
+    val pairs = (for (c <- cliques; a <- c; b <- c if a < b) yield (a, b)) ++
+      paddingClique(1000L)
+    val want = cliques.flatMap(c => c.map(d => d -> (c.min, d == c.min))).toMap ++
+      paddingLabels(1000L)
     spark.conf.set("spark.graft.reliableCheckpoint", "true")
     try {
       assert(labelsOf(pairs, "clq") == want)
@@ -169,30 +195,19 @@ class CurationPathSpec extends SparkSpec {
   }
 
   test("clusterLabels: a chain graph still converges through the loop") {
-    val pairs = (1L until 20L).map(i => (i, i + 1)) ++ Seq((40L, 41L))
+    // padded past the driver-side bound, so the fixpoint runs
+    val pairs = (1L until 20L).map(i => (i, i + 1)) ++ Seq((40L, 41L)) ++
+      paddingClique(1000L)
     val want = ((1L to 20L).map(d => d -> (1L, d == 1L)) ++
-      Seq(40L -> (40L, true), 41L -> (40L, false))).toMap
+      Seq(40L -> (40L, true), 41L -> (40L, false))).toMap ++
+      paddingLabels(1000L)
     spark.conf.set("spark.graft.reliableCheckpoint", "true")
     try {
       assert(labelsOf(pairs, "chain") == want)
-      assert(Set("chain_labels_1", "chain_labels_2").subsetOf(slotsOf("chain")),
+      assert(Set("chain_pairs", "chain_labels_0", "chain_cedges",
+          "chain_labels_1", "chain_labels_2").subsetOf(slotsOf("chain")),
         s"${slotsOf("chain")}")
     } finally spark.conf.unset("spark.graft.reliableCheckpoint")
-  }
-
-  test("clusterLabels: the driver-side exit equals the fixpoint on cliques and a chain") {
-    val cliques = for (c <- Seq(Seq(3L, 5L, 9L), Seq(10L, 11L, 12L, 13L));
-                       a <- c; b <- c if a < b) yield (a, b)
-    val chain = (1L until 20L).map(i => (i, i + 1)) ++ Seq((41L, 40L))
-    for ((pairs, name) <- Seq(cliques -> "clq", chain -> "chn")) {
-      val df = pairs.toDF("a_id", "b_id")
-      val local = ops.Text.clusterLabels(spark, df, s"${name}_l", 1000L)
-      assert(flattenPlan(local.queryExecution.executedPlan).collect {
-        case e: org.apache.spark.sql.execution.LocalTableScanExec => e
-      }.nonEmpty, name)
-      assert(local.collect().toSet ==
-        ops.Text.clusterLabels(spark, df, s"${name}_d").collect().toSet, name)
-    }
   }
 
   // -- dedupClusters ----------------------------------------------------------
@@ -291,11 +306,15 @@ class CurationPathSpec extends SparkSpec {
     .toDF("doc_id", "text").repartition(3)
 
   test("tfidf equals the join-and-window spelling row for row") {
-    for (k <- Seq(1, 2, 3, 20)) {
-      val got = ops.Text.tfidf(oddDocs, k)
-      val want = joinTfidf(oddDocs, k)
+    // with every id null, n_docs is 0 and every score null: ties by token
+    val nullIds = Seq[(java.lang.Long, String)]((null, "b a c"), (null, "d a"))
+      .toDF("doc_id", "text")
+    for (docs <- Seq(oddDocs, nullIds); k <- Seq(1, 2, 3, 20)) {
+      val got = ops.Text.tfidf(docs, k)
+      val want = joinTfidf(docs, k)
       assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, s"k=$k")
     }
+    assert(ops.Text.tfidf(nullIds, 2).count() == 2)
     // n_docs is 7 — ids 1 to 7: the empty and the null text count, the
     // null id does not — while a's df of 5 counts the null id's doc
     val idf = ops.Text.tfidf(oddDocs, 20).filter(col("doc_id") === 7L)

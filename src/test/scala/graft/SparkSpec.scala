@@ -22,6 +22,16 @@ trait SparkSpec extends AnyFunSuite {
       case _ => p +: p.children.flatMap(flattenPlan)
     }
   }
+  /** The pairs of a clique on ids `from`, `from + 1`, … just big
+    * enough that its pair list exceeds ops.Text.LocalMaxPairs: padded
+    * with it, a graph runs the distributed label fixpoint instead of
+    * the driver-side union-find. */
+  def paddingClique(from: Long): Seq[(Long, Long)] = {
+    val n = Iterator.from(2)
+      .find(n => n.toLong * (n - 1) / 2 > ops.Text.LocalMaxPairs).get
+    for (a <- 0 until n; b <- a + 1 until n) yield (from + a, from + b)
+  }
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
