@@ -10,7 +10,7 @@ import graft.ops.{Corpus, Curation, DistRank, Pins, Pipeline, Sketches, Text,
   * library (round-11 item 5) — the entry points a user of the graded
   * query surface calls on their OWN tables. Every function here
   * DELEGATES to the same machinery the 480 graded queries run
-  * (Text.maskGroupPairs / invertedPairs / clusterLabels,
+  * (Text.exactPairs / clusterLabels,
   * DistRank.gate / rank / prefixSum), so the library and
   * the graded surface cannot drift: ApiSpec proves each operator on a
   * non-fixture schema AND cross-checks it against the corresponding
@@ -136,10 +136,9 @@ object Graft {
   /** Exact near-duplicate pairs over any (id, text) table: whitespace
     * tokens, distinct per doc, Jaccard ≥ thresholdBp/10⁴ — emitted as
     * (a_id, b_id, common, na, nb, j_bp) with a_id < b_id. Delegates to
-    * the graded dual-strategy cores: a ≤64-token vocabulary takes the
-    * distinct-mask popcount scan (O(M²) over distinct token SETS, never
-    * O(N²) over docs), anything larger the inverted-index co-occurrence
-    * join with the prefix-count threshold pushed in. J ≥ p/10⁴ is the
+    * the graded exact-pairs core ([[Text.exactPairs]]): a ≤64-token
+    * vocabulary takes its 64-bit-mask popcount tiers, anything larger
+    * the inverted-index co-occurrence join. J ≥ p/10⁴ is the
     * exact integer predicate common·(p+10⁴) ≥ p·(na+nb) — no float
     * boundary anywhere. Output is Ω(pairs), inherent to the
     * pair-listing contract; see [[dedupClusters]] for the N-row
@@ -148,8 +147,8 @@ object Graft {
                    thresholdBp: Int = 8000): DataFrame = {
     require(thresholdBp > 0 && thresholdBp <= 10000,
       s"thresholdBp must be in (0, 10000], got $thresholdBp")
-    val dt = postings(df, idCol, textCol)
-    pairsOf(dt, dt.select("token").distinct().count(), thresholdBp)
+    withJbp(Text.exactPairsOn(postings(df, idCol, textCol),
+      thresholdBp + 10000, thresholdBp))
   }
 
   /** The distinct (doc_id, token) postings of any (id, text) table —
@@ -160,23 +159,9 @@ object Graft {
     Text.tokDf(df, col(textCol), Seq(col(idCol).cast("long").as("doc_id")))
       .distinct()
 
-  /** A vocabulary small enough for the mask-group popcount scan. */
-  private def maskGroupable(s: SparkSession, dictN: Long): Boolean =
-    dictN <= math.min(64L, Text.maskGroupMaxDict(s))
-
-  /** The exact pairs core of [[nearDupPairs]] over postings `dt` whose
-    * vocabulary size `dictN` the caller already holds — [[dedupClusters]]
-    * reads it from its stats probe instead of counting it again. */
-  private def pairsOf(dt: DataFrame, dictN: Long,
-                      thresholdBp: Int): DataFrame = {
-    val (cMul, sMul) = (thresholdBp + 10000, thresholdBp)
-    val pairs =
-      if (maskGroupable(dt.sparkSession, dictN))
-        Text.maskGroupPairs(dt, cMul, sMul)
-      else Text.invertedPairs(dt, cMul, sMul)
-    pairs.withColumn("j_bp",
-      expr("common * 10000 div (na + nb - common)"))
-  }
+  /** Exact pairs with their Jaccard in basis points. */
+  private def withJbp(pairs: DataFrame): DataFrame =
+    pairs.withColumn("j_bp", expr("common * 10000 div (na + nb - common)"))
 
   /** Near-duplicate clusters over any (id, text) table: connected
     * components of the [[nearDupPairs]] graph at `thresholdBp`, emitted
@@ -211,16 +196,17 @@ object Graft {
     * needing the exact threshold semantics at lethal density forces
     * the exact tier (conf ≤0) and accepts that tier's cost. Same
     * output shape either way. Two probe exceptions keep cheap corpora
-    * exact: a vocabulary small enough for [[nearDupPairs]]' mask-group
-    * dispatch (≤ min(64, `spark.graft.maskGroupMaxDict`) distinct
-    * tokens) stays exact at ANY density — that path is O(dict²) group
-    * work, not candidate enumeration — and an empty corpus skips
-    * routing trivially. NOTE the probe itself makes this call EAGER:
+    * exact: a corpus the exact-pairs core sends to a 64-bit-mask tier
+    * ([[Text.pairTier]] on the probe's vocabulary size and doc count)
+    * stays exact at ANY density — those tiers pay popcounts over docs
+    * or over distinct token sets, never candidate enumeration — and
+    * an empty corpus skips routing trivially. NOTE the probe itself
+    * makes this call EAGER:
     * one action — the token-histogram aggregate (candidate count AND
     * vocabulary size) cross-joined with the doc count — runs at
     * DataFrame-construction time whenever the gate is enabled, and its
-    * vocabulary size also picks the exact tier's pairs strategy. The
-    * graded fixtures sit ~50× under the floor (sf0.1 ≈ 18.5k
+    * vocabulary size and doc count also pick the exact tier's pairs
+    * strategy. The graded fixtures sit ~50× under the floor (sf0.1 ≈ 18.5k
     * cand/doc) and keep the exact contract; the 100×-salted smoke
     * corpus (~1.8×10⁸ cand/doc) routes and COMPLETES (ScaleSmoke
     * `apidedup`, BASELINE.md r14) instead of dying on disk. Routing is
@@ -256,12 +242,10 @@ object Graft {
       val cand = if (probe.isNullAt(0)) 0L else probe.getLong(0)
       val dictN = probe.getLong(1)
       val nDocs = if (probe.isNullAt(2)) 0L else probe.getLong(2)
-      // a mask-group-sized vocabulary never enumerates candidates —
-      // nearDupPairs dispatches it to the O(dict²) group path — so a
-      // tiny-dict dense corpus must NOT be routed to the lossy tier
-      // (round-14 advice)
-      val maskGroup = maskGroupable(s, dictN)
-      if (!maskGroup && nDocs > 0 && cand / nDocs > maxCandPerDoc) {
+      // the mask tiers never enumerate candidates, so a tiny-dict dense
+      // corpus must NOT be routed to the lossy tier (round-14 advice)
+      val tier = Text.pairTier(s, dictN, nDocs)
+      if (tier == "atscale" && nDocs > 0 && cand / nDocs > maxCandPerDoc) {
         // breadcrumb for smokes/ops dashboards: WHICH tier ran, at
         // what measured density, and WHICH banding — the routed output
         // is a different contract (LSH clustering at the ladder rung's
@@ -282,10 +266,11 @@ object Graft {
       }
       s.conf.set("spark.graft.lastDedupRoute",
         s"exact:candPerDoc=${if (nDocs > 0) cand / nDocs else 0L}" +
-          (if (maskGroup) ":maskgroup" else ""))
-      // the probe's vocabulary size picks the pairs strategy: no second
+          (if (tier == "atscale") "" else s":$tier"))
+      // the probe's sizes pick the pairs strategy: no second
       // tokenize-and-count
-      pairsOf(postings(df, idCol, textCol), dictN, thresholdBp)
+      withJbp(Text.exactPairs(postings(df, idCol, textCol),
+        thresholdBp + 10000, thresholdBp, dictN, nDocs))
     } else {
       s.conf.set("spark.graft.lastDedupRoute", "exact:forced")
       nearDupPairs(df, idCol, textCol, thresholdBp)

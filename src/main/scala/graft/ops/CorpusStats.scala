@@ -22,14 +22,13 @@ import org.apache.spark.sql.functions._
   * aggregation; the only broadcasts are vocabulary- or vocab²-bounded
   * marginal tables and 1-row corpus constants. The one pair-listing
   * intermediate (the recall audit's candidate/truth sets) rides the
-  * §2.11 stats-driven strategies (maskGroupPairs / band equi-join). */
+  * exact-pairs core ([[Text.exactPairs]]) and the band equi-join. */
 object CorpusStats {
 
   /** (doc_id, token) DISTINCT postings of the en corpus. */
   private def dt(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").filter(col("lang") === "en")
-      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "").distinct()
+    Text.tokDf(t(s, dir, "documents").filter(col("lang") === "en"))
+      .distinct()
 
   /** Sequential (first, second) adjacent-token rows of the en corpus —
     * occurrence-grade, not distinct (collocation counts want every
@@ -170,8 +169,8 @@ object CorpusStats {
   /** MinHash-LSH audit: precision/recall of the q_dedup_minhash banding
     * (16 md5 lanes, 8 bands of 2) against EXACT Jaccard ≥ 0.5 truth on
     * the en corpus — the one number that justifies (or kills) a sketch
-    * configuration before a 100 TB run. Truth rides the §2.11
-    * stats-driven pair strategies (maskGroupPairs → inverted fallback);
+    * configuration before a 100 TB run. Truth rides the exact-pairs
+    * core ([[Text.exactPairs]]);
     * candidates are the band-bucket equi-join; both sets are compared
     * by packed pair key and only the five summary counts are emitted —
     * the output is O(1), never the pair lists. */
@@ -206,7 +205,7 @@ object CorpusStats {
     // private derivation: a mod-filtered universe is not the pinned one.
     val truth =
       (if (mod <= 1) DedupAudit.candPairs(s, dir)
-       else Text.maskGroupPairs(
+       else Text.exactPairsOn(
          DedupAudit.auditSample(s, dir, Sketches.enPostings(s, dir))
            .filter(col("doc_id") % mod === 0), 3, 1))
         .select("a_id", "b_id")

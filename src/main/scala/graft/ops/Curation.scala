@@ -125,72 +125,34 @@ object Curation {
   }
 
   /** Exact Jaccard ≥ 0.9 similarity join (en docs) — the high-threshold
-    * exact set-similarity contract, with TWO physical strategies behind
-    * one logical result (the nearPairs pattern, same
-    * `spark.graft.pairNljMaxDocs` switch):
-    *
-    *  - tiny vocabulary (≤ 64 distinct tokens — this fixture) and corpus
-    *    under the NLJ cutoff: 64-bit token masks + broadcast popcount
-    *    pair scan. On a 31-token vocabulary EVERY token's posting list is
-    *    corpus-sized, so any token-keyed join (inverted index OR prefix
-    *    filter) degenerates to all-pairs with extra shuffles; the mask
-    *    scan does the same pair space at 3 ALU ops/pair.
-    *  - otherwise: PPJoin-style PREFIX FILTERING — tokens globally
-    *    ordered by (df asc, token), each doc posts only its
-    *    (n − ⌈0.9·n⌉ + 1)-prefix of rarest tokens, candidates must share
-    *    a prefix token, survivors verified by the exact integer
-    *    cross-multiplication 19·common ≥ 9·(na+nb) (⇔ Jaccard ≥ 0.9).
-    *    Prefix filtering is LOSSLESS (Chaudhuri/Bayardo SSJoin lemma:
-    *    any pair with overlap ≥ α shares a token in its (len−α+1)-
-    *    prefixes under one total order; Jaccard ≥ t ⇒ overlap ≥
-    *    ⌈t·max(na,nb)⌉), so both branches — and the all-pairs oracle —
-    *    are the same bag of rows (branch equality spec-asserted). This
-    *    is the branch that survives 100 TB on a REAL vocabulary: it
-    *    posts ~(1−t)·n tokens per doc and the df ordering puts the
-    *    rarest (= least skewed) keys in the prefix; the df rank table is
-    *    vocabulary-sized (broadcast-dims, not corpus state). */
+    * exact set-similarity contract, through the exact-pairs core
+    * ([[Text.exactPairs]] at (19, 9)). On this fixture's 31-token
+    * vocabulary the core takes its 64-bit-mask tiers: EVERY token's
+    * posting list is corpus-sized there, so any token-keyed join
+    * (inverted index OR prefix filter) degenerates to all-pairs with
+    * extra shuffles. The core's at-scale tier here is PPJoin-style
+    * PREFIX FILTERING ([[prefixPairs]]) — tokens globally ordered by
+    * (df asc, token), each doc posts only its (n − ⌈0.9·n⌉ + 1)-prefix
+    * of rarest tokens, candidates must share a prefix token, survivors
+    * verified by the exact integer cross-multiplication
+    * 19·common ≥ 9·(na+nb) (⇔ Jaccard ≥ 0.9). Prefix filtering is
+    * LOSSLESS (Chaudhuri/Bayardo SSJoin lemma: any pair with overlap ≥ α
+    * shares a token in its (len−α+1)-prefixes under one total order;
+    * Jaccard ≥ t ⇒ overlap ≥ ⌈t·max(na,nb)⌉), so every tier — and the
+    * all-pairs oracle — gives the same bag of rows (tier equality
+    * spec-asserted). This is the tier that survives 100 TB on a REAL
+    * vocabulary: it posts ~(1−t)·n tokens per doc and the df ordering
+    * puts the rarest (= least skewed) keys in the prefix; the df rank
+    * table is vocabulary-sized (broadcast-dims, not corpus state). */
   def qJaccardPrefix(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").filter(col("lang") === "en")
-    val dt = docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "").distinct()
-    val dict = dt.select("token").distinct()
-    val nljMax = Text.pairNljMaxDocs(s)
-    val dictN = dict.count()
-    // Third branch (tiny vocab, large corpus): distinct-mask grouping —
-    // prefix filtering is no help on a ≤64-token vocabulary (every
-    // posting list, prefix or not, is corpus-sized), but the number of
-    // DISTINCT token sets is ≪ N, so pair over those and expand
-    // (Text.maskGroupPairs; (19, 9) is Jaccard ≥ 0.9).
-    val pairs =
-      if (dictN <= 64 && docs.count() <= nljMax) maskPairs(dt)
-      else if (dictN <= math.min(64L, Text.maskGroupMaxDict(s)))
-        Text.maskGroupPairs(dt, 19, 9)
-      else prefixPairs(dt)
+    val dt = Text.tokDf(docs).distinct()
+    val pairs = Text.exactPairs(dt, 19, 9,
+      dt.select("token").distinct().count(), docs.count(),
+      (d, _, _) => prefixPairs(d))
     orderedAll(pairs.select(col("a_id"), col("b_id"),
       round(col("common") * lit(1.0) /
         (col("na") + col("nb") - col("common")), 4).as("jacc")))
-  }
-
-  /** Small-vocab branch: 64-bit mask + broadcast popcount scan at the
-    * (19, 9) threshold. Mirrors Text.nearPairs' mask branch; dense token
-    * ids come from an alphabetical rank over the ≤64-row dictionary. */
-  private def maskPairs(dt: DataFrame): DataFrame = {
-    val dict = dt.select("token").distinct()
-      .withColumn("tok_id",
-        row_number().over(Window.orderBy(col("token"))).cast("int") - 1)
-    val masks = dt.join(broadcast(dict), "token")
-      .groupBy("doc_id")
-      .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), tok_id))").as("mask"),
-        count(lit(1)).as("nt"))
-    val a = masks.select(col("doc_id").as("a_id"), col("mask").as("ma"),
-      col("nt").as("na"))
-    val b = masks.select(col("doc_id").as("b_id"), col("mask").as("mb"),
-      col("nt").as("nb"))
-    a.join(broadcast(b), col("a_id") < col("b_id"))
-      .withColumn("common", expr("CAST(bit_count(ma & mb) AS BIGINT)"))
-      .filter(col("common") * 19 >= (col("na") + col("nb")) * 9)
-      .select("a_id", "b_id", "common", "na", "nb")
   }
 
   /** At-scale branch: lossless prefix filtering under the global
@@ -247,9 +209,8 @@ object Curation {
     * boilerplate detection. Vocabulary-sized intermediates; the 3-way
     * self-join is the algorithm. */
   def qTriangleCount(s: SparkSession, dir: String): DataFrame = {
-    val dt = t(s, dir, "documents").filter(col("lang") === "en")
-      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "").distinct()
+    val dt = Text.tokDf(t(s, dir, "documents")
+      .filter(col("lang") === "en")).distinct()
     val und = dt.as("a")
       .join(dt.as("b"), col("a.doc_id") === col("b.doc_id") &&
         col("a.token") < col("b.token"))

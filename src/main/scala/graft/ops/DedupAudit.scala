@@ -87,15 +87,15 @@ object DedupAudit {
 
   /** Candidate pairs with exact overlap stats at the loosest sweep
     * cut (cMul=3, sMul=1 — common ≥ (na+nb)/3 ⟺ J = c/(na+nb−c) ≥
-    * 0.5, exactly the lowest band below). Strategy dispatch mirrors
-    * Text.nearPairs: tiny-vocab corpora take the distinct-mask
-    * popcount path (O(M²) over distinct token sets), everything else
-    * the inverted-index co-occurrence join — a loose cut makes the
-    * posting join strictly heavier, so inheriting the stats-driven
-    * switch matters MORE here than at (9,4). The salted scale-smoke
-    * corpus (vocab > 64, corpus-wide postings) is the documented
-    * §2.11 adversarial case for ANY exact pair listing and is
-    * excluded from the 10×/100× table like q_dedup_near itself.
+    * 0.5, exactly the lowest band below), from the exact-pairs core
+    * [[Text.exactPairs]]: tiny-vocab corpora take its 64-bit-mask
+    * tiers, everything else the inverted-index co-occurrence join — a
+    * loose cut makes the posting join strictly heavier, so the
+    * stats-driven choice matters MORE here than at (9,4). The corpus
+    * size it reads is the sampled postings' doc count. The salted
+    * scale-smoke corpus (vocab > 64, corpus-wide postings) is the
+    * documented §2.11 adversarial case for ANY exact pair listing and
+    * is excluded from the 10×/100× table like q_dedup_near itself.
     * Exact J in bp is re-derived per pair.
     *
     * Round 10: the token postings come from the session-pinned
@@ -108,12 +108,8 @@ object DedupAudit {
   private[ops] def candPairs(s: SparkSession, dir: String): DataFrame =
     Pins.pinned(s, s"cand_pairs_${auditSampleBp(s, dir)}", dir) {
       val dt = auditSample(s, dir, Sketches.enPostings(s, dir))
-      val dictN = dt.select("token").distinct().count()
-      val base =
-        if (dictN <= math.min(64L, Text.maskGroupMaxDict(s)))
-          Text.maskGroupPairs(dt, 3, 1)
-        else Text.invertedPairs(dt, 3, 1)
-      base.withColumn("j_bp", expr("common * 10000 div (na + nb - common)"))
+      Text.exactPairsOn(dt, 3, 1)
+        .withColumn("j_bp", expr("common * 10000 div (na + nb - common)"))
     }
 
   /** Test hook (Round10Batch2Spec): the pinned loose candidate set —

@@ -14,21 +14,20 @@ import org.apache.spark.sql.functions._
   * (integer test `common·100 ≥ 49·(na+nb)`, i.e. Jaccard ≳ 0.96) — a
   * 10× stricter twin of the q_dedup_near graph, chosen so the edge set
   * stays community-sparse (~30k edges at sf0.1) where the 4/9 graph is
-  * half a million. Pairs come from [[Text.maskGroupPairs]] — the
-  * tiny-vocab strategy that scans DISTINCT token-set masks, never the
-  * O(N²) doc space.
+  * half a million. Pairs come from the exact-pairs core
+  * [[Text.exactPairs]] at (100, 49): its 64-bit-mask tiers on a tiny
+  * vocabulary, the inverted-index join on a wider one.
   *
   * Determinism: all counts are integers; ratios are non-negative
   * integer divisions (truncation == floor in both engines).
   */
 object Graphs {
 
-  /** Strict near-dup pairs (a_id < b_id, distinct by construction: each
-    * doc pair expands from exactly one mask pair or one within-mask
-    * group), from the session-pinned [[Sketches.enPostings]]. Pinned
+  /** Strict near-dup pairs (a_id < b_id, each doc pair once), from the
+    * session-pinned [[Sketches.enPostings]]. Pinned
     * once per (session, dir) — all the graph queries (and every
     * self-join inside each) reuse the materialized edge list instead of
-    * re-running the mask-pair pipeline per consumer; the
+    * re-running the pair derivation per consumer; the
     * edge list is community-sparse (~30k rows at sf0.1), far below any
     * executor-memory concern. Same pinning pattern (and cluster
     * durability caveat) as qPagerank's loop invariant. */
@@ -57,7 +56,7 @@ object Graphs {
         raw
       }
       case None => Pins.pinned(s, "graph8_edges", dir)(
-        Text.maskGroupPairs(Sketches.enPostings(s, dir), 100, 49)
+        Text.exactPairsOn(Sketches.enPostings(s, dir), 100, 49)
           .select("a_id", "b_id"))
     }
   }

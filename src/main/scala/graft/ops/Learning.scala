@@ -162,9 +162,8 @@ object Learning {
     * bound makes the loop statically finite (the q_kmeans_iter /
     * q_pagerank precedent). */
   def qGraphBfs(s: SparkSession, dir: String): DataFrame = {
-    val dt = t(s, dir, "documents").filter(col("lang") === "en")
-      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "").distinct()
+    val dt = Text.tokDf(t(s, dir, "documents")
+      .filter(col("lang") === "en")).distinct()
     val und = dt.as("a")
       .join(dt.as("b"), col("a.doc_id") === col("b.doc_id") &&
         col("a.token") < col("b.token"))

@@ -43,9 +43,8 @@ object Sketches {
     * Cluster-durability caveat as [[Pins.pin]]. */
   private[graft] def enPostings(s: SparkSession, dir: String): DataFrame =
     Pins.pinned(s, "mh_postings", dir)(
-      t(s, dir, "documents").filter(col("lang") === "en")
-        .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-        .filter(col("token") =!= "").distinct())
+      Text.tokDf(t(s, dir, "documents").filter(col("lang") === "en"))
+        .distinct())
 
   /** The 16 md5-lane minima per doc (the ENGINE-PORTABLE 15-hex-char
     * sketch documented on [[qDedupMinhash]]), pinned once per
@@ -323,21 +322,15 @@ object Sketches {
     // verify with the 64-bit popcount when the vocabulary fits (3 ALU ops
     // per pair) and fall back to array_intersect otherwise.
     val dt = docs.select(col("doc_id"), explode(col("toks")).as("token"))
-    val dict = dt.select("token").distinct()
-      .withColumn("tok_id",
-        row_number().over(Window.orderBy(col("token"))).cast("int") - 1)
-    val verified = if (dict.count() <= 64) {
-      val masks = dt.join(broadcast(dict), "token")
-        .groupBy("doc_id")
-        .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), tok_id))").as("mask"),
-          count(lit(1)).as("nt"))
+    val verified = if (Text.tokIds(dt).count() <= 64) {
+      val masks = Text.tokenMasks(dt)
       val ma = masks.select(col("doc_id").as("a_id"), col("mask").as("xa"),
         col("nt").as("na"))
       val mb = masks.select(col("doc_id").as("b_id"), col("mask").as("xb"),
         col("nt").as("nb"))
       cand
         .join(broadcast(ma), "a_id").join(broadcast(mb), "b_id")
-        .withColumn("common", expr("CAST(bit_count(xa & xb) AS BIGINT)"))
+        .withColumn("common", Text.commonBits("xa", "xb"))
         .filter(col("common") * 9 >= (col("na") + col("nb")) * 4)
         .select("a_id", "b_id", "common", "na", "nb")
     } else {

@@ -273,32 +273,9 @@ object Text {
 
   /** Near-duplicate pairs by token-set Jaccard ≥ 0.8 within lang='en'.
     * Threshold in integer arithmetic (9·common ≥ 4·(|A|+|B|)) — no float
-    * compare.
-    *
-    * Two physical strategies behind one logical contract:
-    *  - vocabulary ≤ 64 distinct tokens (this corpus: 31) AND corpus ≤
-    *    `spark.graft.pairNljMaxDocs` (default 20k): encode each doc's
-    *    token set as a 64-bit mask; common = bit_count(maskA AND maskB).
-    *    The pair join is a broadcast range join over compact (doc_id,
-    *    mask, nt) rows — no token-stream self-join. ~10× faster here and
-    *    the per-pair work is 3 ALU ops. The corpus-size term matters:
-    *    vocab size does not bound doc count, and a 100× corpus with the
-    *    same 31-token vocab would still broadcast N rows and scan N²
-    *    pairs under a vocab-only cutoff.
-    *  - vocabulary ≤ 64 but corpus ABOVE the cutoff: distinct-mask
-    *    grouping ([[maskGroupPairs]]) — pair over the M ≪ N distinct
-    *    token sets, then expand groups; O(M²) instead of O(N²), and the
-    *    inverted join is no alternative here (every posting list is
-    *    corpus-sized on a tiny vocabulary).
-    *  - larger vocabularies: exact inverted-index pair join
-    *    (posting-list self-join + pair count) — nothing corpus-sized is
-    *    broadcast and the pair space is co-occurrence-bounded. The
-    *    100 TB path beyond that is MinHash-LSH banding (same output
-    *    contract, probabilistic recall).
-    * Strategy selection reads two scalars (dictionary size, corpus size)
-    * up front — the same kind of stats-driven choice AQE makes at
-    * shuffle points.
-    */
+    * compare. The strategy is [[exactPairs]]': on this corpus (31-token
+    * vocabulary, at most a few thousand en docs) the 64-bit-mask
+    * broadcast NLJ. */
   def qDedupNear(s: SparkSession, dir: String): DataFrame =
     orderedAll(nearPairs(s, dir))
 
@@ -322,67 +299,127 @@ object Text {
   private[ops] def nearPairsDeriveOn(s: SparkSession,
                                      docs: DataFrame): DataFrame = {
     val dt = tokDf(docs).distinct()
-    // Deterministic dense token ids: alphabetical rank (dictionary is tiny
-    // by construction — single-partition window over ≤ |vocab| rows).
-    val dict = dt.select("token").distinct()
-      .withColumn("tok_id",
-        row_number().over(Window.orderBy(col("token"))).cast("int") - 1)
-    val dictN = dict.count()
-    if (dictN <= 64 && docs.count() <= pairNljMaxDocs(s)) {
-      val masks = dt.join(broadcast(dict), "token")
-        .groupBy("doc_id")
-        .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), tok_id))").as("mask"),
-          count(lit(1)).as("nt"))
+    exactPairs(dt, 9, 4, dt.select("token").distinct().count(), docs.count())
+  }
+
+  // ---- exact token-set Jaccard pairs ------------------------------------
+
+  /** Exact token-set Jaccard pairs over (doc_id, token) DISTINCT
+    * postings `dt`: (a_id, b_id, common, na, nb) for every a_id < b_id
+    * with `cMul·common ≥ sMul·(na+nb)` in integer arithmetic — (9,4) is
+    * J ≥ 0.8, (19,9) J ≥ 0.9, (3,1) J ≥ 0.5, (100,49) J ≳ 0.96. The one
+    * core of the exact dedup family: q_dedup_near and the pairs built on
+    * it, q_jaccard_prefix, the dedup audits' loose candidates, the
+    * near-dup graph family and graft.api.Graft.nearDupPairs /
+    * dedupClusters all call it, so the choice of how to compute the
+    * pairs is made here and nowhere else. It reads two scalars the
+    * caller holds — the vocabulary size `dictN` and the corpus size
+    * `nDocs`, evaluated only for a vocabulary of ≤ 64 tokens — the
+    * same kind of stats-driven choice AQE makes at shuffle points
+    * ([[pairTier]]):
+    *  - "masknlj" (≤ 64 tokens, ≤ `spark.graft.pairNljMaxDocs` docs):
+    *    each doc's token set is one 64-bit mask ([[tokenMasks]]), and
+    *    common = bit_count(maskA AND maskB) over a broadcast range join
+    *    of compact (doc_id, mask, nt) rows — 3 ALU ops per pair, no
+    *    token-stream self-join. The corpus-size term matters: a
+    *    vocabulary does not bound the doc count, and a 100× corpus over
+    *    the same 31 tokens would still broadcast N rows and scan N²
+    *    pairs under a vocabulary-only cutoff.
+    *  - "maskgroup" (≤ min(64, `spark.graft.maskGroupMaxDict`) tokens,
+    *    more docs): [[maskGroupPairs]] pairs the M ≪ N distinct token
+    *    sets, then expands them to docs. Every posting list of a tiny
+    *    vocabulary is corpus-sized, so no token-keyed join helps here.
+    *  - "atscale" (anything larger): `atScale` — by default
+    *    [[invertedPairs]], the posting self-join whose pair space is
+    *    bounded by co-occurrence and which broadcasts nothing
+    *    corpus-sized; q_jaccard_prefix passes its lossless prefix
+    *    filter. The 100 TB path beyond that is MinHash-LSH banding (same
+    *    output contract, probabilistic recall).
+    * The masks cover at most 64 token ids: shiftleft(1L, 64) is 1 in
+    * Spark, so a wider vocabulary would alias bits and give wrong pairs.
+    * Every tier returns the same bag of rows. */
+  private[graft] def exactPairs(dt: DataFrame, cMul: Int, sMul: Int,
+      dictN: Long, nDocs: => Long,
+      atScale: (DataFrame, Int, Int) => DataFrame = invertedPairs)
+      : DataFrame = pairTier(dt.sparkSession, dictN, nDocs) match {
+    case "masknlj" =>
+      val masks = tokenMasks(dt)
       val a = masks.select(col("doc_id").as("a_id"), col("mask").as("ma"),
         col("nt").as("na"))
       val b = masks.select(col("doc_id").as("b_id"), col("mask").as("mb"),
         col("nt").as("nb"))
       a.join(broadcast(b), col("a_id") < col("b_id"))
-        .withColumn("common",
-          expr("CAST(bit_count(ma & mb) AS BIGINT)"))
-        .filter(col("common") * 9 >= (col("na") + col("nb")) * 4)
+        .withColumn("common", commonBits("ma", "mb"))
+        .filter(col("common") * cMul >= (col("na") + col("nb")) * sMul)
         .select("a_id", "b_id", "common", "na", "nb")
-    } else if (dictN <= math.min(64L, maskGroupMaxDict(s)))
-      maskGroupPairs(dt, 9, 4)
-    else invertedPairs(dt)
+    case "maskgroup" => maskGroupPairs(dt, cMul, sMul, atScale)
+    case _ => atScale(dt, cMul, sMul)
   }
 
-  /** Distinct-mask grouping — the tiny-vocab/LARGE-corpus strategy: when
-    * the vocabulary fits one 64-bit mask but the corpus exceeds the NLJ
-    * cutoff, neither of the other exact strategies holds up. Broadcasting
-    * N (doc, mask) rows scans O(N²) pairs, and on a ≤64-token vocabulary
-    * EVERY posting list is corpus-sized, so the inverted join degenerates
-    * to all-pairs with extra shuffles. But a ≤64-token vocabulary also
-    * means there are at most 2^64 — in practice M ≪ N — DISTINCT token
-    * sets: group docs by their exact mask first, run the popcount pair
-    * scan over distinct (mask, nt) rows only (O(M²), broadcast is
-    * M-sized), then expand each qualifying mask pair back to its doc
-    * groups with two mask-keyed joins (shuffle-partitioned, nothing
-    * corpus-sized broadcast). Docs sharing a mask are Jaccard-1 pairs and
-    * come from a within-group self-join. Output is the same
-    * (a_id, b_id, common, na, nb) bag as the sibling strategies —
-    * Ω(pairs), inherent to the pair-listing contract. Threshold
-    * `cMul·common ≥ sMul·(na+nb)`, same integer arithmetic as
-    * [[invertedPairs]]. */
-  private[graft] def maskGroupPairs(dt: DataFrame, cMul: Int,
-                                    sMul: Int): DataFrame = {
-    val dict = dt.select("token").distinct()
+  /** [[exactPairs]] with both sizes counted from the postings `dt`: its
+    * distinct tokens and its distinct docs (the docs the mask NLJ would
+    * broadcast), the second only for a ≤ 64-token vocabulary. */
+  private[graft] def exactPairsOn(dt: DataFrame, cMul: Int,
+                                  sMul: Int): DataFrame =
+    exactPairs(dt, cMul, sMul, dt.select("token").distinct().count(),
+      dt.select("doc_id").distinct().count())
+
+  /** The tier [[exactPairs]] takes for a vocabulary of `dictN` tokens
+    * over `nDocs` docs: "masknlj", "maskgroup" or "atscale". `nDocs` is
+    * read only when `dictN` ≤ 64. */
+  private[graft] def pairTier(s: SparkSession, dictN: Long,
+                              nDocs: => Long): String =
+    if (dictN <= 64 && nDocs <= pairNljMaxDocs(s)) "masknlj"
+    else if (dictN <= math.min(64L, maskGroupMaxDict(s))) "maskgroup"
+    else "atscale"
+
+  /** Dense token ids of the vocabulary of `dt`: (token, tok_id), the
+    * alphabetical rank from 0 — deterministic, and a single-partition
+    * window over vocabulary-sized rows. */
+  private[graft] def tokIds(dt: DataFrame): DataFrame =
+    dt.select("token").distinct()
       .withColumn("tok_id",
         row_number().over(Window.orderBy(col("token"))).cast("int") - 1)
-    val masks = dt.join(broadcast(dict), "token")
+
+  /** Each doc's token set as one 64-bit mask over [[tokIds]]: (doc_id,
+    * mask, nt). Only for a vocabulary of ≤ 64 tokens. */
+  private[graft] def tokenMasks(dt: DataFrame): DataFrame =
+    dt.join(broadcast(tokIds(dt)), "token")
       .groupBy("doc_id")
       .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), tok_id))").as("mask"),
         count(lit(1)).as("nt"))
+
+  /** |A ∩ B| of two [[tokenMasks]] mask columns, as a BIGINT. */
+  private[graft] def commonBits(a: String, b: String): Column =
+    expr(s"CAST(bit_count($a & $b) AS BIGINT)")
+
+  /** Distinct-mask grouping — [[exactPairs]]' tiny-vocab/LARGE-corpus
+    * tier: when the vocabulary fits one 64-bit mask but the corpus
+    * exceeds the NLJ cutoff, neither of the other tiers holds up.
+    * Broadcasting N (doc, mask) rows scans O(N²) pairs, and on a
+    * ≤64-token vocabulary EVERY posting list is corpus-sized, so the
+    * inverted join degenerates to all-pairs with extra shuffles. But in
+    * practice such a corpus has M ≪ N DISTINCT token sets: group docs by
+    * their exact mask first, run the popcount pair scan over distinct
+    * (mask, nt) rows only (O(M²), broadcast is M-sized), then expand
+    * each qualifying mask pair back to its doc groups with two
+    * mask-keyed joins (shuffle-partitioned, nothing corpus-sized
+    * broadcast). Docs sharing a mask are Jaccard-1 pairs and come from a
+    * within-group self-join. Ω(pairs) output, inherent to the
+    * pair-listing contract. */
+  private def maskGroupPairs(dt: DataFrame, cMul: Int, sMul: Int,
+      atScale: (DataFrame, Int, Int) => DataFrame): DataFrame = {
+    val masks = tokenMasks(dt)
     val dm = masks.select("mask", "nt").distinct()
     // Adversarial-density guard: the whole premise is M ≪ N distinct
-    // token sets; when a corpus violates it, the inverted join's
+    // token sets; when a corpus violates it, the at-scale tier's
     // co-occurrence bound beats an M-sized broadcast + M² scan.
     if (dm.count() > maskGroupMaxMasks(dt.sparkSession))
-      return invertedPairs(dt, cMul, sMul)
+      return atScale(dt, cMul, sMul)
     val x = dm.select(col("mask").as("mx"), col("nt").as("nx"))
     val y = dm.select(col("mask").as("my"), col("nt").as("ny"))
     val qual = x.join(broadcast(y), col("mx") < col("my"))
-      .withColumn("common", expr("CAST(bit_count(mx & my) AS BIGINT)"))
+      .withColumn("common", commonBits("mx", "my"))
       .filter(col("common") * cMul >= (col("nx") + col("ny")) * sMul)
     val byMask = masks.select("doc_id", "mask")
     val cross = qual
@@ -404,16 +441,16 @@ object Text {
   }
 
   /** Inverted-index Jaccard pair join over (doc_id, token) DISTINCT
-    * postings — the at-scale strategy of [[nearPairs]] (>64 vocab or
-    * corpus above the NLJ cutoff) and [[qDedupNgram]] (shingles renamed
-    * to `token`), exposed for direct testing. The Jaccard threshold is
-    * `cMul·common ≥ sMul·(|A|+|B|)` in integer arithmetic — (9,4) is
-    * J ≥ 0.8, (4,1) is J ≥ 1/3. Per-doc set sizes ride ON the posting
-    * rows (one window shuffle by doc_id) and come out of the pair
-    * aggregation as min() — constant within a group, so min() just reads
-    * it back. The former shape broadcast the per-doc size table twice,
-    * which replicates an N-row relation to every executor: fine at 5k
-    * docs, an OOM at 10⁸. This shape broadcasts nothing corpus-sized. */
+    * postings — [[exactPairs]]' default at-scale tier and
+    * [[qDedupNgram]]'s (shingles renamed to `token`), exposed for direct
+    * testing. The Jaccard threshold is `cMul·common ≥ sMul·(|A|+|B|)` in
+    * integer arithmetic — (9,4) is J ≥ 0.8, (4,1) is J ≥ 1/3. Per-doc
+    * set sizes ride ON the posting rows (one window shuffle by doc_id)
+    * and come out of the pair aggregation as min() — constant within a
+    * group, so min() just reads it back. The former shape broadcast the
+    * per-doc size table twice, which replicates an N-row relation to
+    * every executor: fine at 5k docs, an OOM at 10⁸. This shape
+    * broadcasts nothing corpus-sized. */
   private[graft] def invertedPairs(dt: DataFrame, cMul: Int = 9,
                                    sMul: Int = 4): DataFrame = {
     val post = dt.withColumn("nt",
@@ -977,9 +1014,7 @@ object Text {
   def qContainment(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").filter(col("lang") === "en")
     val dt = tokDf(docs).distinct()
-    val dict = dt.select("token").distinct()
-      .withColumn("tok_id",
-        row_number().over(Window.orderBy(col("token"))).cast("int") - 1)
+    val dict = tokIds(dt)
     val words = (dict.count() / 64 + 1).toInt
     // r16 optimization: the bitmap table has two direct consumers and
     // three more through `sets` — lazy, the posting join + in-row

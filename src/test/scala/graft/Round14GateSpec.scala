@@ -42,11 +42,12 @@ class Round14GateSpec extends SparkSpec {
   test("dedupClusters auto gate: above the floor routes to the sketch tier") {
     val s2 = spark.newSession()
     // floor of 1 cand/doc: any corpus with shared tokens exceeds it.
-    // The fixture's vocabulary is mask-group-sized, so the r15 tiny-dict
-    // carve-out would keep it exact at any floor — disable the bound so
-    // this test still exercises the ROUTING path (both tiers read the
-    // same conf, so the exact dispatch stays consistent).
+    // The fixture's vocabulary fits a 64-bit mask, so the r15 tiny-dict
+    // carve-out would keep it exact at any floor — disable both mask
+    // tiers so this test still exercises the ROUTING path (both tiers
+    // read the same conf, so the exact dispatch stays consistent).
     s2.conf.set("spark.graft.dedupClusterMaxCandPerDoc", "1")
+    s2.conf.set("spark.graft.pairNljMaxDocs", "1")
     s2.conf.set("spark.graft.maskGroupMaxDict", "0")
     val routed = labelSet(Graft.dedupClusters(fixtureDocs(s2),
       "doc_id", "text"))

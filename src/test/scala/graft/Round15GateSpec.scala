@@ -64,10 +64,11 @@ class Round15GateSpec extends SparkSpec {
     def labels(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     val s2 = spark.newSession()
-    // the fixture vocabulary is mask-group-sized; disable that bound so
-    // the density gate actually routes (same rationale as the
+    // the fixture vocabulary fits a 64-bit mask; disable both mask
+    // tiers so the density gate actually routes (same rationale as the
     // Round14GateSpec routing pin)
     s2.conf.set("spark.graft.dedupClusterMaxCandPerDoc", "1")
+    s2.conf.set("spark.graft.pairNljMaxDocs", "1")
     s2.conf.set("spark.graft.maskGroupMaxDict", "0")
     val routed = labels(Graft.dedupClusters(
       ops.t(s2, sf, "documents").filter(col("lang") === "en")
@@ -264,9 +265,10 @@ class Round15GateSpec extends SparkSpec {
     import spark.implicits._
     // 10-token vocabulary, 200 docs of 3 tokens each → every token's
     // df ≈ 60, candidate estimate ≈ 10·C(60,2)/200 ≫ a floor of 1, yet
-    // the exact tier dispatches this to the O(dict²) mask-group path —
-    // routing it to the lossy sketch tier would trade a cheap exact
-    // answer for a probabilistic one (round-14 advice)
+    // the exact tier sends this to a 64-bit-mask tier (the mask NLJ;
+    // mask grouping above the NLJ cutoff) — routing it to the lossy
+    // sketch tier would trade a cheap exact answer for a probabilistic
+    // one (round-14 advice)
     def corpus(s: org.apache.spark.sql.SparkSession) = {
       import s.implicits._
       (0 until 200).map { i =>
@@ -277,12 +279,19 @@ class Round15GateSpec extends SparkSpec {
     s2.conf.set("spark.graft.dedupClusterMaxCandPerDoc", "1")
     val auto = Graft.dedupClusters(corpus(s2), "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(s2.conf.get("spark.graft.lastDedupRoute").contains("maskgroup"))
+    assert(s2.conf.get("spark.graft.lastDedupRoute").endsWith(":masknlj"))
     val s3 = spark.newSession()
     s3.conf.set("spark.graft.dedupClusterMaxCandPerDoc", "0")
     val exact = Graft.dedupClusters(corpus(s3), "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(auto == exact)
     assert(auto.nonEmpty)
+    val s4 = spark.newSession()
+    s4.conf.set("spark.graft.dedupClusterMaxCandPerDoc", "1")
+    s4.conf.set("spark.graft.pairNljMaxDocs", "1")
+    val grouped = Graft.dedupClusters(corpus(s4), "doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(s4.conf.get("spark.graft.lastDedupRoute").endsWith(":maskgroup"))
+    assert(grouped == exact)
   }
 }

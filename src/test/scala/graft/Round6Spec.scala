@@ -54,40 +54,96 @@ class Round6Spec extends SparkSpec {
     assert(guarded == small, "mask-count guard fallback diverged")
   }
 
-  test("maskGroupPairs ≡ brute force on a duplicate-heavy tiny-vocab corpus") {
-    // 240 docs over an 8-token vocabulary but only 97 distinct token sets —
-    // the regime the branch exists for: pair over M=97 distinct masks
-    // (O(M²)), not N=240 docs, then expand the groups.
-    val vocab = Array("ta", "tb", "tc", "td", "te", "tf", "tg", "th")
-    val rows = (0L until 240L).map { d =>
+  test("exactPairs ≡ brute force on every tier, threshold and vocabulary") {
+    // Two corpora: 240 docs over an 8-token vocabulary but only 97
+    // distinct token sets (the regime mask grouping exists for), and
+    // 300 docs over 97 tokens (past the 64-bit mask, where a mask would
+    // alias token t + 64 onto t). Every threshold in use, every tier the
+    // knobs force, each against the brute-force pair rows.
+    val tiny = Array("ta", "tb", "tc", "td", "te", "tf", "tg", "th")
+    val dense = (0L until 240L).map { d =>
       val m = 1 + (d % 97)
-      d -> vocab.indices.filter(i => ((m >> i) & 1) == 1)
-        .map(vocab).mkString(" ")
+      d -> tiny.indices.filter(i => ((m >> i) & 1) == 1).map(tiny).toSet
     }
-    val dir = writeDocs(rows)
-    val sets = rows.map { case (d, tx) => d -> tx.split(" ").toSet }.toMap
-    val ids = sets.keys.toSeq.sorted
-    val expected = (for {
+    val thresholds = Seq((9, 4), (19, 9), (3, 1), (100, 49), (18000, 8000))
+    val tiers = Seq(
+      Seq.empty[(String, String)] -> "masknlj",
+      Seq("spark.graft.pairNljMaxDocs" -> "1") -> "maskgroup",
+      Seq("spark.graft.pairNljMaxDocs" -> "1",
+        "spark.graft.maskGroupMaxDict" -> "0") -> "atscale",
+      // the adversarial-density guard: too many distinct masks
+      Seq("spark.graft.pairNljMaxDocs" -> "1",
+        "spark.graft.maskGroupMaxMasks" -> "1") -> "maskgroup")
+    for ((name, corpus) <- Seq("8-token" -> dense, "97-token" -> wide97);
+         (c, s) <- thresholds; (conf, tier) <- tiers) {
+      val sets = corpus.toMap
+      val ids = sets.keys.toSeq.sorted
+      val expected = (for {
+        i <- ids.indices; j <- (i + 1) until ids.length
+        a = ids(i); b = ids(j)
+        n = (sets(a) & sets(b)).size.toLong
+        (na, nb) = (sets(a).size.toLong, sets(b).size.toLong)
+        if n * c >= (na + nb) * s
+      } yield (a, b, n, na, nb)).toSet
+      val dt = spark.createDataFrame(corpus.flatMap { case (d, ts) =>
+        ts.map(d -> _) }).toDF("doc_id", "token")
+      val wanted = if (name == "97-token") "atscale" else tier
+      val got = withConf(conf: _*) {
+        assert(ops.Text.pairTier(spark, sets.values.flatten.toSet.size,
+          ids.size) == wanted, s"$name $conf")
+        ops.Text.exactPairsOn(dt, c, s).collect().map(r => (r.getLong(0),
+          r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
+      }
+      assert(got == expected, s"$name ($c,$s) $conf: " +
+        s"missed=${(expected -- got).take(3)} extra=${(got -- expected).take(3)}")
+      if ((c, s) == (9, 4)) {
+        assert(expected.exists { case (a, b, _, _, _) => sets(a) == sets(b) },
+          s"$name: no identical-set pairs — within-group path untested")
+        assert(expected.exists { case (a, b, _, _, _) => sets(a) != sets(b) },
+          s"$name: no cross-set pairs — cross-group path untested")
+      }
+    }
+  }
+
+  test("past 64 tokens, graph edges and q_lsh_recall's sampled truth " +
+       "≡ brute force") {
+    val sets = wide97.toMap
+    val dir = writeDocs(wide97.map { case (d, ts) => d -> ts.mkString(" ") })
+    def pairs(ids: Seq[Long], c: Int, s: Int) = (for {
       i <- ids.indices; j <- (i + 1) until ids.length
       a = ids(i); b = ids(j)
-      c = (sets(a) & sets(b)).size
-      if c * 9 >= (sets(a).size + sets(b).size) * 4
+      if (sets(a) & sets(b)).size * c >= (sets(a).size + sets(b).size) * s
     } yield (a, b)).toSet
-    assert(expected.exists { case (a, b) => sets(a) == sets(b) },
-      "no identical-set pairs — within-group path untested")
-    assert(expected.exists { case (a, b) => sets(a) != sets(b) },
-      "no cross-set pairs — cross-group path untested")
-    val grouped = withConf("spark.graft.pairNljMaxDocs" -> "1") {
-      ops.Text.qDedupNear(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    // q_clustering_coeff over the strict (100, 49) edges
+    val edges = pairs(sets.keys.toSeq.sorted, 100, 49)
+    val nbrs = (edges.toSeq ++ edges.toSeq.map(_.swap)).groupBy(_._1)
+      .map { case (u, vs) => u -> vs.map(_._2).toSet }
+    val coeff = nbrs.collect { case (u, vs) if vs.size >= 2 =>
+      val closed = vs.toSeq.combinations(2)
+        .count { case Seq(v, w) => edges((v min w, v max w)) }.toLong
+      val deg = vs.size.toLong
+      (u, deg, closed, closed * 20000 / (deg * (deg - 1)))
+    }.toSet
+    assert(coeff.nonEmpty)
+    assert(ops.Graphs.qClusteringCoeff(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSet == coeff)
+    // q_lsh_recall at mod 2: its truth is the (3, 1) pair set of the even
+    // docs, and its row equals the whole-corpus run over those docs alone
+    val truth = pairs(sets.keys.filter(_ % 2 == 0).toSeq.sorted, 3, 1)
+    val sampled = withConf("spark.graft.lshRecallSampleMod" -> "2") {
+      run1("q_lsh_recall", dir)
     }
-    assert(grouped == expected,
-      s"missed=${(expected -- grouped).take(5)} extra=${(grouped -- expected).take(5)}")
-    // the NLJ branch sees the same corpus the same way
-    val nlj = ops.Text.qDedupNear(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(nlj == expected)
+    assert(sampled.getLong(0) == truth.size)
+    val evens = writeDocs(wide97.collect { case (d, ts) if d % 2 == 0 =>
+      d -> ts.mkString(" ") })
+    assert(sampled == run1("q_lsh_recall", evens))
   }
+
+  private def run1(name: String, dir: String) =
+    SparkEntry.queries(name)(spark, dir).collect().toSeq match {
+      case Seq(r) => r
+    }
 
   test("q_dedup_clusters + q_graph_degree inherit the at-scale branch") {
     val (cl, gd) = (rowSet(run("q_dedup_clusters")), rowSet(run("q_graph_degree")))
@@ -121,6 +177,23 @@ class Round6Spec extends SparkSpec {
   }
 
   // ---- skew guards on a generated boilerplate-heavy corpus ------------
+
+  /** 320 docs over a 97-token vocabulary (v00 … v96), 40 groups of 8
+    * ids: A = S ∪ X three times, C = A ∪ {y}, B = S ∪ (X + 64) three
+    * times, D = B ∪ {y}, with S three tokens of 33–63 and X two of 0–32.
+    * A 64-bit mask would alias X + 64 onto X and take B for A; the true
+    * Jaccard of A and B is 3/7, of A and C 5/6. */
+  private lazy val wide97: Seq[(Long, Set[String])] =
+    (0 until 40).flatMap { g =>
+      val sx = Seq(33 + g % 31, 33 + (g + 10) % 31, 33 + (g + 20) % 31)
+      val x = Seq(g % 33, (g + 11) % 33)
+      val y = 33 + (g + 5) % 31
+      val a = sx ++ x
+      val b = sx ++ x.map(_ + 64)
+      Seq(a, a, a, a :+ y, b, b, b, b :+ y).zipWithIndex.map {
+        case (toks, j) => (8L * g + j) -> toks.map(i => f"v$i%02d").toSet
+      }
+    }
 
   private def writeDocs(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
