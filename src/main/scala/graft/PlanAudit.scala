@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool (r17): print every declared query's formatted-plan line
-  * count and Exchange mentions, sorted descending — a cheap proxy for
+  * count and Exchange mentions, sorted descending (ties by name, so
+  * two trees' outputs diff line by line) — a cheap proxy for
   * Catalyst planning cost and duplicated-subtree blowup (the
   * q_tail_mass 1238-line plan was found this way). A query whose plan
   * cannot be built is counted as failed on the TOTAL line, and any
@@ -34,7 +35,7 @@ object PlanAudit {
           failed += 1
           println(s"$name FAILED: ${e.getMessage}"); None }
     }
-    rows.sortBy(-_._2).take(60).foreach { case (n, l, e) =>
+    rows.sortBy(-_._2).foreach { case (n, l, e) =>
       println(f"$l%6d lines $e%4d ex  $n")
     }
     // A failed query is missing from the total, so it would read as a

@@ -348,12 +348,8 @@ object Graft {
   private def mhBandRows(df: DataFrame, idCol: String, textCol: String,
                          bands: Int, rowsPerBand: Int): DataFrame = {
     require(bands > 0 && rowsPerBand > 0)
-    val lanes = bands * rowsPerBand
-    val laneMins = (0 until lanes).map(j =>
-      min(expr(s"CAST(conv(substring(md5(concat('$j:', token)), 1, " +
-        "15), 16, 10) AS BIGINT)")).as(s"mh$j"))
-    val sig = postings(df, idCol, textCol).groupBy("doc_id")
-      .agg(laneMins.head, laneMins.tail: _*)
+    val sig = Sketches.laneSigs(postings(df, idCol, textCol),
+      bands * rowsPerBand)
     sig.select(col("doc_id"), explode(expr(
         (0 until bands).map(b => s"struct($b AS band, struct(" +
           (0 until rowsPerBand).map(k =>
@@ -756,13 +752,10 @@ object Graft {
                         vecCol: String): DataFrame =
     df.select(col(idCol).cast("long").as("pid"), col(vecCol).as("pe"))
 
-  /** Top-k of a [[Vectors.probePairs]] frame under the retrieval order,
-    * as the (probe_id, neighbor_id, rn, cos) contract of [[knnCosine]],
-    * [[annLsh]] and [[annIvf]]. */
-  private def topK(pairs: DataFrame, k: Int): DataFrame =
-    Vectors.topK(pairs, k)
-      .select(col("pid").as("probe_id"), col("vec_id").as("neighbor_id"),
-        col("rn"), col("cos"))
+  /** The (probe_id, neighbor_id, rn, cos) contract of [[knnCosine]],
+    * [[annLsh]] and [[annIvf]] over a [[Vectors.topK]] frame. */
+  private def neighborCols = Seq(col("pid").as("probe_id"),
+    col("vec_id").as("neighbor_id"), col("rn"), col("cos"))
 
   /** Exact k-NN by cosine over any corpus with an ArrayType(Float)
     * embedding column: every probe × the full corpus through the
@@ -776,9 +769,10 @@ object Graft {
                 probes: DataFrame, probeIdCol: String,
                 probeVecCol: String, k: Int = 5): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    topK(Vectors.probePairs(
-      corpusSide(corpus, idCol, vecCol),
-      probeSide(probes, probeIdCol, probeVecCol)), k)
+    Vectors.topK(Vectors.probePairs(
+        corpusSide(corpus, idCol, vecCol),
+        probeSide(probes, probeIdCol, probeVecCol)), k)
+      .select(neighborCols: _*)
   }
 
   /** Hyperplane-LSH approximate k-NN: corpus and probes bucket by the
@@ -818,7 +812,8 @@ object Graft {
       .withColumn("__b", Sketches.lshBucketExpr(col("embedding"), bits, d))
     val p = probeSide(probes, probeIdCol, probeVecCol)
       .withColumn("__pb", Sketches.lshBucketExpr(col("pe"), bits, d))
-    topK(Vectors.probePairs(c, p, Some(col("__b") === col("__pb"))), k)
+    Vectors.topK(Vectors.probePairs(c, p, Some(col("__b") === col("__pb"))), k)
+      .select(neighborCols: _*)
   }
 
   // ---- distributed global order ----------------------------------------
@@ -973,7 +968,7 @@ object Graft {
       corpusSide(corpus, idCol, vecCol),
       probeSide(probes, probeIdCol, probeVecCol),
       nlist, nprobe, lloydIters)
-    topK(pairs, k)
+    Vectors.topK(pairs, k).select(neighborCols: _*)
   }
 
   // ---- MMR diversified re-ranking -----------------------------------------
@@ -1066,9 +1061,7 @@ object Graft {
     require(keepBp >= 0 && keepBp <= 10000,
       s"keepBp must be in [0, 10000], got $keepBp")
     if (keepBp >= 10000) df
-    else df.filter(
-      expr(s"CAST(conv(substring(md5(CAST($idCol AS STRING)), 1, 4), " +
-        s"16, 10) AS BIGINT) * 10000 < ${keepBp.toLong} * 65536"))
+    else df.filter(graft.ops.md5Sample(idCol, keepBp))
   }
 
   /** Connected components over an arbitrary undirected edge list —

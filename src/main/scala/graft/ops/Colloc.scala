@@ -46,9 +46,7 @@ object Colloc {
     * no exp, no float aggregate anywhere. Docs score against the LM
     * including themselves (the one-pass corpus-filter convention). */
   def qPerplexity(s: SparkSession, dir: String): DataFrame = {
-    val occ = t(s, dir, "documents").filter(col("lang") === "en")
-      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
+    val occ = Text.tokDf(t(s, dir, "documents").filter(col("lang") === "en"))
     val vocab = occ.groupBy("token").agg(count(lit(1)).as("c_tok"))
     val consts = vocab.agg(sum("c_tok").cast("long").as("n_occ"),
       count(lit(1)).as("v"))
@@ -72,9 +70,8 @@ object Colloc {
     * bounded by the distinct COUNT values, not the vocab — two
     * aggregates and one self-join on r+1. */
   def qGoodTuring(s: SparkSession, dir: String): DataFrame = {
-    val vocab = t(s, dir, "documents").filter(col("lang") === "en")
-      .select(explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
+    val vocab = Text.tokDf(
+        t(s, dir, "documents").filter(col("lang") === "en"), keep = Nil)
       .groupBy("token").agg(count(lit(1)).as("r"))
     val fof = vocab.groupBy("r").agg(count(lit(1)).as("n_r"))
     val nxt = fof.select((col("r") - 1).as("r"), col("n_r").as("n_r1"))
@@ -92,9 +89,7 @@ object Colloc {
     * DECIMAL(38,0) (Σc²·10⁷ wraps int64 on big sources). One
     * (source, token) collapse + one source fold. */
   def qYuleK(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "documents")
-      .select(col("source"), explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
+    val c = Text.tokDf(t(s, dir, "documents"), keep = Seq(col("source")))
       .groupBy("source", "token").agg(count(lit(1)).as("c"))
     orderedAll(c.groupBy("source")
       .agg(sum("c").cast("long").as("n_occ"),

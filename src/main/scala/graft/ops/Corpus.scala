@@ -286,9 +286,7 @@ object Corpus {
     import s.implicits._
     val mu = 2000L
     val terms = Seq("merge", "vector", "stream").toDF("term")
-    val occ = t(s, dir, "documents").filter(col("lang") === "en")
-      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
+    val occ = Text.tokDf(t(s, dir, "documents").filter(col("lang") === "en"))
     val lens = occ.groupBy("doc_id").agg(count(lit(1)).as("len"))
     val cf = occ.join(broadcast(terms), col("token") === col("term"))
       .groupBy("term").agg(count(lit(1)).as("cf"))

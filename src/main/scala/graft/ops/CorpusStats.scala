@@ -90,9 +90,7 @@ object CorpusStats {
     * window runs over the vocabulary-sized per-source count aggregate,
     * never over token occurrences. */
   def qZipf(s: SparkSession, dir: String): DataFrame = {
-    val cnt = t(s, dir, "documents")
-      .select(col("source"), explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
+    val cnt = Text.tokDf(t(s, dir, "documents"), keep = Seq(col("source")))
       .groupBy("source", "token").agg(count(lit(1)).as("cnt"))
     val w = Window.partitionBy(col("source"))
       .orderBy(col("cnt").desc, col("token").asc)
@@ -123,9 +121,7 @@ object CorpusStats {
     * (high ratio = appears in rich contexts, the RAKE keyword signal).
     * Two token-keyed mergeable aggregates + one doc-keyed size join. */
   def qKeywordRake(s: SparkSession, dir: String): DataFrame = {
-    val occ = t(s, dir, "documents").filter(col("lang") === "en")
-      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
+    val occ = Text.tokDf(t(s, dir, "documents").filter(col("lang") === "en"))
     val freq = occ.groupBy("token").agg(count(lit(1)).as("freq"))
     val d = dt(s, dir)
     val sizes = d.groupBy("doc_id").agg(count(lit(1)).as("ndist"))
@@ -294,9 +290,7 @@ object CorpusStats {
   def qBurstiness(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").filter(col("lang") === "en")
     val nRow = docs.agg(count(lit(1)).as("n"))
-    val occ = docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
+    val occ = Text.tokDf(docs)
       .groupBy("token", "doc_id").agg(count(lit(1)).as("c"))
     orderedAll(occ.groupBy("token")
       .agg(count(lit(1)).as("n_docs"),
@@ -317,9 +311,7 @@ object CorpusStats {
     * cumulative-distinct window never exists — just a per-token min and
     * two 10-row broadcast range joins. */
   def qHeapsLaw(s: SparkSession, dir: String): DataFrame = {
-    val occ = t(s, dir, "documents").filter(col("lang") === "en")
-      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
+    val occ = Text.tokDf(t(s, dir, "documents").filter(col("lang") === "en"))
     val docSize = occ.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val w = Window.orderBy("doc_id")
     // r17 optimization: the ranked doc-size table has THREE consumers
@@ -359,10 +351,8 @@ object CorpusStats {
     * totals are vocab-bounded broadcasts; scoring is one keyed join +
     * mergeable aggregate; the argmax is a doc-keyed rank window. */
   def qLangConfusion(s: SparkSession, dir: String): DataFrame = {
-    val tok = t(s, dir, "documents")
-      .select(col("doc_id"), col("lang"),
-        explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
+    val tok = Text.tokDf(t(s, dir, "documents"),
+      keep = Seq(col("doc_id"), col("lang")))
     val profile = tok.groupBy("lang", "token").agg(count(lit(1)).as("cnt"))
     val tot = tok.groupBy("lang").agg(count(lit(1)).as("tot"))
     val vocab = tok.agg(countDistinct(col("token")).as("v"))
@@ -464,9 +454,7 @@ object CorpusStats {
     * aggregate; the profile is a second aggregate over the
     * (source, token) table. */
   def qHapax(s: SparkSession, dir: String): DataFrame =
-    orderedAll(t(s, dir, "documents")
-      .select(col("source"), explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
+    orderedAll(Text.tokDf(t(s, dir, "documents"), keep = Seq(col("source")))
       .groupBy("source", "token").agg(count(lit(1)).as("cnt"))
       .groupBy("source")
       .agg(count(lit(1)).as("vocab"),
@@ -558,9 +546,7 @@ object CorpusStats {
     * overflow convention, since coll·10⁹ wraps a BIGINT silently in
     * non-ANSI Spark on a large enough corpus. */
   def qSimpson(s: SparkSession, dir: String): DataFrame =
-    orderedAll(t(s, dir, "documents")
-      .select(col("source"), explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
+    orderedAll(Text.tokDf(t(s, dir, "documents"), keep = Seq(col("source")))
       .groupBy("source", "token").agg(count(lit(1)).as("c"))
       .groupBy("source")
       .agg(count(lit(1)).as("vocab"),
@@ -588,9 +574,7 @@ object CorpusStats {
     * |sources|×|vocab| partitioned by token; only the corpus totals
     * row broadcasts. */
   def qJsdSources(s: SparkSession, dir: String): DataFrame = {
-    val st = t(s, dir, "documents")
-      .select(col("source"), explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
+    val st = Text.tokDf(t(s, dir, "documents"), keep = Seq(col("source")))
     val sc = st.groupBy("source", "token").agg(count(lit(1)).as("c_st"))
     val ct = st.groupBy("token").agg(count(lit(1)).as("c_t"))
     val ns = st.groupBy("source").agg(count(lit(1)).as("n_s"))

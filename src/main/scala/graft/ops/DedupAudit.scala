@@ -80,9 +80,7 @@ object DedupAudit {
                                  idCol: String = "doc_id"): DataFrame = {
     val bp = auditSampleBp(s, dir)
     if (bp >= 10000) df
-    else df.filter(
-      expr(s"CAST(conv(substring(md5(CAST($idCol AS STRING)), 1, 4), " +
-        s"16, 10) AS BIGINT) * 10000 < ${bp.toLong} * 65536"))
+    else df.filter(md5Sample(idCol, bp))
   }
 
   /** Candidate pairs with exact overlap stats at the loosest sweep

@@ -20,10 +20,10 @@ import org.apache.spark.sql.functions._
   * Scale shape (100 TB): probe sets and per-label/per-plane aggregates
   * are broadcast-sized by construction; the corpus side is always one
   * scan-shaped projection feeding either a mergeable aggregate or a
-  * per-probe bounded window — the brute-force/kNN scale story of §2.12
-  * applies unchanged, and the ANN-recall audit is exactly the query one
-  * runs on a sampled probe set to pick LSH/IVF parameters before
-  * committing the full corpus to them. */
+  * per-probe top-k ([[Vectors.topK]]) — the brute-force/kNN scale
+  * story of §2.12 applies unchanged, and the ANN-recall audit is
+  * exactly the query one runs on a sampled probe set to pick LSH/IVF
+  * parameters before committing the full corpus to them. */
 object Evaluation {
 
   /** Codegen'd dot against the j-th q_ann_lsh md5-sign plane
@@ -55,9 +55,7 @@ object Evaluation {
     val probes = emb.filter(col("vec_id") < 50)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"),
         col("bucket").as("pb"))
-    val top10 = Vectors.probePairs(emb, probes)
-      .withColumn("rn", Vectors.rankBy())
-      .filter(col("rn") <= 10)
+    val top10 = Vectors.topK(Vectors.probePairs(emb, probes), 10)
       .select(col("pid"), col("vec_id").as("nid"))
     val cand = Vectors.probePairs(emb, probes, Some(col("bucket") === col("pb")))
       .select(col("pid"), col("vec_id").as("nid"))
@@ -84,9 +82,7 @@ object Evaluation {
       .select(col("vec_id").as("pid"), col("embedding").as("pe"),
         col("label").as("plabel"))
     val wLit = typedLit(ndcgWeights)
-    val top = Vectors.probePairs(emb, probes)
-      .withColumn("rn", Vectors.rankBy())
-      .filter(col("rn") <= 10)
+    val top = Vectors.topK(Vectors.probePairs(emb, probes), 10)
       .withColumn("rel",
         when(col("label") === col("plabel"), 1L).otherwise(0L))
     val iw = Window.partitionBy(col("pid"))
@@ -201,7 +197,8 @@ object Evaluation {
   /** Nearest-centroid classifier confusion matrix: per-label centroids
     * from ×10⁴-quantized lanes (exact BIGINT sums ÷ count — every
     * centroid component is the same IEEE double in both engines), each
-    * vector assigned to its max-cosine centroid (tie → smaller label),
+    * vector assigned to its max-cosine centroid (tie → smaller label;
+    * a zero-norm vector's cosines are null, so the smallest label),
     * then the full (true, pred) contingency with per-cell recall and
     * precision in basis points (diagonal rows = the per-class report).
     * Corpus side is one scan against a broadcast 10-row centroid table;
@@ -210,7 +207,9 @@ object Evaluation {
     val emb = t(s, dir, "embeddings")
     val cent = emb
       .select(col("label"), posexplode(col("embedding")))
-      .groupBy(col("label").as("cand"), (col("pos") + 1).as("i"))
+      // LONG: the top-k operator's tie
+      .groupBy(col("label").cast("long").as("cand"),
+        (col("pos") + 1).as("i"))
       .agg(sum(round(col("col").cast("double") * 10000).cast("long"))
         .as("s_u"), count(lit(1)).as("n"))
       .groupBy("cand")
@@ -224,14 +223,13 @@ object Evaluation {
     val normC = aggregate(sequence(lit(1), lit(64)), lit(0.0), (acc, i) =>
       acc + element_at(col("cv"), i.cast("int")) *
         element_at(col("cv"), i.cast("int")))
-    val pred = emb.crossJoin(broadcast(cent))
+    val scored = emb.crossJoin(broadcast(cent))
       .withColumn("cos",
-        dotC / sqrt(Vectors.norm2(col("embedding")) * normC))
-      .withColumn("rn",
-        Vectors.rankBy(id = col("cand"), part = col("vec_id")))
-      .filter(col("rn") === 1)
+        dotC / Vectors.normProduct(Vectors.norm2(col("embedding")), normC))
+    val pred = graft.plans.TopKPerGroup.frame(scored, Seq("vec_id"), "cos",
+        "cand", 1, "rn")
       .select(col("label").cast("long").as("true_label"),
-        col("cand").cast("long").as("pred"))
+        col("cand").as("pred"))
     val cells = pred.groupBy("true_label", "pred")
       .agg(count(lit(1)).as("n"))
     orderedAll(cells
@@ -307,11 +305,9 @@ object Evaluation {
     val probes = emb.filter(col("vec_id") < 50)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"),
         col("label").as("plabel"))
-    val ranked = Vectors.probePairs(emb, probes)
-      .withColumn("rn", Vectors.rankBy())
-      .filter(col("rn") <= 20)
+    val ranked = Vectors.topK(Vectors.probePairs(emb, probes), 20)
     val best = ranked.filter(col("label") === col("plabel"))
-      .groupBy("pid").agg(min(col("rn")).cast("long").as("best_rank"))
+      .groupBy("pid").agg(min(col("rn")).as("best_rank"))
     orderedAll(probes.select("pid")
       .join(best, Seq("pid"), "left")
       .withColumn("rr_u",
@@ -330,9 +326,7 @@ object Evaluation {
     val probes = emb.filter(col("vec_id") < 20)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"),
         col("label").as("plabel"))
-    Vectors.probePairs(emb, probes)
-      .withColumn("rn", Vectors.rankBy())
-      .filter(col("rn") <= 10)
+    Vectors.topK(Vectors.probePairs(emb, probes), 10)
       .withColumn("rel",
         when(col("label") === col("plabel"), 1L).otherwise(0L))
   }
@@ -344,7 +338,7 @@ object Evaluation {
     * retrieved-set IDCG convention; probes with no relevant top-10 get
     * 0). Complements q_ndcg (graded discounts) and q_mrr (first hit
     * only): AP is the area under the precision-recall hops. Same scale
-    * shape as q_ndcg — broadcast probes, one rank window, per-probe
+    * shape as q_ndcg — broadcast probes, one per-probe top-k, per-probe
     * cumulative over ≤10 rows. */
   def qMapAtK(s: SparkSession, dir: String): DataFrame = {
     val wc = Window.partitionBy("pid").orderBy("rn")
@@ -555,16 +549,15 @@ object Evaluation {
     * to per-true-label accuracy in bp — the "are these embeddings good
     * for anything" sanity eval run before any retrieval ships.
     * Deterministic end to end: cosine ties break to smaller vec_id,
-    * vote ties to the smaller label. Probes broadcast; both rank
-    * windows shard by probe. */
+    * vote ties to the smaller label. Probes broadcast; the top-k and
+    * the vote window shard by probe. */
   def qKnnClassify(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
     val probes = emb.filter(col("vec_id") < 30)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"),
         col("label").as("true_label"))
-    val votes = Vectors.probePairs(emb.filter(col("vec_id") >= 30), probes)
-      .withColumn("rn", Vectors.rankBy())
-      .filter(col("rn") <= 5)
+    val votes = Vectors.topK(
+        Vectors.probePairs(emb.filter(col("vec_id") >= 30), probes), 5)
       .groupBy("pid", "true_label", "label")
       .agg(count(lit(1)).as("v"))
     val wVote = Window.partitionBy("pid")
@@ -641,7 +634,7 @@ object Evaluation {
     * gap between its 1st and 2nd nearest candidates, ×10⁴ — the
     * retrieval-confidence histogramless readout (a thin margin means
     * the top hit is interchangeable; ANN error there is invisible to
-    * users, which is why margins gate ANN rollouts). One rank window
+    * users, which is why margins gate ANN rollouts). One per-probe top-k
     * on the broadcast-probe NLJ; both cosines are bit-identical
     * doubles in the two engines (the q_knn_cosine contract), so the
     * single round(·,4)-style quantization is deterministic. Ties in
@@ -650,9 +643,7 @@ object Evaluation {
     val emb = t(s, dir, "embeddings")
     val probes = emb.filter(col("vec_id") < 50)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"))
-    orderedAll(Vectors.probePairs(emb, probes)
-      .withColumn("rn", Vectors.rankBy())
-      .filter(col("rn") <= 2)
+    orderedAll(Vectors.topK(Vectors.probePairs(emb, probes), 2)
       .groupBy("pid")
       .agg(min(when(col("rn") === 1, col("vec_id"))).as("n1"),
         min(when(col("rn") === 2, col("vec_id"))).as("n2"),

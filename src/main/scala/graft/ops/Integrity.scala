@@ -206,11 +206,8 @@ object Integrity {
     * every membership test is a broadcast semi-join against the fact
     * scan — no fact-side shuffle anywhere. */
   def qDeletePropagation(s: SparkSession, dir: String): DataFrame = {
-    def forget(idCol: String): org.apache.spark.sql.Column =
-      expr(s"CAST(conv(substring(md5(CAST($idCol AS STRING)), 1, 4), " +
-        "16, 10) AS BIGINT) * 10000 < 100 * 65536")
     val cust = t(s, dir, "customer").select(col("c_custkey"))
-    val fCust = cust.filter(forget("c_custkey"))
+    val fCust = cust.filter(md5Sample("c_custkey", 100))
     val orders = t(s, dir, "orders").select("o_orderkey", "o_custkey")
     val fOrders = orders.join(broadcast(fCust),
       col("o_custkey") === col("c_custkey"), "left_semi")
@@ -218,7 +215,7 @@ object Integrity {
     val fLi = li.join(broadcast(fOrders.select("o_orderkey")),
       col("l_orderkey") === col("o_orderkey"), "left_semi")
     val ev = t(s, dir, "events").select(col("user_id"))
-    val fEv = ev.filter(forget("user_id"))
+    val fEv = ev.filter(md5Sample("user_id", 100))
     def row(tbl: String, all: DataFrame, aff: DataFrame): DataFrame =
       all.agg(count(lit(1)).as("n_rows"))
         .crossJoin(broadcast(aff.agg(count(lit(1)).as("n_affected"))))

@@ -27,10 +27,8 @@ object Learning {
     * the bucket space (16) is tiny, so partial aggregation collapses each
     * partition to ≤ sources×16 rows before the shuffle. */
   def qFeatureHash(s: SparkSession, dir: String): DataFrame =
-    orderedAll(t(s, dir, "documents")
-      .select(col("doc_id"), col("source"),
-        explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
+    orderedAll(Text.tokDf(t(s, dir, "documents"),
+        keep = Seq(col("doc_id"), col("source")))
       .withColumn("bucket", expr(
         "CAST(conv(substring(md5(concat(token, ':fh')), 1, 6), 16, 10) " +
           "AS BIGINT) % 16"))
@@ -312,9 +310,9 @@ object Learning {
     * vocab collapse feeds three literal-k folds; everything merges. */
   def qHashCollisions(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val vocab = t(s, dir, "documents").filter(col("lang") === "en")
-      .select(explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "").distinct()
+    val vocab = Text.tokDf(
+        t(s, dir, "documents").filter(col("lang") === "en"), keep = Nil)
+      .distinct()
       .withColumn("h", expr(
         "CAST(conv(substring(md5(token), 1, 15), 16, 10) AS BIGINT)"))
     val ks = Seq(8, 12, 16).map(k => (k.toLong, 1L << k)).toDF("k", "m")

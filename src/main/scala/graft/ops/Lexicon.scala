@@ -59,9 +59,8 @@ object Lexicon {
     * q_cooccur_pmi idiom — per-token fan-out is ≤ |sources|², never a
     * corpus-sized self-join); sizes join back broadcast. */
   def qVocabOverlap(s: SparkSession, dir: String): DataFrame = {
-    val st = t(s, dir, "documents")
-      .select(col("source"), explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "").distinct()
+    val st = Text.tokDf(t(s, dir, "documents"), keep = Seq(col("source")))
+      .distinct()
     val sizes = st.groupBy("source").agg(count(lit(1)).as("sz"))
     val inter = st.groupBy("token")
       .agg(array_sort(collect_set(col("source"))).as("ss"))

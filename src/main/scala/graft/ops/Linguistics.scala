@@ -63,9 +63,7 @@ object Linguistics {
     * Token marginals are vocabulary-sized (broadcast); the corpus total
     * is one row. */
   def qNaiveBayes(s: SparkSession, dir: String): DataFrame = {
-    val st = t(s, dir, "documents")
-      .select(col("source"), explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
+    val st = Text.tokDf(t(s, dir, "documents"), keep = Seq(col("source")))
       .groupBy("source", "token").agg(count(lit(1)).as("n_st"))
     val nt = st.groupBy("token").agg(sum("n_st").as("n_t"))
     val ns = st.groupBy("source").agg(sum("n_st").as("n_s"))

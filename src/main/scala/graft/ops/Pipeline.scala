@@ -21,9 +21,7 @@ object Pipeline {
     * argmax would be FP-ambiguous across engines (SURVEY §5.3 spirit). */
   def qLangScore(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val tok = docs.select(col("doc_id"), col("lang"),
-      explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
+    val tok = Text.tokDf(docs, keep = Seq(col("doc_id"), col("lang")))
     val profile = tok.groupBy("lang", "token").agg(count(lit(1)).as("cnt"))
     val tot = tok.groupBy("lang").agg(count(lit(1)).as("tot"))
     val vocab = tok.agg(countDistinct(col("token")).as("v"))

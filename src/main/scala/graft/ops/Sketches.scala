@@ -53,13 +53,19 @@ object Sketches {
     * waste (q_lsh_recall spent most of its 9 s re-minimizing the same
     * lanes the dedup query had already folded). */
   private[graft] def mdLaneSigs(s: SparkSession, dir: String): DataFrame =
-    Pins.pinned(s, "mh_sigs", dir) {
-      val laneMins = (0 until 16).map(j =>
-        min(expr(s"CAST(conv(substring(md5(concat('$j:', token)), 1, 15)," +
-          s" 16, 10) AS BIGINT)")).as(s"mh$j"))
-      enPostings(s, dir).groupBy("doc_id")
-        .agg(laneMins.head, laneMins.tail: _*)
-    }
+    Pins.pinned(s, "mh_sigs", dir)(laneSigs(enPostings(s, dir), 16))
+
+  /** The md5-lane MinHash minima `mh0 … mh{lanes−1}` per doc_id of a
+    * (doc_id, token) posting table: lane j is the minimum over the
+    * doc's tokens of the first 15 hex digits of md5('j:' + token) as a
+    * BIGINT — the engine-portable recipe behind [[mdLaneSigs]] and the
+    * graft.api.Graft MinHash banding. */
+  private[graft] def laneSigs(postings: DataFrame, lanes: Int): DataFrame = {
+    val laneMins = (0 until lanes).map(j =>
+      min(expr(s"CAST(conv(substring(md5(concat('$j:', token)), 1, 15)," +
+        s" 16, 10) AS BIGINT)")).as(s"mh$j"))
+    postings.groupBy("doc_id").agg(laneMins.head, laneMins.tail: _*)
+  }
 
   /** 64-bit SimHash signature per en doc (the [[qDedupSimhash]] vote
     * recipe — bit k set iff the ±1 md5-nibble vote at bit k is
@@ -530,12 +536,10 @@ object Sketches {
     val probes = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"),
         col("bucket").as("pbucket"))
-    orderedAll(Vectors.probePairs(emb, probes,
-        Some(col("bucket") === col("pbucket")))
-      .withColumn("rn", Vectors.rankBy())
-      .filter(col("rn") <= 5)
-      .select(col("pid"), col("vec_id").as("nid"),
-        col("rn").cast("long").as("rn"), round(col("cos"), 4).as("sim")))
+    orderedAll(Vectors.topK(Vectors.probePairs(emb, probes,
+        Some(col("bucket") === col("pbucket"))), 5)
+      .select(col("pid"), col("vec_id").as("nid"), col("rn"),
+        round(col("cos"), 4).as("sim")))
   }
 
   /** Multiprobe LSH ANN (§2.98): [[qAnnLsh]] widened to the 9 buckets
@@ -555,12 +559,10 @@ object Sketches {
     val probes = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"),
         explode(expr(flips)).as("pb"))
-    orderedAll(Vectors.probePairs(emb, probes,
-        Some(col("bucket") === col("pb")))
-      .withColumn("rn", Vectors.rankBy())
-      .filter(col("rn") <= 5)
-      .select(col("pid"), col("vec_id").as("nid"),
-        col("rn").cast("long").as("rn"), round(col("cos"), 4).as("sim")))
+    orderedAll(Vectors.topK(Vectors.probePairs(emb, probes,
+        Some(col("bucket") === col("pb"))), 5)
+      .select(col("pid"), col("vec_id").as("nid"), col("rn"),
+        round(col("cos"), 4).as("sim")))
   }
 
   /** Heavy hitters over event_type via the native Misra–Gries aggregate

@@ -225,11 +225,10 @@ object Text {
           |  transform(toks, (x, i) ->
           |    CASE WHEN i < size(toks) - 1
           |         THEN concat(x, ' ', toks[i + 1]) END),
-          |  b -> b IS NOT NULL)""".stripMargin)).as("shingle"))
+          |  b -> b IS NOT NULL)""".stripMargin)).as("token"))
       .distinct()
     if (docs.count() > pairNljMaxDocs(s))
-      return orderedAll(invertedPairs(
-        sh.withColumnRenamed("shingle", "token"), cMul = 4, sMul = 1))
+      return orderedAll(invertedPairs(sh, cMul = 4, sMul = 1))
     // Multi-word bitset strategy: the shingle vocabulary (~900 here) does
     // not fit one 64-bit mask, so each doc carries an array<long> bitmap
     // and the pair join computes |A∩B| with the codegen popcount-of-AND
@@ -238,29 +237,16 @@ object Text {
     // the docs, so posting self-join cost concentrates in a few keys).
     // Size-ratio pruning (4·common ≥ |A|+|B| needs sizes within 3×) still
     // applies in the join condition.
-    val dict = sh.select("shingle").distinct()
-      .withColumn("sid",
-        row_number().over(Window.orderBy(col("shingle"))).cast("int") - 1)
-    val words = (dict.count() / 64 + 1).toInt
-    val bitmaps = sh.join(broadcast(dict), "shingle")
-      .groupBy("doc_id")
-      .agg(collect_list(col("sid")).as("sids"), count(lit(1)).as("ns"))
-      .withColumn("bm", expr(
-        s"""aggregate(sids, array_repeat(CAST(0 AS BIGINT), $words),
-           |  (acc, t) -> transform(acc, (x, i) ->
-           |    IF(i = CAST(t div 64 AS INT),
-           |       x | shiftleft(CAST(1 AS BIGINT), CAST(t % 64 AS INT)),
-           |       x)))""".stripMargin))
-      .select("doc_id", "bm", "ns")
+    val bitmaps = tokenBitmaps(sh)
     // r17: the probe side of the pair NLJ arrives as ONE AQE-coalesced
     // partition (a few thousand bitmap rows is tiny in bytes), so the
     // O(N²) popcount loop ran in a single task. Spread the probe rows
     // across cores — REPARTITION_BY_NUM is exempt from AQE coalescing,
     // and the pair loop is the whole cost of this branch.
     val a = bitmaps.select(col("doc_id").as("a_id"), col("bm").as("ba"),
-      col("ns").as("na")).repartition(s.sparkContext.defaultParallelism)
+      col("nt").as("na")).repartition(s.sparkContext.defaultParallelism)
     val b = bitmaps.select(col("doc_id").as("b_id"), col("bm").as("bb"),
-      col("ns").as("nb"))
+      col("nt").as("nb"))
     orderedAll(a.join(broadcast(b), col("a_id") < col("b_id") &&
         col("na") <= col("nb") * 3 && col("nb") <= col("na") * 3)
       .withColumn("common", org.apache.spark.sql.GraftSql.column(
@@ -388,6 +374,25 @@ object Text {
       .groupBy("doc_id")
       .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), tok_id))").as("mask"),
         count(lit(1)).as("nt"))
+
+  /** Each doc's token set as a ⌈W/64⌉-word array<long> bitmap over
+    * [[tokIds]] for a W-token vocabulary: (doc_id, bm, nt) — the
+    * [[tokenMasks]] fold past 64 tokens, for any vocabulary. Counts the
+    * vocabulary once (one job) to size the bitmaps. */
+  private[graft] def tokenBitmaps(dt: DataFrame): DataFrame = {
+    val dict = tokIds(dt)
+    val words = (dict.count() / 64 + 1).toInt
+    dt.join(broadcast(dict), "token")
+      .groupBy("doc_id")
+      .agg(collect_list(col("tok_id")).as("tids"), count(lit(1)).as("nt"))
+      .withColumn("bm", expr(
+        s"""aggregate(tids, array_repeat(CAST(0 AS BIGINT), $words),
+           |  (acc, t) -> transform(acc, (x, i) ->
+           |    IF(i = CAST(t div 64 AS INT),
+           |       x | shiftleft(CAST(1 AS BIGINT), CAST(t % 64 AS INT)),
+           |       x)))""".stripMargin))
+      .select("doc_id", "bm", "nt")
+  }
 
   /** |A ∩ B| of two [[tokenMasks]] mask columns, as a BIGINT. */
   private[graft] def commonBits(a: String, b: String): Column =
@@ -763,9 +768,7 @@ object Text {
     * partial-mergeable aggregations; the ~|vocab| p·log₂p addends are far
     * below the package's 10k raw-double-sum threshold (ops/package.scala). */
   def qTokenEntropy(s: SparkSession, dir: String): DataFrame = {
-    val counts = t(s, dir, "documents")
-      .select(col("lang"), explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
+    val counts = tokDf(t(s, dir, "documents"), keep = Seq(col("lang")))
       .groupBy("lang", "token").agg(count(lit(1)).as("n"))
     val totals = counts.groupBy("lang").agg(sum(col("n")).as("tot"))
     orderedAll(counts.join(totals, "lang")
@@ -998,8 +1001,7 @@ object Text {
     *     q_dedup_minhash density-gate lesson applied at design time).
     *  2. The pair work runs over DISTINCT TOKEN SETS, not docs: docs
     *     sharing a set have identical stats, so sets are grouped first
-    *     (⌈W/64⌉-long bitmaps for a W-token vocabulary — the
-    *     [[qDedupNgram]] bitmap device generalized past 64), the M×M
+    *     ([[tokenBitmaps]], shared with [[qDedupNgram]]), the M×M
     *     set scan computes popcount commons ([[graft.expressions
     *     .LongVecAndPopcount]], codegen'd), per-set stats weight
     *     container counts by group size (same-set docs are mutual
@@ -1014,23 +1016,12 @@ object Text {
   def qContainment(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").filter(col("lang") === "en")
     val dt = tokDf(docs).distinct()
-    val dict = tokIds(dt)
-    val words = (dict.count() / 64 + 1).toInt
     // r16 optimization: the bitmap table has two direct consumers and
     // three more through `sets` — lazy, the posting join + in-row
     // bitmap fold re-derived five times (809 plan lines, 16 scans).
     // Pin it once per call (multi-consumer pin idiom); 1.5 s -> 1.0 s
     // steady at sf0.1.
-    val bitmaps = Pins.pin(dt.join(broadcast(dict), "token")
-      .groupBy("doc_id")
-      .agg(collect_list(col("tok_id")).as("tids"), count(lit(1)).as("nt"))
-      .withColumn("bm", expr(
-        s"""aggregate(tids, array_repeat(CAST(0 AS BIGINT), $words),
-           |  (acc, t) -> transform(acc, (x, i) ->
-           |    IF(i = CAST(t div 64 AS INT),
-           |       x | shiftleft(CAST(1 AS BIGINT), CAST(t % 64 AS INT)),
-           |       x)))""".stripMargin))
-      .select("doc_id", "bm", "nt"), "containment_bm")
+    val bitmaps = Pins.pin(tokenBitmaps(dt), "containment_bm")
     val sets = bitmaps.groupBy("bm", "nt")
       .agg(count(lit(1)).as("g"))
     val x = sets.select(col("bm").as("bx"), col("nt").as("nx"),

@@ -15,9 +15,7 @@ object TokenStats {
     * count and share bp of that language's tokens — long-tail lengths
     * predict subword splits. */
   def qTokenLenProfile(s: SparkSession, dir: String): DataFrame = {
-    val tl = t(s, dir, "documents")
-      .select(col("lang"), explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
+    val tl = Text.tokDf(t(s, dir, "documents"), keep = Seq(col("lang")))
       .select(col("lang"), length(col("token")).cast("long").as("len"))
       .groupBy("lang", "len").agg(count(lit(1)).as("n_tokens"))
     val tot = tl.groupBy(col("lang").as("l2"))
@@ -52,9 +50,7 @@ object TokenStats {
     * prefix axis explodes in-row over 4 literals. */
   def qPrefixVocab(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val vocab = t(s, dir, "documents")
-      .select(explode(tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "").distinct()
+    val vocab = Text.tokDf(t(s, dir, "documents"), keep = Nil).distinct()
     val ks = Seq(1, 2, 3, 4).toDF("k")
     orderedAll(vocab.crossJoin(broadcast(ks))
       .filter(length(col("token")) >= col("k"))

@@ -15,10 +15,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale path (100 TB): the probe side is broadcast (classic replicated
   * join — probes are small by construction); the corpus streams through
-  * one projection with no shuffle until the per-probe top-k, which is a
-  * partial top-k (window over pid) after AQE-coalesced exchange. For
-  * billion-vector corpora swap in LSH/IVF bucketing: hash vectors into
-  * buckets, join probes only to their buckets — same output contract.
+  * one projection with no shuffle until the per-probe top-k ([[topK]],
+  * a two-phase heap). For billion-vector corpora swap in LSH/IVF
+  * bucketing: hash vectors into buckets, join probes only to their
+  * buckets — same output contract.
   */
 object Vectors {
 
@@ -47,7 +47,7 @@ object Vectors {
     * `when`, not `nullif`: nullif plans an extra projection for its
     * shared operand, where whole-stage codegen already evaluates the
     * repeated product once. */
-  private def normProduct(na: Column, nb: Column): Column =
+  private[ops] def normProduct(na: Column, nb: Column): Column =
     sqrt(when(na * nb =!= 0.0, na * nb))
 
   /** The retrieval candidate pairs: every `corpus` row (vec_id,
@@ -69,20 +69,21 @@ object Vectors {
         normProduct(col("__pn"), norm2(col("embedding"))))
       .drop("__pn")
 
-  /** The retrieval total order as a 1-based rank: row_number within
-    * `part` (the probe) by `score` desc, ties to the smaller `id` —
-    * the order every oracle twin mirrors. A multi-ranker query takes
-    * one per score; a plain per-probe top-k is [[topK]]. */
-  private[graft] def rankBy(score: Column = col("cos"),
-                            id: Column = col("vec_id"),
-                            part: Column = col("pid")): Column =
-    row_number().over(Window.partitionBy(part).orderBy(score.desc, id.asc))
+  /** The retrieval total order as a 1-based rank over every pair of
+    * the probe: row_number within `pid` by `score` desc, ties to the
+    * smaller `vec_id` — the order every oracle twin mirrors. Only for
+    * a query that ranks by more than one score; a per-probe top-k is
+    * [[topK]]. */
+  private[graft] def rankBy(score: Column = col("cos")): Column =
+    row_number().over(Window.partitionBy(col("pid"))
+      .orderBy(score.desc, col("vec_id").asc))
 
-  /** The `k` best [[probePairs]] rows per probe under [[rankBy]]'s
-    * order, ranked as LONG `rn` — the same rows and ranks as
-    * `rankBy() <= k`, through the two-phase heap operator
+  /** The `k` best [[probePairs]] rows per probe by `cos` desc, ties to
+    * the smaller `vec_id`, ranked as LONG `rn` — the same rows and
+    * ranks as `rankBy() <= k`, through the two-phase heap operator
     * ([[graft.plans.TopKPerGroup]]): each partition keeps ≤ k rows per
-    * probe before the shuffle, and nothing is sorted. */
+    * probe before the shuffle, and nothing is sorted. Every per-probe
+    * top-k of the retrieval family takes this path. */
   private[graft] def topK(pairs: DataFrame, k: Int): DataFrame =
     graft.plans.TopKPerGroup.frame(pairs, Seq("pid"), "cos", "vec_id", k, "rn")
 
@@ -273,7 +274,7 @@ object Vectors {
   /** The IVF search core shared by q_ann_ivf and graft.api.Graft.annIvf:
     * index build, inverted lists, and the probe pairs restricted to each
     * probe's `nprobe` nearest lists ([[probePairs]] inputs; rank them
-    * with [[rankBy]]). Returns the per-iteration Lloyd movement too.
+    * with [[topK]]). Returns the per-iteration Lloyd movement too.
     *
     * Seeds: the `nlist` rows first in md5(vec_id-as-string) order —
     * unlike xxhash64 (Spark-only), md5 orders identically in any
@@ -324,11 +325,9 @@ object Vectors {
     if (iters > 1)
       System.err.println("[qAnnIvf] lloyd max-movement per iteration: " +
         deltas.map(d => f"$d%.6f").mkString(", "))
-    orderedAll(pairs
-      .withColumn("rn", rankBy())
-      .filter(col("rn") <= 5)
-      .select(col("pid"), col("vec_id").as("nid"),
-        col("rn").cast("long").as("rn"), round(col("cos"), 4).as("sim")))
+    orderedAll(topK(pairs, 5)
+      .select(col("pid"), col("vec_id").as("nid"), col("rn"),
+        round(col("cos"), 4).as("sim")))
   }
 
   /** Profiling filter on the partial L2 norm of the first 16 dims (the
@@ -578,11 +577,10 @@ object Vectors {
     val probes = emb.filter(col("vec_id") < 20)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"),
         col("label").as("plabel"))
-    orderedAll(probePairs(emb, probes, Some(col("label") =!= col("plabel")))
-      .withColumn("rn", rankBy())
-      .filter(col("rn") <= 3)
+    orderedAll(topK(
+        probePairs(emb, probes, Some(col("label") =!= col("plabel"))), 3)
       .select(col("pid"), col("plabel"), col("vec_id").as("nid"),
-        col("label").as("nlabel"), col("rn").cast("long").as("rn"),
+        col("label").as("nlabel"), col("rn"),
         round(col("cos"), 4).as("sim")))
   }
 
@@ -596,7 +594,7 @@ object Vectors {
     * pipeline runs over retrieval pools). Greedy selection is
     * inherently sequential, so the 3 steps are UNROLLED: each is a
     * struct-max aggregate over the ≤8-row candidate set per probe —
-    * after the one corpus-scale top-8 window, everything is
+    * after the one corpus-scale top-8 ([[topK]]), everything is
     * bounded-size (probes × 8 rows), so the unrolling costs nothing at
     * any corpus size. Ties break to the smaller candidate id; scores
     * emitted round(·,4) (cosine-derived — the q_knn_cosine policy). */
@@ -610,10 +608,10 @@ object Vectors {
 
   /** The MMR core shared by q_mmr_diversify and
     * graft.api.Graft.mmrRerank: per probe, the `poolSize` best
-    * [[probePairs]] by [[rankBy]] are PINNED under `candSlot` — the
+    * [[probePairs]] by [[topK]] are PINNED under `candSlot` — the
     * pool is tiny but its derivation is the one corpus-scale pass, and
     * unpinned every greedy step's join branches would re-evaluate the
-    * whole window (the Round12PlanSpec pin caught exactly that). Then
+    * whole top-k (the Round12PlanSpec pin caught exactly that). Then
     * `k` greedy picks, each a struct-max aggregate over the pool
     * remainder maximizing λ·rel − (1−λ)·ms, where `ms` is the running
     * max cosine to the picks so far; ties to the smaller candidate id.
@@ -623,9 +621,7 @@ object Vectors {
   private[graft] def mmr(corpus: DataFrame, probes: DataFrame, k: Int,
                          poolSize: Int, lambda: Double, candSlot: String,
                          pinStep: DataFrame => DataFrame): DataFrame = {
-    val cand = Pins.pin(probePairs(corpus, probes)
-        .withColumn("rn", rankBy())
-        .filter(col("rn") <= poolSize)
+    val cand = Pins.pin(topK(probePairs(corpus, probes), poolSize)
         .select(col("pid"), col("vec_id").as("cid"),
           col("cos").as("rel"), col("embedding").as("ce")),
       candSlot)

@@ -64,6 +64,15 @@ package object ops {
   def discPrice: Column =
     dmoney(col("l_extendedprice")) * dfrac(lit(1.0) - col("l_discount"))
 
+  /** The deterministic hash sample: true where the first 4 hex digits
+    * of md5(`idCol`), read as h ∈ [0, 65536), satisfy h·10⁴ < bp·65536,
+    * so a row is kept at a rate of `bp` basis points. Unlike rand() or
+    * TABLESAMPLE the kept set is the same on any cluster size, any
+    * partitioning and in any engine. */
+  def md5Sample(idCol: String, bp: Int): Column =
+    expr(s"CAST(conv(substring(md5(CAST($idCol AS STRING)), 1, 4), " +
+      s"16, 10) AS BIGINT) * 10000 < $bp * 65536")
+
   /** Lower-cased whitespace tokens of a documents.text column. */
   def tokens(c: Column): Column = split(lower(c), " ")
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Descending, SortOrder}
 import org.apache.spark.sql.execution.{GenerateExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.expressions.Window
@@ -140,6 +141,27 @@ class CurationPathSpec extends SparkSpec {
       case w: WindowGroupLimitExec => w
       case w: WindowExec => w
     }.isEmpty, plan.mkString("\n"))
+    // the graded per-probe top-k queries take the same operator: no
+    // window or window group limit ordered by the retrieval score. Their
+    // other windows (nDCG's ideal rank, the kNN vote, MAP's running sum,
+    // the confusion marginals) stay. q_mmr_diversify pins its pool, so
+    // its final plan reads the pin and shows no top-k phase.
+    def byScore(order: Seq[SortOrder]) = order.headOption.exists(o =>
+      o.direction == Descending &&
+        o.child.references.map(_.name).toSet == Set("cos"))
+    for (q <- Seq("q_ann_ivf", "q_hard_negatives", "q_mmr_diversify",
+        "q_ann_lsh", "q_ann_multiprobe", "q_ann_recall", "q_ndcg", "q_mrr",
+        "q_map_at_k", "q_precision_at_k", "q_knn_classify", "q_knn_margin",
+        "q_confusion")) {
+      val p = executed(SparkEntry.queries(q)(spark, sf))
+      if (q != "q_mmr_diversify")
+        assert(p.collect { case e: TopKPerGroupExec => e.rank.isDefined }
+          .sorted == Seq(false, true), s"$q:\n${p.mkString("\n")}")
+      assert(p.collect {
+        case w: WindowGroupLimitExec if byScore(w.orderSpec) => w
+        case w: WindowExec if byScore(w.orderSpec) => w
+      }.isEmpty, s"$q:\n${p.mkString("\n")}")
+    }
   }
 
   // -- clusterLabels --------------------------------------------------------

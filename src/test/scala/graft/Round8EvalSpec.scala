@@ -121,8 +121,12 @@ class Round8EvalSpec extends SparkSpec {
     assert(got == expected)
   }
 
-  test("q_confusion matches the brute-force nearest-centroid matrix") {
-    val byLabel = vecs.groupBy(_._3)
+  /** The nearest-centroid confusion matrix of `corpus`, brute force. A
+    * zero-norm vector's cosines are NaN here (null in the query): either
+    * way every centroid ties and the smallest label wins. */
+  private def confusion(corpus: Array[(Long, Array[Float], Int)])
+  : Set[(Long, Long, Long, Long, Long, Long, Long)] = {
+    val byLabel = corpus.groupBy(_._3)
     val cents = byLabel.map { case (lb, vs) =>
       val n = vs.length.toLong
       lb -> Array.tabulate(64) { i =>
@@ -134,7 +138,7 @@ class Round8EvalSpec extends SparkSpec {
       while (i < 64) { dn += e(i).toDouble * c(i); nc += c(i) * c(i); i += 1 }
       dn / math.sqrt(dot(e, e) * nc)
     }
-    val preds = vecs.map { case (_, e, lb) =>
+    val preds = corpus.map { case (_, e, lb) =>
       val pred = cents.toSeq
         .map { case (cl, cv) => (cl, cosC(e, cv)) }
         .sortBy { case (cl, c) => (-c, cl) }.head._1
@@ -146,16 +150,39 @@ class Round8EvalSpec extends SparkSpec {
       .map { case (t, cs) => t -> cs.values.sum }
     val colTot = cells.groupBy(_._1._2)
       .map { case (p, cs) => p -> cs.values.sum }
-    val expected = cells.map { case ((t, p), n) =>
+    cells.map { case ((t, p), n) =>
       (t, p, n, rowTot(t), colTot(p),
         n * 10000 / rowTot(t), n * 10000 / colTot(p)) }.toSet
-    // the classifier must be meaningfully better than uniform-random
-    val diag = cells.collect { case ((t, p), n) if t == p => n }.sum
-    assert(diag * 10 > vecs.length * 3)
-    val got = run("q_confusion").collect()
+  }
+
+  private def confusionRows(dir: String) =
+    SparkEntry.queries("q_confusion")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6))).toSet
-    assert(got == expected)
+
+  test("q_confusion matches the brute-force nearest-centroid matrix") {
+    val expected = confusion(vecs)
+    // the classifier must be meaningfully better than uniform-random
+    val diag = expected.iterator
+      .collect { case (t, p, n, _, _, _, _) if t == p => n }.sum
+    assert(diag * 10 > vecs.length * 3)
+    assert(confusionRows(sf) == expected)
+  }
+
+  test("q_confusion ranks a zero-norm vector's null cosines last under ANSI") {
+    // one all-zero embedding: a bare cosine quotient divides by zero,
+    // which fails the query under ANSI mode (Spark's default)
+    import spark.implicits._
+    val zeroed = vecs.map { case (id, e, lb) =>
+      (id, if (id == vecs(3)._1) Array.fill(64)(0.0f) else e, lb) }
+    val dir = java.nio.file.Files.createTempDirectory("confusion_zero")
+    zeroed.toSeq.toDF("vec_id", "embedding", "label").coalesce(1)
+      .write.parquet(s"$dir/embeddings.parquet")
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val zeroPred = zeroed.map(_._3).min.toLong
+    val expected = confusion(zeroed)
+    assert(expected.exists(c => c._1 == vecs(3)._3 && c._2 == zeroPred))
+    assert(confusionRows(dir.toString) == expected)
   }
 
   test("q_calibration matches brute-force floor-binned rates") {
