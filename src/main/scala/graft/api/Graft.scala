@@ -976,11 +976,13 @@ object Graft {
   /** Maximal-Marginal-Relevance re-ranking (Carbonell & Goldstein) over
     * any corpus/probe pair — the graded q_mmr_diversify pin + greedy
     * core, parametric in (k, poolSize, lambda) (round-12 verdict item
-    * 4). Per probe: the `poolSize` highest-cosine candidates are
-    * derived in ONE corpus-scale window and PINNED (unpinned, each
-    * greedy step's join branches re-run the corpus scan — the
-    * Round12PlanSpec find); then `k` greedy picks run over the
-    * bounded (probes × poolSize) remainder, each maximizing
+    * 4). Per probe: the `poolSize` highest-cosine candidates are the
+    * per-probe top-k (Vectors.topK, ties to the smaller id; a null id
+    * fails the job, as in [[knnCosine]]), derived in ONE corpus-scale
+    * pass and PINNED (unpinned, each greedy step's join branches re-run
+    * the corpus scan — the Round12PlanSpec find); then `k` greedy
+    * picks run over the bounded (probes × poolSize) remainder, each
+    * maximizing
     * λ·relevance − (1−λ)·max-cosine-to-already-picked as a struct-max
     * aggregate (ties to the smaller candidate id). Emits (probe_id,
     * rank, neighbor_id, score) — score is the MMR objective at pick

@@ -207,9 +207,7 @@ object Evaluation {
     val emb = t(s, dir, "embeddings")
     val cent = emb
       .select(col("label"), posexplode(col("embedding")))
-      // LONG: the top-k operator's tie
-      .groupBy(col("label").cast("long").as("cand"),
-        (col("pos") + 1).as("i"))
+      .groupBy(col("label").as("cand"), (col("pos") + 1).as("i"))
       .agg(sum(round(col("col").cast("double") * 10000).cast("long"))
         .as("s_u"), count(lit(1)).as("n"))
       .groupBy("cand")
@@ -223,13 +221,16 @@ object Evaluation {
     val normC = aggregate(sequence(lit(1), lit(64)), lit(0.0), (acc, i) =>
       acc + element_at(col("cv"), i.cast("int")) *
         element_at(col("cv"), i.cast("int")))
-    val scored = emb.crossJoin(broadcast(cent))
+    // a window, not the heap top-k: over 10 candidates per vector the
+    // heap measured slower warm (RunOne at sf0.1)
+    val pred = emb.crossJoin(broadcast(cent))
       .withColumn("cos",
         dotC / Vectors.normProduct(Vectors.norm2(col("embedding")), normC))
-    val pred = graft.plans.TopKPerGroup.frame(scored, Seq("vec_id"), "cos",
-        "cand", 1, "rn")
+      .withColumn("rn", row_number().over(Window.partitionBy(col("vec_id"))
+        .orderBy(col("cos").desc, col("cand").asc)))
+      .filter(col("rn") === 1)
       .select(col("label").cast("long").as("true_label"),
-        col("cand").as("pred"))
+        col("cand").cast("long").as("pred"))
     val cells = pred.groupBy("true_label", "pred")
       .agg(count(lit(1)).as("n"))
     orderedAll(cells

@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Descending, SortOrder}
-import org.apache.spark.sql.execution.{GenerateExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.api.Graft
 import graft.plans.TopKPerGroupExec
 
@@ -30,6 +31,30 @@ class CurationPathSpec extends SparkSpec {
   private def executed(df: DataFrame): Seq[SparkPlan] = {
     df.collect()
     flattenPlan(df.queryExecution.executedPlan)
+  }
+
+  /** The executed plans of every action `body` runs, in order, eager
+    * pins included. Listener events arrive asynchronously, so a marker
+    * action closes the capture. */
+  private def actionPlans(body: => Unit): Seq[Seq[SparkPlan]] = {
+    val seen = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe)
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    val marker = "action_plans_marker"
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF(marker).collect()
+      Iterator.continually(
+        seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .map(qe => { assert(qe != null, "no marker action"); qe })
+        .takeWhile(_.analyzed.output.map(_.name) != Seq(marker))
+        .map(qe => flattenPlan(qe.executedPlan)).toList
+    } finally spark.listenerManager.unregister(listener)
   }
 
   // -- two-phase top-k ----------------------------------------------------
@@ -142,25 +167,34 @@ class CurationPathSpec extends SparkSpec {
       case w: WindowExec => w
     }.isEmpty, plan.mkString("\n"))
     // the graded per-probe top-k queries take the same operator: no
-    // window or window group limit ordered by the retrieval score. Their
-    // other windows (nDCG's ideal rank, the kNN vote, MAP's running sum,
-    // the confusion marginals) stay. q_mmr_diversify pins its pool, so
-    // its final plan reads the pin and shows no top-k phase.
+    // window or window group limit ordered by the retrieval score in any
+    // action the query runs. Their other windows (nDCG's ideal rank, the
+    // kNN vote, MAP's running sum) stay. q_mmr_diversify pins its pool,
+    // so its heap runs in the pin's action and its final plan reads the
+    // pin. q_confusion's nearest-centroid pick (10 candidates per
+    // vector) stays on its window: there the heap measured slower.
     def byScore(order: Seq[SortOrder]) = order.headOption.exists(o =>
       o.direction == Descending &&
         o.child.references.map(_.name).toSet == Set("cos"))
+    def heaps(p: Seq[SparkPlan]) =
+      p.collect { case e: TopKPerGroupExec => e.rank.isDefined }.sorted
     for (q <- Seq("q_ann_ivf", "q_hard_negatives", "q_mmr_diversify",
         "q_ann_lsh", "q_ann_multiprobe", "q_ann_recall", "q_ndcg", "q_mrr",
-        "q_map_at_k", "q_precision_at_k", "q_knn_classify", "q_knn_margin",
-        "q_confusion")) {
-      val p = executed(SparkEntry.queries(q)(spark, sf))
-      if (q != "q_mmr_diversify")
-        assert(p.collect { case e: TopKPerGroupExec => e.rank.isDefined }
-          .sorted == Seq(false, true), s"$q:\n${p.mkString("\n")}")
-      assert(p.collect {
+        "q_map_at_k", "q_precision_at_k", "q_knn_classify",
+        "q_knn_margin")) {
+      val plans = actionPlans(executed(SparkEntry.queries(q)(spark, sf)))
+      val shown = s"$q:\n${plans.map(_.mkString("\n")).mkString("\n\n")}"
+      val topK =
+        if (q == "q_mmr_diversify") plans.filter(_.exists {
+          case _: TopKPerGroupExec => true
+          case _ => false
+        })
+        else plans.takeRight(1)
+      assert(topK.size == 1 && heaps(topK.head) == Seq(false, true), shown)
+      assert(plans.flatten.collect {
         case w: WindowGroupLimitExec if byScore(w.orderSpec) => w
         case w: WindowExec if byScore(w.orderSpec) => w
-      }.isEmpty, s"$q:\n${p.mkString("\n")}")
+      }.isEmpty, shown)
     }
   }
 

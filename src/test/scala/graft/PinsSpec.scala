@@ -9,11 +9,6 @@ import java.util.concurrent.{Callable, CountDownLatch, Executors}
   * rewritten input dir, and slot deletion when the context stops. */
 class PinsSpec extends SparkSpec {
 
-  private def deleteTree(f: File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteTree))
-    f.delete()
-  }
-
   test("concurrent nested derives yield one instance per key") {
     // a fresh session: every key is derived here, not served from an
     // earlier suite's pins

@@ -176,13 +176,15 @@ class Round8EvalSpec extends SparkSpec {
     val zeroed = vecs.map { case (id, e, lb) =>
       (id, if (id == vecs(3)._1) Array.fill(64)(0.0f) else e, lb) }
     val dir = java.nio.file.Files.createTempDirectory("confusion_zero")
-    zeroed.toSeq.toDF("vec_id", "embedding", "label").coalesce(1)
-      .write.parquet(s"$dir/embeddings.parquet")
-    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
-    val zeroPred = zeroed.map(_._3).min.toLong
-    val expected = confusion(zeroed)
-    assert(expected.exists(c => c._1 == vecs(3)._3 && c._2 == zeroPred))
-    assert(confusionRows(dir.toString) == expected)
+    try {
+      zeroed.toSeq.toDF("vec_id", "embedding", "label").coalesce(1)
+        .write.parquet(s"$dir/embeddings.parquet")
+      assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+      val zeroPred = zeroed.map(_._3).min.toLong
+      val expected = confusion(zeroed)
+      assert(expected.exists(c => c._1 == vecs(3)._3 && c._2 == zeroPred))
+      assert(confusionRows(dir.toString) == expected)
+    } finally deleteTree(dir.toFile)
   }
 
   test("q_calibration matches brute-force floor-binned rates") {

@@ -22,6 +22,12 @@ trait SparkSpec extends AnyFunSuite {
       case _ => p +: p.children.flatMap(flattenPlan)
     }
   }
+  /** Delete a file or a directory and everything under it. */
+  def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete()
+  }
+
   /** The pairs of a clique on ids `from`, `from + 1`, … just big
     * enough that its pair list exceeds ops.Text.LocalMaxPairs: padded
     * with it, a graph runs the distributed label fixpoint instead of
