@@ -47,83 +47,42 @@ object Analytics {
     * order (a·(1−f)+b·f vs a+(b−a)·f), and round(…,4) cannot absorb a
     * ULP at 1e10 magnitude, so no FP path exists here at all.
     *
-    * Scale strategy (the 100× smoke exposed the defect): the obvious
-    * plan — two `partitionBy(event_type)` windows — serializes onto
-    * #event_types tasks (5 here), because BOTH the sequencing lag and
-    * the rank sort are per-type global sorts. 56 s at 100× vs 1.5 s at
-    * 10× on this box was the 5-task ceiling, not data volume.
-    * `spark.graft.rankBuckets` = B > 0 ([[DistRank.buckets]], default
-    * off to pin fixture plans) removes both sorts:
-    *  - LAG: rows bucket by time range into B per-type slices; lag runs
-    *    within (type, bucket), and each bucket's first gap is seeded
-    *    from the previous non-empty bucket's last timestamp via a
-    *    bucket-granular window over the ≤ types×B tails table — the
-    *    classic seam-stitched parallel sessionization.
-    *  - PERCENTILE: the ≤ 6 needed ranks per type are read by
-    *    [[DistRank.atRanks]], whose bucketed path is an exact
-    *    distributed k-select (only the buckets holding a needed rank
-    *    are sorted).
-    * Both paths are bit-equal to the serial plan (spec-asserted with B
-    * forced on the fixture). */
+    * Both per-type sorts (the sequencing lag and the rank pick) are
+    * global orders over #event_types partitions, so both go through
+    * [[DistRank]] ([[DistRank.lag]], [[DistRank.atRanks]]) with `b`
+    * from its gate. */
   def qInterarrival(s: SparkSession, dir: String): DataFrame = {
-    val buckets = DistRank.buckets(s)
-    val evs = t(s, dir, "events")
+    val evs0 = t(s, dir, "events")
       .withColumn("us", expr("unix_micros(ts)"))
       .select(col("event_type"), col("us"), col("event_id"))
+    val (b, evs) = DistRank.gate(s, evs0, 1000000L,
+      Pins.slot("interarrival_auto", dir))
+    val gaps0 = DistRank.lag(evs, Seq("event_type"), col("us"),
+        col("event_id"), b, "prev_us")
+      .filter(col("prev_us").isNotNull)
+      .select(col("event_type"), (col("us") - col("prev_us")).as("gap_us"))
+    // The bucketed rank pick reads its input three times (range stats,
+    // bucket counts, bucket join): gated, the gap table is pinned once
+    // instead of re-running the lag per read.
+    val (bg, gaps) = DistRank.gate(s, gaps0, 1000000L,
+      Pins.slot("interarrival_gaps", dir))
 
-    val gaps =
-      if (buckets <= 0) {
-        val wSeq = Window.partitionBy("event_type")
-          .orderBy(col("us"), col("event_id"))
-        evs.withColumn("prev_us", lag("us", 1).over(wSeq))
-          .filter(col("prev_us").isNotNull)
-          .select(col("event_type"), (col("us") - col("prev_us")).as("gap_us"))
-      } else {
-        val span = evs.groupBy("event_type")
-          .agg(min("us").as("tmin"), max("us").as("tmax"))
-        val b = evs.join(broadcast(span), "event_type")
-          .withColumn("bkt",
-            expr(s"((us - tmin) * $buckets) div (tmax - tmin + 1)"))
-        val within = b
-          .withColumn("prev_us", lag("us", 1).over(
-            Window.partitionBy("event_type", "bkt")
-              .orderBy(col("us"), col("event_id"))))
-          .filter(col("prev_us").isNotNull)
-          .select(col("event_type"), (col("us") - col("prev_us")).as("gap_us"))
-        val tails = b.groupBy("event_type", "bkt")
-          .agg(min("us").as("bmin"), max("us").as("bmax"))
-        val seams = tails
-          .withColumn("prev_last", lag("bmax", 1).over(
-            Window.partitionBy("event_type").orderBy("bkt")))
-          .filter(col("prev_last").isNotNull)
-          .select(col("event_type"),
-            (col("bmin") - col("prev_last")).as("gap_us"))
-        // The gap table feeds the stats, the bucket histogram and the
-        // rank pick, which would each re-run the scan+lag lineage: pin
-        // it once.
-        Pins.pin(within.unionByName(seams), "interarrival_gaps")
-      }
-
-    // (type, n, q, r, w): the 1-based ranks each quantile interpolates
-    // over, with their ×100 weights; rem = 0 drops the zero-weight row
-    // (which could otherwise index past the end). q = 100 is rank n, the
-    // max gap.
-    val targets = gaps.groupBy("event_type").agg(count(lit(1)).as("n"))
-      .selectExpr("event_type", "n", "explode(array(50, 95, 99, 100)) AS q")
-      .selectExpr("event_type", "n", "q",
-        "(q * (n - 1)) div 100 AS lo", "(q * (n - 1)) % 100 AS rem")
-      .selectExpr("event_type", "n", "q",
-        "explode(filter(array(struct(lo + 1 AS r, 100 - rem AS w), " +
-          "struct(lo + 2 AS r, rem AS w)), x -> x.w > 0)) AS kw")
-      .select(col("event_type"), col("n"), col("q"), col("kw.r").as("r"),
-        col("kw.w").as("w"))
-    def pScaled(q: Int) = sum(when(col("q") === q, col("v") * col("w")))
+    // q·(n − 1) = 100·lo + rem: quantile q interpolates ranks lo + 1 and
+    // lo + 2 with ×100 weights 100 − rem and rem (rank lo + 2 is past
+    // the end only when rem = 0). q = 100 is rank n, the max gap.
+    val qs = Seq(50, 95, 99)
+    def lo(q: Int) = s"(($q * (n - 1)) div 100)"
+    def rem(q: Int) = s"(($q * (n - 1)) % 100)"
+    val ranks = qs.flatMap(q => Seq(s"${lo(q)} + 1", s"${lo(q)} + 2")) :+ "n"
+    def pScaled(q: Int) = sum(expr(
+      s"CASE WHEN r = ${lo(q)} + 1 THEN v * (100 - ${rem(q)}) " +
+        s"WHEN r = ${lo(q)} + 2 THEN v * ${rem(q)} END"))
       .cast("long").as(s"p${q}_x100")
     orderedAll(DistRank.atRanks(gaps, Seq("event_type"), col("gap_us"),
-        col("gap_us"), targets, buckets)
+        col("gap_us"), ranks.mkString("array(", ", ", ")"), bg)
       .groupBy("event_type")
-      .agg(max("n").as("n_gaps"), pScaled(50), pScaled(95), pScaled(99),
-        max(when(col("q") === 100, col("v"))).as("max_us")))
+      .agg(max("n").as("n_gaps"), qs.map(pScaled) :+
+        max(when(col("r") === col("n"), col("v"))).as("max_us"): _*))
   }
 
   /** 2-d profiling histogram: lineitem count + exact decimal revenue on a

@@ -1,32 +1,33 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Distributed global order: the one module that knows how a
-  * total-order rank, running sum, percentile or k-select is computed.
-  * Callers state the order they need ([[rank]], [[ntile]],
-  * [[prefixSum]], [[cumulative]] + [[discrete]], [[atRanks]]) and pass
-  * a bucket count `b`; they never branch on it themselves.
+  * total-order rank, running sum, percentile, k-select or lag is
+  * computed. Callers state the order they need ([[rank]], [[ntile]],
+  * [[prefixSum]], [[cumulative]] + [[discrete]], [[atRanks]], [[lag]])
+  * and pass a bucket count `b`; they never branch on it themselves.
   *
   * The problem class: a query needs `row_number()` / `ntile(k)` / a
-  * running sum under a TOTAL order over a dimension-scale aggregate
-  * (customers, parts, users) or a near-distinct value histogram. The
-  * declarative spelling — one `Window.orderBy(...)` with no partition,
-  * or one partitioned by a 3-to-5-value axis — runs every row through
-  * one task (the q_interarrival 100× smoke measured it: 56 s of one
-  * task sorting what 32 could). With `b` > 0 the same result comes
-  * from the MapReduce prefix-sum pattern (aggregate per bucket, prefix
-  * over the bucket aggregates, finish locally):
+  * running sum / a predecessor under a TOTAL order over a
+  * dimension-scale aggregate (customers, parts, users), a
+  * near-distinct value histogram or an event stream. The declarative
+  * spelling — one `Window.orderBy(...)` with no partition, or one
+  * partitioned by a 3-to-5-value axis — runs every row through one
+  * task (the q_interarrival 100× smoke measured it: 56 s of one task
+  * sorting what 32 could). With `b` > 0 the same result comes from the
+  * MapReduce prefix-sum pattern (aggregate per bucket, prefix over the
+  * bucket aggregates, finish locally):
   *
   *  1. one aggregate finds the key range; rows bucket by key range into
   *     `b` slices (a broadcast, no shuffle beyond the agg);
   *  2. per-bucket aggregates (≤ b rows per group) take an exclusive
-  *     prefix sum in a tiny window — its input is an aggregate, never
-  *     the data;
-  *  3. the row number or running sum runs WITHIN each bucket (parallel
-  *     across buckets) and adds the bucket's offset.
+  *     prefix sum (or, for [[lag]], the previous bucket's last key) in
+  *     a tiny window — its input is an aggregate, never the data;
+  *  3. the row number, running sum or lag runs WITHIN each bucket
+  *     (parallel across buckets) and adds the bucket's offset.
   *
   * Equal keys always land in the same bucket, so tie-breaking stays
   * bucket-local and the result is BIT-EQUAL to the serial window
@@ -35,21 +36,14 @@ import org.apache.spark.sql.functions._
   * plan again, which is also the correct cost there. Keys are BIGINT;
   * descending orders negate the key (`-x`).
   *
-  * `b` comes from [[gate]] (the family's conf + stats ladder), from
-  * [[buckets]] (conf only), or is 0 for domain-bounded inputs.
-  * `spark.graft.rankBuckets` = B > 0 engages the bucketed path (default
-  * off, pinning fixture plans and hashes; a 100 TB deployment sets B ≈
-  * a few × the executor count).
+  * `b` comes from [[gate]] (the family's conf + stats ladder), or is 0
+  * for domain-bounded inputs. `spark.graft.rankBuckets` = B > 0
+  * engages the bucketed path by hand (a 100 TB deployment sets B ≈ a
+  * few × the executor count).
   */
 object DistRank {
 
-  /** The family's shared gate: `spark.graft.rankBuckets`, 0 = serial. */
-  def buckets(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.rankBuckets").map(_.toInt).getOrElse(0)
-
-  /** Stats-driven auto-engage (round-10 item 4) — the nearPairs
-    * strategy-switch idiom applied to the gate that round 9 left manual.
-    * Decision ladder:
+  /** The family's gate. Decision ladder:
     *
     *  1. `spark.graft.rankBuckets` SET → that value verbatim (manual
     *     override: > 0 engages with that B, 0 forces serial) — the
@@ -71,19 +65,15 @@ object DistRank {
     * q_interval_overlap/q_decay_score's gated plans pay a per-base-row
     * carry join that only wins past ~10⁷. Tests may pin the crossover
     * via `spark.graft.rankAutoCrossoverRows` (overrides the caller's
-    * value) to force the auto path on fixture data. */
-  def effectiveBuckets(s: SparkSession, input: DataFrame,
-                       crossoverRows: Long = 1000000L): Int =
-    gate(s, input, crossoverRows, "rank_auto")._1
-
-  /** [[effectiveBuckets]] plus the probe-cost fix the first 100× auto
-    * capture demanded: when the probe tier fires, the window input is
-    * PINNED (Pins.pin — localCheckpoint, or the reliable-checkpoint
-    * slot under `slot` on clusters) BEFORE counting, and the pinned
-    * frame is returned for the caller to build on. The count is then
-    * a metadata read of the materialized blocks, and the main query
-    * consumes the same materialization — the probe becomes an
-    * investment instead of a second run of a fact-scale aggregate
+    * value) to force the auto path on fixture data.
+    *
+    * When the probe tier fires, the window input is PINNED (Pins.pin
+    * — localCheckpoint, or the reliable-checkpoint slot under `slot` on
+    * clusters) BEFORE counting, and the pinned frame is returned for
+    * the caller to build on. The count is then a metadata read of the
+    * materialized blocks, and the main query consumes the same
+    * materialization — the probe becomes an investment instead of a
+    * second run of a fact-scale aggregate
     * (first capture: q_abc_class 14.6 s auto vs 10.6 s gated, the
     * delta being exactly one wasted lineitem-wide re-aggregation).
     * Below the floor and under a manual conf the input is returned
@@ -130,9 +120,9 @@ object DistRank {
   }
 
   // ---- dispatchers: the one place that picks serial vs bucketed ----
-  // Callers state the order they need and pass `b` (from [[gate]],
-  // [[buckets]], or 0 for domain-bounded inputs); b <= 0 plans the
-  // serial window, b > 0 the value-bucketed two-pass path below.
+  // Callers state the order they need and pass `b` (from [[gate]], or
+  // 0 for domain-bounded inputs); b <= 0 plans the serial window, b > 0
+  // the value-bucketed two-pass path below.
 
   /** `row_number()` over (key asc, tie asc) as LONG column `out`.
     * Descending orders negate the key (`-x`): `asc` puts nulls first
@@ -207,32 +197,68 @@ object DistRank {
       .agg(max("tot").as("tot"), picks ++ more: _*)
   }
 
-  /** The exact `key` value at given 1-based ranks under (key asc,
-    * tie asc) within each `parts` group: `targets` carries `parts`, a
-    * LONG rank column `r` and any payload; the result is one row per
-    * target whose rank exists — `parts`, `r`, the value as `v`, then
-    * the payload. Bucketed, it is a distributed k-select: per-bucket
-    * counts locate the bucket holding each rank, and only those
-    * buckets are sorted. */
+  /** The exact `key` value at chosen 1-based ranks under (key asc,
+    * tie asc) within each `parts` group. `ranks` is a SQL expression
+    * over the group's row count `n` giving the wanted ranks as
+    * array<long> (the Scala Column API has no integral division, which
+    * rank arithmetic needs). Keep it to a few ranks: serially the
+    * membership test runs per row (q_hist_equiheight's 40 boundary
+    * ranks ran 0.8 → 2.5 s warm at sf0.1, so it uses [[ntile]]). The
+    * result is one row per wanted rank that exists (1 ≤ r ≤ n;
+    * duplicates in `ranks` yield one row): `parts`, `n`, `r`, the key
+    * value as `v`. Serial: one window over one partitioning and sort
+    * gives both `r` and `n`, so the input is read once. Bucketed, it is
+    * a distributed k-select: `n` is the sum of the group's per-bucket
+    * counts, those counts locate the buckets holding a wanted rank, and
+    * only those buckets are sorted. */
   def atRanks(df: DataFrame, parts: Seq[String], key: Column, tie: Column,
-              targets: DataFrame, b: Int): DataFrame = {
+              ranks: String, b: Int): DataFrame = {
     val pc = parts.map(col)
     val ranked =
-      if (b <= 0) df.withColumn("r", row_number().over(
-        Window.partitionBy(pc: _*).orderBy(key.asc, tie.asc)).cast("long"))
-      else {
+      if (b <= 0) {
+        val w = Window.partitionBy(pc: _*).orderBy(key.asc, tie.asc)
+        df.withColumn("r", row_number().over(w).cast("long"))
+          .withColumn("n", count(lit(1)).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      } else {
         val (vb, offsets) = bucketed(df, parts, key, b, count(lit(1)))
-        val hit = joinOn(offsets, targets, parts)
+        val hit = offsets
+          .withColumn("n", sum("__bagg").over(Window.partitionBy(pc: _*)))
+          .withColumn("r", explode(expr(ranks)))
           .filter(col("r") > col("__before") &&
             col("r") <= col("__before") + col("__bagg"))
-          .select((pc :+ col("__vbkt") :+ col("__before")): _*).distinct()
+          .select((pc :+ col("__vbkt") :+ col("__before") :+ col("n")): _*)
+          .distinct()
         joinOn(vb, hit, parts :+ "__vbkt")
           .withColumn("r", col("__before") + row_number().over(
             Window.partitionBy((pc :+ col("__vbkt")): _*)
               .orderBy(col("__key").asc, tie.asc)))
       }
-    joinOn(ranked.select((pc :+ col("r") :+ key.as("v")): _*), targets,
-      parts :+ "r")
+    ranked.filter(expr(s"array_contains($ranks, r)"))
+      .select((pc :+ col("n") :+ col("r") :+ key.as("v")): _*)
+  }
+
+  /** The previous row's `key` under (key asc, tie asc) within each
+    * `parts` group, as LONG column `out` (null on a group's first row,
+    * and wherever the previous key is null). Bucketed, the lag runs
+    * within each bucket, and a bucket's first row takes the last key of
+    * the group's previous non-empty bucket — seam-stitched
+    * sequencing. Null keys sort first, in the null bucket, whose last
+    * key is null, so the stitch agrees with the serial window there. */
+  def lag(df: DataFrame, parts: Seq[String], key: Column, tie: Column,
+          b: Int, out: String): DataFrame = {
+    val pc = parts.map(col)
+    if (b <= 0) df.withColumn(out, functions.lag(key.cast("long"), 1)
+      .over(Window.partitionBy(pc: _*).orderBy(key.asc, tie.asc)))
+    else {
+      val (vb, lasts) = bucketed(df, parts, key, b, max("__key"),
+        functions.lag(col("__bagg"), 1).over(_))
+      joinOn(vb, lasts.drop("__bagg"), parts :+ "__vbkt")
+        .withColumn(out, coalesce(functions.lag(col("__key"), 1).over(
+          Window.partitionBy((pc :+ col("__vbkt")): _*)
+            .orderBy(col("__key").asc, tie.asc)), col("__before")))
+        .drop("__key", "__vbkt", "__before")
+    }
   }
 
   // ---- the bucketed two-pass machinery ----
@@ -253,11 +279,16 @@ object DistRank {
   /** Bucket rows by the range of `key` within each `parts` group into
     * `b` slices. Returns the rows with `__key` (the BIGINT sort key)
     * and `__vbkt` added, and the per-bucket table (parts, `__vbkt`,
-    * `__bagg` = `perBucket`, `__before` = the exclusive prefix of
-    * `__bagg` over earlier buckets of the group). A null key lands in
-    * the null bucket, which sorts first. */
+    * `__bagg` = `perBucket`, `__before` = `carry` over the group's
+    * buckets in order: by default the exclusive prefix sum of
+    * `__bagg`). A null key lands in the null bucket, which sorts
+    * first. */
   private def bucketed(df: DataFrame, parts: Seq[String], key: Column,
-                       b: Int, perBucket: Column): (DataFrame, DataFrame) = {
+                       b: Int, perBucket: Column,
+                       carry: WindowSpec => Column = w => coalesce(
+                         sum("__bagg").over(w.rowsBetween(
+                           Window.unboundedPreceding, -1)), lit(0L)))
+      : (DataFrame, DataFrame) = {
     val pc = parts.map(col)
     val wk = df.withColumn("__key", key.cast("long"))
     val stats = wk.groupBy(pc: _*)
@@ -275,9 +306,8 @@ object DistRank {
       .drop("__kmin", "__kmax")
     val offsets = vb.groupBy((pc :+ col("__vbkt")): _*)
       .agg(perBucket.cast("long").as("__bagg"))
-      .withColumn("__before", coalesce(sum("__bagg").over(
-        Window.partitionBy(pc: _*).orderBy("__vbkt")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .withColumn("__before",
+        carry(Window.partitionBy(pc: _*).orderBy("__vbkt")))
     (vb, offsets)
   }
 

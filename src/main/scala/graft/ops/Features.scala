@@ -95,44 +95,17 @@ object Features {
 
   /** Equi-height histogram over order value: 20 equal-population buckets
     * (ntile under the (cents, orderkey) total order) with count and exact
-    * cent bounds — the quantile-sketch report drawn exactly.
-    *
-    * Scale strategy (the 100× smoke measured the defect: 34 s, all of it
-    * one task sorting 15 M rows for the global ntile): the OUTPUT only
-    * needs each bucket's size — pure arithmetic from n (ntile gives the
-    * first n mod 20 buckets one extra row) — and the cents values at the
-    * 40 bucket-boundary RANKS, read by [[DistRank.atRanks]].
-    * `spark.graft.rankBuckets` = B > 0 ([[DistRank.buckets]], default
-    * off to pin the fixture plan) makes that an exact distributed
-    * k-select: only the buckets holding a boundary rank are sorted,
-    * spec-forced bit-equal to the ntile. */
+    * cent bounds — the quantile-sketch report drawn exactly. The ntile
+    * is [[DistRank.ntile]], with `b` from its gate. */
   def qHistEquiheight(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o0 = t(s, dir, "orders")
       .withColumn("cents", expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
       .select("cents", "o_orderkey")
-    // per-bucket (size, start/end rank) — arithmetic on n alone, with
-    // ntile's first-(n mod 20)-buckets-get-one-extra fill policy.
-    val spec = o.agg(count(lit(1)).as("n"))
-      .selectExpr("n", "explode(sequence(1, 20)) AS bucket")
-      .selectExpr("bucket",
-        "n div 20 + CASE WHEN bucket <= n % 20 THEN 1 ELSE 0 END AS sz",
-        "(bucket - 1) * (n div 20) + least(bucket - 1, n % 20) + 1 " +
-          "AS start_rank")
-      .selectExpr("bucket", "sz", "start_rank",
-        "start_rank + sz - 1 AS end_rank")
-      .filter(col("sz") > 0) // n < 20: ntile emits no empty buckets
-    val need = spec.selectExpr("bucket",
-      "explode(array(struct('lo' AS role, start_rank AS r), " +
-        "struct('hi' AS role, end_rank AS r))) AS x")
-      .select(col("bucket"), col("x.role").as("role"), col("x.r").as("r"))
-    orderedAll(DistRank.atRanks(o, Nil, col("cents"), col("o_orderkey"), need,
-        DistRank.buckets(s))
+    val (b, o) = DistRank.gate(s, o0, 1000000L, Pins.slot("equiheight_auto", dir))
+    orderedAll(DistRank.ntile(o, col("cents"), col("o_orderkey"), 20, b, "bucket")
       .groupBy("bucket")
-      .agg(max(when(col("role") === "lo", col("v"))).as("lo_cents"),
-        max(when(col("role") === "hi", col("v"))).as("hi_cents"))
-      .join(broadcast(spec.select("bucket", "sz")), "bucket")
-      .selectExpr("CAST(bucket AS BIGINT) AS bucket",
-        "CAST(sz AS BIGINT) AS n", "lo_cents", "hi_cents"))
+      .agg(count(lit(1)).as("n"), min("cents").as("lo_cents"),
+        max("cents").as("hi_cents")))
   }
 
   /** Rolling 7-day distinct actives (the WAU series): for each report

@@ -51,18 +51,11 @@ object Journeys {
     * at the same µs (touching sessions don't overlap), and permuting
     * equal (us, delta) rows yields the same prefix-sum SET, so the day
     * max is deterministic even though per-row running values are not.
-    * Scale (round-9 item 2): `spark.graft.rankBuckets` > 0 engages the
-    * range-partitioned sweep — the running sum runs WITHIN each calendar
-    * day (parallel across days, the same partitioning the output
-    * aggregates by) and each day inherits the closing sum of all earlier
-    * days as a broadcast carry (the q_interarrival seam trick; ≤ #days
-    * rows take the only unpartitioned window). Bit-equal by integer
-    * associativity — time buckets are order-aligned with `us`, and equal
-    * (us, delta) rows never straddle a day — spec-forced
-    * (Round9RankSpec). The session derivation shards by user_id. */
+    * The sweep is [[DistRank.prefixSum]] (plus the row's own delta),
+    * with `b` from its gate; the session derivation shards by user_id. */
   def qIntervalOverlap(s: SparkSession, dir: String): DataFrame = {
     val wU = Window.partitionBy("user_id").orderBy("us", "event_id")
-    val sess = ev(s, dir)
+    val points = ev(s, dir)
       .withColumn("new_sess",
         when(coalesce(col("us") - lag("us", 1).over(wU),
           lit(Long.MaxValue)) > 1800000000L, 1).otherwise(0))
@@ -70,35 +63,16 @@ object Journeys {
         wU.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .groupBy("user_id", "sess_id")
       .agg(min("us").as("start_us"), max("us").as("end_us"))
-    val points = sess.select(col("start_us").as("us"), lit(1L).as("delta"))
-      .unionAll(sess.select((col("end_us") + 1).as("us"),
-        lit(-1L).as("delta")))
-    // high crossover: the gated day-carry join pays per point row and
-    // only beats one task past ~10⁷ points (BASELINE.md 100× table:
+      .selectExpr("inline(array(struct(start_us AS us, 1L AS delta), " +
+        "struct(end_us + 1 AS us, -1L AS delta)))")
+    // high crossover: the gated sweep pays a carry join per point row
+    // and only beats one task past ~10⁷ points (BASELINE.md 100× table:
     // serial 4.1 s vs gated 7.1 s at ~10⁶ — auto stays serial there)
-    val (ib, pointsG) = DistRank.gate(s, points, 10000000L, Pins.slot("iov_auto", dir))
-    val swept =
-      if (ib <= 0) {
-        val wSweep = Window.orderBy("us", "delta")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        pointsG.withColumn("conc", sum("delta").over(wSweep))
-          .withColumn("day", expr("us div 86400000000"))
-      } else {
-        val pts = pointsG.withColumn("day", expr("us div 86400000000"))
-        val carries = pts.groupBy("day").agg(sum("delta").as("__dsum"))
-          .withColumn("__carry", coalesce(sum("__dsum").over(
-            Window.orderBy("day")
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select("day", "__carry")
-        pts.join(broadcast(carries), "day")
-          .withColumn("conc", col("__carry") + sum("delta").over(
-            Window.partitionBy("day").orderBy("us", "delta")
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          .drop("__carry")
-      }
-    orderedAll(swept
-      .groupBy("day")
-      .agg(max("conc").as("max_concurrent"),
+    val (b, pointsG) = DistRank.gate(s, points, 10000000L, Pins.slot("iov_auto", dir))
+    orderedAll(DistRank.prefixSum(pointsG, Nil, col("us"), col("delta"),
+        col("delta"), b, "conc")
+      .groupBy(expr("us div 86400000000").as("day"))
+      .agg(max(col("conc") + col("delta")).as("max_concurrent"),
         count(lit(1)).as("n_points")))
   }
 

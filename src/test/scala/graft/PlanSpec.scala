@@ -917,4 +917,23 @@ class PlanSpec extends SparkSpec {
     assert(plan("q_price_elasticity").collect {
       case j: BroadcastHashJoinExec => j }.nonEmpty)
   }
+
+  test("global-order queries read their table once, with no reused exchange") {
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    // at the next fixture size, on the static plan (AQE off), where a
+    // second read of one input shows as a second scan or a reuse
+    val dir = new java.io.File(sf).getParent + "/sf0.01"
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try for ((q, table) <- Seq("q_interarrival" -> "events",
+        "q_hist_equiheight" -> "orders", "q_interval_overlap" -> "events")) {
+      val nodes = flattenPlan(
+        SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan)
+      val reads = nodes.collect { case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.mkString }
+      assert(reads.size == 1 && reads.head.contains(table),
+        s"$q reads ${reads.mkString(", ")}")
+      assert(nodes.collect { case r: ReusedExchangeExec => r }.isEmpty,
+        s"$q reuses an exchange: it evaluates one input twice")
+    } finally spark.conf.unset("spark.sql.adaptive.enabled")
+  }
 }

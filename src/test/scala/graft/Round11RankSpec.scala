@@ -27,6 +27,18 @@ class Round11RankSpec extends SparkSpec {
     "d" -> Seq(-3L, 0L, 0L, 12L, 12L, 12L, 40L))
   private val pcts = Seq(10, 25, 50, 90, 99)
 
+  /** (id, group, key) rows for the k-select and the lag: a null key and
+    * a null group, three tied keys (ordered by id), and a one-row
+    * group. */
+  private val keyed = Seq[(Long, Option[String], Option[Long])](
+    (1L, Some("a"), Some(5L)), (2L, Some("a"), None), (3L, None, Some(1L)),
+    (4L, Some("a"), Some(5L)), (5L, None, None), (6L, Some("b"), Some(8L)),
+    (7L, Some("a"), Some(-2L)), (8L, Some("a"), Some(9L)),
+    (9L, Some("a"), Some(5L)))
+  /** Ranks 1, 2, n and 4 (twice for a one-row group), and n + 1, which
+    * is past every group's end and must emit no row. */
+  private val kRanks = "array(1, 2, n, n + 1, 4, 1)"
+
   private val frames: Map[String, SparkSession => DataFrame] = Map(
     // a null key and a null group are each one more value: the bucketed
     // prefix sum must keep those rows exactly as the serial window does
@@ -40,6 +52,16 @@ class Round11RankSpec extends SparkSpec {
       val (b, g) = ops.DistRank.gate(s, df)
       ops.DistRank.prefixSum(g, Seq("g"), col("k"), col("id"), col("v"), b,
         "ps")
+    },
+    "k-select at ranks" -> { s =>
+      import s.implicits._
+      val (b, g) = ops.DistRank.gate(s, keyed.toDF("id", "g", "k"))
+      ops.DistRank.atRanks(g, Seq("g"), col("k"), col("id"), kRanks, b)
+    },
+    "lag" -> { s =>
+      import s.implicits._
+      val (b, g) = ops.DistRank.gate(s, keyed.toDF("id", "g", "k"))
+      ops.DistRank.lag(g, Seq("g"), col("k"), col("id"), b, "prev")
     },
     "percentile recipe" -> { s =>
       import s.implicits._
@@ -69,7 +91,24 @@ class Round11RankSpec extends SparkSpec {
     val n = sorted.size
     n.toLong +: pcts.map(p => sorted((n * p + 99) / 100 - 1))
   }
+  /** `keyed` per group in (key asc NULLS FIRST, id asc) order. */
+  private def keyedGroups: Seq[(Option[String], Seq[(Long, Option[Long])])] =
+    keyed.groupBy(_._2).toSeq.map { case (g, rs) =>
+      g -> rs.map(r => (r._1, r._3))
+        .sortBy { case (id, k) => (k.isDefined, k.getOrElse(0L), id) }
+    }
+  private def str(o: Option[Any]): String = o.map(_.toString).getOrElse("null")
   private val references: Map[String, Set[String]] = Map(
+    "k-select at ranks" -> keyedGroups.flatMap { case (g, rs) =>
+      val n = rs.size
+      Seq(1, 2, n, n + 1, 4).distinct.filter(_ <= n).map(r =>
+        s"${str(g)}|$n|$r|${str(rs(r - 1)._2)}")
+    }.toSet,
+    "lag" -> keyedGroups.flatMap { case (g, rs) =>
+      rs.zip(None +: rs.map(_._2)).map { case ((id, k), prev) =>
+        s"$id|${str(g)}|${str(k)}|${str(prev)}"
+      }
+    }.toSet,
     "percentile recipe" -> values.map { case (g, vs) =>
       (g +: typeOne(vs)).mkString("|")
     }.toSet,

@@ -31,7 +31,8 @@ class Round9RankSpec extends SparkSpec {
 
   private val gated = Seq("q_rfm", "q_lorenz", "q_decile_lift",
     "q_abc_class", "q_decay_score", "q_interval_overlap",
-    "q_customer_migration", "q_rich_club") ++ frames.keys
+    "q_customer_migration", "q_rich_club", "q_interarrival",
+    "q_hist_equiheight") ++ frames.keys
 
   private def frame(name: String): DataFrame =
     frames.get(name).map(_(spark))
@@ -109,7 +110,7 @@ class Round9RankSpec extends SparkSpec {
     val bomb = udf((_: Long) =>
       sys.error("auto-engage probed below the floor"): Boolean)
     val probe = ops.t(spark, sf, "orders").filter(bomb(col("o_orderkey")))
-    assert(ops.DistRank.effectiveBuckets(spark, probe) == 0,
+    assert(ops.DistRank.gate(spark, probe)._1 == 0,
       "fixture-scale input must stay serial under auto")
   }
 
@@ -119,7 +120,7 @@ class Round9RankSpec extends SparkSpec {
     // even with auto knobs screaming 'engage', manual wins verbatim
     spark.conf.set("spark.graft.rankAutoProbeBytes", "0")
     spark.conf.set("spark.graft.rankAutoCrossoverRows", "1")
-    try assert(ops.DistRank.effectiveBuckets(spark, probe) == 5)
+    try assert(ops.DistRank.gate(spark, probe)._1 == 5)
     finally {
       spark.conf.unset("spark.graft.rankBuckets")
       spark.conf.unset("spark.graft.rankAutoProbeBytes")
