@@ -55,17 +55,16 @@ object Analytics {
     val evs0 = t(s, dir, "events")
       .withColumn("us", expr("unix_micros(ts)"))
       .select(col("event_type"), col("us"), col("event_id"))
-    val (b, evs) = DistRank.gate(s, evs0, 1000000L,
+    // crossover 10⁷ rows, from BASELINE.md §2.22's 32-core smoke of the
+    // seam-stitched plan this replaced (slower than serial at 10×, 3×
+    // faster at 100×); on 4 cores at 100× (10⁷ events, which stays
+    // serial) the DistRank plan ran 28 s against 13 s serial
+    val (b, evs) = DistRank.gate(s, evs0, 10000000L,
       Pins.slot("interarrival_auto", dir))
-    val gaps0 = DistRank.lag(evs, Seq("event_type"), col("us"),
+    val gaps = DistRank.lag(evs, Seq("event_type"), col("us"),
         col("event_id"), b, "prev_us")
       .filter(col("prev_us").isNotNull)
       .select(col("event_type"), (col("us") - col("prev_us")).as("gap_us"))
-    // The bucketed rank pick reads its input three times (range stats,
-    // bucket counts, bucket join): gated, the gap table is pinned once
-    // instead of re-running the lag per read.
-    val (bg, gaps) = DistRank.gate(s, gaps0, 1000000L,
-      Pins.slot("interarrival_gaps", dir))
 
     // q·(n − 1) = 100·lo + rem: quantile q interpolates ranks lo + 1 and
     // lo + 2 with ×100 weights 100 − rem and rem (rank lo + 2 is past
@@ -79,7 +78,7 @@ object Analytics {
         s"WHEN r = ${lo(q)} + 2 THEN v * ${rem(q)} END"))
       .cast("long").as(s"p${q}_x100")
     orderedAll(DistRank.atRanks(gaps, Seq("event_type"), col("gap_us"),
-        col("gap_us"), ranks.mkString("array(", ", ", ")"), bg)
+        col("gap_us"), ranks.mkString("array(", ", ", ")"), b)
       .groupBy("event_type")
       .agg(max("n").as("n_gaps"), qs.map(pScaled) :+
         max(when(col("r") === col("n"), col("v"))).as("max_us"): _*))

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 /** Distributed global order: the one module that knows how a
   * total-order rank, running sum, percentile, k-select or lag is
   * computed. Callers state the order they need ([[rank]], [[ntile]],
-  * [[prefixSum]], [[cumulative]] + [[discrete]], [[atRanks]], [[lag]])
-  * and pass a bucket count `b`; they never branch on it themselves.
+  * [[ntileBounds]], [[prefixSum]], [[cumulative]] + [[discrete]],
+  * [[atRanks]], [[lag]]) and pass a bucket count `b`; they never branch
+  * on it themselves.
   *
   * The problem class: a query needs `row_number()` / `ntile(k)` / a
   * running sum / a predecessor under a TOTAL order over a
@@ -148,6 +149,30 @@ object DistRank {
       .withColumn(out, expr(ntileExpr("__rk", "__n", k)).cast("long"))
       .drop("__rk", "__n")
 
+  /** The per-bucket summary of `ntile(k)` over (key asc, tie asc):
+    * LONG `bucket`, its row count `n`, and the key at its first and last
+    * rank as `lo` / `hi`. Serial: the ntile window and one aggregate.
+    * Bucketed, the summary needs only the 2k boundary ranks, read by
+    * the [[atRanks]] k-select, and each bucket's size follows from the
+    * total count by the [[ntileExpr]] fill rule: bucket i starts at rank
+    * (i − 1)·(n div k) + min(i − 1, n mod k) + 1. Keys must be non-null
+    * (the serial min/max would skip a null the rank pick returns). */
+  def ntileBounds(df: DataFrame, key: Column, tie: Column, k: Int,
+                  b: Int): DataFrame =
+    if (b <= 0) ntile(df, key, tie, k, 0, "bucket").groupBy("bucket")
+      .agg(count(lit(1)).as("n"), min(key).as("lo"), max(key).as("hi"))
+    else {
+      def start(i: Int) =
+        s"${i - 1} * (n div $k) + least(${i - 1}, n % $k) + 1"
+      val ranks = (1 to k).flatMap(i => Seq(start(i), s"${start(i + 1)} - 1"))
+      atRanks(df, Nil, key, tie, ranks.mkString("array(", ", ", ")"), b)
+        .withColumn("bucket", expr(ntileExpr("r", "n", k)).cast("long"))
+        .withColumn("sz",
+          expr(s"n div $k + CASE WHEN bucket <= n % $k THEN 1 ELSE 0 END"))
+        .groupBy("bucket")
+        .agg(max("sz").as("n"), min("v").as("lo"), max("v").as("hi"))
+    }
+
   /** EXCLUSIVE running sum of `value` over (key asc, tie asc) within
     * each `parts` group (globally when `parts` is empty) as column
     * `out`. Integer addition is associative, so the bucketed stitch is
@@ -202,40 +227,51 @@ object DistRank {
     * over the group's row count `n` giving the wanted ranks as
     * array<long> (the Scala Column API has no integral division, which
     * rank arithmetic needs). Keep it to a few ranks: serially the
-    * membership test runs per row (q_hist_equiheight's 40 boundary
-    * ranks ran 0.8 → 2.5 s warm at sf0.1, so it uses [[ntile]]). The
-    * result is one row per wanted rank that exists (1 ≤ r ≤ n;
+    * membership test evaluates `ranks` per row (40 ranks ran
+    * q_hist_equiheight 0.8 → 2.5 s warm at sf0.1, so [[ntileBounds]]
+    * calls this only bucketed). The result is one row per wanted rank
+    * that exists (1 ≤ r ≤ n;
     * duplicates in `ranks` yield one row): `parts`, `n`, `r`, the key
     * value as `v`. Serial: one window over one partitioning and sort
     * gives both `r` and `n`, so the input is read once. Bucketed, it is
     * a distributed k-select: `n` is the sum of the group's per-bucket
     * counts, those counts locate the buckets holding a wanted rank, and
-    * only those buckets are sorted. */
+    * only those buckets are sorted. That path reads `df` three times
+    * (range stats, bucket counts, bucket join), so unless `df` is
+    * already materialized it pins it once first. */
   def atRanks(df: DataFrame, parts: Seq[String], key: Column, tie: Column,
               ranks: String, b: Int): DataFrame = {
     val pc = parts.map(col)
-    val ranked =
+    val picked =
       if (b <= 0) {
         val w = Window.partitionBy(pc: _*).orderBy(key.asc, tie.asc)
         df.withColumn("r", row_number().over(w).cast("long"))
           .withColumn("n", count(lit(1)).over(
             w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+          .filter(expr(s"array_contains($ranks, r)"))
       } else {
-        val (vb, offsets) = bucketed(df, parts, key, b, count(lit(1)))
+        // a leaf (a pin, as [[gate]] returns, or a file scan) is
+        // re-read as it is; anything else is pinned once
+        val in =
+          if (df.queryExecution.analyzed.children.isEmpty) df
+          else Pins.pin(df, "at_ranks")
+        val (vb, offsets) = bucketed(in, parts, key, b, count(lit(1)))
         val hit = offsets
           .withColumn("n", sum("__bagg").over(Window.partitionBy(pc: _*)))
           .withColumn("r", explode(expr(ranks)))
           .filter(col("r") > col("__before") &&
             col("r") <= col("__before") + col("__bagg"))
-          .select((pc :+ col("__vbkt") :+ col("__before") :+ col("n")): _*)
-          .distinct()
+          .groupBy((pc :+ col("__vbkt") :+ col("__before") :+ col("n")): _*)
+          .agg(collect_set("r").as("__want"))
+        // each row is tested against its own bucket's few wanted ranks,
+        // not against `ranks` re-evaluated per row
         joinOn(vb, hit, parts :+ "__vbkt")
           .withColumn("r", col("__before") + row_number().over(
             Window.partitionBy((pc :+ col("__vbkt")): _*)
               .orderBy(col("__key").asc, tie.asc)))
+          .filter(array_contains(col("__want"), col("r")))
       }
-    ranked.filter(expr(s"array_contains($ranks, r)"))
-      .select((pc :+ col("n") :+ col("r") :+ key.as("v")): _*)
+    picked.select((pc :+ col("n") :+ col("r") :+ key.as("v")): _*)
   }
 
   /** The previous row's `key` under (key asc, tie asc) within each

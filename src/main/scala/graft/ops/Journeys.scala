@@ -65,9 +65,10 @@ object Journeys {
       .agg(min("us").as("start_us"), max("us").as("end_us"))
       .selectExpr("inline(array(struct(start_us AS us, 1L AS delta), " +
         "struct(end_us + 1 AS us, -1L AS delta)))")
-    // high crossover: the gated sweep pays a carry join per point row
-    // and only beats one task past ~10⁷ points (BASELINE.md 100× table:
-    // serial 4.1 s vs gated 7.1 s at ~10⁶ — auto stays serial there)
+    // crossover 10⁷ points, kept from the day-carry sweep this replaced
+    // (BASELINE.md 100× table: serial 4.1 s vs that sweep 7.1 s); on 4
+    // cores at 100× prefixSum's bucketed sweep ran 16–20 s against 7–9 s
+    // serial, which keeps the crossover
     val (b, pointsG) = DistRank.gate(s, points, 10000000L, Pins.slot("iov_auto", dir))
     orderedAll(DistRank.prefixSum(pointsG, Nil, col("us"), col("delta"),
         col("delta"), b, "conc")

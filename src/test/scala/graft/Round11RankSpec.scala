@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Round-11 item 1: the value-histogram window class joins the DistRank
   * gate. Two global-histogram members (q_median_test, q_kruskal_wallis)
@@ -38,6 +38,11 @@ class Round11RankSpec extends SparkSpec {
   /** Ranks 1, 2, n and 4 (twice for a one-row group), and n + 1, which
     * is past every group's end and must emit no row. */
   private val kRanks = "array(1, 2, n, n + 1, 4, 1)"
+  /** (id, key) rows for the ntile summary: n = 7 with tied keys, cut
+    * into 3 buckets (n mod k = 1) and into 10 (fewer rows than buckets). */
+  private val tiles = Seq(1L -> 5L, 2L -> -2L, 3L -> 9L, 4L -> 5L, 5L -> 1L,
+    6L -> 8L, 7L -> 5L)
+  private val tileKs = Seq(3, 10)
 
   private val frames: Map[String, SparkSession => DataFrame] = Map(
     // a null key and a null group are each one more value: the bucketed
@@ -57,6 +62,12 @@ class Round11RankSpec extends SparkSpec {
       import s.implicits._
       val (b, g) = ops.DistRank.gate(s, keyed.toDF("id", "g", "k"))
       ops.DistRank.atRanks(g, Seq("g"), col("k"), col("id"), kRanks, b)
+    },
+    "ntile bounds" -> { s =>
+      import s.implicits._
+      val (b, g) = ops.DistRank.gate(s, tiles.toDF("id", "k"))
+      tileKs.map(k => ops.DistRank.ntileBounds(g, col("k"), col("id"), k, b)
+        .withColumn("k", lit(k))).reduce(_ unionAll _)
     },
     "lag" -> { s =>
       import s.implicits._
@@ -103,6 +114,16 @@ class Round11RankSpec extends SparkSpec {
       val n = rs.size
       Seq(1, 2, n, n + 1, 4).distinct.filter(_ <= n).map(r =>
         s"${str(g)}|$n|$r|${str(rs(r - 1)._2)}")
+    }.toSet,
+    "ntile bounds" -> tileKs.flatMap { k =>
+      val sorted = tiles.sortBy(_.swap).map(_._2)
+      val n = sorted.size
+      val sizes = (1 to k).map(i => n / k + (if (i <= n % k) 1 else 0))
+        .filter(_ > 0)
+      sizes.indices.map { i =>
+        val bucket = sorted.slice(sizes.take(i).sum, sizes.take(i + 1).sum)
+        s"${i + 1}|${bucket.size}|${bucket.min}|${bucket.max}|$k"
+      }
     }.toSet,
     "lag" -> keyedGroups.flatMap { case (g, rs) =>
       rs.zip(None +: rs.map(_._2)).map { case ((id, k), prev) =>
